@@ -3,8 +3,19 @@
 Tuned for the execution model the engine targets (SURVEY.md §4): AQE on for
 runtime re-planning + skew-join splitting + small-partition coalescing
 (size-aware coalescing per the north rule), Arrow enabled for every
-pandas/Arrow UDF boundary, and shuffle partitions sized to the sandbox's
-local[32] while staying overridable for cluster runs via normal Spark conf.
+pandas/Arrow UDF boundary, and ``max(cores, 32)`` shuffle partitions
+(``cores`` defaults to ``SPARK_GRAFT_CPUS``, else 32); every setting stays
+overridable through ``extra_conf``.
+
+Python workers run under `filterz_spark.spark.pydaemon` instead of
+`pyspark.daemon` (``spark.python.daemon.module``). On CPython < 3.13 each
+Python task's ``importlib.invalidate_caches()`` made every worker re-read
+the pyspark.zip directory ~16 times, ~0.2 s of CPU per task, which dwarfed
+the filter kernels when one section is one task; the daemon re-reads a zip
+only when it changed. The daemon is imported before any task ships code, so
+the package root is appended to the workers' PYTHONPATH. Sessions built
+elsewhere (e.g. by spark-submit) keep `pyspark.daemon` unless they set the
+conf themselves.
 """
 
 from __future__ import annotations
@@ -29,6 +40,11 @@ def get_session(cores: int | None = None, app_name: str = "filterz-spark",
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    # The parent of filterz_spark/, a directory or a --py-files zip; appended
+    # after any caller value so the caller's entries still win.
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    python_path = os.pathsep.join(
+        p for p in (extra_conf.pop("spark.executorEnv.PYTHONPATH", None), root) if p)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -59,6 +75,9 @@ def get_session(cores: int | None = None, app_name: str = "filterz-spark",
                 os.environ["OMP_NUM_THREADS"])
         .config("spark.executorEnv.MKL_NUM_THREADS",
                 os.environ["MKL_NUM_THREADS"])
+        # see the module docstring
+        .config("spark.python.daemon.module", "filterz_spark.spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", python_path)
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

@@ -1,15 +1,9 @@
-"""Skew handling — salted repartitioning and two-phase aggregation.
+"""Skew handling — two-phase aggregation for hot keys.
 
 The north rule requires construction to handle skewed url/lang key
-distributions. Two mechanisms:
-
-1. ``salted_repartition``: spread a hot partitioning key over ``salt_buckets``
-   sub-partitions by hashing (key, salt) where salt = pmod(xxhash64(row id
-   surrogate), buckets). Used when callers *must* partition by a semantic key
-   (e.g. one filter per lang) and that key is Zipf-hot.
-2. ``two_phase_count``: salted partial aggregation -> final aggregation, the
-   classic hot-key groupBy pattern (partial shuffle on (key, salt) spreads the
-   hot key across the cluster; final shuffle moves only buckets*distinct rows).
+distributions. ``two_phase_count`` is the classic hot-key groupBy pattern:
+a salted partial aggregation on (key, salt) spreads a hot key across the
+cluster, and the final shuffle moves only buckets*distinct rows.
 
 Note the main filter-build path does NOT need salting: it shuffles on
 xxhash64(key) which is uniform regardless of key skew (build.py). AQE's
@@ -19,17 +13,6 @@ skew-join splitting (enabled in session.py) covers join-side skew.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def salted_repartition(df: DataFrame, key_col: str, num_partitions: int,
-                       salt_buckets: int = 16, salt_col: str = "__salt") -> DataFrame:
-    """Repartition by (key, salt) so a single hot key spans salt_buckets
-    partitions. Salt is deterministic per-row (hash of all columns) so
-    repeated runs place rows identically — required for resumable builds."""
-    salted = df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
-    )
-    return salted.repartition(num_partitions, key_col, salt_col).drop(salt_col)
 
 
 def two_phase_count(df: DataFrame, key_col: str, salt_buckets: int = 32,
