@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..spark.fsio import has_data, overwrite_json_marker, read_json_marker
 from ..spark.partitioning import ensure_parallelism
 
 
@@ -162,12 +163,11 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
 # persisted pre-flip store. The marker lives in an underscore-prefixed
 # subdirectory: Spark's parquet reader ignores `_`-prefixed paths (the
 # `_SUCCESS` convention), so `spark.read.parquet(path)` on the store is
-# unaffected, and writing the marker THROUGH Spark keeps the store
-# portable to any Spark-writable filesystem (HDFS/S3), unlike a
-# driver-local ``open()`` sidecar.
+# unaffected, and reading/writing the marker through the Hadoop
+# FileSystem API (spark.fsio) keeps the store portable to any
+# Spark-writable filesystem (HDFS/S3), unlike a driver-local ``open()``
+# sidecar.
 SIGSTORE_META_DIR = "_filterz_signature_meta"
-SIGSTORE_META_SCHEMA = ("hash_family string, num_hashes int, k int, "
-                        "version int")
 
 
 def write_signature_store(sig_arr: DataFrame, path: str, *,
@@ -185,39 +185,26 @@ def write_signature_store(sig_arr: DataFrame, path: str, *,
     ``stamp_signature_store`` after verifying what produced it.
     """
     spark = sig_arr.sparkSession
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
     if mode == "append":
-        try:
-            existing = spark.read.schema(SIGSTORE_META_SCHEMA) \
-                .json(meta_path).collect()
-        except Exception:
-            existing = None
-        if existing:
-            m = existing[0]
-            if (m["hash_family"], m["num_hashes"], m["k"]) != \
+        m = read_json_marker(spark, f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
+        if m is not None:
+            if (m.get("hash_family"), m.get("num_hashes"), m.get("k")) != \
                     (hash_family, num_hashes, k):
                 raise RuntimeError(
                     f"signature store at {path} was written with "
-                    f"hash_family={m['hash_family']!r}, num_hashes="
-                    f"{m['num_hashes']}, k={m['k']} but this append is "
-                    f"({hash_family!r}, {num_hashes}, {k}): mixed "
+                    f"hash_family={m.get('hash_family')!r}, num_hashes="
+                    f"{m.get('num_hashes')}, k={m.get('k')} but this append "
+                    f"is ({hash_family!r}, {num_hashes}, {k}): mixed "
                     "families/shapes never collide with each other, so "
                     "the store would silently stop deduplicating. Pin "
                     "the store's parameters, or write a fresh store.")
-        else:
-            # does DATA already exist without a marker?
-            try:
-                spark.read.parquet(path).schema
-                has_data = True
-            except Exception:
-                has_data = False
-            if has_data:
-                raise RuntimeError(
-                    f"signature store at {path} has data but no "
-                    f"{SIGSTORE_META_DIR} marker: its hash family is "
-                    "unknown (pre-marker store or foreign directory). "
-                    "Verify what produced it and stamp it with "
-                    "stamp_signature_store, or point at a fresh path.")
+        elif has_data(spark, path):
+            raise RuntimeError(
+                f"signature store at {path} has data but no "
+                f"{SIGSTORE_META_DIR} marker: its hash family is "
+                "unknown (pre-marker store or foreign directory). "
+                "Verify what produced it and stamp it with "
+                "stamp_signature_store, or point at a fresh path.")
     sig_arr.write.mode(mode).parquet(path)
     stamp_signature_store(spark, path, hash_family=hash_family,
                           num_hashes=num_hashes, k=k)
@@ -228,11 +215,9 @@ def stamp_signature_store(spark, path: str, *, hash_family: str,
     """(Re)write the family marker of a signature store — for adopting a
     store written before markers existed, AFTER verifying its lineage."""
     # driver-side Hadoop FS write (see spark.fsio): the 1-row Spark job
-    # this replaces cost ~4.5 s per stamp; the directory stays readable by
-    # the unchanged spark.read.json reader
+    # this replaces cost ~4.5 s per stamp
     import json as _json
 
-    from ..spark.fsio import overwrite_json_marker
     meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
     overwrite_json_marker(spark, meta_path, _json.dumps({
         "hash_family": hash_family, "num_hashes": num_hashes, "k": k,
@@ -246,30 +231,24 @@ def read_signature_store(spark, path: str, *, hash_family: str,
     what the caller is about to join it with. A store without a marker is
     refused loudly (unknown family — never guess), same contract as the
     streaming store's meta.json."""
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
-    try:
-        rows = spark.read.schema(SIGSTORE_META_SCHEMA).json(meta_path) \
-            .collect()
-    except Exception:
-        rows = []
-    if not rows:
+    m = read_json_marker(spark, f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
+    if m is None:
         raise RuntimeError(
             f"signature store at {path} has no {SIGSTORE_META_DIR} marker: "
             "its hash family is unknown, and joining signatures across "
             "families silently disables dedup (their values never "
             "collide). If the store's lineage is known, stamp it with "
             "stamp_signature_store first.")
-    m = rows[0]
-    if m["hash_family"] != hash_family:
+    if m.get("hash_family") != hash_family:
         raise RuntimeError(
             f"signature store at {path} was written with hash_family="
-            f"{m['hash_family']!r} but the caller expects {hash_family!r}: "
-            "signatures from different families never collide, so the "
-            f"join would match nothing. Pin hash_family="
-            f"{m['hash_family']!r} (and re-derive new signatures under "
+            f"{m.get('hash_family')!r} but the caller expects "
+            f"{hash_family!r}: signatures from different families never "
+            "collide, so the join would match nothing. Pin hash_family="
+            f"{m.get('hash_family')!r} (and re-derive new signatures under "
             "it), or rebuild the store.")
-    for name, want, got in (("num_hashes", num_hashes, m["num_hashes"]),
-                            ("k", k, m["k"])):
+    for name, want, got in (("num_hashes", num_hashes, m.get("num_hashes")),
+                            ("k", k, m.get("k"))):
         if want is not None and want != got:
             raise RuntimeError(
                 f"signature store at {path} was written with {name}={got} "

@@ -4,10 +4,11 @@ Pipeline (SURVEY.md §2.6): per-partition partial states via one
 ``mapInArrow`` pass over the scan (NO shuffle — partials build where the
 data lives, the map-side-combine of a hash aggregate), then a fan-in tree of
 ``applyInPandas`` merge rounds over the tiny state rows, then a final driver
-merge of the <= fanin survivors. This is the applyInPandas form of
+merge of the <= ``FANIN`` survivors. This is the applyInPandas form of
 ``treeAggregate``: at 10^6 partitions and 16KB HLL states, round one moves
 16GB across the cluster in 32-row groups, round two 500MB, etc. — never
-through the driver until the last handful.
+through the driver until the last handful. The persisted store
+(``spark.sketch_store``) reduces each epoch with the same rounds.
 
 Bloom/HLL/CMS states are bit-identical under any tree shape (monoid with
 idempotent/commutative merge); t-digest/KLL are deterministic for the fixed
@@ -22,32 +23,103 @@ from typing import Iterator
 import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch, deserialize_sketch
+from .partitioning import plan_partitions
 
 STATE_SCHEMA = "partition_id long, kind string, params string, payload binary"
+# states merged per executor task in each fan-in round
+FANIN = 32
+
+
+def _project_values(df: DataFrame, col: str, kind: str,
+                   value_kind: str | None, *keep: str) -> tuple[DataFrame, str]:
+    """Select ``keep`` plus the sketch input column ``v``; returns the frame
+    and the resolved value_kind.
+
+    value_kind: 'hash' (xxhash64 of the column, JVM-side), 'pass' (the
+    column already holds int64 key hashes) or 'float' (raw numeric values
+    for quantile sketches). ``None`` picks 'float' for t-digest/KLL and
+    'hash' otherwise; anything else raises.
+    """
+    if value_kind is None:
+        value_kind = "float" if kind in ("tdigest", "kll") else "hash"
+    if value_kind == "hash":
+        v = F.xxhash64(col)
+    elif value_kind == "pass":
+        v = F.col(col).cast("long")
+    elif value_kind == "float":
+        v = F.col(col).cast("double")
+    else:
+        raise ValueError(f"unknown value_kind {value_kind!r}: expected "
+                         "'hash', 'pass' or 'float'")
+    return df.select(*keep, v.alias("v")), value_kind
+
+
+def _decode(arrow_col, value_kind: str):
+    """Executor side: the numpy array a sketch's ``update`` takes."""
+    import numpy as np
+
+    vs = arrow_col.to_numpy(zero_copy_only=False)
+    if value_kind == "float":
+        return vs.astype(np.float64)
+    return vs.astype(np.int64).view(np.uint64)
+
+
+def _fold(kind: str, payloads, params) -> MergeableSketch:
+    """Deserialize states in order and merge them left to right."""
+    acc = None
+    for p, prm in zip(payloads, params):
+        s = deserialize_sketch(kind, bytes(p), json.loads(prm))
+        acc = s if acc is None else acc.merge(s)
+    return acc
+
+
+def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas body: one group's states -> one state row keyed ``g``."""
+    kind = pdf["kind"].iloc[0]
+    acc = _fold(kind, pdf["payload"], pdf["params"])
+    return pd.DataFrame({
+        "g": [pdf["g"].iloc[0]],
+        "kind": [kind],
+        "params": [json.dumps(acc.params())],
+        "payload": [acc.serialize()],
+    })
+
+
+def _merge_by(states: DataFrame, key: Column) -> DataFrame:
+    """One executor round: merge the states sharing ``key`` into one row
+    each, whose partition_id is the key."""
+    return (states.select(key.alias("g"), "kind", "params", "payload")
+            .groupBy("g")
+            .applyInPandas(_merge_group,
+                           "g long, kind string, params string, payload binary")
+            .withColumnRenamed("g", "partition_id"))
+
+
+def _fan_in(states: DataFrame, n: int) -> DataFrame:
+    """Executor-side rounds of ``FANIN`` states per group until at most
+    ``FANIN`` of the ``n`` input states remain.
+
+    Round one groups by partition_id // FANIN and numbers each output row
+    by its group, so every later round groups its input the same way and
+    the surviving rows keep the order of the partitions they cover.
+    """
+    while n > FANIN:
+        states = _merge_by(states, F.floor(F.col("partition_id") / FANIN))
+        n = (n + FANIN - 1) // FANIN
+    return states
 
 
 def _partial_fn(kind: str, params: dict, value_kind: str):
-    """mapInArrow closure: one serialized sketch state per partition.
-
-    value_kind: 'hash' (int64 xxhash64 output -> uint64) or 'float' (raw
-    numeric column for quantile sketches).
-    """
+    """mapInArrow closure: one serialized sketch state per partition."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
         sketch = SKETCH_KINDS[kind].zero(**params)
         saw = False
         for batch in batches:
-            col = batch.column(0).to_numpy(zero_copy_only=False)
-            if value_kind == "hash":
-                col = col.astype(np.int64).view(np.uint64)
-            else:
-                col = col.astype(np.float64)
-            sketch.update(col)
+            sketch.update(_decode(batch.column(0), value_kind))
             saw = True
         if not saw:
             return
@@ -64,94 +136,40 @@ def _partial_fn(kind: str, params: dict, value_kind: str):
 
 def partial_states(df: DataFrame, col: str, kind: str, params: dict | None = None,
                    value_kind: str | None = None) -> DataFrame:
-    """Per-partition sketch states. Hash-kind sketches get xxhash64 JVM-side."""
-    params = params or {}
-    if value_kind is None:
-        value_kind = "float" if kind in ("tdigest", "kll") else "hash"
-    if value_kind == "hash":
-        projected = df.select(F.xxhash64(col).alias("v"))
-    elif value_kind == "pass":  # column already holds int64 key hashes
-        projected = df.select(F.col(col).cast("long").alias("v"))
-    else:
-        projected = df.select(F.col(col).cast("double").alias("v"))
-    return projected.mapInArrow(
-        _partial_fn(kind, params, "hash" if value_kind == "pass" else value_kind),
-        STATE_SCHEMA)
+    """Per-partition sketch states (see ``_project_values`` for value_kind)."""
+    projected, value_kind = _project_values(df, col, kind, value_kind)
+    return projected.mapInArrow(_partial_fn(kind, params or {}, value_kind),
+                                STATE_SCHEMA)
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    kind = pdf["kind"].iloc[0]
-    sketches = [
-        deserialize_sketch(kind, bytes(p), json.loads(prm))
-        for p, prm in zip(pdf["payload"], pdf["params"])
-    ]
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.merge(s)
-    return pd.DataFrame({
-        "partition_id": [int(pdf["partition_id"].min())],
-        "kind": [kind],
-        "params": [json.dumps(acc.params())],
-        "payload": [acc.serialize()],
-    })
-
-
-def tree_merge(states: DataFrame, fanin: int = 32,
+def tree_merge(states: DataFrame,
                num_states_hint: int | None = None) -> MergeableSketch:
     """Fan-in tree of applyInPandas merge rounds, then a driver-side finish.
 
-    Each round groups ``fanin`` states by partition_id range and merges them
+    Each round groups ``FANIN`` states by partition_id range and merges them
     in one executor task. The round count is derived from the PARTITION COUNT
     of the input (one state row per partition) — a metadata lookup, not a
     job — so the whole merge is a single pass with no count()/recompute.
     """
-    if num_states_hint is not None:
-        n = num_states_hint
-    else:
-        try:
-            # JVM-side partition count of the planned query — unlike `.rdd`,
-            # this never builds the python-serialized RDD wrapper (it only
-            # plans, which the merge job would do anyway). Private API: a
-            # Spark version bump may remove it, hence the public fallback.
-            n = states._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:
-            n = states.rdd.getNumPartitions()
-    cur = states
-    divisor = fanin
-    while n > fanin:
-        # group ids stay aligned with the ORIGINAL partition_id (each round's
-        # output row keeps min(partition_id) of its group, so round r groups
-        # by pid // fanin^r)
-        cur = (
-            cur.withColumn("g", F.floor(F.col("partition_id") / divisor))
-            .groupBy("g")
-            .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])), STATE_SCHEMA)
-        )
-        n = (n + fanin - 1) // fanin
-        divisor *= fanin
+    n = num_states_hint if num_states_hint is not None \
+        else plan_partitions(states)
     # collect unordered and sort driver-side: an ``orderBy`` here plans a
     # range exchange whose boundary-sampling pass EXECUTES the whole
     # partials pipeline a second time (measured 2.3x wall on the sketch
-    # legs); the surviving rows are <= fanin KB-sized states, so the
+    # legs); the surviving rows are <= FANIN KB-sized states, so the
     # driver sort is free and the merge order is identical
-    rows = sorted(cur.collect(), key=lambda r: r["partition_id"])
+    rows = sorted(_fan_in(states, n).collect(),
+                  key=lambda r: r["partition_id"])
     if not rows:
         raise ValueError("no sketch states to merge (empty input)")
-    sketches = [
-        deserialize_sketch(r["kind"], bytes(r["payload"]), json.loads(r["params"]))
-        for r in rows
-    ]
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.merge(s)
-    return acc
+    return _fold(rows[0]["kind"], [r["payload"] for r in rows],
+                 [r["params"] for r in rows])
 
 
 def sketch_column(df: DataFrame, col: str, kind: str, params: dict | None = None,
-                  fanin: int = 32, value_kind: str | None = None) -> MergeableSketch:
+                  value_kind: str | None = None) -> MergeableSketch:
     """End-to-end: partials -> tree merge -> final sketch object."""
-    return tree_merge(partial_states(df, col, kind, params, value_kind),
-                      fanin=fanin)
+    return tree_merge(partial_states(df, col, kind, params, value_kind))
 
 
 def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
@@ -167,17 +185,10 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
     ``grouped_estimates``.
     """
     import numpy as np
-    import pandas as pd  # noqa: F401 (executor side)
 
     params = params or {}
-    if value_kind is None:
-        value_kind = "float" if kind in ("tdigest", "kll") else "hash"
-    if value_kind == "hash":
-        projected = df.select(F.col(group_col).alias("g"),
-                              F.xxhash64(value_col).alias("v"))
-    else:
-        projected = df.select(F.col(group_col).alias("g"),
-                              F.col(value_col).cast("double").alias("v"))
+    projected, value_kind = _project_values(
+        df, value_col, kind, value_kind, F.col(group_col).alias("g"))
 
     def partial_fn(batches):
         # Per-row work is ALL vectorized: dictionary-encode the group column
@@ -191,11 +202,7 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
             n = batch.num_rows
             if n == 0:
                 continue
-            vs = batch.column(1).to_numpy(zero_copy_only=False)
-            if value_kind == "hash":
-                vs = vs.astype(np.int64).view(np.uint64)
-            else:
-                vs = vs.astype(np.float64)
+            vs = _decode(batch.column(1), value_kind)
             denc = batch.column(0).dictionary_encode()
             codes = (denc.indices.fill_null(-1)
                      .to_numpy(zero_copy_only=False).astype(np.int64))
@@ -228,19 +235,8 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
     partials = projected.mapInArrow(
         partial_fn, "g string, kind string, params string, payload binary")
 
-    def merge_group_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for p, prm in zip(pdf["payload"], pdf["params"]):
-            s = deserialize_sketch(kind, bytes(p), json.loads(prm))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({
-            "g": [pdf["g"].iloc[0]], "kind": [kind],
-            "params": [json.dumps(acc.params())],
-            "payload": [acc.serialize()],
-        })
-
     return partials.groupBy("g").applyInPandas(
-        merge_group_fn, "g string, kind string, params string, payload binary")
+        _merge_group, "g string, kind string, params string, payload binary")
 
 
 def grouped_estimates(states_df: DataFrame) -> list[tuple]:

@@ -27,17 +27,16 @@ the shuffle costs more than the single-task compute (measured: exact_dedup
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
 def plan_partitions(df: DataFrame) -> int:
     """Partition count of the planned query — metadata only, no job.
 
-    Uses the JVM-side planned RDD (same pattern as spark.merge.tree_merge);
-    falls back to the public ``.rdd`` wrapper on Spark versions without the
-    private API.
+    Reads the JVM-side planned RDD: unlike ``.rdd`` this never builds the
+    python-serialized RDD wrapper (it only plans, which the next job would
+    do anyway). Private API, so it falls back to the public ``.rdd``
+    wrapper on Spark versions without it.
     """
     try:
         return df._jdf.queryExecution().toRdd().getNumPartitions()
@@ -45,23 +44,13 @@ def plan_partitions(df: DataFrame) -> int:
         return df.rdd.getNumPartitions()
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` iff its plan has fewer partitions than
-    the cluster can run concurrently. No-op (returns ``df`` unchanged) when
-    the input already feeds every core — i.e. always, at corpus scale.
-
-    ``min_parts`` defaults to the session's default parallelism, overridable
-    via ``FILTERZ_MIN_INPUT_PARTITIONS`` (set 1 to disable the check
-    entirely, e.g. for plan-shape golden tests).
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` to the session's default parallelism
+    iff its plan has fewer partitions than that. No-op (returns ``df``
+    unchanged) when the input already feeds every core — i.e. always, at
+    corpus scale — and on single-core sessions.
     """
-    if min_parts is None:
-        env = os.environ.get("FILTERZ_MIN_INPUT_PARTITIONS")
-        if env is not None:
-            min_parts = int(env)
-        else:
-            min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if min_parts <= 1:
-        return df
-    if plan_partitions(df) < min_parts:
-        return df.repartition(min_parts)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if cores > 1 and plan_partitions(df) < cores:
+        return df.repartition(cores)
     return df

@@ -18,9 +18,9 @@ build-once / probe-many shape to the mergeable-sketch tier the north
 rule adds.
 
 Scale shape per epoch write: one map-side pass builds per-partition
-partials where the data lives (no shuffle of raw rows), then fan-in
-``applyInPandas`` rounds reduce them to ``states_per_epoch`` rows (KB
-each) ENTIRELY on executors — the store write never routes payloads
+partials where the data lives (no shuffle of raw rows), then the
+``spark.merge`` fan-in rounds and one final round reduce them to a single
+KB-sized row ENTIRELY on executors — the store write never routes payloads
 through the driver. Merging a range reads only the requested epoch
 partitions (partition-pruned scan over KB files) and tree-merges them.
 """
@@ -32,11 +32,12 @@ import json
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch
-from .merge import STATE_SCHEMA, _merge_group, partial_states, tree_merge
+from .fsio import has_data, overwrite_json_marker, read_json_marker
+from .merge import (STATE_SCHEMA, _fan_in, _merge_by, _partial_fn,
+                    _project_values, tree_merge)
+from .partitioning import plan_partitions
 
 SKETCHSTORE_META_DIR = "_filterz_sketch_meta"
-SKETCHSTORE_META_SCHEMA = ("kind string, params string, value_kind string, "
-                           "version int")
 # store rows add the epoch partition column to the merge-state schema
 STORE_SCHEMA = STATE_SCHEMA + ", epoch string"
 
@@ -46,72 +47,15 @@ def _params_key(params: dict) -> str:
     return json.dumps(params or {}, sort_keys=True)
 
 
-def _read_meta(spark: SparkSession, path: str):
-    meta_path = f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
-    # driver-side Hadoop FS read first (the marker is one KB-sized JSON
-    # row; a Spark read job costs ~60 ms per epoch write and the epoch
-    # loop pays it every call); falls back to the Spark reader for any
-    # layout the plain read cannot handle
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(meta_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        payloads = []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if st.isFile() and not name.startswith(("_", ".")):
-                stream = fs.open(st.getPath())
-                try:
-                    payloads.append(
-                        jvm.org.apache.commons.io.IOUtils.toString(
-                            stream, "UTF-8"))
-                finally:
-                    stream.close()
-        rows = []
-        for p in payloads:
-            for line in p.splitlines():
-                if line.strip():
-                    d = json.loads(line)
-                    rows.append({k: d.get(k) for k in
-                                 ("kind", "params", "value_kind", "version")})
-        return rows[0] if rows else None
-    except Exception:
-        pass
-    try:
-        rows = spark.read.schema(SKETCHSTORE_META_SCHEMA).json(meta_path) \
-            .collect()
-    except Exception:
-        rows = []
-    return rows[0] if rows else None
-
-
-def _stamp(spark: SparkSession, path: str, kind: str, params: dict,
-           value_kind: str) -> None:
-    # driver-side Hadoop FS write: the marker is one KB-sized JSON row and
-    # the former 1-row Spark job cost ~4.5 s per stamp (measured), which
-    # dominated a fresh store's first epoch write; the reader
-    # (spark.read.json on the directory) is unchanged and reads both
-    # layouts
-    from .fsio import overwrite_json_marker
-    meta_path = f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
-    overwrite_json_marker(spark, meta_path, json.dumps({
-        "kind": kind, "params": _params_key(params),
-        "value_kind": value_kind, "version": 1}))
-
-
-def _resolve_value_kind(kind: str, value_kind: str | None) -> str:
-    if value_kind is None:
-        return "float" if kind in ("tdigest", "kll") else "hash"
-    return value_kind
+def _meta_path(path: str) -> str:
+    return f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
 
 
 def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
                        kind: str, params: dict | None = None,
                        value_kind: str | None = None,
-                       states_per_epoch: int = 1,
-                       fanin: int = 32,
                        merge_existing: bool = False) -> None:
-    """Reduce one epoch of raw rows to persisted sketch states.
+    """Reduce one epoch of raw rows to one persisted sketch state.
 
     Overwrites ONLY this epoch's partition (dynamic partition overwrite),
     so re-running a failed/changed day replaces that day and nothing
@@ -119,8 +63,8 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
 
     ``merge_existing=True`` is the INCREMENTAL mode (streaming
     foreachBatch appending micro-batches into the current day, or late
-    data trickling into a closed day): the epoch's existing states are
-    folded in as extra partials before the reduction, so the rewritten
+    data trickling into a closed day): the epoch's existing state is
+    folded in as an extra partial before the reduction, so the rewritten
     partition equals old-state ⊔ new-rows. Replace semantics (the
     default) are for recomputing a day from scratch. NOTE the two modes'
     replay stories differ: replace is idempotent per (path, epoch);
@@ -128,27 +72,26 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     same rows is only a no-op for idempotent-merge sketches (HLL/Bloom
     max/or — gated in tests) — counting sketches (CMS) double-count a
     replayed batch, same as any at-least-once counter; guard those with
-    the caller's batch-id watermark (streaming/windowed.py discipline).
+    the caller's batch-id high-watermark, or use the engine-managed state
+    of ``streaming.stateful.stateful_window_sketches``.
 
     The reduction is fully distributed: per-partition partials
     (``partial_states``: one mapInArrow pass, no shuffle of raw rows),
-    then fan-in merge rounds down to ``states_per_epoch`` rows. The only
-    driver traffic is ``merge_existing`` lifting the epoch's CURRENT
-    states — at most ``states_per_epoch`` KB-sized rows by construction
-    (never data-sized), required because Spark cannot overwrite a
-    partition it is concurrently scanning. ``states_per_epoch > 1``
-    keeps residual parallelism for enormous epochs; the default 1 makes
-    range merges read exactly one KB-sized row per epoch.
+    then the ``spark.merge`` fan-in rounds and a final round down to one
+    row. The only driver traffic is ``merge_existing`` lifting the
+    epoch's CURRENT state — one KB-sized row (never data-sized), required
+    because Spark cannot overwrite a partition it is concurrently
+    scanning.
     """
     if kind not in SKETCH_KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}: {sorted(SKETCH_KINDS)}")
     params = params or {}
-    value_kind = _resolve_value_kind(kind, value_kind)
+    projected, value_kind = _project_values(df, col, kind, value_kind)
     spark = df.sparkSession
 
-    meta = _read_meta(spark, path)
+    meta = read_json_marker(spark, _meta_path(path))
     if meta is not None:
-        got = (meta["kind"], meta["params"], meta["value_kind"])
+        got = (meta.get("kind"), meta.get("params"), meta.get("value_kind"))
         want = (kind, _params_key(params), value_kind)
         if got != want:
             raise RuntimeError(
@@ -157,26 +100,20 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
                 "with different parameters do not merge (register widths / "
                 "hash planes misalign), so the store would be corrupted. "
                 "Write to a fresh path or match the store's parameters.")
-    else:
+    elif has_data(spark, path):
         # refuse to adopt foreign data silently, same as the signature store
-        try:
-            spark.read.parquet(path).schema
-            has_data = True
-        except Exception:
-            has_data = False
-        if has_data:
-            raise RuntimeError(
-                f"sketch store at {path} has data but no "
-                f"{SKETCHSTORE_META_DIR} marker: its sketch parameters are "
-                "unknown (foreign directory or pre-marker store). Point at "
-                "a fresh path.")
+        raise RuntimeError(
+            f"sketch store at {path} has data but no "
+            f"{SKETCHSTORE_META_DIR} marker: its sketch parameters are "
+            "unknown (foreign directory or pre-marker store). Point at "
+            "a fresh path.")
 
-    states = partial_states(df, col, kind, params, value_kind)
+    states = projected.mapInArrow(_partial_fn(kind, params, value_kind),
+                                  STATE_SCHEMA)
     prior_used = False
     if merge_existing and meta is not None:
-        # lift the epoch's current states off the partition about to be
-        # overwritten (<= states_per_epoch KB rows — bounded by the
-        # constant, never by data size)
+        # lift the epoch's current state off the partition about to be
+        # overwritten (one KB row)
         prior = spark.read.parquet(path) \
             .where(F.col("epoch") == str(epoch)) \
             .select("partition_id", "kind", "params", "payload").collect()
@@ -184,38 +121,16 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
             states = states.unionByName(
                 spark.createDataFrame(prior, STATE_SCHEMA))
             prior_used = True
-    # executor-side fan-in reduction to `states_per_epoch` rows. Round
-    # count is derived from the df partition count (metadata, no job).
-    try:
-        n = states._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:
-        n = states.rdd.getNumPartitions()
-    cur, divisor = states, fanin
-    reduced = False
-    while n > max(states_per_epoch, 1) * fanin:
-        cur = (cur.withColumn("g", F.floor(F.col("partition_id") / divisor))
-               .groupBy("g")
-               .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])),
-                              STATE_SCHEMA))
-        n = (n + fanin - 1) // fanin
-        divisor *= fanin
-        reduced = True
-    if not reduced and not prior_used and n <= max(states_per_epoch, 1):
-        # already <= states_per_epoch partials with contiguous ids 0..n-1:
-        # pmod(pid, s) is the identity here, so the final merge round would
-        # shuffle each row into its own 1-row group just to re-serialize it.
+    # round count is derived from the df partition count (metadata, no job)
+    n = plan_partitions(states)
+    if n <= 1 and not prior_used:
+        # a single partial with partition_id 0: the final round would
+        # shuffle it into its own 1-row group just to re-serialize it.
         # Skipping it saves a shuffle + Python stage PER EPOCH (the epoch
-        # write loop's floor at small scale); any prior-state union or
-        # fan-in round keeps the merging path.
-        final = cur
+        # write loop's floor at small scale)
+        final = states
     else:
-        final = (cur.withColumn("g", F.pmod(F.col("partition_id"),
-                                            F.lit(max(states_per_epoch, 1))))
-                 .groupBy("g")
-                 .applyInPandas(
-                     lambda pdf: _merge_group(pdf.drop(columns=["g"])
-                                              .assign(partition_id=pdf["g"])),
-                     STATE_SCHEMA))
+        final = _merge_by(_fan_in(states, n), F.lit(0))
     out = final.withColumn("epoch", F.lit(str(epoch)))
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -224,7 +139,9 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     if meta is None:
-        _stamp(spark, path, kind, params, value_kind)
+        overwrite_json_marker(spark, _meta_path(path), json.dumps({
+            "kind": kind, "params": _params_key(params),
+            "value_kind": value_kind, "version": 1}))
 
 
 def read_sketch_store(spark: SparkSession, path: str, *,
@@ -236,21 +153,21 @@ def read_sketch_store(spark: SparkSession, path: str, *,
     column is the partition column, so ``.where(epoch between ...)`` is
     partition-pruned at the file listing.
     """
-    meta = _read_meta(spark, path)
+    meta = read_json_marker(spark, _meta_path(path))
     if meta is None:
         raise RuntimeError(
             f"sketch store at {path} has no {SKETCHSTORE_META_DIR} marker: "
             "its sketch parameters are unknown, and merging states with "
             "mismatched parameters corrupts estimates. Rebuild the store "
             "through write_sketch_epoch.")
-    if kind is not None and meta["kind"] != kind:
+    if kind is not None and meta.get("kind") != kind:
         raise RuntimeError(
-            f"sketch store at {path} holds {meta['kind']!r} states but the "
+            f"sketch store at {path} holds {meta.get('kind')!r} states but the "
             f"caller expects {kind!r}.")
-    if params is not None and meta["params"] != _params_key(params):
+    if params is not None and meta.get("params") != _params_key(params):
         raise RuntimeError(
             f"sketch store at {path} was written with params="
-            f"{meta['params']} but the caller expects {_params_key(params)}: "
+            f"{meta.get('params')} but the caller expects {_params_key(params)}: "
             "states with different parameters do not merge.")
     return spark.read.parquet(path)
 
@@ -258,16 +175,15 @@ def read_sketch_store(spark: SparkSession, path: str, *,
 def merge_sketch_range(spark: SparkSession, path: str, *,
                        epoch_min: str | None = None,
                        epoch_max: str | None = None,
-                       epochs: list[str] | None = None,
-                       fanin: int = 32) -> MergeableSketch:
+                       epochs: list[str] | None = None) -> MergeableSketch:
     """Merge the stored states of an epoch range into one sketch.
 
     The scan touches ONLY the requested epoch partitions (Hive-style
     partition pruning on the `epoch` directory column — gated by
     tests/test_plans.py). The states are re-keyed to contiguous
     partition_ids (a single tiny shuffle over KB rows) and handed to
-    ``tree_merge``; with the default one state per epoch, a 90-day range
-    is 90 KB-sized rows — the merge is driver-trivial by construction,
+    ``tree_merge``; with one state per epoch, a 90-day range is 90
+    KB-sized rows — the merge is driver-trivial by construction,
     which is the entire point of the store.
     """
     from pyspark.sql import Window
@@ -279,7 +195,7 @@ def merge_sketch_range(spark: SparkSession, path: str, *,
     if epoch_max is not None:
         states = states.where(F.col("epoch") <= str(epoch_max))
     # contiguous ids so tree_merge's fan-in grouping reduces every round
-    # (store rows reuse partition_id 0..states_per_epoch-1 across epochs)
+    # (every epoch's row has partition_id 0)
     w = Window.orderBy("epoch", "partition_id")
     rekeyed = (states.withColumn("partition_id",
                                  F.row_number().over(w) - F.lit(1))
@@ -289,4 +205,4 @@ def merge_sketch_range(spark: SparkSession, path: str, *,
         raise ValueError(
             f"sketch store at {path} has no states in the requested epoch "
             "range")
-    return tree_merge(rekeyed, fanin=fanin, num_states_hint=n_rows)
+    return tree_merge(rekeyed, num_states_hint=n_rows)

@@ -38,13 +38,12 @@ store-sized semi-joins that never leave the executors:
   the signature store, and sig-less re-arrivals are suppressed by the
   sig-less id store.
 
-Replay discipline mirrors ForeachBatchSketcher: at-least-once
-redeliveries are skipped via a batch-id high-watermark tied to a run
-token, and the store appends are guarded so a replayed batch neither
-re-emits nor double-appends. ``meta.json`` is written at INIT (before
-any store append), so a store directory without meta is always a foreign
-/ corrupted state and is refused loudly rather than silently attributed
-a default hash family.
+Replay discipline: at-least-once foreachBatch redeliveries are skipped
+via a batch-id high-watermark tied to a run token, and the store appends
+are guarded so a replayed batch neither re-emits nor double-appends.
+``meta.json`` is written at INIT (before any store append), so a store
+directory without meta is always a foreign / corrupted state and is
+refused loudly rather than silently attributed a default hash family.
 """
 
 from __future__ import annotations
@@ -277,10 +276,6 @@ class StreamingNearDupDedup:
             # family-less populated store
             self._store_meta(-1)
 
-    # NOTE: the (run_token, last_batch_id, atomic tmp+rename) replay guard
-    # here mirrors ForeachBatchSketcher._load/_store (windowed.py), where
-    # the guard is coupled to per-window sketch payloads; a semantics fix
-    # to either must be applied to both (see commit a7d0c2f).
     def _load_meta(self) -> int:
         if not os.path.exists(self.meta_path):
             return -1

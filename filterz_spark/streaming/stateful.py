@@ -1,12 +1,11 @@
 """Custom stateful streaming operator: per-window mergeable sketches held in
 Spark's own state store via ``applyInPandasWithState``.
 
-This is the engine-managed sibling of windowed.ForeachBatchSketcher: instead
-of a parquet side-store maintained in foreachBatch, the sketch state lives
-in the streaming state store (checkpointed, fault-tolerant, exactly-once
-under the streaming commit protocol — no manual batch-id watermarking
-needed). Each micro-batch updates the group's sketch from the Arrow batches
-and emits the refreshed estimate (update output mode).
+The sketch state lives in the streaming state store (checkpointed,
+fault-tolerant, exactly-once under the streaming commit protocol — no
+manual batch-id watermarking needed, unlike a side-store maintained in
+foreachBatch). Each micro-batch updates the group's sketch from the Arrow
+batches and emits the refreshed estimate (update output mode).
 
 Scale posture: state per group is ONE serialized sketch payload (KB), never
 row data; keys are pre-hashed JVM-side (``xxhash64``) so the Python side

@@ -1,37 +1,22 @@
-"""Structured Streaming sketch builds — windowed aggregation with late data.
+"""Structured Streaming operators built from engine built-ins.
 
-Two layers:
+- ``watermarked_window_counts``: tumbling event-time window + watermark ->
+  count / approx distinct, everything JVM-side — the declarative path for
+  standing dashboards.
+- ``streaming_sessions``: native ``session_window`` sessionization.
+- ``streaming_exact_dedup``: first arrival per content hash on the
+  engine's ``dropDuplicates`` state store.
 
-1. ``watermarked_window_counts``: pure built-in streaming aggregation
-   (tumbling event-time window + watermark -> count / approx distinct) —
-   everything stays JVM-side, the declarative path for standing dashboards.
-2. ``ForeachBatchSketcher``: custom mergeable-sketch state over streaming
-   micro-batches via ``foreachBatch`` — each batch builds per-window partial
-   sketches with the SAME kernels as the batch path (mapInArrow partials +
-   merge), then OR/max/add-merges them into a persistent per-window state
-   store (parquet). Because every sketch here is a commutative monoid, late
-   or out-of-order data folds in correctly regardless of arrival order —
-   the streaming/batch consistency the merge tests gate on. Replays are
-   handled too: foreachBatch is at-least-once, so each window records the
-   last applied batch_id and skips redelivered batches (exactly-once state
-   for additive sketches).
-
-Scale posture: state per window is one sketch payload (KB-MB), not row data;
-merge cost per batch is O(windows_touched). The foreachBatch pattern is the
-standard production shape for sketch state Spark can't express natively
-(applyInPandasWithState has the same semantics but pins state to the state
-store; parquet state keeps it inspectable and resumable like checkpoint.py).
+Per-window mergeable-sketch state lives in ``streaming.stateful``
+(``applyInPandasWithState``: the engine's state store gives exactly-once
+updates under the streaming commit protocol). A foreachBatch sink that
+rolls micro-batches into a persisted store uses
+``spark.sketch_store.write_sketch_epoch(merge_existing=True)``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, functions as F
-
-from ..sketches import SKETCH_KINDS, deserialize_sketch
-from ..spark.merge import partial_states
 
 
 def watermarked_window_counts(stream: DataFrame, ts_col: str = "ts",
@@ -98,105 +83,3 @@ def streaming_exact_dedup(stream: DataFrame, key_col: str = "text",
         return (hashed.withWatermark(ts_col, watermark)
                 .dropDuplicatesWithinWatermark(["text_hash"]))
     return hashed.dropDuplicates(["text_hash"])
-
-
-class ForeachBatchSketcher:
-    """Per-window mergeable-sketch state updated from streaming micro-batches.
-
-    Usage:
-        sk = ForeachBatchSketcher(state_dir, kind="hll", params={"p": 12},
-                                  ts_col="ts", key_col="user_id")
-        q = (stream.writeStream.foreachBatch(sk).trigger(availableNow=True)
-             .option("checkpointLocation", ckpt).start())
-    """
-
-    def __init__(self, state_dir: str, kind: str = "hll", params: dict | None = None,
-                 ts_col: str = "ts", key_col: str = "user_id",
-                 window: str = "1 hour", run_token: str | None = None) -> None:
-        """``run_token`` ties the replay guard to one streaming-checkpoint
-        lineage: batch ids are monotonic PER CHECKPOINT, so restarting a
-        query with a fresh checkpointLocation while reusing the same
-        state_dir would reset ids to 0 and the plain high-watermark would
-        silently skip genuinely new batches as replays. Pass the
-        checkpointLocation (the natural token) — when the stored token
-        differs, the per-window watermark resets and new batches merge.
-        With ``run_token=None`` the guard keys on batch_id alone, which is
-        only safe while state_dir lifetime matches checkpoint lifetime."""
-        self.state_dir = state_dir
-        self.kind = kind
-        self.params = params or {}
-        self.ts_col = ts_col
-        self.key_col = key_col
-        self.window = window
-        self.run_token = run_token
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _state_path(self, window_start: str) -> str:
-        safe = window_start.replace(":", "-").replace(" ", "_")
-        return os.path.join(self.state_dir, f"w_{safe}.json")
-
-    def _load(self, window_start: str):
-        p = self._state_path(window_start)
-        if not os.path.exists(p):
-            return SKETCH_KINDS[self.kind].zero(**self.params), -1
-        with open(p) as f:
-            obj = json.load(f)
-        sk = deserialize_sketch(self.kind, bytes.fromhex(obj["payload"]),
-                                obj["params"])
-        if self.run_token is not None and obj.get("run_token") != self.run_token:
-            return sk, -1  # new checkpoint lineage: batch ids restart at 0
-        return sk, obj.get("last_batch_id", -1)
-
-    def _store(self, window_start: str, sketch, batch_id: int) -> None:
-        # write-then-rename so a crash mid-write never corrupts window state
-        path = self._state_path(window_start)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"params": sketch.params(),
-                       "payload": sketch.serialize().hex(),
-                       "last_batch_id": batch_id,
-                       "run_token": self.run_token}, f)
-        os.replace(tmp, path)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        windowed = batch_df.withColumn(
-            "__w", F.date_format(F.window(F.col(self.ts_col), self.window)
-                                 .getField("start"), "yyyy-MM-dd HH:mm:ss")).cache()
-        try:
-            windows = [r["__w"] for r in windowed.select("__w").distinct().collect()]
-            for w in windows:
-                acc, last_id = self._load(w)
-                if batch_id <= last_id:
-                    # foreachBatch is at-least-once: a replayed micro-batch
-                    # (same id, redelivered after a failure) must not merge
-                    # twice — additive sketches (CMS/KLL/t-digest/Bloom
-                    # counters) would double-count. Batch ids are monotonic
-                    # per query, so a high-watermark per window suffices.
-                    continue
-                sub = windowed.filter(F.col("__w") == w)
-                states = partial_states(sub, self.key_col, self.kind, self.params)
-                rows = states.collect()
-                for r in rows:
-                    acc = acc.merge(deserialize_sketch(
-                        self.kind, bytes(r["payload"]), json.loads(r["params"])))
-                self._store(w, acc, batch_id)
-        finally:
-            windowed.unpersist()
-
-    def results(self) -> dict[str, float]:
-        """window_start -> estimate for every window seen so far."""
-        out = {}
-        for fname in sorted(os.listdir(self.state_dir)):
-            if not fname.startswith("w_"):
-                continue
-            w = fname[2:-5].replace("_", " ")
-            w = w[:13].replace("-", ":")  # undo filename mangling crudely
-            with open(os.path.join(self.state_dir, fname)) as f:
-                obj = json.load(f)
-            sk = deserialize_sketch(self.kind, bytes.fromhex(obj["payload"]), obj["params"])
-            key = fname[2:-5]
-            if hasattr(sk, "estimate"):
-                out[key] = sk.estimate()
-            elif hasattr(sk, "quantile"):
-                out[key] = sk.quantile(0.5)
-        return out

@@ -226,6 +226,41 @@ class TestSignatureStore:
         assert read_signature_store(spark, legacy, hash_family="km_md5") \
             .count() == sigs.count()
 
+    def test_round6_part_file_marker_accepted(self, spark, docs, tmp_path):
+        """Round-6 signature stores wrote their marker with a Spark job
+        (``coalesce(1).write.json``: a part file plus ``_SUCCESS`` and
+        ``.crc`` side files); read and append must still validate it."""
+        import os
+        import shutil
+        from filterz_spark.ops.dedup import (read_signature_store,
+                                             write_signature_store)
+        p = str(tmp_path / "store")
+        sigs = self._sigs(spark, docs)
+        write_signature_store(sigs, p, hash_family="km_md5",
+                              num_hashes=8, k=2)
+        meta = os.path.join(p, "_filterz_signature_meta")
+        shutil.rmtree(meta)
+        spark.createDataFrame(
+            [("km_md5", 8, 2, 1)],
+            "hash_family string, num_hashes int, k int, version int",
+        ).coalesce(1).write.json(meta)
+        names = os.listdir(meta)
+        assert "_SUCCESS" in names
+        assert any(n.startswith("part-") for n in names)
+        assert any(n.endswith(".crc") for n in names)
+        with pytest.raises(RuntimeError, match="num_hashes"):
+            read_signature_store(spark, p, hash_family="km_md5",
+                                 num_hashes=16)
+        with pytest.raises(RuntimeError, match="signature store"):
+            write_signature_store(self._sigs(spark, docs, "band_md5"), p,
+                                  hash_family="band_md5", num_hashes=8,
+                                  k=2, mode="append")
+        write_signature_store(sigs, p, hash_family="km_md5",
+                              num_hashes=8, k=2, mode="append")
+        assert read_signature_store(spark, p, hash_family="km_md5",
+                                    num_hashes=8, k=2).count() \
+            == 2 * sigs.count()
+
     def test_dedup_against_store_path_and_frame(self, spark, docs, tmp_path):
         """Incremental dedup: batch docs LSH-colliding with the corpus
         store are dropped; the DataFrame-store and path-store flavors

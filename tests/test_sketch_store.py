@@ -6,10 +6,15 @@
 - a sub-range merge equals sketching only that range's rows;
 - quantile kinds (t-digest) hold their rank bounds through the store;
 - per-epoch re-writes are idempotent (dynamic partition overwrite);
-- the marker refuses mismatched params / kinds / unmarked directories;
+- the marker refuses mismatched params / kinds / unmarked directories,
+  and markers in the round-6 part-file layout still read;
+- 100-partition epoch writes (one executor fan-in round) store the same
+  states as 4-partition ones;
 - the range scan is partition-pruned on the epoch directory column.
 """
 
+import json
+import os
 import shutil
 
 import pytest
@@ -139,6 +144,30 @@ class TestMergeExisting:
         assert read_sketch_store(spark, store).count() == len(EPOCHS)
 
 
+class TestFanInRound:
+    @pytest.mark.parametrize("kind,params", [
+        ("hll", {"p": 12}),
+        ("cms", {"depth": 4, "width": 2048}),
+    ])
+    def test_fanin_round_matches_small_partition_count(self, spark, pages,
+                                                       tmp_path, kind,
+                                                       params):
+        """100 input partitions put one executor fan-in round (32 states
+        per group) and the final single-state round into each epoch
+        write; the merged range must equal a 4-partition build byte for
+        byte."""
+        merged = {}
+        for n in (100, 4):
+            p = str(tmp_path / f"store_{n}")
+            for e in EPOCHS[:2]:
+                write_sketch_epoch(
+                    pages.where(F.col("epoch") == e).repartition(n), "url",
+                    p, e, kind=kind, params=params)
+            assert read_sketch_store(spark, p).count() == 2
+            merged[n] = merge_sketch_range(spark, p).serialize()
+        assert merged[100] == merged[4]
+
+
 class TestQuantileThroughStore:
     def test_tdigest_rank_bound(self, spark, pages, store):
         ntok = pages.withColumn(
@@ -181,6 +210,35 @@ class TestMarkerContract:
                                kind="hll", params={"p": 12})
         with pytest.raises(RuntimeError, match="no _filterz_sketch_meta"):
             read_sketch_store(spark, p)
+
+    def test_round6_part_file_marker_accepted(self, spark, pages, store):
+        """Round-6 stores wrote their marker with a Spark job
+        (``coalesce(1).write.json``: a part file plus ``_SUCCESS`` and
+        ``.crc`` side files). Epoch writes and range merges must still
+        read it, and keep checking it."""
+        write_sketch_epoch(pages.where(F.col("epoch") == EPOCHS[0]), "url",
+                           store, EPOCHS[0], kind="hll", params={"p": 12})
+        meta = os.path.join(store, "_filterz_sketch_meta")
+        shutil.rmtree(meta)
+        spark.createDataFrame(
+            [("hll", json.dumps({"p": 12}, sort_keys=True), "hash", 1)],
+            "kind string, params string, value_kind string, version int",
+        ).coalesce(1).write.json(meta)
+        names = sorted(os.listdir(meta))
+        assert "_SUCCESS" in names
+        assert any(n.startswith("part-") for n in names)
+        assert any(n.endswith(".crc") for n in names)
+        day1 = pages.where(F.col("epoch") == EPOCHS[1])
+        with pytest.raises(RuntimeError, match="do not merge"):
+            write_sketch_epoch(day1, "url", store, EPOCHS[1],
+                               kind="hll", params={"p": 14})
+        write_sketch_epoch(day1, "url", store, EPOCHS[1],
+                           kind="hll", params={"p": 12})
+        merged = merge_sketch_range(spark, store)
+        whole = sketch_column(pages.where(F.col("epoch").isin(*EPOCHS[:2])),
+                              "url", "hll", {"p": 12})
+        assert merged.serialize() == whole.serialize()
+        assert sorted(os.listdir(meta)) == names  # marker left as written
 
     def test_empty_range_raises(self, spark, pages, store):
         write_sketch_epoch(pages, "url", store, EPOCHS[0],

@@ -168,13 +168,40 @@ class TestSketchAggregation:
 
     def test_state_independent_of_partitioning(self, spark, pages):
         """HLL/CMS/Bloom merged state must be bit-identical whether built
-        from 2 or 16 partitions (monoid grouping-independence)."""
+        from 2, 16 or 100 partitions (monoid grouping-independence). 100
+        states exceed the fan-in of 32, so that build also runs one
+        executor-side merge round before the driver finish."""
         for kind, params in [("hll", {"p": 12}),
                              ("cms", {"depth": 4, "width": 2048}),
                              ("bloom", {"capacity": N_PAGES, "bits_per_key": 16})]:
             few = tree_merge(partial_states(pages.repartition(2), "url", kind, params))
             many = tree_merge(partial_states(pages.repartition(16), "url", kind, params))
             assert few.serialize() == many.serialize(), kind
+            fanned = sketch_column(pages.repartition(100), "url", kind, params)
+            assert fanned.serialize() == few.serialize(), kind
+
+    def test_unknown_value_kind_raises(self, spark, pages, tmp_path):
+        """A misspelt value_kind must fail before any job runs, not be
+        read as 'float' (which sketches the wrong values silently)."""
+        import os
+        from filterz_spark.spark.merge import grouped_sketch_states
+        from filterz_spark.spark.sketch_store import write_sketch_epoch
+        store = str(tmp_path / "store")
+        calls = {
+            "partial_states": lambda: partial_states(
+                pages, "url", "hll", {"p": 12}, value_kind="hashed"),
+            "sketch_column": lambda: sketch_column(
+                pages, "url", "hll", {"p": 12}, value_kind="hashed"),
+            "grouped_sketch_states": lambda: grouped_sketch_states(
+                pages, "lang", "url", "hll", {"p": 12}, value_kind="hashed"),
+            "write_sketch_epoch": lambda: write_sketch_epoch(
+                pages, "url", store, "2024-01-01", kind="hll",
+                params={"p": 12}, value_kind="hashed"),
+        }
+        for call in calls.values():
+            with pytest.raises(ValueError, match="value_kind"):
+                call()
+        assert not os.path.exists(store)
 
     def test_cms_lang_counts_exact_side(self, spark, pages):
         s = sketch_column(pages, "lang", "cms", {"depth": 5, "width": 8192})
@@ -346,6 +373,25 @@ class TestGroupedSketches:
             n = pages.filter(F.col("lang") == g).select("url").distinct().count()
             if n <= (1 << 14) >> 4:  # clearly-small group stays sparse
                 assert sk.is_sparse and len(bytes(r["payload"])) < (1 << 14), g
+
+    @pytest.mark.parametrize("kind,params", [
+        ("hll", {"p": 12}),
+        ("cms", {"depth": 4, "width": 2048}),
+    ])
+    def test_pass_value_kind_matches_hash(self, spark, pages, kind, params):
+        """value_kind='pass' over precomputed xxhash64 values must give the
+        same per-group states as value_kind='hash' over the raw column;
+        a cast through double would drop the hashes' low bits (CMS mixes
+        every bit into its counter positions, so it shows the loss)."""
+        from filterz_spark.spark.merge import grouped_sketch_states
+        hashed = pages.withColumn("url_h", F.xxhash64("url"))
+        got = {r["g"]: bytes(r["payload"]) for r in grouped_sketch_states(
+            hashed, "lang", "url_h", kind, params,
+            value_kind="pass").collect()}
+        want = {r["g"]: bytes(r["payload"]) for r in grouped_sketch_states(
+            pages, "lang", "url", kind, params,
+            value_kind="hash").collect()}
+        assert got == want
 
     def test_states_partition_independent(self, spark, pages):
         from filterz_spark.spark.merge import grouped_sketch_states

@@ -3,9 +3,9 @@
 Feeds the events table through a file-source stream in two chunks (out of
 order arrival) and checks:
 - built-in watermarked window counts equal the batch query;
-- foreachBatch HLL window states match per-window exact distinct counts
-  within the published bound, regardless of arrival order (merge-monoid
-  property under streaming).
+- applyInPandasWithState HLL window states match per-window exact
+  distinct counts within the published bound, regardless of arrival order
+  (merge-monoid property under streaming).
 """
 
 import os
@@ -15,9 +15,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from filterz_spark.streaming.windowed import (
-    ForeachBatchSketcher, watermarked_window_counts,
-)
+from filterz_spark.streaming.windowed import watermarked_window_counts
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -58,95 +56,6 @@ def test_watermarked_window_counts(spark, stream_dirs):
             events.groupBy(F.date_trunc("day", "ts").alias("d"))
             .agg(F.count("*").alias("cnt")).collect()}
     assert got == want
-
-
-def test_foreachbatch_hll_windows(spark, stream_dirs):
-    base, src, events = stream_dirs
-    state_dir = os.path.join(base, "state")
-    sk = ForeachBatchSketcher(state_dir, kind="hll", params={"p": 14},
-                              ts_col="ts", key_col="user_id", window="1 day")
-    stream = _read_stream(spark, src, events.schema)
-    q = (stream.writeStream.foreachBatch(sk).trigger(availableNow=True)
-         .option("checkpointLocation", os.path.join(base, "ckpt2")).start())
-    q.awaitTermination(180)
-    exact = {r["d"].strftime("%Y-%m-%d"): r["n"] for r in
-             events.groupBy(F.date_trunc("day", "ts").alias("d"))
-             .agg(F.countDistinct("user_id").alias("n")).collect()}
-    results = sk.results()
-    assert len(results) == len(exact)
-    for key, est in results.items():
-        day = key[:10].replace("_", " ")
-        assert day in exact, (key, list(exact)[:3])
-        n = exact[day]
-        assert abs(est - n) / max(n, 1) < 0.05, (day, est, n)
-
-
-def test_foreachbatch_replay_is_idempotent(spark, stream_dirs):
-    """foreachBatch is at-least-once: re-delivering the same batch_id must
-    NOT double-merge additive sketch state (CMS counts would double)."""
-    import json as _json
-    base, src, events = stream_dirs
-    state_dir = os.path.join(base, "state_replay")
-    sk = ForeachBatchSketcher(state_dir, kind="cms",
-                              params={"depth": 5, "width": 8192},
-                              ts_col="ts", key_col="event_type", window="1 day")
-    batch = events.limit(500).cache()
-    sk(batch, batch_id=0)
-    snapshot = {}
-    for fname in sorted(os.listdir(state_dir)):
-        with open(os.path.join(state_dir, fname)) as f:
-            snapshot[fname] = _json.load(f)["payload"]
-    sk(batch, batch_id=0)  # replay of the SAME batch id
-    for fname, payload in snapshot.items():
-        with open(os.path.join(state_dir, fname)) as f:
-            assert _json.load(f)["payload"] == payload, "replay double-merged"
-    sk(batch, batch_id=1)  # a genuinely new batch DOES merge
-    changed = False
-    for fname, payload in snapshot.items():
-        with open(os.path.join(state_dir, fname)) as f:
-            changed |= _json.load(f)["payload"] != payload
-    assert changed
-    batch.unpersist()
-
-
-def test_fresh_checkpoint_lineage_resets_replay_guard(spark, stream_dirs):
-    """Batch ids are monotonic PER CHECKPOINT, not per state dir: a restart
-    with a fresh checkpointLocation but a reused state_dir restarts ids at
-    0, and without a run token those genuinely new batches would be
-    silently skipped as replays (ADVICE round 2). With the token, a new
-    lineage resets the per-window watermark; within a lineage, replays of
-    the same id are still suppressed."""
-    import json as _json
-    base, src, events = stream_dirs
-    state_dir = os.path.join(base, "state_token")
-    batch = events.limit(500).cache()
-
-    def payloads():
-        out = {}
-        for fname in sorted(os.listdir(state_dir)):
-            with open(os.path.join(state_dir, fname)) as f:
-                out[fname] = _json.load(f)["payload"]
-        return out
-
-    sk1 = ForeachBatchSketcher(state_dir, kind="cms",
-                               params={"depth": 5, "width": 8192},
-                               ts_col="ts", key_col="event_type",
-                               window="1 day", run_token="ckpt-A")
-    sk1(batch, batch_id=0)
-    after_a = payloads()
-    # restart with a FRESH checkpoint lineage, same state dir: batch 0 of
-    # the new lineage is new data and must merge
-    sk2 = ForeachBatchSketcher(state_dir, kind="cms",
-                               params={"depth": 5, "width": 8192},
-                               ts_col="ts", key_col="event_type",
-                               window="1 day", run_token="ckpt-B")
-    sk2(batch, batch_id=0)
-    after_b = payloads()
-    assert after_b != after_a, "new checkpoint lineage was skipped as a replay"
-    # within lineage B, a replay of the same id is still suppressed
-    sk2(batch, batch_id=0)
-    assert payloads() == after_b, "replay within a lineage double-merged"
-    batch.unpersist()
 
 
 def test_apply_in_pandas_with_state_hll_windows(spark, stream_dirs):

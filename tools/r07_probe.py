@@ -144,8 +144,10 @@ def main():
     sc.setJobDescription("store write")
     timed("store_write", store_write)
     # meta read cost alone
-    from filterz_spark.spark.sketch_store import _read_meta
-    timed("meta_read_x13", lambda: [_read_meta(spark, store_dir)
+    from filterz_spark.spark.fsio import read_json_marker
+    from filterz_spark.spark.sketch_store import SKETCHSTORE_META_DIR
+    meta_dir = f"{store_dir}/{SKETCHSTORE_META_DIR}"
+    timed("meta_read_x13", lambda: [read_json_marker(spark, meta_dir)
                                     for _ in range(len(weeks))])
     events.unpersist()
 

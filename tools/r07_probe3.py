@@ -143,22 +143,21 @@ def main():
         out[f"{name}_max_bucket"] = int(b[1])
 
     # --- fresh-store micro-costs ---
-    from filterz_spark.spark.sketch_store import (_read_meta, _stamp,
+    from filterz_spark.spark.fsio import (has_data, overwrite_json_marker,
+                                          read_json_marker)
+    from filterz_spark.spark.sketch_store import (SKETCHSTORE_META_DIR,
                                                   write_sketch_epoch)
     store = "/tmp/filterz_r07_probe3_store"
+    meta_dir = f"{store}/{SKETCHSTORE_META_DIR}"
     shutil.rmtree(store, ignore_errors=True)
-    timed("read_meta_missing", lambda: _read_meta(spark, store), r=3)
-
-    def has_data_check():
-        try:
-            spark.read.parquet(store).schema
-            return True
-        except Exception:
-            return False
-
-    timed("has_data_check_missing", has_data_check, r=3)
-    timed("stamp_only", lambda: _stamp(spark, store, "hll", {"p": 14},
-                                       "hash"), r=3)
+    timed("read_meta_missing", lambda: read_json_marker(spark, meta_dir),
+          r=3)
+    timed("has_data_check_missing", lambda: has_data(spark, store), r=3)
+    timed("stamp_only", lambda: overwrite_json_marker(
+        spark, meta_dir, json.dumps({"kind": "hll",
+                                     "params": json.dumps({"p": 14}),
+                                     "value_kind": "hash", "version": 1})),
+          r=3)
     shutil.rmtree(store, ignore_errors=True)
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet")) \
         .withColumn("epoch", F.concat(F.lit("w"), F.weekofyear("ts"))) \
