@@ -16,9 +16,5 @@ FILTER_KINDS = {
 }
 
 
-def build_filter(kind: str, hashes, **params):
-    return FILTER_KINDS[kind].build(hashes, **params)
-
-
 def deserialize_filter(kind: str, payload: bytes, params: dict):
     return FILTER_KINDS[kind].deserialize(payload, params)

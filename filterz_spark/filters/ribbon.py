@@ -1,4 +1,4 @@
-"""Standard Ribbon filter with "smash" — numpy probe, banded-elimination build.
+"""Standard Ribbon filter with "smash" — C construction + probe (``filterz_spark.native``).
 
 Semantics mirror the reference (steelcake/filterz ``src/ribbon.zig``; paper
 arXiv:2103.02515):
@@ -16,40 +16,34 @@ arXiv:2103.02515):
 - incremental banded Gaussian elimination: XOR-eliminate each key's row into
   the first free slot, shifting by count-trailing-zeros on collision;
   inconsistency (coeff==0, result!=0) aborts the try (ref src/ribbon.zig:77-104);
-- back-substitution bottom-up (ref src/ribbon.zig:108-134). We use the
-  algebraically identical row form: ``solution[i] = result[i] XOR
-  (XOR over set bits k>=1 of coeff[i] of solution[i+k])`` — the reference's
-  bit-plane ``state`` loop computes exactly this parity per result bit.
+- back-substitution bottom-up in the reference's bit-plane form
+  (ref src/ribbon.zig:108-134).
 
-Probe is fully vectorized in numpy (gather a (batch, coeff_bits) window of
-solution rows, mask by coefficient bits, XOR-reduce — the numpy analogue of
-the reference's 256-bit SIMD probe, src/ribbon.zig:161-191). Construction is
-a per-partition Python loop over numpy-backed state: elimination is inherently
-sequential per key (each insert's cascade depends on all prior rows), which is
-why at the Spark layer ribbon builds are partition-parallel — each executor
-builds one section's filter, matching the reference's one-filter-per-section
-model (src/bench.zig:240-249).
-
-u128 coefficient rows use Python's arbitrary-precision ints during build and
-an (hi, lo) uint64 pair during probe.
+Each (multiplier, seed) try and every probe batch run in
+``native/kernels.c``; this module owns the sizing and seed sweep. Rows are
+inserted in ascending start-position bucket order, which keeps elimination
+cascades cache-local; solvability is order-independent and the order is
+deterministic, so builds stay reproducible. Elimination is inherently
+sequential per key, which is why at the Spark layer ribbon builds are
+partition-parallel — each executor builds one section's filter, matching
+the reference's one-filter-per-section model (src/bench.zig:240-249).
 
 FPR ~= 2^-result_bits; zero false negatives; NOT mergeable (SURVEY.md §7.3).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
+from .. import native
 from ..hashing import SplitMix64
 
-COEFF_FACTOR0 = 0x876F170BE4F1FCB9  # ref src/ribbon.zig:19
-COEFF_FACTOR1 = 0xF0433A4AECDA4C5F  # ref src/ribbon.zig:20
 MIN_MULTIPLIER = 103  # ref src/ribbon.zig:52
 MAX_MULTIPLIER = 140  # ref src/ribbon.zig:53
 NUM_TRIES = 3  # ref src/ribbon.zig:67
 INITIAL_SEED = 12  # ref src/ribbon.zig:208
-
-_M64 = (1 << 64) - 1
 
 
 class ConstructError(RuntimeError):
@@ -71,172 +65,57 @@ def calculate_size(coeff_bits: int, num_hashes: int, multiplier: int) -> int:
     return (num_hashes * multiplier + 99) // 100 + coeff_bits - 1
 
 
-def _byteswap64(x: int) -> int:
-    return int.from_bytes((x & _M64).to_bytes(8, "little"), "big")
+def _check_params(coeff_bits: int, result_bits: int) -> None:
+    """Reject row widths the kernels do not implement."""
+    if coeff_bits not in (32, 64, 128):
+        raise ValueError(f"ribbon coeff_bits must be 32, 64 or 128, got {coeff_bits}")
+    if not 1 <= result_bits <= 32:
+        raise ValueError(f"ribbon result_bits must be in 1..32, got {result_bits}")
 
 
-def _coeff_row_int(coeff_bits: int, seed: int, hash_: int) -> int:
-    """Python-int coefficient row (ref src/ribbon.zig:22-35)."""
-    if coeff_bits == 64:
-        return ((seed ^ hash_) | 1) & _M64
-    if coeff_bits == 32:
-        return ((seed ^ hash_) | 1) & 0xFFFFFFFF
-    if coeff_bits == 128:
-        a = ((seed * COEFF_FACTOR0) & _M64) ^ hash_
-        b = ((seed * COEFF_FACTOR1) & _M64) ^ _byteswap64(hash_)
-        return ((a << 64) | b) | 1
-    raise ValueError(f"unsupported coeff_bits {coeff_bits}")
+def _start_multiplier(coeff_bits: int, n: int) -> int:
+    """First space multiplier of the sweep.
 
-
-def _start_pos_int(coeff_bits: int, seed: int, n: int, hash_: int) -> int:
-    """ref src/ribbon.zig:9-17 (scalar form, used during build)."""
-    w = coeff_bits // 8
-    hash0 = (seed ^ hash_) & _M64
-    h32 = (hash0 ^ (hash0 >> 32)) & 0xFFFFFFFF
-    smash_pos = ((n + w * 2) * h32) >> 32
-    pos = max(smash_pos - w, 0)
-    return min(n - 1, pos)
-
-
-def _result_row_int(result_bits: int, seed: int, hash_: int) -> int:
-    """ref src/ribbon.zig:46-49."""
-    h = (seed ^ hash_) & _M64
-    return ((h >> 32) ^ h) & ((1 << result_bits) - 1)
-
-
-def _key_params_vec(coeff_bits: int, result_bits: int, seed: int, n: int,
-                    h: np.ndarray):
-    """Vectorized (start_pos, coeff_hi, coeff_lo, result_row) for all keys —
-    the numpy form of _start_pos_int/_coeff_row_int/_result_row_int."""
-    if h.size == 0 or n <= 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.astype(np.uint64), z.astype(np.uint64), z
-    s = np.uint64(seed)
-    hash0 = s ^ h
-    h32 = (hash0 ^ (hash0 >> np.uint64(32))) & np.uint64(0xFFFFFFFF)
-    w = np.uint64(coeff_bits // 8)
-    smash = (np.uint64(n) + w * np.uint64(2)) * h32 >> np.uint64(32)
-    pos = np.where(smash > w, smash - w, np.uint64(0))
-    start = np.minimum(np.uint64(n - 1), pos).astype(np.int64)
-    hi, lo = _coeff_rows_vec(coeff_bits, seed, h)
-    mask = np.uint64((1 << result_bits) - 1)
-    rr = (((hash0 >> np.uint64(32)) ^ hash0) & mask).astype(np.int64)
-    return start, hi, lo, rr
+    Size-aware warm start (deviation from the reference's fixed 103 start,
+    src/ribbon.zig:52, justified by measurement): for w=64 the first
+    SUCCEEDING multiplier grows with n (104 @ 50k, 106 @ 200k, 109 @ 800k),
+    and starting below it just burns full elimination passes. The sweep
+    beyond the start is unchanged, so results stay deterministic per input
+    and the adaptive-space property is preserved up to ~1% of slots.
+    """
+    if coeff_bits <= 64 and n > 35_000:
+        return min(MAX_MULTIPLIER,
+                   MIN_MULTIPLIER + round(1.5 * math.log2(n / 35_000)))
+    if coeff_bits == 128 and n > 300_000:
+        # u128 at 103 succeeds on only ~45% of seeds at n=625k (measured
+        # over 20 key sets; 104 -> 85%, 105 -> 95%), and every failed seed
+        # burns most of a full elimination pass — ~40% of the build wall in
+        # expectation. One extra percent of slots buys back that pass.
+        return MIN_MULTIPLIER + 1
+    return MIN_MULTIPLIER
 
 
 def construct(hashes: np.ndarray, coeff_bits: int, result_bits: int):
-    """Banded Gaussian elimination + back-substitution.
+    """Banded Gaussian elimination + back-substitution over the
+    (multiplier, seed) sweep.
 
     Returns (seed, solution_matrix ndarray). Raises ConstructError if every
     (multiplier, seed) combination fails (ref src/ribbon.zig:136-138) — a real
     code path the Spark layer must handle with partition re-split.
     """
+    _check_params(coeff_bits, result_bits)
     harr = np.asarray(hashes, dtype=np.uint64)
     n = int(harr.size)
-    dtype = _storage_dtype(result_bits)
     rng = SplitMix64(INITIAL_SEED)
-
-    # size-aware warm start (deviation from the reference's fixed 103 start,
-    # src/ribbon.zig:52: justified by measurement — for w=64 the first
-    # SUCCEEDING multiplier grows with n (104 @ 50k, 106 @ 200k, 109 @ 800k);
-    # starting below it just burns full elimination passes. The sweep beyond
-    # the start is unchanged, so results stay deterministic per input and the
-    # adaptive-space property is preserved up to ~1% of slots.
-    start_mult = MIN_MULTIPLIER
-    if coeff_bits <= 64 and n > 35_000:
-        import math
-        start_mult = min(MAX_MULTIPLIER,
-                         MIN_MULTIPLIER + round(1.5 * math.log2(n / 35_000)))
-    elif coeff_bits == 128 and n > 300_000:
-        # u128 at 103 succeeds on only ~45% of seeds at n=625k (measured
-        # over 20 key sets; 104 -> 85%, 105 -> 95%), and every failed seed
-        # burns most of a full elimination pass — ~40% of the build wall in
-        # expectation. One extra percent of slots buys back that pass.
-        start_mult = MIN_MULTIPLIER + 1
-
-    for multiplier in range(start_mult, MAX_MULTIPLIER + 1):
+    for multiplier in range(_start_multiplier(coeff_bits, n), MAX_MULTIPLIER + 1):
         size = calculate_size(coeff_bits, n, multiplier)
-        start_range = size + 1 - coeff_bits
+        sol = np.empty(size, dtype=np.uint64)
         for _try in range(NUM_TRIES):
             seed = rng.next()
-            # vectorized per-key parameters (one numpy pass instead of three
-            # Python-int computations per key), then insert in ASCENDING
-            # start_pos order: elimination cascades shorten dramatically when
-            # rows arrive band-sorted (solvability is order-independent —
-            # the row span doesn't change — and sorted order is
-            # deterministic, so builds stay reproducible)
-            from .. import native
-            if native.available() and coeff_bits in (32, 64, 128) and result_bits <= 32:
-                # C fast path — computes the same per-key params and inserts
-                # in the same stable start-position order as the fallback
-                # below, so the solution is byte-identical (tested).
-                sol = native.ribbon_attempt(harr, seed, size, coeff_bits,
-                                            result_bits)
-                if sol is False:
-                    continue  # inconsistent system -> next seed
-                if sol is not None:
-                    return seed, sol.astype(dtype)
-            starts, chi, clo, rrs = _key_params_vec(
-                coeff_bits, result_bits, seed, start_range, harr)
-            # stable bucket sort on the top 16 bits of start position —
-            # the same key the native kernel uses, so both backends insert
-            # in the identical order and solutions stay byte-identical
-            shift = max(0, int(start_range - 1).bit_length() - 16)
-            order = np.argsort(starts >> shift, kind="stable")
-            if coeff_bits <= 64:
-                crs = clo[order].tolist()
-            else:
-                crs = ((chi[order].astype(object).tolist()))
-                lo_l = clo[order].tolist()
-                crs = [(hi << 64) | lo for hi, lo in zip(crs, lo_l)]
-            pos_l = starts[order].tolist()
-            rr_l = rrs[order].tolist()
-
-            coeff = [0] * size
-            result = [0] * size
-            ok = True
-            for pos, cr, rr in zip(pos_l, crs, rr_l):
-                while True:
-                    existing = coeff[pos]
-                    if existing == 0:
-                        coeff[pos] = cr
-                        result[pos] = rr
-                        break
-                    cr ^= existing
-                    rr ^= result[pos]
-                    if cr == 0:
-                        if rr == 0:
-                            break  # redundant (duplicate-consistent) row
-                        ok = False
-                        break  # inconsistent system -> next seed
-                    tz = (cr & -cr).bit_length() - 1
-                    pos += tz
-                    cr >>= tz
-                if not ok:
-                    break
-            if not ok:
-                continue
-
-            # back-substitution bottom-up, bit-plane form (exactly ref
-            # src/ribbon.zig:108-134): planes[j] holds bit j of the last
-            # coeff_bits solution rows; per row, bit j = parity(plane<<1 &
-            # coeff) ^ result bit. int.bit_count is a single C call, which
-            # beats walking the ~popcount/2 set bits row by row.
-            cmask = (1 << coeff_bits) - 1
-            planes = [0] * result_bits
-            solution = [0] * size
-            rb_range = range(result_bits)
-            for i in range(size - 1, -1, -1):
-                cr = coeff[i]
-                rr = result[i]
-                srow = 0
-                for j in rb_range:
-                    tmp = (planes[j] << 1) & cmask
-                    bit = ((tmp & cr).bit_count() & 1) ^ ((rr >> j) & 1)
-                    planes[j] = tmp | bit
-                    srow |= bit << j
-                solution[i] = srow
-            return seed, np.array(solution, dtype=dtype)
+            if native.ribbon_attempt(harr, seed, size, coeff_bits,
+                                     result_bits, sol):
+                return seed, sol.astype(_storage_dtype(result_bits))
+            # inconsistent system -> next seed
 
     raise ConstructError(
         f"ribbon construction failed for n={n} coeff_bits={coeff_bits} "
@@ -244,55 +123,16 @@ def construct(hashes: np.ndarray, coeff_bits: int, result_bits: int):
     )
 
 
-def _coeff_rows_vec(coeff_bits: int, seed: int, h: np.ndarray):
-    """Vectorized coefficient rows -> (hi, lo) uint64 pair (hi unused <=64)."""
-    s = np.uint64(seed)
-    if coeff_bits == 64:
-        return np.zeros_like(h), (s ^ h) | np.uint64(1)
-    if coeff_bits == 32:
-        return np.zeros_like(h), ((s ^ h) & np.uint64(0xFFFFFFFF)) | np.uint64(1)
-    if coeff_bits == 128:
-        sa = np.uint64((seed * COEFF_FACTOR0) & _M64)
-        sb = np.uint64((seed * COEFF_FACTOR1) & _M64)
-        a = sa ^ h
-        b = (sb ^ h.byteswap()) | np.uint64(1)
-        return a, b
-    raise ValueError(f"unsupported coeff_bits {coeff_bits}")
-
-
 def contains(solution: np.ndarray, seed: int, coeff_bits: int, result_bits: int,
              num_keys: int, hashes: np.ndarray) -> np.ndarray:
-    """Vectorized probe (numpy analogue of ref src/ribbon.zig:141-192)."""
+    """Batch probe (ref src/ribbon.zig:141-192)."""
     if hashes.size == 0:
         return np.zeros(0, dtype=bool)
     if num_keys == 0:
         return np.zeros(hashes.size, dtype=bool)
-    h = np.asarray(hashes, dtype=np.uint64)
-    from .. import native
-    res = native.ribbon_contains(solution, seed, coeff_bits, result_bits, h)
-    if res is not None:
-        return res
-    size = solution.shape[0]
-    start_range = size + 1 - coeff_bits
-
-    # identical start/coeff/result derivation as the build side — ONE
-    # implementation, or a boundary edit to either would silently break
-    # the zero-false-negative guarantee
-    start, hi, lo, rr = _key_params_vec(coeff_bits, result_bits, seed,
-                                        start_range, h)
-    expected = rr.astype(np.uint64)
-
-    window = solution[start[:, None] + np.arange(coeff_bits)[None, :]]  # (b, cb)
-    ks = np.arange(coeff_bits, dtype=np.uint64)
-    if coeff_bits <= 64:
-        bits = (lo[:, None] >> ks[None, :]) & np.uint64(1)
-    else:
-        bits_lo = (lo[:, None] >> ks[None, :64]) & np.uint64(1)
-        bits_hi = (hi[:, None] >> (ks[None, 64:] - np.uint64(64))) & np.uint64(1)
-        bits = np.concatenate([bits_lo, bits_hi], axis=1)
-    mask = (np.uint64(0) - bits).astype(solution.dtype)
-    acc = np.bitwise_xor.reduce(window & mask, axis=1)
-    return acc.astype(np.uint64) == expected
+    _check_params(coeff_bits, result_bits)
+    return native.ribbon_contains(solution, seed, coeff_bits, result_bits,
+                                  np.asarray(hashes, dtype=np.uint64))
 
 
 class RibbonFilter:

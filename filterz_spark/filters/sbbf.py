@@ -1,4 +1,4 @@
-"""Split-Block Bloom Filter (SBBF) — vectorized numpy kernel.
+"""Split-Block Bloom Filter (SBBF) — C kernel (``filterz_spark.native``).
 
 Semantics mirror the reference (steelcake/filterz ``src/sbbf.zig``, which
 follows the Apache Parquet BloomFilter spec):
@@ -13,8 +13,8 @@ follows the Apache Parquet BloomFilter spec):
   (ref src/sbbf.zig:94-107);
 - serialized bytes are little-endian u64 lanes (ref src/sbbf.zig:9-26).
 
-The SIMD lane-parallelism of the reference becomes numpy batch-parallelism:
-we insert/probe whole uint64 hash arrays at once, never per-row Python.
+Insert and probe take whole uint64 hash arrays per call, never per-row
+Python; the per-key loop runs in ``native/kernels.c``.
 
 SBBF is the one natively MERGEABLE filter here: insert is an idempotent,
 commutative bitwise OR into a fixed-size array (ref src/sbbf.zig:39-43), so
@@ -27,20 +27,10 @@ from __future__ import annotations
 
 import numpy as np
 
+from .. import native
+
 BLOCK_SIZE = 64  # bytes per block (ref src/sbbf.zig:7)
 LANES = 8
-
-# ref src/sbbf.zig:80
-SALT = np.array(
-    [0x47B6137B, 0x44974D91, 0x8824AD5B, 0xA2B7289D,
-     0x705495C7, 0x2DF1424B, 0x9EFC4947, 0x5C6BFB31],
-    dtype=np.uint64,
-)
-
-_SHR = np.uint64(27)
-_LOW32 = np.uint64(0xFFFFFFFF)
-_B63 = np.uint64(63)
-_ONE = np.uint64(1)
 
 
 def num_bytes(num_keys: int, bits_per_key: int) -> int:
@@ -49,87 +39,40 @@ def num_bytes(num_keys: int, bits_per_key: int) -> int:
     return (raw + BLOCK_SIZE - 1) // BLOCK_SIZE * BLOCK_SIZE
 
 
-def _masks(hashes: np.ndarray) -> np.ndarray:
-    """(n, 8) uint64 block masks — one bit per lane (ref src/sbbf.zig:72-80)."""
-    x = (hashes[:, None] * SALT[None, :]) >> _SHR
-    return _ONE << (x & _B63)
-
-
-def _block_indices(num_blocks: int, hashes: np.ndarray) -> np.ndarray:
-    """Block per key from low 32 hash bits (ref src/sbbf.zig:28-30, :55)."""
-    return ((np.uint64(num_blocks) * (hashes & _LOW32)) >> np.uint64(32)).astype(np.int64)
-
-
 def empty_blocks(num_keys: int, bits_per_key: int) -> np.ndarray:
     """Zeroed (num_blocks, 8) uint64 block array for the given capacity."""
     return np.zeros((num_bytes(num_keys, bits_per_key) // BLOCK_SIZE, LANES), dtype=np.uint64)
 
 
 def insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
-    """Scatter-OR a batch of u64 hashes into the block array (in place).
-
-    Equivalent to the reference's per-key ``filter_insert`` loop
-    (src/sbbf.zig:64-66, :94-107) but one vectorized pass per batch.
-    """
+    """Scatter-OR a batch of u64 hashes into the block array (in place) —
+    the reference's per-key ``filter_insert`` loop (src/sbbf.zig:64-66,
+    :94-107)."""
     if blocks.shape[0] == 0 or hashes.size == 0:
         return
-    h = hashes.astype(np.uint64, copy=False)
-    from .. import native
-    if native.sbbf_insert(blocks, h):  # byte-identical C fast path
-        return
-    idx = _block_indices(blocks.shape[0], h)
-    m = _masks(h)
-    # sort-by-block + bitwise_or.reduceat beats np.bitwise_or.at (per-element
-    # scatter) ~5x: one OR-reduction per occupied block, then a plain gather
-    order = np.argsort(idx, kind="stable")
-    si = idx[order]
-    sm = m[order]
-    starts = np.flatnonzero(np.concatenate(([True], si[1:] != si[:-1])))
-    reduced = np.bitwise_or.reduceat(sm, starts, axis=0)
-    tgt = si[starts]
-    blocks[tgt] |= reduced
+    native.sbbf_insert(blocks, hashes)
 
 
 def insert_check(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     """Insert a batch and report, per key, whether it was maybe-present at
     its turn (ref ``block_insert_check``/``filter_insert_check``,
     src/sbbf.zig:45-52, :68-70 — sequential semantics, so a duplicate later
-    in the batch reports present). The C kernel is the hot path; the numpy
-    fallback loops per key over vectorized lane ops (this API exists for
-    reference parity — build-once pipelines use ``insert``)."""
+    in the batch reports present)."""
     if hashes.size == 0:
         return np.zeros(0, dtype=bool)
-    h = hashes.astype(np.uint64, copy=False)
-    from .. import native
-    res = native.sbbf_insert_check(blocks, h)
-    if res is not None:
-        return res
-    nb = blocks.shape[0]
-    out = np.empty(h.size, dtype=bool)
-    for i in range(h.size):
-        hi = h[i : i + 1]
-        idx = _block_indices(nb, hi)[0]
-        m = _masks(hi)[0]
-        out[i] = bool(((blocks[idx] & m) == m).all())
-        blocks[idx] |= m
-    return out
+    if blocks.shape[0] == 0:
+        raise ValueError("sbbf insert_check: the filter has no blocks")
+    return native.sbbf_insert_check(blocks, hashes)
 
 
 def contains(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Vectorized probe: bool array, True where all 8 lane bits are set
+    """Batch probe: bool array, True where all 8 lane bits are set
     (ref src/sbbf.zig:32-37, :60-62)."""
     if hashes.size == 0:
         return np.zeros(0, dtype=bool)
     if blocks.shape[0] == 0:
         return np.zeros(hashes.size, dtype=bool)
-    h = hashes.astype(np.uint64, copy=False)
-    from .. import native
-    res = native.sbbf_contains(blocks, h)
-    if res is not None:
-        return res
-    idx = _block_indices(blocks.shape[0], h)
-    m = _masks(h)
-    return ((blocks[idx] & m) == m).all(axis=1)
+    return native.sbbf_contains(blocks, hashes)
 
 
 def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:

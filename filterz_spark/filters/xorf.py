@@ -1,4 +1,4 @@
-"""Xor / binary-fuse filter — vectorized numpy construction + probe.
+"""Xor / binary-fuse filter — C construction + probe (``filterz_spark.native``).
 
 Semantics mirror the reference (steelcake/filterz ``src/xorf.zig``; paper
 arXiv:2201.01174):
@@ -6,7 +6,7 @@ arXiv:2201.01174):
 - re-seed each u64 key hash with Murmur2-64 (``apply_seed``, src/xorf.zig:7-9);
 - fingerprint = ``truncate(h ^ (h >> 32))`` (src/xorf.zig:11-13);
 - ``arity`` positions per key spread over consecutive segments
-  (``make_subhashes``, src/xorf.zig:29-40);
+  (src/xorf.zig:29-40; see POSITION DEVIATION below);
 - segment geometry from ``calculate_segment_length`` / ``calculate_size_factor``
   / ``calculate_header`` (src/xorf.zig:58-109) — reproduced exactly, including
   the 262144 segment cap and the empty/size<=1 edge cases;
@@ -15,21 +15,26 @@ arXiv:2201.01174):
 - membership: ``fp(h) ^ fps[p0] ^ fps[p1] ^ fps[p2](^ fps[p3]) == 0``
   (src/xorf.zig:42-50). FPR <= 2^-fingerprint_bits; zero false negatives.
 
-CONSTRUCTION DIFFERENCE (documented, correctness-preserving): the reference
-peels singletons one at a time with an explicit queue (src/xorf.zig:167-193).
-We peel in vectorized ROUNDS — each round removes every current singleton at
-once (``np.flatnonzero(count == 1)``). Round-layered peeling succeeds exactly
-when queue peeling succeeds (both fully exhaust the 2-core of the hypergraph)
-and keeps the same invariants needed for back-substitution:
-  * within a round no key occupies another round-key's chosen slot (a shared
-    slot would have count >= 2),
-  * a key never reads a slot chosen by an earlier-peeled key (that slot had
-    count == 1 while this key was still present).
-So assignment can also run round-vectorized in reverse. The resulting
-fingerprint array differs from the reference byte-for-byte (different peel
-order) but satisfies the identical membership equation, zero-FN and FPR
-bound. Construction stays deterministic (numpy ops + np.unique are
-deterministic), which we rely on for resumable builds.
+Construction and probe run in ``native/kernels.c``, whose peel IS the
+reference's sequential queue peel (src/xorf.zig:167-193), with assignment in
+reverse peel order (src/xorf.zig:199-216). Payloads are deterministic per
+input, which resumable builds rely on; ``tests/filter_oracle.py``
+transcribes the peel and checks the payload bytes.
+
+POSITION DEVIATION (documented, correctness-preserving): the reference
+derives the segment selector from reduce32 of the LOW 32 hash bits and the
+in-segment offsets from 21-bit rotations of the same word (src/xorf.zig:29-40).
+At several sizes (e.g. n=1500, n=8000) those bit windows overlap the
+selector's dominant bits, construction peels only ~60% of keys, and ALL 100
+seeds fail (measured; the reference's own tests only cover n=42 and n=10000
+where the overlap is harmless; pinned by tests/test_subhash_deviation.py).
+We keep the reference's geometry (calculate_header), seed discipline,
+fingerprint and membership equation, but take positions from the published
+binary-fuse derivation (arXiv:2201.01174): segment selector =
+mulhi(h, segment_count_length) over the FULL 64 bits; offsets from an
+18-bit-spaced (arity 3) / 12-bit-spaced (arity 4) window — independent of
+the selector bits, so peeling succeeds with the paper's probability at
+every size.
 
 Fingerprint widths: 8/16/32-bit natively; odd widths (u7/u9/u10) are stored
 widened with a bit mask — same behavior the reference documents as a
@@ -47,13 +52,12 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..hashing import SplitMix64, mulhi64, murmur64_mix
+from .. import native
+from ..hashing import SplitMix64
 
 SEED_SEQUENCE_INIT = 0x726B2B9D438B9D4D  # ref src/xorf.zig:134
 MAX_ATTEMPTS = 100  # ref src/xorf.zig:137-139
 SEGMENT_LENGTH_CAP = 262144  # ref src/xorf.zig:86
-
-_LOW32 = np.uint64(0xFFFFFFFF)
 
 
 @dataclass
@@ -122,43 +126,6 @@ def calculate_header(arity: int, num_keys: int) -> Header:
     )
 
 
-def make_subhashes(arity: int, header: Header, h: np.ndarray) -> np.ndarray:
-    """(n, arity) int64 position array, vectorized.
-
-    DELIBERATE DEVIATION from ref src/xorf.zig:29-40 (documented): the Zig
-    reference derives the segment selector from reduce32 of the LOW 32 hash
-    bits and the in-segment offsets from 21-bit rotations of the same word;
-    at several sizes (e.g. n=1500, n=8000) those bit windows overlap the
-    selector's dominant bits, construction peels only ~60% of keys, and ALL
-    100 seeds fail (measured; the reference's own tests only cover n=42 and
-    n=10000 where the overlap is harmless). We keep the reference's geometry
-    (calculate_header), seed discipline, fingerprint and membership equation,
-    but take positions from the published binary-fuse reference derivation
-    (arXiv:2201.01174): segment selector = mulhi(h, segment_count_length)
-    over the FULL 64 bits; offsets from an 18-bit-spaced (arity 3) /
-    12-bit-spaced (arity 4) window — independent of the selector bits, so
-    peeling succeeds with the paper's probability at every size."""
-    hl = mulhi64(h, header.segment_count_length)
-    seg_len = np.uint64(header.segment_length)
-    seg_mask = np.uint64(header.segment_length_mask)
-    out = np.empty((h.size, arity), dtype=np.int64)
-    span = 18 if arity == 3 else 12
-    hh = h & np.uint64((1 << (span * (arity - 1) + span)) - 1) if span * arity <= 64 else h
-    for i in range(arity):
-        shift = np.uint64(span * (arity - 1 - i))
-        pos = (hl + np.uint64(i) * seg_len) ^ ((hh >> shift) & seg_mask)
-        out[:, i] = pos.astype(np.int64)
-    return out
-
-
-def make_fingerprint(h: np.ndarray, fp_bits: int) -> np.ndarray:
-    """``truncate(h ^ (h >> 32))`` to fp_bits (ref src/xorf.zig:11-13)."""
-    f = h ^ (h >> np.uint64(32))
-    if fp_bits >= 64:
-        return f
-    return f & np.uint64((1 << fp_bits) - 1)
-
-
 def _storage_dtype(fp_bits: int):
     if fp_bits <= 8:
         return np.uint8
@@ -169,145 +136,36 @@ def _storage_dtype(fp_bits: int):
     return np.uint64
 
 
+def _check_params(arity: int, fp_bits: int) -> None:
+    """Reject geometry the kernels do not implement."""
+    if arity not in (3, 4):
+        raise ValueError(f"xor filter arity must be 3 or 4, got {arity}")
+    if not 1 <= fp_bits <= 64:
+        raise ValueError(f"xor filter fp_bits must be in 1..64, got {fp_bits}")
+
+
 def construct(hashes: np.ndarray, arity: int, fp_bits: int):
-    """Round-vectorized peeling construction. Returns (header, fingerprints).
+    """Las-Vegas queue-peel construction. Returns (header, fingerprints).
 
     Raises ConstructError after MAX_ATTEMPTS failed seeds
     (ref ConstructError, src/xorf.zig:52-56 — a real code path callers handle).
     """
+    _check_params(arity, fp_bits)
     n = int(hashes.size)
     header = calculate_header(arity, n)
-    dtype = _storage_dtype(fp_bits)
-    alen = header.array_length
     hashes = hashes.astype(np.uint64, copy=False)
-
     rng = SplitMix64(SEED_SEQUENCE_INIT)
-
-    from .. import native
-    if native.available() and fp_bits <= 64:
-        # C fast path: the reference's own sequential queue peel
-        # (src/xorf.zig:167-216) over the same position scheme and seed
-        # sequence. A seed succeeds iff the hypergraph's 2-core is empty —
-        # a property of (seed, positions) only — so the C and numpy
-        # backends succeed on exactly the same seed; only the
-        # slot-assignment order (payload bytes) differs between backends.
-        # empty, not zeros: the kernel memsets fp_out itself before the
-        # (only) assignment pass that runs on a full peel
-        fp64 = np.empty(alen, dtype=np.uint64)
-        for _ in range(MAX_ATTEMPTS):
-            seed = rng.next()
-            header.seed = seed
-            peeled = native.xorf_attempt(
-                hashes, seed, arity, header.segment_length,
-                header.segment_count_length, alen, fp_bits, fp64)
-            if peeled == n:
-                return header, fp64.astype(dtype)
-        raise ConstructError(
-            f"xor filter construction failed after {MAX_ATTEMPTS} seeds")
+    # empty, not zeros: the kernel memsets fp_out itself before the (only)
+    # assignment pass that runs on a full peel
+    fp64 = np.empty(header.array_length, dtype=np.uint64)
     for _ in range(MAX_ATTEMPTS):
-        seed = rng.next()
-        header.seed = seed
-        h = murmur64_mix(hashes, seed)
-        sub = make_subhashes(arity, header, h)
-
-        # bincount/reduceat instead of ufunc.at scatter (~5-10x on the init
-        # pass, which touches arity*n slots)
-        flat = sub.ravel()
-        xormask = np.zeros(alen, dtype=np.uint64)
-        if flat.size:
-            count = np.bincount(flat, minlength=alen)
-            rep = np.repeat(h, arity)
-            order = np.argsort(flat, kind="stable")
-            sf = flat[order]
-            sh = rep[order]
-            starts_i = np.flatnonzero(np.concatenate(([True], sf[1:] != sf[:-1])))
-            xormask[sf[starts_i]] = np.bitwise_xor.reduceat(sh, starts_i)
-        else:
-            count = np.zeros(alen, dtype=np.int64)
-
-        # layered peel: each round removes all current singletons at once;
-        # once rounds get small (long sparse tail — measured 700+ rounds of
-        # a few keys each, every one scanning the full slot array) fall back
-        # to the reference's sequential queue peel (src/xorf.zig:167-193)
-        # over the remaining keys
-        rounds: list[tuple] = []  # (keys_h, chosen_pos, subhash_positions)
-        tail_keys: list[int] = []  # sequential-phase peels, in peel order
-        tail_pos: list[int] = []
-        tail_threshold = max(2048, n >> 4)
-        peeled = 0
-        touched = None  # slots whose count changed last round (None = scan all)
-        while True:
-            if touched is None:
-                singles = np.flatnonzero(count == 1)
-            else:
-                # new singletons can only appear where a count just dropped:
-                # every pre-existing count==1 slot had its key peeled last
-                # round (all singleton keys peel each round)
-                singles = touched[count[touched] == 1]
-            if singles.size == 0:
-                break
-            if n - peeled <= tail_threshold:
-                # few keys left: Python queue peel beats per-round numpy cost
-                peeled += _queue_peel_tail(
-                    arity, header, count, xormask, singles, tail_keys, tail_pos)
-                break
-            hs = xormask[singles]
-            # one chosen slot per distinct key (a key can be a singleton in
-            # several slots at once; hashes are distinct post-dedup, so the
-            # xormask of a count==1 slot IS the key's seeded hash)
-            keys, first = np.unique(hs, return_index=True)
-            pos = singles[first]
-            peeled += keys.size
-            ssub = make_subhashes(arity, header, keys)
-            rounds.append((keys, pos, ssub))  # ssub reused in assignment
-            sflat = ssub.ravel()
-            if sflat.size > alen >> 4:
-                # large round: dense bincount/reduceat beats scatter
-                count -= np.bincount(sflat, minlength=alen)
-                srep = np.repeat(keys, arity)
-                so = np.argsort(sflat, kind="stable")
-                sf2 = sflat[so]
-                sh2 = srep[so]
-                st2 = np.flatnonzero(np.concatenate(([True], sf2[1:] != sf2[:-1])))
-                xormask[sf2[st2]] ^= np.bitwise_xor.reduceat(sh2, st2)
-                touched = sf2[st2]
-            else:
-                np.bitwise_xor.at(xormask, sflat, np.repeat(keys, arity))
-                np.subtract.at(count, sflat, 1)
-                touched = np.unique(sflat)
-
-        if peeled < n:
-            continue  # 2-core non-empty -> retry with next seed (ref :195-197)
-
-        fingerprints = np.zeros(alen, dtype=dtype)
-        mask_i = (1 << fp_bits) - 1
-        mask = np.uint64(mask_i) if fp_bits < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
-        # tail first (peeled last -> assigned first), element-wise in
-        # reverse peel order (ref :199-216)
-        scl = header.segment_count_length
-        seg_len = header.segment_length
-        seg_mask = header.segment_length_mask
-        span = 18 if arity == 3 else 12
-        hh_mask = (1 << (span * arity)) - 1 if span * arity <= 64 else (1 << 64) - 1
-        fp_list = fingerprints  # numpy fancy-index scalar access
-        for kh, kp in zip(reversed(tail_keys), reversed(tail_pos)):
-            hl = (kh * scl) >> 64
-            hh = kh & hh_mask
-            f = (kh ^ (kh >> 32)) & mask_i
-            for i in range(arity):
-                p = (hl + i * seg_len) ^ ((hh >> (span * (arity - 1 - i))) & seg_mask)
-                f ^= int(fp_list[p])
-            fp_list[kp] = f & mask_i
-        for keys, pos, ssub in reversed(rounds):
-            f = make_fingerprint(keys, fp_bits)
-            acc = f
-            for i in range(arity):
-                acc = acc ^ (fingerprints[ssub[:, i]].astype(np.uint64) & mask)
-            # chosen slots hold 0 pre-assignment, so xor-ing all arity slots
-            # (chosen included) leaves the equation balanced
-            fingerprints[pos] = acc.astype(dtype)
-        return header, fingerprints
-
+        header.seed = rng.next()
+        peeled = native.xorf_attempt(
+            hashes, header.seed, arity, header.segment_length,
+            header.segment_count_length, header.array_length, fp_bits, fp64)
+        if peeled == n:
+            return header, fp64.astype(_storage_dtype(fp_bits))
+        # 2-core non-empty -> retry with the next seed (ref :195-197)
     raise ConstructError(f"xor filter construction failed after {MAX_ATTEMPTS} seeds")
 
 
@@ -315,68 +173,24 @@ class ConstructError(RuntimeError):
     pass
 
 
-def _queue_peel_tail(arity: int, header: Header, count: np.ndarray,
-                     xormask: np.ndarray, singles: np.ndarray,
-                     tail_keys: list, tail_pos: list) -> int:
-    """Sequential queue peel for the sparse tail — the reference's own
-    algorithm (src/xorf.zig:167-193), scalar Python-int position math
-    (exact mulhi via big ints). Mutates count/xormask in place; appends
-    peeled (key, chosen_pos) in peel order."""
-    scl = header.segment_count_length
-    seg_len = header.segment_length
-    seg_mask = header.segment_length_mask
-    span = 18 if arity == 3 else 12
-    hh_mask = (1 << (span * arity)) - 1
-    queue = singles.tolist()
-    peeled = 0
-    while queue:
-        i = queue.pop()
-        if count[i] != 1:
-            continue
-        h = int(xormask[i])
-        hl = (h * scl) >> 64
-        hh = h & hh_mask
-        for j in range(arity):
-            p = (hl + j * seg_len) ^ ((hh >> (span * (arity - 1 - j))) & seg_mask)
-            xormask[p] ^= np.uint64(h)
-            count[p] -= 1
-            if p != i and count[p] == 1:
-                queue.append(p)
-        tail_keys.append(h)
-        tail_pos.append(i)
-        peeled += 1
-    return peeled
-
-
 def contains(header: Header, fingerprints: np.ndarray, arity: int, fp_bits: int,
              hashes: np.ndarray, _fp_u64: np.ndarray | None = None) -> np.ndarray:
-    """Vectorized membership probe (ref src/xorf.zig:42-50).
+    """Batch membership probe (ref src/xorf.zig:42-50).
 
     An empty filter needs no special casing: its fingerprint array is all
     zero, so the reference equation matches exactly when the mixed hash's
     fingerprint truncates to 0. ``_fp_u64``: caller-cached u64 widening of
-    the fingerprint array for the native kernel — without it each call
-    pays a full-array widening copy (XorFilter.check caches it; see
-    native ribbon_contains for the probe-native-width rationale)."""
+    the fingerprint array for the kernel — without it each call pays a
+    full-array widening copy (XorFilter.check caches it)."""
     if hashes.size == 0:
         return np.zeros(0, dtype=bool)
-    from .. import native
-    if native.available() and fp_bits <= 64:
-        wide = _fp_u64 if _fp_u64 is not None \
-            else fingerprints.astype(np.uint64, copy=False)
-        res = native.xorf_contains(
-            wide, header.seed, arity,
-            header.segment_length, header.segment_count_length, fp_bits,
-            hashes.astype(np.uint64, copy=False))
-        if res is not None:
-            return res
-    h = murmur64_mix(hashes.astype(np.uint64, copy=False), header.seed)
-    sub = make_subhashes(arity, header, h)
-    mask = np.uint64((1 << fp_bits) - 1) if fp_bits < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
-    acc = make_fingerprint(h, fp_bits)
-    for i in range(arity):
-        acc = acc ^ (fingerprints[sub[:, i]].astype(np.uint64) & mask)
-    return acc == np.uint64(0)
+    _check_params(arity, fp_bits)
+    wide = _fp_u64 if _fp_u64 is not None \
+        else fingerprints.astype(np.uint64, copy=False)
+    return native.xorf_contains(
+        wide, header.seed, arity, header.segment_length,
+        header.segment_count_length, fp_bits,
+        hashes.astype(np.uint64, copy=False))
 
 
 class XorFilter:
@@ -399,7 +213,7 @@ class XorFilter:
 
     def check(self, hashes: np.ndarray) -> np.ndarray:
         if getattr(self, "_fp_u64", None) is None:
-            # widen ONCE per filter: the native kernel reads u64 slots, and
+            # widen ONCE per filter: the kernel reads u64 slots, and
             # re-widening per probe batch costs a full-array copy each call
             self._fp_u64 = self.fingerprints.astype(np.uint64, copy=False)
         return contains(self.header, self.fingerprints, self.arity,

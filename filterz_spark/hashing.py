@@ -1,4 +1,4 @@
-"""Hash primitives shared by every filter/sketch kernel.
+"""Hash primitives shared by the sketches and the filter seed sequences.
 
 All functions are pure, vectorized numpy transforms over ``uint64`` arrays —
 no per-row Python. Semantics mirror the reference library's hash chain
@@ -10,7 +10,7 @@ no per-row Python. Semantics mirror the reference library's hash chain
   resumable.
 - Murmur2-64 re-seed: reference ``src/xorf.zig:7-9`` (``apply_seed``) re-seeds
   a u64 key hash with ``std.hash.Murmur2_64.hashUint64WithSeed``; reproduced
-  bit-exactly below.
+  bit-exactly below (and in ``native/kernels.c``, which the filters run).
 - Multiply-shift range reduction: reference ``src/sbbf.zig:28-30``,
   ``src/xorf.zig:15-17``, ``src/ribbon.zig:5-7`` — ``(len * x32) >> 32``,
   no division/modulo.
@@ -99,33 +99,3 @@ def reduce32(length: int, x32: np.ndarray) -> np.ndarray:
     src/sbbf.zig:28-30, src/ribbon.zig:5-7. Uniform, branch-free, no modulo.
     """
     return (np.uint64(length) * x32.astype(np.uint64)) >> np.uint64(32)
-
-
-def mulhi64(a: np.ndarray, b: int) -> np.ndarray:
-    """High 64 bits of a 64x64->128 product, via 32-bit limbs (vectorized).
-
-    The binary-fuse reference implementation's range reduction
-    (arXiv:2201.01174) uses mulhi of the FULL 64-bit hash, which decorrelates
-    the segment selector from the in-segment offset bits."""
-    lo32 = np.uint64(0xFFFFFFFF)
-    a_lo = a & lo32
-    a_hi = a >> np.uint64(32)
-    bb = np.uint64(b)
-    b_lo = bb & lo32
-    b_hi = bb >> np.uint64(32)
-    ll = a_lo * b_lo
-    lh = a_lo * b_hi
-    hl = a_hi * b_lo
-    hh = a_hi * b_hi
-    mid = (ll >> np.uint64(32)) + (lh & lo32) + (hl & lo32)
-    return hh + (lh >> np.uint64(32)) + (hl >> np.uint64(32)) + (mid >> np.uint64(32))
-
-
-def rotl64(x: np.ndarray, r: int) -> np.ndarray:
-    """Rotate-left on uint64 arrays (reference uses std.math.rotl in
-    make_subhashes, src/xorf.zig:35)."""
-    r = r % 64
-    if r == 0:
-        return x.astype(np.uint64, copy=True)
-    rr = np.uint64(r)
-    return (x << rr) | (x >> np.uint64(64 - r))

@@ -1,16 +1,16 @@
-"""Native C kernels — compiled on first import, ctypes-loaded, optional.
+"""Native C kernels — compiled on first use, ctypes-loaded, required.
 
 The construction hot loops (xor peel, ribbon banded elimination, sbbf
-scatter-OR) are inherently per-key sequential, which caps pure-numpy at
+scatter-OR) are inherently per-key sequential, which caps pure numpy at
 ~0.2-1 M keys/s/core vs the reference's 7-28 M/s (BASELINE.md). This module
-compiles ``kernels.c`` with the system C compiler at import time (cached by
-source hash under the temp dir, atomic rename so concurrent executor
-processes race safely) and exposes thin numpy-array wrappers. Everything
-degrades gracefully: if no compiler is present or ``FILTERZ_NATIVE=0`` is
-set, every entry point returns ``None`` and the callers fall back to their
-numpy implementations (same membership semantics; sbbf/ribbon payloads are
-byte-identical across backends, xorf differs only in peel order — see
-filters/xorf.py).
+compiles ``kernels.c`` with the system C compiler (``gcc``, or ``$CC``) on
+the first kernel call (cached by source hash under the temp dir, atomic
+rename so concurrent executor processes race safely) and exposes thin
+numpy-array wrappers. These kernels are the only backend of the three
+filters: if the compile fails, every kernel call raises ``NativeLoadError``
+carrying the compiler's stderr. The numpy reference implementations live in
+the test suite (``tests/filter_oracle.py``), which checks the kernels
+against them byte for byte.
 
 Deploy note: tools/package_zip.py ships ``kernels.c`` inside the --py-files
 zip; ``pkgutil.get_data`` reads it through zipimport, so each executor node
@@ -30,119 +30,135 @@ import numpy as np
 from numpy.ctypeslib import ndpointer
 
 _u64p = ndpointer(dtype=np.uint64, flags="C_CONTIGUOUS")
-_i64p = ndpointer(dtype=np.int64, flags="C_CONTIGUOUS")
 _u8p = ndpointer(dtype=np.uint8, flags="C_CONTIGUOUS")
 
-_lib = None  # None = not tried, False = unavailable
+_lib = None  # the loaded CDLL, or the NativeLoadError of the failed load
 
 
-def _disabled() -> bool:
-    return os.environ.get("FILTERZ_NATIVE", "1") == "0"
+class NativeLoadError(RuntimeError):
+    """kernels.c could not be compiled or loaded on this host."""
+
+
+def _compile(c_path: str, so_path: str) -> None:
+    cc = os.environ.get("CC", "gcc")
+    base = [cc, "-O3", "-fPIC", "-shared", "-o", so_path, c_path]
+    # -march=native vectorizes the probe loops (every kernel is exact
+    # integer math, so codegen never changes results); retry without it
+    # for compilers/platforms that reject it
+    for cmd in (base[:2] + ["-march=native"] + base[2:], base):
+        try:
+            subprocess.run(cmd, check=True, capture_output=True, timeout=120)
+            return
+        except subprocess.CalledProcessError as exc:
+            detail = (f"exit status {exc.returncode}, stderr: "
+                      f"{exc.stderr.decode(errors='replace').strip()!r}")
+        except (OSError, subprocess.TimeoutExpired) as exc:
+            detail = str(exc)
+    raise NativeLoadError(
+        f"filterz_spark native kernels failed to compile with "
+        f"{' '.join(cmd)!r} ({detail}); a working C compiler (gcc or $CC) "
+        "is required")
+
+
+def _bind(so_path: str):
+    lib = ctypes.CDLL(so_path)
+    lib.sbbf_insert.argtypes = [_u64p, ctypes.c_int64, _u64p, ctypes.c_int64]
+    lib.sbbf_insert.restype = None
+    lib.sbbf_contains.argtypes = [_u64p, ctypes.c_int64, _u64p,
+                                  ctypes.c_int64, _u8p]
+    lib.sbbf_contains.restype = None
+    lib.sbbf_insert_check.argtypes = [_u64p, ctypes.c_int64, _u64p,
+                                      ctypes.c_int64, _u8p]
+    lib.sbbf_insert_check.restype = None
+    lib.xorf_attempt.argtypes = [
+        _u64p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int32,
+        ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int32,
+        _u64p,
+    ]
+    lib.xorf_attempt.restype = ctypes.c_int64
+    lib.xorf_contains.argtypes = [
+        _u64p, ctypes.c_uint64, ctypes.c_int32, ctypes.c_int64,
+        ctypes.c_int64, ctypes.c_int32, _u64p, ctypes.c_int64, _u8p,
+    ]
+    lib.xorf_contains.restype = None
+    lib.ribbon_attempt.argtypes = [
+        _u64p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int64,
+        ctypes.c_int32, ctypes.c_int32, _u64p,
+    ]
+    lib.ribbon_attempt.restype = ctypes.c_int32
+    lib.ribbon_contains.argtypes = [
+        ctypes.c_void_p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int32,
+        ctypes.c_int32, ctypes.c_int32, _u64p, ctypes.c_int64, _u8p,
+    ]
+    lib.ribbon_contains.restype = None
+    return lib
 
 
 def _load():
+    """The kernel library; raises NativeLoadError (cached) if it cannot
+    be built or loaded."""
     global _lib
-    if _lib is not None:
-        return _lib
-    try:
+    if _lib is None:
         src = pkgutil.get_data(__package__, "kernels.c")
         tag = hashlib.sha256(src).hexdigest()[:16]
         cache = os.path.join(tempfile.gettempdir(), f"filterz_native_{tag}")
         so_path = os.path.join(cache, "kernels.so")
-        if not os.path.exists(so_path):
-            os.makedirs(cache, exist_ok=True)
-            c_path = os.path.join(cache, "kernels.c")
-            tmp = f"{so_path}.tmp.{os.getpid()}"
-            # compile from a PER-PID source copy and only then publish it
-            # atomically: a concurrent worker must never read a half-written
-            # shared kernels.c (a truncated source fails both compile
-            # attempts and silently drops that worker to the numpy fallback,
-            # breaking cross-run payload byte-determinism for xorf)
-            c_tmp = os.path.join(cache, f"kernels.tmp.{os.getpid()}.c")
-            with open(c_tmp, "wb") as f:
-                f.write(src)
-            cc = os.environ.get("CC", "gcc")
-            base = [cc, "-O3", "-fPIC", "-shared", "-o", tmp, c_tmp]
-            try:
-                # -march=native vectorizes the probe loops (every kernel is
-                # exact integer math, so codegen never changes results);
-                # fall back for compilers/platforms that reject it
-                subprocess.run(base[:2] + ["-march=native"] + base[2:],
-                               check=True, capture_output=True, timeout=120)
-            except subprocess.CalledProcessError:
-                subprocess.run(base, check=True, capture_output=True,
-                               timeout=120)
-            os.replace(c_tmp, c_path)  # publish source for debugging
-            os.replace(tmp, so_path)  # atomic: last writer wins, same bytes
-        lib = ctypes.CDLL(so_path)
-
-        lib.sbbf_insert.argtypes = [_u64p, ctypes.c_int64, _u64p, ctypes.c_int64]
-        lib.sbbf_insert.restype = None
-        lib.sbbf_contains.argtypes = [_u64p, ctypes.c_int64, _u64p,
-                                      ctypes.c_int64, _u8p]
-        lib.sbbf_contains.restype = None
-        lib.sbbf_insert_check.argtypes = [_u64p, ctypes.c_int64, _u64p,
-                                          ctypes.c_int64, _u8p]
-        lib.sbbf_insert_check.restype = None
-        lib.xorf_attempt.argtypes = [
-            _u64p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int32,
-            ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int32,
-            _u64p,
-        ]
-        lib.xorf_attempt.restype = ctypes.c_int64
-        lib.xorf_contains.argtypes = [
-            _u64p, ctypes.c_uint64, ctypes.c_int32, ctypes.c_int64,
-            ctypes.c_int64, ctypes.c_int32, _u64p, ctypes.c_int64, _u8p,
-        ]
-        lib.xorf_contains.restype = None
-        lib.ribbon_attempt.argtypes = [
-            _u64p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int64,
-            ctypes.c_int32, ctypes.c_int32, _u64p,
-        ]
-        lib.ribbon_attempt.restype = ctypes.c_int32
-        lib.ribbon_contains.argtypes = [
-            ctypes.c_void_p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int32,
-            ctypes.c_int32, ctypes.c_int32, _u64p, ctypes.c_int64, _u8p,
-        ]
-        lib.ribbon_contains.restype = None
-        _lib = lib
-    except Exception:
-        _lib = False
+        try:
+            if not os.path.exists(so_path):
+                os.makedirs(cache, exist_ok=True)
+                tmp = f"{so_path}.tmp.{os.getpid()}"
+                # compile from a PER-PID source copy and only then publish it
+                # atomically: a concurrent worker must never read a
+                # half-written shared kernels.c
+                c_tmp = os.path.join(cache, f"kernels.tmp.{os.getpid()}.c")
+                with open(c_tmp, "wb") as f:
+                    f.write(src)
+                _compile(c_tmp, tmp)
+                os.replace(c_tmp, os.path.join(cache, "kernels.c"))  # for debugging
+                os.replace(tmp, so_path)  # atomic: last writer wins, same bytes
+            _lib = _bind(so_path)
+        except NativeLoadError as exc:
+            _lib = exc
+        except OSError as exc:
+            _lib = NativeLoadError(
+                f"filterz_spark native kernels failed to build or load at "
+                f"{so_path}: {exc}")
+    if isinstance(_lib, NativeLoadError):
+        raise _lib
     return _lib
 
 
 def available() -> bool:
-    """True when the compiled kernels can be used (env-gated per call so
-    tests can exercise the numpy fallbacks via FILTERZ_NATIVE=0)."""
-    return not _disabled() and bool(_load())
-
-
-def sbbf_insert(blocks: np.ndarray, hashes: np.ndarray) -> bool:
-    """Scatter-OR hashes into the (num_blocks, 8) u64 block array in place.
-    Byte-identical to the numpy path. Returns False if unavailable."""
-    if not available():
+    """True when the compiled kernels load on this host."""
+    try:
+        _load()
+    except NativeLoadError:
         return False
+    return True
+
+
+def _writable(blocks: np.ndarray) -> None:
+    # ndpointer does not check WRITEABLE: without this guard the C kernel
+    # would silently mutate the immutable bytes object backing a
+    # deserialized filter
     if not blocks.flags.writeable:
-        # ndpointer does not check WRITEABLE: without this guard the C
-        # kernel would silently mutate the immutable bytes object backing
-        # a deserialized filter (the numpy path raises here too)
         raise ValueError("assignment destination is read-only")
+
+
+def sbbf_insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
+    """Scatter-OR hashes into the (num_blocks, 8) u64 block array in place."""
+    _writable(blocks)
     lib = _load()
     b = np.ascontiguousarray(blocks, dtype=np.uint64)
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
     lib.sbbf_insert(b, blocks.shape[0], h, h.size)
     if b is not blocks:
         blocks[...] = b
-    return True
 
 
-def sbbf_insert_check(blocks: np.ndarray, hashes: np.ndarray):
-    """Sequential insert-and-report-presence (ref sbbf.zig:45-52). Returns
-    the bool array, or None if unavailable."""
-    if not available():
-        return None
-    if not blocks.flags.writeable:
-        raise ValueError("assignment destination is read-only")
+def sbbf_insert_check(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+    """Sequential insert-and-report-presence (ref sbbf.zig:45-52)."""
+    _writable(blocks)
     lib = _load()
     b = np.ascontiguousarray(blocks, dtype=np.uint64)
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
@@ -153,9 +169,7 @@ def sbbf_insert_check(blocks: np.ndarray, hashes: np.ndarray):
     return out.view(bool)
 
 
-def sbbf_contains(blocks: np.ndarray, hashes: np.ndarray):
-    if not available():
-        return None
+def sbbf_contains(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     lib = _load()
     b = np.ascontiguousarray(blocks, dtype=np.uint64)
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
@@ -166,12 +180,9 @@ def sbbf_contains(blocks: np.ndarray, hashes: np.ndarray):
 
 def xorf_attempt(hashes: np.ndarray, seed: int, arity: int, segment_length: int,
                  segment_count_length: int, array_length: int, fp_bits: int,
-                 fp_out: np.ndarray):
-    """One construction attempt (reference queue peel). Returns peeled count
-    or None if unavailable; fp_out (u64, len array_length) is filled only on
-    full peel."""
-    if not available():
-        return None
+                 fp_out: np.ndarray) -> int:
+    """One construction attempt (reference queue peel). Returns the peeled
+    count; fp_out (u64, len array_length) is filled only on a full peel."""
     lib = _load()
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
     peeled = lib.xorf_attempt(h, h.size, seed & 0xFFFFFFFFFFFFFFFF,
@@ -184,9 +195,7 @@ def xorf_attempt(hashes: np.ndarray, seed: int, arity: int, segment_length: int,
 
 def xorf_contains(fps_u64: np.ndarray, seed: int, arity: int,
                   segment_length: int, segment_count_length: int,
-                  fp_bits: int, hashes: np.ndarray):
-    if not available():
-        return None
+                  fp_bits: int, hashes: np.ndarray) -> np.ndarray:
     lib = _load()
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
     f = np.ascontiguousarray(fps_u64, dtype=np.uint64)
@@ -197,16 +206,12 @@ def xorf_contains(fps_u64: np.ndarray, seed: int, arity: int,
 
 
 def ribbon_contains(solution: np.ndarray, seed: int, coeff_bits: int,
-                    result_bits: int, hashes: np.ndarray):
+                    result_bits: int, hashes: np.ndarray) -> np.ndarray:
     """Probe against the solution in its NATIVE storage width (u8/u16/u32) —
     the probe window stays a few cache lines instead of the u64-widened
     form's 1KB, and the u16 case takes a 16-lane SIMD mask-expand path."""
-    if not available() or coeff_bits not in (32, 64, 128) or result_bits > 32:
-        return None
     lib = _load()
     sol = np.ascontiguousarray(solution)
-    if sol.dtype.itemsize not in (1, 2, 4, 8):
-        return None
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
     out = np.empty(h.size, dtype=np.uint8)
     lib.ribbon_contains(sol.ctypes.data_as(ctypes.c_void_p), sol.size,
@@ -216,18 +221,15 @@ def ribbon_contains(solution: np.ndarray, seed: int, coeff_bits: int,
 
 
 def ribbon_attempt(hashes: np.ndarray, seed: int, size: int, coeff_bits: int,
-                   result_bits: int):
+                   result_bits: int, sol_out: np.ndarray) -> bool:
     """One (multiplier, seed) construction try: per-key params + stable
     radix sort by start position + banded elimination + back-substitution,
-    all in C. Returns the u64 solution array, False on inconsistent system
-    (retry with next seed), or None if unavailable."""
-    if not available() or coeff_bits not in (32, 64, 128) or result_bits > 32:
-        return None
+    all in C. Returns False on an inconsistent system (retry with the next
+    seed); sol_out (u64, len size) is filled only on success."""
     lib = _load()
     h = np.ascontiguousarray(hashes, dtype=np.uint64)
-    sol = np.empty(size, dtype=np.uint64)
     status = lib.ribbon_attempt(h, h.size, seed & 0xFFFFFFFFFFFFFFFF,
-                                size, coeff_bits, result_bits, sol)
+                                size, coeff_bits, result_bits, sol_out)
     if status == -1:
         raise MemoryError("ribbon_attempt: allocation failed")
-    return sol if status == 0 else False
+    return status == 0

@@ -1,33 +1,25 @@
 /* Native build kernels for filterz_spark.
  *
- * Compiled at import time by filterz_spark/native/__init__.py with the
- * system C compiler (gcc -O3 -shared) and loaded via ctypes; every kernel
- * has a pure-numpy fallback in the corresponding filters/ module, so the
- * library works (slower) on hosts without a compiler. The hot loops here
- * are the per-partition construction kernels — the only place where the
+ * Compiled on first use by filterz_spark/native/__init__.py with the
+ * system C compiler (gcc -O3 -shared, or $CC) and loaded via ctypes. These
+ * are the filters' only backend: a host that cannot compile them fails on
+ * first filter use. The construction kernels are the place where the
  * algorithms are inherently sequential per key (xor peel, ribbon banded
  * elimination) or scatter-bound (sbbf insert) and numpy vectorization
- * cannot reach the reference's per-core rates. Probes stay in numpy: they
- * are gather+compare, already vectorized and map-only at the Spark layer.
+ * cannot reach the reference's per-core rates; the probes run here too.
+ * tests/filter_oracle.py holds a numpy/Python reference for every kernel,
+ * and the tests check the outputs byte for byte.
  *
  * Semantics notes (reference = steelcake/filterz, Zig):
- *  - sbbf_insert mirrors src/sbbf.zig:64-80 exactly (same mask/block math
- *    as filters/sbbf.py; OR is order-insensitive, so the C and numpy
- *    backends produce byte-identical filters).
+ *  - sbbf_insert mirrors src/sbbf.zig:64-80 exactly.
  *  - xorf_attempt runs the reference's own sequential queue peel
  *    (src/xorf.zig:167-216) over the repo's documented binary-fuse
- *    position derivation (filters/xorf.py make_subhashes — see the
- *    DELIBERATE DEVIATION note there). Peel success depends only on the
- *    (seed, positions) hypergraph, so the C queue peel and the numpy
- *    round-layered peel succeed on exactly the same seeds; only the
- *    fingerprint-slot assignment order (hence payload bytes) differs.
+ *    position derivation (see the POSITION DEVIATION note in
+ *    filters/xorf.py).
  *  - ribbon_attempt mirrors src/ribbon.zig:9-49 (per-key params) and
  *    :77-134 (incremental banded Gaussian elimination + bit-plane
  *    back-substitution). Rows are inserted in ascending bucket order
- *    (stable counting sort on the top 16 bits of start position) — the
- *    identical permutation to the numpy fallback's bucketed
- *    argsort(kind="stable") — so the C and numpy backends produce
- *    byte-identical solutions.
+ *    (stable counting sort on the top 16 bits of start position).
  */
 
 #include <stdint.h>
@@ -131,8 +123,9 @@ void sbbf_contains(const uint64_t *blocks, int64_t num_blocks,
 
 /* ---------------- xor / binary-fuse (ref src/xorf.zig) ---------------- */
 
-/* Position j of seeded hash h — identical math to filters/xorf.py
- * make_subhashes (binary-fuse derivation, arXiv:2201.01174). */
+/* Position j of seeded hash h — the binary-fuse derivation
+ * (arXiv:2201.01174); tests/filter_oracle.py make_subhashes is the
+ * vectorized reference. */
 static inline uint64_t xorf_pos(uint64_t h, uint64_t hl, uint64_t hh_mask,
                                 int span, int arity, int j,
                                 uint64_t seg_len, uint64_t seg_mask) {
@@ -371,8 +364,8 @@ void ribbon_contains(const void *solution, int64_t size, uint64_t seed,
 /* Full construction attempt: per-key params (ref src/ribbon.zig:9-49),
  * single-pass stable bucket sort by the top 16 bits of start position
  * (ascending-ish insertion keeps elimination cascades cache-local;
- * solvability is order-independent, and the numpy fallback uses the same
- * bucket key so solutions stay byte-identical across backends), then
+ * solvability is order-independent, and the order is deterministic, so
+ * solutions are reproducible), then
  * incremental banded elimination (ref :77-104) + bit-plane
  * back-substitution (ref :108-134) over an interleaved slot array.
  * Returns 0 ok, 1 inconsistent (retry next seed), -1 alloc fail. */
@@ -421,8 +414,8 @@ int32_t ribbon_attempt(const uint64_t *hashes, int64_t n, uint64_t seed,
     }
     for (int d = 0; d < 65536; d++) off[d + 1] += off[d];
     /* pass B: recompute coeff/result rows (cheap ALU) and scatter the packed
-     * struct straight into stable counting-sort order — identical insertion
-     * permutation to the numpy fallback's argsort(kind="stable") */
+     * struct straight into stable counting-sort order (the same
+     * permutation as a stable argsort on the bucket key) */
     for (int64_t i = 0; i < n; i++) {
         uint64_t h = hashes[i];
         uint64_t hash0 = seed ^ h;

@@ -6,7 +6,7 @@ DataFrame partition: keys are hashed JVM-side with the built-in ``xxhash64``
 (zero per-row Python), shuffled once by hash so duplicates co-locate, and
 each partition builds its filter inside one ``mapInArrow`` pass — sort+dedup
 via ``np.unique`` (the reference's hash_section, src/bench.zig:258-280),
-then the numpy kernel. The result is a small "filter index" DataFrame (one
+then the C construction kernel (``filterz_spark.native``). The result is a small "filter index" DataFrame (one
 row per partition: payload + params + lineage + metrics mirroring BenchStats,
 src/bench.zig:186-193) that can be checkpointed and broadcast for probes.
 

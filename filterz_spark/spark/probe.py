@@ -2,7 +2,7 @@
 
 The reference probes every section's filter for every query key and counts
 hits (src/bench.zig:228-233): a hit means "this section may contain the key,
-pay the 200us read" (README.md:47). Three probe strategies, by index size:
+pay the 200us read" (README.md:47). Two probe strategies, by index size:
 
 1. ``probe_membership`` (default): the index is collected once and shipped
    as a Spark BROADCAST VARIABLE — one torrent-distributed copy per
@@ -10,10 +10,7 @@ pay the 200us read" (README.md:47). Three probe strategies, by index size:
    batch of the probe side is checked against every filter vectorized (the
    OR-over-partitions semantics of the section model). Map-only: the probe
    side never shuffles.
-2. Pre-broadcast with ``broadcast_index`` and pass the handle to any number
-   of ``probe_membership`` calls — amortizes the one driver->executor
-   transfer across a query workload.
-3. ``probe_membership_cogrouped``: for indexes too large to collect on the
+2. ``probe_membership_cogrouped``: for indexes too large to collect on the
    driver at all (10^5+ partitions x ~500KB payloads), the index STAYS a
    DataFrame. Each probe key is routed to the partition that built its
    filter (the build's own hash-placement function, reproduced JVM-side),
@@ -49,48 +46,32 @@ def collect_index(index_df: DataFrame) -> list[dict]:
     scale and the row-pickling ``collect()`` serializer is several times
     slower on large binary values.
     """
-    try:
-        tbl = index_df.toArrow()
-        cols = {name: tbl.column(name).to_pylist() for name in (
-            "partition_id", "kind", "params", "payload", "num_keys",
-            "build_ns", "mem_usage", "ideal_mem_usage")}
-        n = tbl.num_rows
-        get = lambda name, i: cols[name][i]  # noqa: E731
-    except Exception:  # older pyspark without DataFrame.toArrow
-        rows = index_df.collect()
-        n = len(rows)
-        get = lambda name, i: rows[i][name]  # noqa: E731
+    tbl = index_df.toArrow()
+    cols = {name: tbl.column(name).to_pylist() for name in (
+        "partition_id", "kind", "params", "payload", "num_keys",
+        "build_ns", "mem_usage", "ideal_mem_usage")}
     return [
         {
-            "partition_id": get("partition_id", i),
-            "kind": get("kind", i),
-            "params": json.loads(get("params", i)),
-            "payload": bytes(get("payload", i)),
-            "num_keys": get("num_keys", i),
-            "build_ns": get("build_ns", i),
-            "mem_usage": get("mem_usage", i),
-            "ideal_mem_usage": get("ideal_mem_usage", i),
+            "partition_id": cols["partition_id"][i],
+            "kind": cols["kind"][i],
+            "params": json.loads(cols["params"][i]),
+            "payload": bytes(cols["payload"][i]),
+            "num_keys": cols["num_keys"][i],
+            "build_ns": cols["build_ns"][i],
+            "mem_usage": cols["mem_usage"][i],
+            "ideal_mem_usage": cols["ideal_mem_usage"][i],
         }
-        for i in range(n)
+        for i in range(tbl.num_rows)
     ]
 
 
-def broadcast_index(spark, index_rows: list[dict]) -> Broadcast:
-    """Ship a collected filter index to the executors ONCE (torrent
-    broadcast) and reuse the handle across many ``probe_membership`` calls.
-    Destroy with ``.unpersist()`` when the query workload is done."""
-    return spark.sparkContext.broadcast(index_rows)
-
-
-def _probe_fn(index: list[dict] | Broadcast, hash_col_idx: int,
-              out_cols: list[str]):
+def _probe_fn(index: Broadcast, hash_col_idx: int, out_cols: list[str]):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
 
-        index_rows = index.value if isinstance(index, Broadcast) else index
         filters = [
             deserialize_filter(r["kind"], r["payload"], r["params"])
-            for r in index_rows
+            for r in index.value
         ]
         for batch in batches:
             h = batch.column(hash_col_idx).to_numpy(zero_copy_only=False)
@@ -111,7 +92,7 @@ def _probe_fn(index: list[dict] | Broadcast, hash_col_idx: int,
 
 
 def probe_membership(probe_df: DataFrame, key_col: str,
-                     index_rows: list[dict] | Broadcast,
+                     index_rows: list[dict],
                      hit_col: str = "maybe_present") -> DataFrame:
     """Append a boolean column: True iff ANY partition filter may contain the key.
 
@@ -119,17 +100,12 @@ def probe_membership(probe_df: DataFrame, key_col: str,
     partition's filter); false positives at the per-filter bound times the
     number of filters.
 
-    ``index_rows`` may be a plain list (broadcast internally — the payloads
-    travel to each executor once, not inside every task closure) or a
-    ``Broadcast`` handle from ``broadcast_index`` (reused across calls).
-    NOTE: the internal broadcast of a plain list cannot be unpersisted by
-    the caller (it must outlive the returned lazy DataFrame) and lives
-    until the session ends — for a QUERY LOOP over the same index, pass a
-    ``broadcast_index`` handle and ``.unpersist()`` it yourself; the
-    convenience list form is for one-shot probes.
+    ``index_rows`` (from ``collect_index``) is broadcast internally — the
+    payloads travel to each executor once, not inside every task closure.
+    The broadcast must outlive the returned lazy DataFrame, so it lives
+    until the session ends.
     """
-    if not isinstance(index_rows, Broadcast):
-        index_rows = broadcast_index(probe_df.sparkSession, index_rows)
+    bc = probe_df.sparkSession.sparkContext.broadcast(index_rows)
     with_hash = probe_df.withColumn("__h", F.xxhash64(key_col))
     cols = with_hash.columns
     schema_str = ", ".join(
@@ -137,7 +113,7 @@ def probe_membership(probe_df: DataFrame, key_col: str,
         + [f"{hit_col} boolean"]
     )
     out = with_hash.mapInArrow(
-        _probe_fn(index_rows, cols.index("__h"), [hit_col]), schema_str
+        _probe_fn(bc, cols.index("__h"), [hit_col]), schema_str
     )
     return out.drop("__h")
 
@@ -206,7 +182,7 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
     NOTE: the first call per (session, num_partitions) runs an EAGER 8-row
     Spark job (the fail-fast routing-contract guard below) even though the
     returned plan is lazy — plan construction therefore needs a live
-    cluster, unlike the purely-lazy broadcast/handle strategies.
+    cluster, unlike the purely-lazy broadcast strategy.
     """
     _assert_hash_routing(probe_df.sparkSession, num_partitions)
     with_hash = probe_df.withColumn("__h", F.xxhash64(key_col))

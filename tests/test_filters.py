@@ -166,12 +166,11 @@ class TestRibbonScalarVectorParity:
     def test_key_params_vec_matches_scalar_reference(self):
         """The vectorized (start, coeff, result) derivation must equal the
         readable scalar reference implementations for every coeff width —
-        build and probe BOTH derive through _key_params_vec, so this pins
-        the whole boundary-sensitive smash/clamp math."""
-        from filterz_spark.filters.ribbon import (_coeff_row_int,
-                                                  _key_params_vec,
-                                                  _result_row_int,
-                                                  _start_pos_int)
+        the oracle's build and probe (tests/filter_oracle.py) BOTH derive
+        through _key_params_vec, so this pins the whole boundary-sensitive
+        smash/clamp math the C kernels are checked against."""
+        from filter_oracle import (_coeff_row_int, _key_params_vec,
+                                   _result_row_int, _start_pos_int)
         from filterz_spark.hashing import splitmix64_array
         h = splitmix64_array(77, 500)
         for coeff_bits in (32, 64, 128):

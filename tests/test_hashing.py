@@ -3,14 +3,14 @@
 SplitMix64 is checked against the published test vectors (Vigna's reference
 implementation, seed 0) — the same stream Zig's std.Random.SplitMix64
 produces, which the reference's construction-seed sequences depend on
-(src/xorf.zig:134, src/ribbon.zig:61,208). Murmur2-64 and mulhi are checked
+(src/xorf.zig:134, src/ribbon.zig:61,208). Murmur2-64 is checked
 for vectorized/scalar agreement and algebraic properties.
 """
 
 import numpy as np
 
 from filterz_spark.hashing import (
-    SplitMix64, mulhi64, murmur64_mix, reduce32, splitmix64_array,
+    SplitMix64, murmur64_mix, reduce32, splitmix64_array,
 )
 
 # first outputs of SplitMix64(seed=0), Vigna reference implementation
@@ -64,15 +64,6 @@ def test_murmur64_mix_scalar_reference():
     got = murmur64_mix(vals, 0xDEADBEEF)
     for v, g in zip(vals, got):
         assert scalar(int(v), 0xDEADBEEF) == int(g)
-
-
-def test_mulhi64_exact():
-    rng = np.random.default_rng(3)
-    a = rng.integers(0, 1 << 63, 1000, dtype=np.int64).astype(np.uint64) * np.uint64(2) + np.uint64(1)
-    for b in (1, 12345, 0xFFFFFFFF, 0x123456789ABCDEF0):
-        hi = mulhi64(a, b)
-        for x, h in zip(a[:50], hi[:50]):
-            assert (int(x) * b) >> 64 == int(h)
 
 
 def test_reduce32_range():

@@ -1,19 +1,16 @@
-"""Native (C) kernel backend — equivalence with the numpy fallbacks.
+"""Native (C) filter kernels — byte-identical to the reference oracle.
 
-Contracts:
-- sbbf: insert is an order-insensitive OR, so the C and numpy backends must
-  produce BYTE-IDENTICAL filters (and identical probe answers).
-- ribbon: the C kernel inserts rows in the same stable bucket order as the
-  numpy fallback, so solutions must be BYTE-IDENTICAL.
-- xorf: the C backend runs the reference's sequential queue peel
-  (src/xorf.zig:167-216) while the numpy fallback peels in rounds; a seed
-  succeeds iff the hypergraph 2-core is empty — a property of (seed,
-  positions) only — so both backends must pick the SAME seed and satisfy
-  the same membership equation (zero FN, FPR bound), but payload bytes may
-  differ (different slot-assignment order). Determinism within a backend is
-  what the Spark layer relies on (checkpoint/resume), and the backend is an
-  import-time property of the whole session, so cross-backend divergence is
-  never observed inside one build.
+The library's only filter backend is ``filterz_spark/native/kernels.c``;
+``tests/filter_oracle.py`` reimplements each kernel in numpy/Python. Every
+contract here is exact equality:
+
+- sbbf: insert is an order-insensitive OR, so the blocks and the
+  ``insert_check`` answers equal the oracle's;
+- ribbon: a consistent system's solution with every free slot zero is
+  unique, so the chosen seed and the solution equal the oracle's;
+- xorf: the oracle transcribes the kernel's sequential stack peel, so the
+  chosen seed and the fingerprint bytes equal the oracle's;
+- every probe answers exactly as the oracle probe does.
 """
 
 from __future__ import annotations
@@ -21,20 +18,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+import filter_oracle as oracle
 from filterz_spark import native
-from filterz_spark.filters import ribbon, sbbf, xorf
+from filterz_spark.filters import RibbonFilter, SbbfFilter, XorFilter, ribbon, sbbf, xorf
 from filterz_spark.hashing import splitmix64_array
-
-pytestmark = pytest.mark.skipif(
-    not native.available(), reason="no C compiler available"
-)
-
-
-@pytest.fixture
-def no_native(monkeypatch):
-    monkeypatch.setenv("FILTERZ_NATIVE", "0")
-    yield
-    monkeypatch.setenv("FILTERZ_NATIVE", "1")
 
 
 def _keys(n: int, seed: int = 7) -> np.ndarray:
@@ -42,70 +29,70 @@ def _keys(n: int, seed: int = 7) -> np.ndarray:
 
 
 class TestSbbfBackends:
-    def test_insert_byte_identical(self, monkeypatch):
+    def test_insert_byte_identical(self):
         h = _keys(50_000)
         b_c = sbbf.empty_blocks(h.size, 24)
         sbbf.insert(b_c, h)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        b_np = sbbf.empty_blocks(h.size, 24)
-        sbbf.insert(b_np, h)
-        assert np.array_equal(b_c, b_np)
+        b_ref = sbbf.empty_blocks(h.size, 24)
+        oracle.sbbf_insert(b_ref, h)
+        assert np.array_equal(b_c, b_ref)
 
-    def test_contains_matches_numpy(self, monkeypatch):
+    def test_contains_matches_numpy(self):
         h = _keys(20_000)
         b = sbbf.empty_blocks(h.size, 16)
         sbbf.insert(b, h)
         probes = splitmix64_array(123, 30_000)
-        got_c = sbbf.contains(b, probes)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        got_np = sbbf.contains(b, probes)
-        assert np.array_equal(got_c, got_np)
-        assert sbbf.contains(b, h).all()  # zero FN through either path
+        assert np.array_equal(sbbf.contains(b, probes),
+                              oracle.sbbf_contains(b, probes))
+        assert sbbf.contains(b, h).all()  # zero FN
 
 
 class TestRibbonBackends:
     @pytest.mark.parametrize("cb,rb", [(32, 8), (64, 16), (64, 7), (128, 16)])
-    def test_solution_byte_identical(self, monkeypatch, cb, rb):
+    def test_solution_byte_identical(self, cb, rb):
         h = _keys(30_000)
         seed_c, sol_c = ribbon.construct(h, cb, rb)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        seed_np, sol_np = ribbon.construct(h, cb, rb)
-        assert seed_c == seed_np
-        assert np.array_equal(sol_c, sol_np)
+        seed_ref, sol_ref = oracle.ribbon_construct(h, cb, rb)
+        assert seed_c == seed_ref
+        assert sol_c.dtype == sol_ref.dtype
+        assert np.array_equal(sol_c, sol_ref)
         assert ribbon.contains(sol_c, seed_c, cb, rb, h.size, h).all()
+        probes = splitmix64_array(55, 20_000)
+        assert np.array_equal(
+            ribbon.contains(sol_c, seed_c, cb, rb, h.size, probes),
+            oracle.ribbon_contains(sol_c, seed_c, cb, rb, probes))
 
     def test_tiny_and_empty(self):
         for n in (0, 1, 2, 5):
             h = _keys(n) if n else np.zeros(0, dtype=np.uint64)
             seed, sol = ribbon.construct(h, 64, 8)
+            seed_ref, sol_ref = oracle.ribbon_construct(h, 64, 8)
+            assert seed == seed_ref and np.array_equal(sol, sol_ref)
             if n:
                 assert ribbon.contains(sol, seed, 64, 8, n, h).all()
 
 
 class TestXorfBackends:
     @pytest.mark.parametrize("arity,fp_bits", [(3, 16), (4, 16), (3, 8), (4, 7)])
-    def test_same_seed_same_semantics(self, monkeypatch, arity, fp_bits):
+    def test_same_seed_same_semantics(self, arity, fp_bits):
+        """Same succeeding seed, same geometry and the same fingerprint
+        bytes as the oracle's transcribed queue peel; zero FN through
+        both probes."""
         h = _keys(40_000)
         hdr_c, fp_c = xorf.construct(h, arity, fp_bits)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        hdr_np, fp_np = xorf.construct(h, arity, fp_bits)
-        # identical geometry and (crucially) the same succeeding seed
-        assert hdr_c.seed == hdr_np.seed
-        assert hdr_c.array_length == hdr_np.array_length
-        # zero FN through both probe paths, for both constructions
+        hdr_ref, fp_ref = oracle.xorf_construct(h, arity, fp_bits)
+        assert hdr_c == hdr_ref
+        assert fp_c.dtype == fp_ref.dtype
+        assert np.array_equal(fp_c, fp_ref)
         assert xorf.contains(hdr_c, fp_c, arity, fp_bits, h).all()
-        assert xorf.contains(hdr_np, fp_np, arity, fp_bits, h).all()
-        monkeypatch.setenv("FILTERZ_NATIVE", "1")
-        assert xorf.contains(hdr_np, fp_np, arity, fp_bits, h).all()
+        assert oracle.xorf_contains(hdr_c, fp_c, arity, fp_bits, h).all()
 
-    def test_probe_matches_numpy_probe(self, monkeypatch):
+    def test_probe_matches_numpy_probe(self):
         h = _keys(25_000)
         hdr, fp = xorf.construct(h, 3, 16)
         probes = splitmix64_array(55, 50_000)
-        got_c = xorf.contains(hdr, fp, 3, 16, probes)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        got_np = xorf.contains(hdr, fp, 3, 16, probes)
-        assert np.array_equal(got_c, got_np)
+        assert np.array_equal(xorf.contains(hdr, fp, 3, 16, probes),
+                              oracle.xorf_contains(hdr, fp, 3, 16, probes))
 
     def test_fpr_within_bound(self):
         h = _keys(100_000)
@@ -126,31 +113,25 @@ class TestXorfBackends:
         for n in (0, 1, 2):
             h = _keys(n) if n else np.zeros(0, dtype=np.uint64)
             hdr, fp = xorf.construct(h, 3, 16)
+            hdr_ref, fp_ref = oracle.xorf_construct(h, 3, 16)
+            assert hdr == hdr_ref and np.array_equal(fp, fp_ref)
             if n:
                 assert xorf.contains(hdr, fp, 3, 16, h).all()
-
-
-def test_fallback_env_gate(no_native):
-    assert not native.available()
-    assert native.sbbf_insert(np.zeros((4, 8), np.uint64),
-                              np.arange(4, dtype=np.uint64)) is False
-    assert native.ribbon_attempt(np.arange(4, dtype=np.uint64), 1, 100, 64, 8) is None
 
 
 class TestSbbfInsertCheck:
     """block_insert_check parity (ref src/sbbf.zig:45-52): sequential
     insert-and-report-presence, duplicates report present."""
 
-    def test_semantics_and_backend_equivalence(self, monkeypatch):
+    def test_semantics_and_backend_equivalence(self):
         h = _keys(5_000)
         batch = np.concatenate([h, h[:100]])  # trailing duplicates
         b_c = sbbf.empty_blocks(h.size, 16)
         got_c = sbbf.insert_check(b_c, batch)
-        monkeypatch.setenv("FILTERZ_NATIVE", "0")
-        b_np = sbbf.empty_blocks(h.size, 16)
-        got_np = sbbf.insert_check(b_np, batch)
-        assert np.array_equal(b_c, b_np)
-        assert np.array_equal(got_c, got_np)
+        b_ref = sbbf.empty_blocks(h.size, 16)
+        got_ref = oracle.sbbf_insert_check(b_ref, batch)
+        assert np.array_equal(b_c, b_ref)
+        assert np.array_equal(got_c, got_ref)
         # every trailing duplicate reports present; filter state equals
         # a plain insert of the same batch
         assert got_c[-100:].all()
@@ -160,22 +141,44 @@ class TestSbbfInsertCheck:
         # fresh-key presence reports are rare (FPR-level) on first insert
         assert got_c[:100].sum() <= 5
 
+    def test_zero_block_filter_refused(self):
+        """A capacity-0 filter has no block to route keys to; the kernel
+        would write past the array."""
+        with pytest.raises(ValueError, match="no blocks"):
+            sbbf.insert_check(sbbf.empty_blocks(0, 16), _keys(10))
 
-def test_broken_compiler_falls_back_to_numpy(monkeypatch, tmp_path):
-    """With no working C compiler and no cached .so, the library must fall
-    back to the numpy kernels transparently (available() False, filters
-    still correct)."""
+
+@pytest.mark.parametrize("build", [
+    lambda h: RibbonFilter.build(h, coeff_bits=16, result_bits=8),
+    lambda h: RibbonFilter.build(h, coeff_bits=256, result_bits=8),
+    lambda h: RibbonFilter.build(h, coeff_bits=64, result_bits=0),
+    lambda h: RibbonFilter.build(h, coeff_bits=64, result_bits=33),
+    lambda h: XorFilter.build(h, arity=2, fp_bits=16),
+    lambda h: XorFilter.build(h, arity=5, fp_bits=16),
+    lambda h: XorFilter.build(h, arity=3, fp_bits=0),
+    lambda h: XorFilter.build(h, arity=3, fp_bits=65),
+], ids=["ribbon_coeff16", "ribbon_coeff256", "ribbon_result0",
+        "ribbon_result33", "xorf_arity2", "xorf_arity5", "xorf_fp0", "xorf_fp65"])
+@pytest.mark.parametrize("n", [0, 1000])
+def test_out_of_range_params_raise(build, n):
+    """Geometry the kernels do not implement is refused before any kernel
+    call, for empty and non-empty key sets alike."""
+    with pytest.raises(ValueError):
+        build(_keys(n) if n else np.zeros(0, dtype=np.uint64))
+
+
+def test_broken_compiler_fails_loudly(monkeypatch, tmp_path):
+    """With no working C compiler and no cached .so, the first filter build
+    raises an error naming the compile failure; nothing falls back."""
     import tempfile
     monkeypatch.setenv("CC", "/bin/false")
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(native, "_lib", None)  # force a fresh load attempt
     try:
         assert native.available() is False
-        h = _keys(5_000)
-        hdr, fp = xorf.construct(h, 3, 16)
-        assert xorf.contains(hdr, fp, 3, 16, h).all()
-        seed, sol = ribbon.construct(h, 64, 8)
-        assert ribbon.contains(sol, seed, 64, 8, h.size, h).all()
+        with pytest.raises(native.NativeLoadError, match="failed to compile.*/bin/false"):
+            XorFilter.build(_keys(5_000), 3, 16)
+        assert not list(tmp_path.glob("filterz_native_*/kernels.so"))
     finally:
         monkeypatch.setattr(native, "_lib", None)  # re-probe real gcc later
 
@@ -184,15 +187,6 @@ def test_native_sbbf_insert_rejects_read_only_blocks():
     """ndpointer does not check WRITEABLE: without the guard, inserting
     into a deserialized (bytes-backed, read-only) filter would silently
     corrupt the immutable payload every other holder shares."""
-    import numpy as np
-    import pytest
-
-    from filterz_spark import native
-    from filterz_spark.filters import SbbfFilter
-    from filterz_spark.hashing import splitmix64_array
-
-    if not native.available():
-        pytest.skip("native kernels unavailable")
     f = SbbfFilter.build(splitmix64_array(1, 2000), bits_per_key=16)
     payload = f.serialize()
     g = SbbfFilter.deserialize(payload, f.params())
@@ -202,3 +196,13 @@ def test_native_sbbf_insert_rejects_read_only_blocks():
     with pytest.raises(ValueError, match="read-only"):
         native.sbbf_insert_check(g.blocks, splitmix64_array(2, 10))
     assert bytes(payload) == snapshot
+
+
+def test_mulhi64_exact():
+    """The oracle's limb-wise mulhi equals exact 128-bit multiplication."""
+    rng = np.random.default_rng(3)
+    a = rng.integers(0, 1 << 63, 1000, dtype=np.int64).astype(np.uint64) * np.uint64(2) + np.uint64(1)
+    for b in (1, 12345, 0xFFFFFFFF, 0x123456789ABCDEF0):
+        hi = oracle.mulhi64(a, b)
+        for x, h in zip(a[:50], hi[:50]):
+            assert (int(x) * b) >> 64 == int(h)

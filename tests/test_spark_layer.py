@@ -69,21 +69,37 @@ class TestFilterIndex:
             assert r["build_ns"] > 0 and r["mem_usage"] >= r["ideal_mem_usage"] > 0
             assert r["attempts"] >= 1
 
-    def test_probe_through_prebroadcast_handle(self, spark, pages):
-        from filterz_spark.spark.probe import broadcast_index
-        idx = collect_index(
-            build_filter_index(pages, "url", "xorf", {"arity": 3, "fp_bits": 16}, 8))
-        bc = broadcast_index(spark, idx)
-        try:
-            probed = probe_membership(pages.select("url"), "url", bc)
-            assert probed.filter("NOT maybe_present").count() == 0
-            # the handle is reusable across probe calls
-            absent = pages.selectExpr("concat(url, '#absent') AS url")
-            fp = probe_membership(absent, "url", bc).filter("maybe_present").count()
-            bound = len(idx) * 2.0 ** -16 * N_PAGES
-            assert fp <= bound + 4 * np.sqrt(bound) + 4
-        finally:
-            bc.unpersist()
+    def test_failed_collect_index_runs_build_once(self, spark, pages, monkeypatch):
+        """A build that fails on the executors raises from collect_index
+        after exactly the jobs of one good build: no second build through
+        the row-pickling collect()."""
+        from pyspark.errors import PythonException
+        from pyspark.sql import DataFrame
+
+        collects = []
+        real_collect = DataFrame.collect
+
+        def counting_collect(df):
+            collects.append(df)
+            return real_collect(df)
+
+        monkeypatch.setattr(DataFrame, "collect", counting_collect)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def jobs_of(group, params):
+            sc.setJobGroup(group, group)
+            try:
+                collect_index(build_filter_index(pages, "url", "ribbon", params, 4))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(tracker.getJobIdsForGroup(group))
+
+        good = jobs_of("collect_index_good", {"coeff_bits": 64, "result_bits": 16})
+        with pytest.raises(PythonException, match="result_bits"):
+            jobs_of("collect_index_bad", {"coeff_bits": 64, "result_bits": 40})
+        assert len(tracker.getJobIdsForGroup("collect_index_bad")) == good
+        assert collects == []
 
     def test_cogrouped_probe_zero_fn_and_single_filter_fpr(self, spark, pages):
         """Distributed probe: index stays a DataFrame, each key is routed to

@@ -1,4 +1,4 @@
-"""Pin the documented make_subhashes deviation (filters/xorf.py).
+"""Pin the documented xor-filter position deviation (filters/xorf.py).
 
 The reference (steelcake/filterz src/xorf.zig:29-40) derives the segment
 selector from ``reduce32`` of the LOW 32 hash bits and the in-segment
@@ -29,7 +29,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from filterz_spark.filters.xorf import calculate_header, make_subhashes
+from filter_oracle import make_subhashes
+from filterz_spark.filters.xorf import calculate_header
 from filterz_spark.hashing import SplitMix64, murmur64_mix, splitmix64_array
 
 SEED_SEQUENCE_INIT = 0x726B2B9D438B9D4D  # ref src/xorf.zig:134

@@ -444,8 +444,8 @@ def main():
         "- Per-partition filter payloads are sha256-identical across core "
         "counts: builds are deterministic at any parallelism (resume/"
         "checkpoint safe).",
-        "- Construction kernels are native C (filterz_spark/native) with "
-        "numpy fallbacks; per-core single-thread rates are at or above the "
+        "- Construction kernels are native C (filterz_spark/native); "
+        "per-core single-thread rates are at or above the "
         "reference for every structure (round 3), which makes the one-box "
         "160M workload partly DRAM-bandwidth-bound — the kernel-exact bare "
         "ceiling above quantifies exactly how much of the N->4N speedup one "
