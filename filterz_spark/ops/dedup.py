@@ -26,9 +26,8 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     NULL texts form ONE group (md5(NULL)=NULL, SQL GROUP BY semantics —
     matching the ANSI oracle). That is usually what dedup wants for a
-    missing-content sentinel, but if NULL-text docs must each survive
-    (the streaming near-dup path's pass-through choice), filter them out
-    before this operator and union them back.
+    missing-content sentinel, but if NULL-text docs must each survive,
+    filter them out before this operator and union them back.
     """
     return (
         docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
@@ -230,7 +229,7 @@ def read_signature_store(spark, path: str, *, hash_family: str,
     """Open a family-pinned signature store, validating the marker against
     what the caller is about to join it with. A store without a marker is
     refused loudly (unknown family — never guess), same contract as the
-    streaming store's meta.json."""
+    sketch store's marker."""
     m = read_json_marker(spark, f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
     if m is None:
         raise RuntimeError(
@@ -274,13 +273,13 @@ def dedup_against_store(docs: DataFrame, store, *,
     contract, same as joining any two signature tables).
 
     Returns ``docs`` (all original columns) minus every doc sharing ANY
-    (band, minhash) bucket with the store. Matching is signature-level
-    (the streaming near-dup's store rule, streaming/neardup.py) — chain
+    (band, minhash) bucket with the store. Matching is signature-level:
+    one shared bucket drops the doc, with no Jaccard verification — chain
     ``ngram_jaccard_pairs`` on the dropped set where exact verification
     is required. Within-batch duplicates are intentionally NOT resolved
-    here (order-dependent greedy semantics belong to the streaming
-    operator; for batch use, run ``exact_dedup``/``dedup_clusters`` over
-    the batch first). A doc whose signatures are ALREADY in the store
+    here (keeping the first of each would make the answer depend on
+    arrival order); run ``exact_dedup``/``dedup_clusters`` over the batch
+    first. A doc whose signatures are ALREADY in the store
     collides with itself and is dropped, so re-running a partially
     appended batch is idempotent.
 

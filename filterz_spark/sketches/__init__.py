@@ -26,9 +26,5 @@ SKETCH_KINDS = {
 }
 
 
-def zero_sketch(kind: str, **params) -> MergeableSketch:
-    return SKETCH_KINDS[kind].zero(**params)
-
-
 def deserialize_sketch(kind: str, payload: bytes, params: dict) -> MergeableSketch:
     return SKETCH_KINDS[kind].deserialize(payload, params)

@@ -1,1 +1,1 @@
-"""Input sources: deterministic synthetic pages table + testdata loaders."""
+"""Input sources: deterministic synthetic pages table + packed key reader."""

@@ -6,16 +6,13 @@ keys (``const Address = [20]u8``, file mmap'd and reinterpreted —
 as packed Arrow fixed-width buffers). This module reads the same layout
 DISTRIBUTED.
 
-Round 7 replaced the per-record Python path (``sc.binaryRecords`` +
-``rdd.map(lambda b: ...)`` routed EVERY key through a Python closure — the
-repo's only per-row-Python data path) with a range reader: the driver
-lists the file(s) and cuts them into record-aligned byte ranges sized to
-the cluster's parallelism; each task bulk-reads its range and re-slices
-it into fixed-width keys by building an Arrow offsets array over the one
-read buffer (``pa.Array.from_buffers`` — no per-record copies, no
-per-record Python). File access goes through ``pyarrow.fs`` (local, s3,
-hdfs where Arrow bindings exist); pass ``reader="binary_records"`` for a
-Hadoop-only filesystem, which keeps the legacy per-record path.
+The driver lists the file(s) and cuts them into record-aligned byte
+ranges sized to the cluster's parallelism; each task bulk-reads its range
+and re-slices it into fixed-width keys by building an Arrow offsets array
+over the one read buffer (``pa.Array.from_buffers`` — no per-record
+copies, no per-record Python). File access goes through ``pyarrow.fs``
+(local, s3, hdfs where Arrow bindings exist); a filesystem that Arrow
+cannot open is not supported.
 
 The output column is the raw key bytes; hash with ``xxhash64`` downstream
 exactly like any other key column (documented XxHash3 deviation, SURVEY
@@ -65,19 +62,11 @@ def _range_reader_fn(record_len: int, key_col: str):
 
 def read_packed_keys(spark: SparkSession, path: str,
                      record_len: int = RECORD_LEN,
-                     key_col: str = "key",
-                     reader: str = "ranges") -> DataFrame:
+                     key_col: str = "key") -> DataFrame:
     """(key binary) — one row per fixed-width record in the packed file
     (or every regular file under a directory path)."""
     if record_len <= 0:
         raise ValueError("record_len must be positive")
-    if reader not in ("ranges", "binary_records"):
-        raise ValueError(f"unknown reader {reader!r}")
-    if reader == "binary_records":
-        rdd = spark.sparkContext.binaryRecords(path, record_len)
-        schema = StructType([StructField(key_col, BinaryType(), False)])
-        return spark.createDataFrame(rdd.map(lambda b: (bytes(b),)), schema)
-
     from pyarrow import fs as pafs
     f, rp = pafs.FileSystem.from_uri(path)
     info = f.get_file_info(rp)

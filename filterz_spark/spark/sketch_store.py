@@ -53,35 +53,21 @@ def _meta_path(path: str) -> str:
 
 def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
                        kind: str, params: dict | None = None,
-                       value_kind: str | None = None,
-                       merge_existing: bool = False) -> None:
+                       value_kind: str | None = None) -> None:
     """Reduce one epoch of raw rows to one persisted sketch state.
 
     Overwrites ONLY this epoch's partition (dynamic partition overwrite),
     so re-running a failed/changed day replaces that day and nothing
     else — the write is idempotent per (path, epoch).
 
-    ``merge_existing=True`` is the INCREMENTAL mode (streaming
-    foreachBatch appending micro-batches into the current day, or late
-    data trickling into a closed day): the epoch's existing state is
-    folded in as an extra partial before the reduction, so the rewritten
-    partition equals old-state ⊔ new-rows. Replace semantics (the
-    default) are for recomputing a day from scratch. NOTE the two modes'
-    replay stories differ: replace is idempotent per (path, epoch);
-    merge_existing composes monotonically, so EXACT re-delivery of the
-    same rows is only a no-op for idempotent-merge sketches (HLL/Bloom
-    max/or — gated in tests) — counting sketches (CMS) double-count a
-    replayed batch, same as any at-least-once counter; guard those with
-    the caller's batch-id high-watermark, or use the engine-managed state
-    of ``streaming.stateful.stateful_window_sketches``.
+    Late data is handled by re-running the epoch over all of its rows.
+    Because the write replaces the partition, a re-run never
+    double-counts, for counting sketches (CMS) as much as for HLL.
 
     The reduction is fully distributed: per-partition partials
     (``partial_states``: one mapInArrow pass, no shuffle of raw rows),
     then the ``spark.merge`` fan-in rounds and a final round down to one
-    row. The only driver traffic is ``merge_existing`` lifting the
-    epoch's CURRENT state — one KB-sized row (never data-sized), required
-    because Spark cannot overwrite a partition it is concurrently
-    scanning.
+    row. No state passes through the driver.
     """
     if kind not in SKETCH_KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}: {sorted(SKETCH_KINDS)}")
@@ -110,20 +96,9 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
 
     states = projected.mapInArrow(_partial_fn(kind, params, value_kind),
                                   STATE_SCHEMA)
-    prior_used = False
-    if merge_existing and meta is not None:
-        # lift the epoch's current state off the partition about to be
-        # overwritten (one KB row)
-        prior = spark.read.parquet(path) \
-            .where(F.col("epoch") == str(epoch)) \
-            .select("partition_id", "kind", "params", "payload").collect()
-        if prior:
-            states = states.unionByName(
-                spark.createDataFrame(prior, STATE_SCHEMA))
-            prior_used = True
     # round count is derived from the df partition count (metadata, no job)
     n = plan_partitions(states)
-    if n <= 1 and not prior_used:
+    if n <= 1:
         # a single partial with partition_id 0: the final round would
         # shuffle it into its own 1-row group just to re-serialize it.
         # Skipping it saves a shuffle + Python stage PER EPOCH (the epoch

@@ -77,71 +77,23 @@ class TestBitIdentity:
             "hll", {"p": 12})
         assert merged.serialize() == subset.serialize()
 
-    def test_epoch_rewrite_idempotent(self, spark, pages, store):
-        _write_all(pages, store, "hll", {"p": 12})
+    @pytest.mark.parametrize("kind,params", [
+        ("hll", {"p": 12}),
+        ("cms", {"depth": 4, "width": 2048}),
+    ])
+    def test_epoch_rewrite_idempotent(self, spark, pages, store, kind,
+                                      params):
+        """Re-running a day replaces its state rather than folding into
+        it, so a counting sketch (CMS) is not double-counted either."""
+        _write_all(pages, store, kind, params)
         before = merge_sketch_range(spark, store).serialize()
         # re-run day 2 (crash-replay): replaces ONLY that partition
         write_sketch_epoch(pages.where(F.col("epoch") == EPOCHS[1]), "url",
-                           store, EPOCHS[1], kind="hll", params={"p": 12})
+                           store, EPOCHS[1], kind=kind, params=params)
         after = merge_sketch_range(spark, store).serialize()
         assert after == before
         rows = read_sketch_store(spark, store).count()
         assert rows == len(EPOCHS)  # one state per epoch, no duplicates
-
-
-class TestMergeExisting:
-    def test_chunked_merge_equals_single_write(self, spark, pages, store):
-        """Micro-batch accumulation: 3 chunks folded into one epoch via
-        merge_existing must be BIT-IDENTICAL to one whole-epoch write
-        (HLL merge is a commutative idempotent monoid)."""
-        day = pages.where(F.col("epoch") == EPOCHS[0])
-        for i in range(3):
-            chunk = day.where((F.xxhash64(F.concat(F.lit("c"), "url"))
-                               % 3 + 3) % 3 == i)
-            write_sketch_epoch(chunk, "url", store, EPOCHS[0], kind="hll",
-                               params={"p": 12}, merge_existing=True)
-        merged = merge_sketch_range(spark, store).serialize()
-        whole = sketch_column(day, "url", "hll", {"p": 12}).serialize()
-        assert merged == whole
-        assert read_sketch_store(spark, store).count() == 1
-
-    def test_replay_idempotent_for_hll(self, spark, pages, store):
-        day = pages.where(F.col("epoch") == EPOCHS[0])
-        write_sketch_epoch(day, "url", store, EPOCHS[0],
-                           kind="hll", params={"p": 12})
-        before = merge_sketch_range(spark, store).serialize()
-        write_sketch_epoch(day, "url", store, EPOCHS[0], kind="hll",
-                           params={"p": 12}, merge_existing=True)
-        assert merge_sketch_range(spark, store).serialize() == before
-
-    def test_streaming_foreachbatch_rollup(self, spark, pages, store,
-                                           tmp_path):
-        """The streaming face of the rollup tier: micro-batches arrive via
-        readStream, foreachBatch folds each into its day's epoch state;
-        the final store answers exactly like the batch build."""
-        src = str(tmp_path / "stream_src")
-        data = pages.select("url", "epoch")
-        for i in range(3):
-            data.where((F.xxhash64("url") % 3 + 3) % 3 == i) \
-                .coalesce(1).write.mode("append").parquet(src)
-
-        def fold(batch_df, batch_id):
-            for r in batch_df.select("epoch").distinct().collect():
-                write_sketch_epoch(
-                    batch_df.where(F.col("epoch") == r["epoch"]), "url",
-                    store, r["epoch"], kind="hll", params={"p": 12},
-                    merge_existing=True)
-
-        q = (spark.readStream.schema(data.schema)
-             .option("maxFilesPerTrigger", 1).parquet(src)
-             .writeStream.foreachBatch(fold).trigger(availableNow=True)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .start())
-        q.awaitTermination(300)
-        merged = merge_sketch_range(spark, store).serialize()
-        whole = sketch_column(pages, "url", "hll", {"p": 12}).serialize()
-        assert merged == whole
-        assert read_sketch_store(spark, store).count() == len(EPOCHS)
 
 
 class TestFanInRound:

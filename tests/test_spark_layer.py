@@ -495,12 +495,6 @@ class TestPackedSource:
             want = sorted(str(r["url"]).encode()[:20].ljust(20, b"\x00")
                           for r in urls.collect())
             assert len(got) == n and got == want
-            # the legacy per-record Hadoop reader must agree with the
-            # round-7 bulk range reader key-for-key
-            legacy = sorted(bytes(r["key"]) for r in read_packed_keys(
-                spark, path, record_len=20,
-                reader="binary_records").collect())
-            assert legacy == got
             # a mis-sized record width fails loudly, never silently shears
             import pytest as _pytest
             with _pytest.raises(Exception, match="multiple of"):
