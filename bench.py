@@ -180,12 +180,10 @@ def run_bench(sf_dir: str, cores: int, parts: int | None = None,
     timed("dedup_exact", lambda: exact_dedup(docs).count())
     # library default = km_md5 since round 5 (ONE md5 per shingle; the 10M
     # rehearsal named band_md5's 8 md5s/shingle the pipeline cost center)
-    timed("minhash_lsh", lambda: lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True).count())
+    timed("minhash_lsh", lambda: lsh_candidate_pairs(docs, 8, 3).count())
     # the round-1..4 default, kept as the independent-band comparison point
     timed("minhash_lsh_band", lambda: lsh_candidate_pairs(
-        docs, 8, 3, materialize_signatures=True,
-        hash_family="band_md5").count())
+        docs, 8, 3, hash_family="band_md5").count())
     qvec = emb.limit(1).select("embedding").collect()[0][0]
     timed("cosine_topk", lambda: cosine_topk(emb, qvec, 10).collect())
     from filterz_spark.ops.dedup import simhash

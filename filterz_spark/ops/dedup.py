@@ -1,15 +1,15 @@
 """Deduplication operators for training-data pipelines.
 
 Exact dedup (hash-groupBy), MinHash+LSH (shingle -> minhash -> band ->
-bucket-join), n-gram Jaccard verification, SimHash, and embedding-cosine
+bucket groupBy), n-gram Jaccard verification, SimHash, and embedding-cosine
 near-dup. ALL of them — simhash included — are expressed with JVM built-ins
 (md5 as the shared word hash makes every value oracle-checkable in DuckDB,
 which has the same md5); nothing here runs per-row Python.
 
 Scale posture: every operator is a groupBy/join on a derived key — shingle
 explosion is the only fan-out (x ~n_tokens per doc) and is immediately
-re-aggregated map-side; LSH bucket join replaces the O(n^2) all-pairs
-comparison with an equi-join on (band, minhash) that Spark shuffles by
+re-aggregated map-side; LSH bucketing replaces the O(n^2) all-pairs
+comparison with a groupBy on (band, minhash) that Spark shuffles by
 bucket; Jaccard runs only on LSH candidates.
 """
 
@@ -338,88 +338,45 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8, k: int = 2,
 
 def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, k: int = 2,
                         max_bucket_size: int | None = 10_000,
-                        materialize_signatures: bool = True,
                         signatures: DataFrame | None = None,
-                        pair_strategy: str = "group",
                         hash_family: str = "km_md5") -> DataFrame:
     """Candidate near-dup pairs: docs sharing any (band, minhash) bucket.
 
-    The equi-join on the bucket key is the scale move: no all-pairs shuffle,
+    The shuffle on the bucket key is the scale move: no all-pairs shuffle,
     only docs with a colliding band meet. Returns (doc_a, doc_b, n_bands).
 
-    ``max_bucket_size`` guards the self-join against degenerate hot buckets
-    (e.g. millions of empty/boilerplate docs sharing a minhash): a bucket of
-    b docs yields b^2/2 pairs, so one web-scale junk cluster would otherwise
-    go quadratic. Buckets above the cap are dropped from candidate
-    generation (their members are boilerplate-identical; handle them with
-    exact_dedup, which is linear). None disables the cap.
+    Plan: ONE shuffle — groupBy the bucket key, collect the sorted member
+    list, expand ordered pairs expression-side (posexplode x slice). No
+    self-join and no window sort, so the signature subtree is scanned
+    exactly once and needs no materialization. To share one signature
+    pass across the candidate -> Jaccard -> components pipeline, supply
+    your own (materialized) ``signatures`` array table.
 
-    ``materialize_signatures`` (default True) localCheckpoints the compact
-    array-form signature table (one row per doc) before the self-join —
-    but ONLY under ``pair_strategy="join"``: Catalyst does not share the
-    subtree between the join sides, so the lazy join form runs the
-    shingle+md5 pipeline twice; the group plan scans it exactly once and
-    skips the checkpoint (materializing there is pure cost). To share one
-    signature pass across the candidate -> Jaccard -> components pipeline,
-    supply your own (materialized) ``signatures`` array table.
-
-    ``pair_strategy`` picks the within-bucket pair-generation plan; both
-    produce identical results and shuffle the SAME (band, minhash) key, so
-    they share one skew profile (a hot bucket lands on one reducer either
-    way — that is what ``max_bucket_size`` bounds):
-
-    - ``"group"`` (default): ONE shuffle — groupBy the bucket key, collect
-      the (capped) member list, expand ordered pairs expression-side
-      (posexplode x slice). No self-join, no window sort, and the bucket
-      cap is a free ``size()`` filter on the aggregated row.
-    - ``"join"``: the classic bucketed self-join (window count for the cap,
-      equi-join, pair groupBy). Kept for memory-constrained reducers: its
-      per-bucket state is streamed join rows, never a whole member array.
+    ``max_bucket_size`` guards against degenerate hot buckets (e.g.
+    millions of empty/boilerplate docs sharing a minhash): a bucket of b
+    docs yields b^2/2 pairs, so one web-scale junk cluster would otherwise
+    go quadratic. Buckets above the cap — a free ``size()`` filter on the
+    aggregated row — are dropped from candidate generation (their members
+    are boilerplate-identical; handle them with exact_dedup, which is
+    linear). None disables the cap. A hot bucket still lands on one
+    reducer as a whole member array; the cap is what bounds it.
     """
-    if pair_strategy not in ("group", "join"):
-        raise ValueError(f"unknown pair_strategy {pair_strategy!r}")
-    sig_arr = signatures if signatures is not None \
-        else minhash_signature_arrays(docs, num_hashes, k, hash_family)
-    if materialize_signatures and signatures is None and pair_strategy == "join":
-        # only the self-join duplicates the signature subtree; the group
-        # plan scans it exactly once, so materializing there is pure cost
-        sig_arr = sig_arr.localCheckpoint(eager=True)
-    sig = minhash_signatures(docs, num_hashes, k, signatures=sig_arr)
-
-    if pair_strategy == "group":
-        buckets = (sig.groupBy("band", "minhash")
-                   .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-                   .filter(F.size("ids") >= 2))
-        if max_bucket_size is not None:
-            buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-        # ordered pairs from the sorted member list: (i, doc_a) x the tail
-        # slice after i — doc_a < doc_b holds by construction
-        e = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
-        pairs = e.select(
-            "doc_a",
-            F.explode(F.slice("ids", F.col("i") + 2,
-                              F.size("ids") - F.col("i") - 1)).alias("doc_b"))
-        return (pairs.groupBy("doc_a", "doc_b")
-                .agg(F.count("*").cast("long").alias("n_bands")))
-
+    sig = minhash_signatures(docs, num_hashes, k, signatures=signatures,
+                             hash_family=hash_family)
+    buckets = (sig.groupBy("band", "minhash")
+               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+               .filter(F.size("ids") >= 2))
     if max_bucket_size is not None:
-        # bucket size as a WINDOW count over the same (band, minhash) key
-        # the self-join shuffles on — no extra aggregation+join subtree
-        # (which would re-execute the whole signature pipeline per side)
-        from pyspark.sql import Window
-        w = Window.partitionBy("band", "minhash")
-        sig = (sig.withColumn("bucket_n", F.count("*").over(w))
-               .filter(F.col("bucket_n") <= max_bucket_size)
-               .drop("bucket_n"))
-    a = sig.alias("a")
-    b = sig.alias("b")
-    return (
-        a.join(b, [F.col("a.band") == F.col("b.band"),
-                   F.col("a.minhash") == F.col("b.minhash"),
-                   F.col("a.doc_id") < F.col("b.doc_id")])
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").cast("long").alias("n_bands"))
-    )
+        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+    # ordered pairs from the sorted member list: (i, doc_a) x the tail
+    # slice after i — doc_a < doc_b holds by construction
+    e = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+    pairs = e.select(
+        "doc_a",
+        F.explode(F.slice("ids", F.col("i") + 2,
+                          F.size("ids") - F.col("i") - 1)).alias("doc_b"))
+    return (pairs.groupBy("doc_a", "doc_b")
+            .agg(F.count("*").cast("long").alias("n_bands")))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, k: int = 2, min_jaccard: float = 0.0,
@@ -492,7 +449,6 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 2, min_jaccard: float = 0.0,
 
 def ngram_decontaminate(train: DataFrame, bench: DataFrame, k: int = 3,
                         min_contamination: float = 0.0,
-                        broadcast_bench: bool = True,
                         shingle_key: str = "string") -> DataFrame:
     """Benchmark decontamination: per train doc, what fraction of its
     distinct k-gram shingles appears in ANY benchmark document —
@@ -503,10 +459,6 @@ def ngram_decontaminate(train: DataFrame, bench: DataFrame, k: int = 3,
     on the corpus side (no corpus shuffle beyond the per-doc aggregate).
     Docs at or above ``min_contamination`` are returned — feed the ids to
     an anti-join to drop them from the training set.
-
-    ``broadcast_bench=False`` switches to a shuffle join on the shingle —
-    for the rare case where the "benchmark" side is itself corpus-sized
-    (e.g. cross-corpus decontamination) and would not fit an executor.
 
     ``shingle_key`` picks the join-key representation:
 
@@ -539,9 +491,7 @@ def ngram_decontaminate(train: DataFrame, bench: DataFrame, k: int = 3,
     if shingle_key == "xxhash64":
         bench_sh = bench_sh.select(F.xxhash64("shingle").alias("shingle"))
         tr = tr.select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    bench_sh = bench_sh.distinct().withColumn("hit", F.lit(1))
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
+    bench_sh = F.broadcast(bench_sh.distinct().withColumn("hit", F.lit(1)))
     marked = tr.join(bench_sh, "shingle", "left")
     return (marked.groupBy("doc_id")
             .agg(F.count("*").alias("n_shingles"),
@@ -689,9 +639,11 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
       map task, and the per-doc answer is
       ``n_dup = n_spans - owned_instances`` — an equi-join of two
       doc-keyed count tables, never a per-instance join back. No stage
-      anywhere receives all copies of a hot key on one task (the
-      map-side exchange is computed once and reused by both aggregation
-      branches — ReusedExchange in the plan).
+      anywhere receives all copies of a hot key on one task. The static
+      plan has five hash exchanges: both aggregation branches start
+      from the same (doc_id, fp) exchange, and AQE runs it once and
+      reuses it at runtime (ReusedExchange appears only in the final
+      adaptive plan, not in ``explain()`` before execution).
     - ``"window"``: the round-6 single-shuffle analytic window
       (min over ``Window.partitionBy(fp)``). One shuffle fewer for
       skew-free corpora, but a window partition cannot be pre-aggregated

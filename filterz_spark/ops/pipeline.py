@@ -32,27 +32,13 @@ from .relational import stratified_sample
 from .text import normalize_text
 
 
-def _select_barrier(spark, barrier: str) -> str:
-    """Resolve ``barrier="auto"`` to a concrete mechanism: ``"reliable"``
-    when the session has a checkpoint directory configured
-    (``sparkContext.setCheckpointDir`` was called — the session-level
-    signal of durable-barrier intent), else ``"local"``. Explicit modes
-    pass through; unknown modes raise."""
-    if barrier not in ("auto", "local", "reliable", "persist"):
-        raise ValueError(f"unknown barrier {barrier!r}")
-    if barrier == "auto":
-        return "reliable" if spark.sparkContext.getCheckpointDir() else "local"
-    return barrier
-
-
 def curate_training_set(docs: DataFrame, bench: DataFrame,
                         fractions: dict, k: int = 3,
                         max_contamination: float = 0.2,
                         min_tokens: int = 5, max_tokens: int = 100_000,
                         min_distinct_ratio: float = 0.3,
                         strata_col: str = "lang",
-                        seed: str = "42",
-                        barrier: str = "auto") -> DataFrame:
+                        seed: str = "42") -> DataFrame:
     """(doc_id, lang, n_tokens) — the curated training set.
 
     ``fractions``: per-stratum keep probabilities (strata absent from the
@@ -61,42 +47,25 @@ def curate_training_set(docs: DataFrame, bench: DataFrame,
     AT or above the threshold, so 0.0 would drop every doc including fully
     clean ones (contamination 0.0) — rejected loudly instead.
 
-    ``barrier`` picks the optimizer-barrier mechanism between the quality
-    projection and the dedup double-reference (see the inline comment for
-    WHY a barrier exists at all). All modes produce identical rows:
-
-    - ``"auto"`` (default): ``"reliable"`` when the session has a
-      checkpoint directory configured (``sparkContext.setCheckpointDir``
-      was called — the operator's signal that the deployment cares about
-      executor-loss durability, e.g. a preemptible/spot fleet pointing at
-      HDFS/S3), else ``"local"``. Durability should not silently depend
-      on a per-operator kwarg nobody passes.
-    - ``"local"``: ``localCheckpoint(eager=False)`` — cheapest
-      (executor-local storage, no extra job), but it TRUNCATES lineage:
-      losing an executor after materialization makes its blocks
-      unrecoverable and kills the job. Fine on a stable single-app
-      cluster or local mode; NOT for preemptible/spot fleets.
-    - ``"reliable"``: ``checkpoint(eager=False)`` to the session's
-      checkpoint dir (``spark.sparkContext.setCheckpointDir`` must have
-      been called — e.g. an HDFS/S3 path at cluster scale). Survives
-      executor loss; costs one write+read of the projected survivor rows
-      (doc_id, strata, hash, count — NOT the corpus text, see below).
-    - ``"persist"``: ``persist(DISK_ONLY)`` — lineage is KEPT, so an
-      executor loss triggers recompute instead of failure, and nothing
-      is written outside Spark's block store. The cached plan stays
-      registered until the caller unpersists it (``df.unpersist()`` on
-      the returned frame's source is not reachable — call
-      ``spark.catalog.clearCache()`` after the terminal action, or reuse
-      the session's cache across calls deliberately).
+    An optimizer barrier sits between the quality projection and the
+    dedup double-reference (see the inline comment for WHY it exists).
+    Its mechanism is read from the session: with a checkpoint directory
+    configured (``sparkContext.setCheckpointDir`` was called — the
+    deployment's signal that it cares about executor-loss durability,
+    e.g. a preemptible/spot fleet pointing at HDFS/S3) it is
+    ``checkpoint(eager=False)``, which survives executor loss at the
+    cost of one write+read of the projected rows; otherwise it is
+    ``localCheckpoint(eager=False)`` — executor-local storage and no
+    extra job, but losing an executor after materialization makes its
+    blocks unrecoverable and kills the job. Both produce identical rows.
 
     The barrier input is PROJECTED to (doc_id, strata, norm_hash,
     n_tokens, __dr) first — norm_text is consumed by the metric
-    expressions and never read downstream, so the materialized/persisted
+    expressions and never read downstream, so the materialized
     state is a few dozen bytes per doc, not the normalized corpus.
     """
     if not 0.0 < max_contamination <= 1.0:
         raise ValueError("max_contamination must be in (0, 1]")
-    barrier = _select_barrier(docs.sparkSession, barrier)
     # scan-parallelism guard (spark.partitioning): the normalize chain is
     # the pipeline's per-byte cost center and fuses into the scan stage;
     # a small/1-row-group input would run it on 1-2 tasks at local[32]
@@ -132,15 +101,12 @@ def curate_training_set(docs: DataFrame, bench: DataFrame,
     # per-doc METRICS (a few dozen bytes/doc, norm_text already dropped)
     # lets the single pre-barrier projection evaluate the chain once
     # (codegen CSE applies within one Project) and makes the filter above
-    # the barrier free to duplicate into both dedup branches. All modes
-    # are lazy/no-op until the first action.
-    if barrier == "local":
-        metrics = metrics.localCheckpoint(eager=False)
-    elif barrier == "reliable":
+    # the barrier free to duplicate into both dedup branches. Both
+    # mechanisms are lazy until the first action.
+    if docs.sparkSession.sparkContext.getCheckpointDir():
         metrics = metrics.checkpoint(eager=False)
     else:
-        from pyspark import StorageLevel
-        metrics = metrics.persist(StorageLevel.DISK_ONLY)
+        metrics = metrics.localCheckpoint(eager=False)
     survivors = (metrics
                  .filter((F.col("n_tokens") >= min_tokens)
                          & (F.col("n_tokens") <= max_tokens)

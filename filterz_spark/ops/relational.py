@@ -21,35 +21,26 @@ from pyspark.sql import DataFrame, Window, functions as F
 def filter_prefiltered_join(probe_df: DataFrame, build_df: DataFrame,
                             probe_key: str, build_key: str,
                             kind: str = "xorf", params: dict | None = None,
-                            num_partitions: int = 8,
-                            probe_mode: str = "broadcast") -> DataFrame:
+                            num_partitions: int = 8) -> DataFrame:
     """Inner join probe_df x build_df with a membership-filter pre-pass.
 
     Returns the joined rows (probe columns + build columns). Correctness:
     zero FN guarantees no lost matches; FP rows are eliminated by the real
     join, so the result set is EXACTLY the plain join (oracle-checkable).
 
-    ``probe_mode="broadcast"`` (default) collects the index once and ships
-    it as a broadcast variable — map-only pre-filter, right while the index
-    fits executor memory. ``probe_mode="cogrouped"`` keeps the index
-    distributed (spark/probe.py strategy 3) — for build sides whose filter
-    index exceeds driver/executor memory; costs one extra shuffle of the
-    probe side but each key then sees only its own partition's filter
-    (lower FPR -> fewer wasted shuffle rows into the real join).
+    The index is collected once and shipped as a broadcast variable, so
+    the pre-filter is map-only; it must fit executor memory. An index too
+    large for that can be probed distributed with
+    ``spark.probe.probe_membership_cogrouped`` directly.
     """
     from ..spark.build import build_filter_index
-    from ..spark.probe import (collect_index, probe_membership,
-                               probe_membership_cogrouped)
+    from ..spark.probe import collect_index, probe_membership
 
     params = params or {"arity": 3, "fp_bits": 16}
     idx_df = build_filter_index(build_df, build_key, kind, params,
                                 num_partitions)
-    if probe_mode == "cogrouped":
-        pre = probe_membership_cogrouped(probe_df, probe_key, idx_df,
-                                         num_partitions)
-    else:
-        pre = probe_membership(probe_df, probe_key, collect_index(idx_df))
-    pre = pre.filter("maybe_present").drop("maybe_present")
+    pre = (probe_membership(probe_df, probe_key, collect_index(idx_df))
+           .filter("maybe_present").drop("maybe_present"))
     return pre.join(build_df, pre[probe_key] == build_df[build_key])
 
 
@@ -331,9 +322,12 @@ def stratified_sample(df: DataFrame, key_col: str, fractions: dict,
     return df.filter(cond)
 
 
+# rounds between lineage cuts + convergence checks in dedup_components
+CHECK_EVERY = 3
+
+
 def dedup_components(pairs: DataFrame, all_ids: DataFrame,
-                     id_col: str = "doc_id", max_iters: int = 20,
-                     check_every: int = 3) -> DataFrame:
+                     id_col: str = "doc_id", max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) where
     cluster_id = min doc id reachable through the pair graph.
 
@@ -342,7 +336,7 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame,
     iteration count is O(graph diameter), small for near-dup clusters.
 
     Scale hygiene: lineage is cut with ``localCheckpoint`` every
-    ``check_every`` rounds (unbounded iterative lineage re-executes the
+    ``CHECK_EVERY`` rounds (unbounded iterative lineage re-executes the
     whole chain on any recompute and blows up the planner), and the
     driver-side convergence check — an extra job per round in the naive
     form — is batched to checkpoint rounds as one aggregate over the
@@ -374,7 +368,7 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame,
                 F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
             ).alias("label"))
         )
-        if it % check_every == 0 or it == max_iters:
+        if it % CHECK_EVERY == 0 or it == max_iters:
             # cut lineage, then one cheap agg on the materialized labels:
             # labels only DECREASE, so an unchanged signature across a whole
             # check window means fixpoint. bit_xor(xxhash64(label)) is the

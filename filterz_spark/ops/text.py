@@ -87,8 +87,7 @@ def repetition_scores(docs: DataFrame) -> DataFrame:
                     .alias("top_bigram_frac")))
 
 
-def unigram_logprob_scores(docs: DataFrame,
-                           broadcast_vocab: bool = True) -> DataFrame:
+def unigram_logprob_scores(docs: DataFrame) -> DataFrame:
     """Corpus-unigram language-model score per doc:
     (doc_id, n_words, lm_score = mean over words of ln(corpus_freq(word)
     / total_words)) — the cheap LM-filter proxy (KenLM-style perplexity
@@ -99,11 +98,10 @@ def unigram_logprob_scores(docs: DataFrame,
     counts — one shuffle whose exchange every downstream branch reuses
     (the vocabulary is its regroup by word, the corpus total a 1-row sum
     over the vocabulary, never a second scan of documents); doc-word rows
-    then join the vocabulary — broadcast by default (a deduplicated
-    unigram vocab is MB-scale even for web corpora;
-    ``broadcast_vocab=False`` for the exotic case it is not) — and the
-    total rides in as a broadcast 1-row cross join, keeping the whole
-    operator a single lazy plan with no driver-side action. Every word is
+    then join the vocabulary — broadcast (a deduplicated unigram vocab is
+    MB-scale even for web corpora) — and the total rides in as a
+    broadcast 1-row cross join, keeping the whole operator a single lazy
+    plan with no driver-side action. Every word is
     its own key, so the join never misses (smoothing unnecessary); the
     per-doc mean is the count-weighted mean over distinct words —
     identical to the per-occurrence mean.
@@ -112,9 +110,7 @@ def unigram_logprob_scores(docs: DataFrame,
     dwc = words.groupBy("doc_id", "w").agg(F.count("*").alias("dc"))
     vocab = dwc.groupBy("w").agg(F.sum("dc").alias("wc"))
     total = vocab.agg(F.sum("wc").cast("double").alias("__total"))
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    scored = dwc.join(vocab, "w").crossJoin(F.broadcast(total))
+    scored = dwc.join(F.broadcast(vocab), "w").crossJoin(F.broadcast(total))
     return (scored.groupBy("doc_id")
             .agg(F.sum("dc").cast("long").alias("n_words"),
                  F.round(F.sum(F.col("dc") *

@@ -55,6 +55,15 @@ class MergeableSketch(ABC):
     def params(self) -> dict:
         """String->string parameter map (stored next to the payload)."""
 
+    @classmethod
+    def check_size(cls, payload: bytes, size: int) -> None:
+        """Refuse a payload whose length is not the ``size`` bytes its
+        header or params describe: trailing or missing bytes mean a
+        corrupt or mislabelled state, which must never decode silently."""
+        if len(payload) != size:
+            raise ValueError(f"{cls.kind} payload is {len(payload)} bytes; "
+                             f"its header/params describe {size}")
+
     def check_compatible(self, other: "MergeableSketch") -> None:
         if self.kind != other.kind:
             raise ValueError(f"incompatible sketches: {self.kind} vs {other.kind}")

@@ -71,6 +71,8 @@ class BloomSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "BloomSketch":
+        cls.check_size(payload, sbbf.num_bytes(int(params["capacity"]),
+                                               int(params["bits_per_key"])))
         return cls(
             sbbf.deserialize(payload).copy(),
             int(params["capacity"]),

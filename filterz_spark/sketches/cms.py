@@ -100,5 +100,6 @@ class CmsSketch(MergeableSketch):
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "CmsSketch":
         d, w = int(params["depth"]), int(params["width"])
+        cls.check_size(payload, 8 * d * w)
         table = np.frombuffer(payload, dtype="<i8").astype(np.int64, copy=False).reshape(d, w)
         return cls(table.copy(), int(params.get("total", 0)))

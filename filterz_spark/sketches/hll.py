@@ -1,22 +1,15 @@
-"""HyperLogLog — dense or sparse registers, vectorized update, max-merge.
+"""HyperLogLog — dense registers, vectorized update, max-merge.
 
 Semantics from the published algorithm (Flajolet, Fusy, Gandouet, Meunier
 2007) with the standard linear-counting small-range correction; no reference
 analogue (north-rule extension, SURVEY.md §2.6). Relative standard error
 ~= 1.04 / sqrt(2^p).
 
-Dense state: 2^p uint8 registers. update takes u64 key hashes: register
+State: 2^p uint8 registers. update takes u64 key hashes: register
 index = top p bits, rank = leading-zero count of the remaining 64-p bits
 + 1. merge = elementwise max — associative, commutative, idempotent, so
-state is bit-identical under any aggregation order.
-
-Sparse state: sorted unique (idx int32, rank uint8) pairs while the
-populated-register count stays under 2^p / 8 — the representation that
-matters for per-GROUP rollups at corpus scale, where most groups are small
-and a dense 16 KB (p=14) payload per group would dominate shuffle bytes.
-A sparse sketch upgrades to dense the moment dense becomes smaller; all
-mode combinations merge, and estimate() materializes densely so sparse and
-dense states over the same data produce bit-identical estimates.
+state is bit-identical under any aggregation order. The payload is the
+register array itself, exactly 2^p bytes.
 """
 
 from __future__ import annotations
@@ -45,55 +38,18 @@ def _bit_length_u64(x: np.ndarray) -> np.ndarray:
     return res
 
 
-def _max_by_idx(idx: np.ndarray, rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Compact (idx, rank) pairs to sorted unique idx with per-idx max rank."""
-    if idx.size == 0:
-        return idx, rank
-    order = np.lexsort((rank, idx))          # within an idx, ranks ascending
-    idx, rank = idx[order], rank[order]
-    last = np.r_[idx[1:] != idx[:-1], True]  # last occurrence = max rank
-    return idx[last], rank[last]
-
-
 class HllSketch(MergeableSketch):
     kind = "hll"
 
-    # sparse while populated registers * 5 bytes < 2^p / 8 * 5 < 2^p bytes
-    SPARSE_LIMIT_SHIFT = 3  # threshold = m >> 3 entries
-
-    def __init__(self, registers: np.ndarray | None, p: int,
-                 sparse: tuple[np.ndarray, np.ndarray] | None = None) -> None:
+    def __init__(self, registers: np.ndarray, p: int) -> None:
         self.registers = registers
-        self.sparse = sparse  # (sorted unique int32 idx, uint8 rank)
         self.p = p
 
     @classmethod
-    def zero(cls, p: int = 14, sparse: bool = False) -> "HllSketch":
+    def zero(cls, p: int = 14) -> "HllSketch":
         if not 4 <= p <= 18:
             raise ValueError("p must be in [4, 18]")
-        if sparse:
-            return cls(None, p, (np.empty(0, np.int32), np.empty(0, np.uint8)))
         return cls(np.zeros(1 << p, dtype=np.uint8), p)
-
-    @property
-    def is_sparse(self) -> bool:
-        return self.sparse is not None
-
-    def _threshold(self) -> int:
-        return (1 << self.p) >> self.SPARSE_LIMIT_SHIFT
-
-    def _to_dense(self) -> np.ndarray:
-        if not self.is_sparse:
-            return self.registers
-        regs = np.zeros(1 << self.p, dtype=np.uint8)
-        idx, rank = self.sparse
-        regs[idx] = rank
-        return regs
-
-    def _maybe_upgrade(self) -> None:
-        if self.is_sparse and self.sparse[0].size > self._threshold():
-            self.registers = self._to_dense()
-            self.sparse = None
 
     def update(self, values: np.ndarray) -> None:
         """values: uint64 key hashes."""
@@ -104,38 +60,16 @@ class HllSketch(MergeableSketch):
         idx = (h >> np.uint64(64 - p)).astype(np.int64)
         rest = h & np.uint64((1 << (64 - p)) - 1)
         rank = ((64 - p) - _bit_length_u64(rest) + 1).astype(np.uint8)
-        if self.is_sparse:
-            si, sr = self.sparse
-            ci, cr = _max_by_idx(np.concatenate([si.astype(np.int64), idx]),
-                                 np.concatenate([sr, rank]))
-            self.sparse = (ci.astype(np.int32), cr)
-            self._maybe_upgrade()
-        else:
-            np.maximum.at(self.registers, idx, rank)
+        np.maximum.at(self.registers, idx, rank)
 
     def merge(self, other: "HllSketch") -> "HllSketch":
         self.check_compatible(other)
         if self.p != other.p:
             raise ValueError("hll merge: precision mismatch")
-        if self.is_sparse and other.is_sparse:
-            ci, cr = _max_by_idx(
-                np.concatenate([self.sparse[0].astype(np.int64),
-                                other.sparse[0].astype(np.int64)]),
-                np.concatenate([self.sparse[1], other.sparse[1]]))
-            out = HllSketch(None, self.p, (ci.astype(np.int32), cr))
-            out._maybe_upgrade()
-            return out
-        if self.is_sparse or other.is_sparse:
-            sparse = self if self.is_sparse else other
-            dense = other if self.is_sparse else self
-            regs = dense.registers.copy()
-            idx, rank = sparse.sparse
-            np.maximum.at(regs, idx.astype(np.int64), rank)
-            return HllSketch(regs, self.p)
         return HllSketch(np.maximum(self.registers, other.registers), self.p)
 
     def estimate(self) -> float:
-        regs = self._to_dense()
+        regs = self.registers
         m = regs.size
         inv = np.power(2.0, -regs.astype(np.float64))
         raw = _alpha(m) * m * m / inv.sum()
@@ -151,24 +85,10 @@ class HllSketch(MergeableSketch):
         return {"p": str(self.p)}
 
     def serialize(self) -> bytes:
-        if self.is_sparse:
-            idx, rank = self.sparse
-            # 5 bytes/pair; total <= 5m/8 + 1 < m, so the payload length
-            # alone distinguishes sparse from a dense m-byte payload
-            return b"\x01" + idx.astype("<i4").tobytes() + rank.tobytes()
         return self.registers.tobytes()
-
-    def mem_usage(self) -> int:
-        if self.is_sparse:
-            return 1 + 5 * self.sparse[0].size
-        return self.registers.size
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "HllSketch":
         p = int(params["p"])
-        if len(payload) == (1 << p):
-            return cls(np.frombuffer(payload, dtype=np.uint8).copy(), p)
-        n = (len(payload) - 1) // 5
-        idx = np.frombuffer(payload[1:1 + 4 * n], dtype="<i4").copy()
-        rank = np.frombuffer(payload[1 + 4 * n:], dtype=np.uint8).copy()
-        return cls(None, p, (idx, rank))
+        cls.check_size(payload, 1 << p)
+        return cls(np.frombuffer(payload, dtype=np.uint8).copy(), p)

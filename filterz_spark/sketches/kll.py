@@ -137,12 +137,16 @@ class KllSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "KllSketch":
+        cls.check_size(payload[:24], 24)
         n, compactions, nlev = struct.unpack_from("<qqq", payload, 0)
-        off = struct.calcsize("<qqq")
+        off = 24
         levels = []
         for _ in range(nlev):
+            cls.check_size(payload[off:off + 8], 8)
             (sz,) = struct.unpack_from("<q", payload, off)
             off += 8
+            cls.check_size(payload[off:off + 8 * sz], 8 * sz)
             levels.append(np.frombuffer(payload, dtype="<f8", count=sz, offset=off).astype(np.float64))
             off += 8 * sz
+        cls.check_size(payload, off)
         return cls(levels, int(params["k"]), n, compactions)

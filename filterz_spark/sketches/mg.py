@@ -124,8 +124,9 @@ class MisraGriesSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "MisraGriesSketch":
-        head = np.frombuffer(payload[:16], dtype=np.int64)
-        n, size = int(head[0]), int(head[1])
+        cls.check_size(payload[:16], 16)
+        n, size = (int(v) for v in np.frombuffer(payload[:16], dtype=np.int64))
+        cls.check_size(payload, 16 + 16 * size)
         keys = np.frombuffer(payload[16:16 + 8 * size], dtype=np.int64)
         vals = np.frombuffer(payload[16 + 8 * size:], dtype=np.int64)
         return cls(dict(zip(keys.tolist(), vals.tolist())), int(params["k"]), n)

@@ -119,12 +119,14 @@ class ThetaSketch(MergeableSketch):
     # ---- serde ----
 
     def params(self) -> dict:
-        return {"k": str(self.k), "theta": str(self.theta)}
+        return {"k": str(self.k), "theta": str(self.theta),
+                "n": str(self.retained.size)}
 
     def serialize(self) -> bytes:
         return self.retained.astype("<u8", copy=False).tobytes()
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "ThetaSketch":
+        cls.check_size(payload, 8 * int(params["n"]))
         retained = np.frombuffer(payload, dtype="<u8").astype(np.uint64, copy=False)
         return cls(int(params["k"]), int(params["theta"]), retained)

@@ -50,3 +50,16 @@ def spark():
 
     s = get_session(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     yield s
+
+
+@pytest.fixture
+def no_checkpoint_dir(spark):
+    """Run one test with the session's checkpoint dir unset, restoring it
+    afterwards: SparkContext has no public unset, and curate_training_set
+    picks its barrier from whether the dir is set."""
+    sc = spark.sparkContext._jsc.sc()
+    saved = sc.getCheckpointDir()
+    set_dir = getattr(sc, "checkpointDir_$eq")
+    set_dir(spark._jvm.scala.Option.apply(None))
+    yield
+    set_dir(saved)

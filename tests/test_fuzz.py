@@ -83,25 +83,23 @@ def test_fuzz_random_sizes_roundtrip(seed, n):
                      min_size=0, max_size=2000),
        cuts=st.lists(st.integers(min_value=0, max_value=1999),
                      min_size=0, max_size=6))
-def test_sparse_hll_equals_dense_under_arbitrary_splits(keys, cuts):
-    """For ANY key multiset and ANY split of it into sparse partials, the
-    merged sparse state must materialize to the exact dense state."""
+def test_hll_merged_partials_equal_one_shot_under_arbitrary_splits(keys, cuts):
+    """For ANY key multiset and ANY split of it into partials, the partials
+    shipped as payloads and merged from the identity must reproduce the
+    one-shot state byte for byte."""
     from filterz_spark.sketches import HllSketch
 
     h = np.array(keys, dtype=np.uint64)
-    dense = HllSketch.zero(p=10)
-    dense.update(h)
+    whole = HllSketch.zero(p=10)
+    whole.update(h)
     bounds = sorted({0, len(keys), *[c % (len(keys) + 1) for c in cuts]})
-    parts = []
+    acc = HllSketch.zero(p=10)
     for a, b in zip(bounds, bounds[1:]):
-        s = HllSketch.zero(p=10, sparse=True)
+        s = HllSketch.zero(p=10)
         s.update(h[a:b])
-        parts.append(s)
-    acc = HllSketch.zero(p=10, sparse=True)
-    for p_ in parts:
-        acc = acc.merge(p_)
-    assert acc._to_dense().tobytes() == dense.registers.tobytes()
-    assert acc.estimate() == dense.estimate()
+        acc = acc.merge(HllSketch.deserialize(s.serialize(), s.params()))
+    assert acc.serialize() == whole.serialize()
+    assert acc.estimate() == whole.estimate()
 
 
 @settings(max_examples=60, deadline=None,

@@ -482,10 +482,6 @@ class TestRepetitionAndDecontamination:
         assert c[2]["contamination"] == 0.0
         flagged = ngram_decontaminate(train, bench, min_contamination=0.5)
         assert [r["doc_id"] for r in flagged.collect()] == [1]
-        # shuffle-join fallback must produce identical results
-        c2 = {x["doc_id"]: x["contamination"] for x in
-              ngram_decontaminate(train, bench, broadcast_bench=False).collect()}
-        assert c2 == {1: 1.0, 2: 0.0}
         with pytest.raises(ValueError, match="unknown shingle_key"):
             ngram_decontaminate(train, bench, shingle_key="md5")
 
@@ -618,28 +614,26 @@ class TestCurationPipeline:
         with pytest.raises(ValueError, match="at least one stratum"):
             curate_training_set(docs, docs.limit(1), {})
 
-    def test_barrier_modes_identical(self, spark, docs, tmp_path):
-        """Every barrier mechanism (executor-local checkpoint / reliable
-        checkpoint / DISK_ONLY persist) yields the same curated rows — the
-        durability choice is operational, never semantic."""
+    def test_barrier_modes_identical(self, spark, docs, tmp_path,
+                                     no_checkpoint_dir):
+        """Both barrier mechanisms — executor-local checkpoint without a
+        session checkpoint dir, reliable checkpoint with one — yield the
+        same curated rows: the durability choice is operational, never
+        semantic."""
         from filterz_spark.ops.pipeline import curate_training_set
         bench = docs.filter("doc_id % 50 = 0")
-        args = (docs, bench, {"en": 1.0, "de": 1.0})
 
-        def rows(**kw):
-            return {tuple(r) for r in
-                    curate_training_set(*args, **kw).collect()}
+        def rows():
+            return {tuple(r) for r in curate_training_set(
+                docs, bench, {"en": 1.0, "de": 1.0}).collect()}
 
         base = rows()
         assert base
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        assert rows(barrier="reliable") == base
-        # persist mode: the KB-sized projected survivor cache is left
-        # registered by design (the documented caller contract) — not
-        # clearCache()d here, which would evict the module's docs fixture
-        assert rows(barrier="persist") == base
-        with pytest.raises(ValueError, match="unknown barrier"):
-            curate_training_set(*args, barrier="none")
+        ckpt = tmp_path / "ckpt"
+        spark.sparkContext.setCheckpointDir(str(ckpt))
+        assert rows() == base
+        # the session's checkpoint dir selected the reliable barrier
+        assert any(f.is_file() for f in ckpt.rglob("*"))
 
 
 class TestSamplingAndNormalization:
@@ -685,24 +679,32 @@ class TestSamplingAndNormalization:
 
 
 class TestLshStrategies:
-    def test_group_and_join_strategies_identical(self, spark, docs):
-        from filterz_spark.ops.dedup import lsh_candidate_pairs
-        g = {(r["doc_a"], r["doc_b"]): r["n_bands"]
-             for r in lsh_candidate_pairs(docs, pair_strategy="group").collect()}
-        j = {(r["doc_a"], r["doc_b"]): r["n_bands"]
-             for r in lsh_candidate_pairs(docs, pair_strategy="join").collect()}
-        assert g == j and len(g) > 0
+    def test_pairs_match_python_bucketing(self, spark, docs):
+        """The one-shuffle group plan must emit exactly the pairs (and
+        shared-band counts) of a plain Python bucketing of the same
+        signatures."""
+        from itertools import combinations
+
+        from filterz_spark.ops.dedup import (lsh_candidate_pairs,
+                                             minhash_signature_arrays)
+        buckets = {}
+        for r in minhash_signature_arrays(docs).collect():
+            for band, mh in enumerate(r["sig"]):
+                buckets.setdefault((band, mh), []).append(r["doc_id"])
+        want = {}
+        for ids in buckets.values():
+            if len(ids) > 10_000:  # the default max_bucket_size
+                continue
+            for a, b in combinations(sorted(ids), 2):
+                want[(a, b)] = want.get((a, b), 0) + 1
+        got = {(r["doc_a"], r["doc_b"]): r["n_bands"]
+               for r in lsh_candidate_pairs(docs).collect()}
+        assert got == want and len(got) > 0
 
     def test_group_strategy_respects_bucket_cap(self, spark, docs):
         from filterz_spark.ops.dedup import lsh_candidate_pairs
         # cap of 1 excludes every bucket with >= 2 members: no pairs at all
-        assert lsh_candidate_pairs(docs, max_bucket_size=1,
-                                   pair_strategy="group").count() == 0
-
-    def test_unknown_strategy_rejected(self, spark, docs):
-        from filterz_spark.ops.dedup import lsh_candidate_pairs
-        with pytest.raises(ValueError, match="pair_strategy"):
-            lsh_candidate_pairs(docs, pair_strategy="nope")
+        assert lsh_candidate_pairs(docs, max_bucket_size=1).count() == 0
 
 
 class TestPq:

@@ -110,41 +110,17 @@ def test_simhash_and_rolling_have_no_python_stage(spark):
 
 
 def test_lsh_candidate_pairs_single_signature_pass(spark):
-    """The signature pipeline must execute exactly ONCE for the default
-    candidate-pair plan, and the hot-bucket cap must not add signature
-    re-executions relative to the bucket join itself."""
+    """The signature pipeline must execute exactly ONCE for the candidate-
+    pair plan: no self-join exists, so the corpus is read once with no
+    materialization, and the hot-bucket cap (a size() filter on the
+    aggregated row) must not add scans."""
     from filterz_spark.ops.dedup import lsh_candidate_pairs
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_scans = lambda p: p.count("documents.parquet")  # noqa: E731
-    # default (group strategy): no self-join exists, so the corpus is read
-    # exactly ONCE with no materialization needed — the checkpoint is
-    # skipped as pure cost — and the bucket cap (a size() filter on the
-    # aggregated row) must not add scans
     capped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=10_000))
     uncapped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=None))
     assert n_scans(capped) == 1, (n_scans(capped), capped[:500])
     assert n_scans(uncapped) == 1, uncapped
-    # join strategy, materialized (default materialize_signatures=True):
-    # BOTH self-join sides read the checkpointed signature table — zero
-    # re-scans of the corpus, one signature pass total
-    jm_capped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=10_000,
-                                         pair_strategy="join"))
-    jm_uncapped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=None,
-                                           pair_strategy="join"))
-    assert n_scans(jm_capped) == 0, (n_scans(jm_capped), jm_capped[:500])
-    assert n_scans(jm_uncapped) == 0, jm_uncapped
-    # lazy opt-out, join strategy: the self-join re-executes the signature
-    # subtree per side (2 scans); the cap's WINDOW count — keyed on the
-    # join's own (band, minhash) — must not add more (an aggregate+join
-    # formulation would double the scans to 4)
-    jl_capped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=10_000,
-                                         materialize_signatures=False,
-                                         pair_strategy="join"))
-    jl_uncapped = plan(lsh_candidate_pairs(docs, 8, 2, max_bucket_size=None,
-                                           materialize_signatures=False,
-                                           pair_strategy="join"))
-    assert n_scans(jl_uncapped) == 2, jl_uncapped
-    assert n_scans(jl_capped) == 2, (n_scans(jl_capped), jl_capped[:500])
 
 
 def test_minhash_signature_single_doc_aggregate(spark):
@@ -198,64 +174,20 @@ def test_decontaminate_benchmark_is_broadcast(spark):
         assert "BroadcastHashJoin" in plan(df, "simple"), plan(df, "simple")
 
 
-def test_curate_barrier_modes_evaluate_normalize_once(spark, tmp_path):
+def test_curate_barrier_modes_evaluate_normalize_once(spark, tmp_path,
+                                                      no_checkpoint_dir):
     """The optimizer barrier must block quality-predicate substitution into
-    both dedup branches under EVERY barrier mechanism: the normalize regex
-    chain appears the same (small) number of times in each mode's physical
-    plan — the re-substitution blowup the barrier exists to prevent
-    (BENCH/PIPELINE.md: 5.2x at 10M) would multiply it."""
+    both dedup branches under both barrier mechanisms (local checkpoint
+    without a session checkpoint dir, reliable checkpoint with one): the
+    barrier renders the pre-barrier subtree as an opaque RDD scan, so no
+    normalize regex may appear above it — the re-substitution blowup the
+    barrier exists to prevent (BENCH/PIPELINE.md: 5.2x at 10M) would put
+    the chain back into the dedup branches."""
     from filterz_spark.ops.pipeline import curate_training_set
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bench = docs.filter("doc_id % 50 = 0")
+    local = plan(curate_training_set(docs, bench, {"en": 1.0}))
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    plans = {mode: plan(curate_training_set(docs, bench, {"en": 1.0},
-                                            barrier=mode))
-             for mode in ("local", "reliable", "persist")}
-    # checkpoint barriers render the pre-barrier subtree as an opaque RDD
-    # scan: the dedup join branches CANNOT contain a re-substituted
-    # normalize chain if no regex appears above the barrier at all
-    assert plans["local"].count("regexp_replace") == 0, plans["local"][:800]
-    assert plans["reliable"].count("regexp_replace") == 0
-    # the persist barrier renders its cached plan inline: every regex
-    # occurrence must sit inside the single InMemoryRelation definition
-    # (evaluated once, then served from the cache) — both dedup branches
-    # read it via InMemoryTableScan, never a parquet re-scan of documents
-    # + re-derived normalize (the 5.2x blowup shape from BENCH/PIPELINE.md)
-    p = plans["persist"]
-    assert "InMemoryTableScan" in p
-    n_scans = p.count("documents.parquet")
-    # 3 = decontaminate's train + bench sides + the scan INSIDE the
-    # InMemoryRelation definition render (the cached plan's source, printed
-    # once, executed once); the blowup shape re-derives normalize from a
-    # fresh parquet scan per dedup branch, which would add more
-    assert n_scans == 3, (n_scans, p[:800])
-    spark.catalog.clearCache()
-
-
-def test_curate_barrier_auto_selects_on_checkpoint_dir(spark, tmp_path):
-    """barrier="auto" (the default) must resolve to "reliable" iff the
-    session has a checkpoint dir configured, "local" otherwise; explicit
-    modes pass through and unknown modes raise."""
-    from filterz_spark.ops.pipeline import _select_barrier
-
-    class _Ctx:
-        def __init__(self, d):
-            self._d = d
-
-        def getCheckpointDir(self):
-            return self._d
-
-    class _Fake:
-        def __init__(self, d):
-            self.sparkContext = _Ctx(d)
-
-    assert _select_barrier(_Fake(None), "auto") == "local"
-    assert _select_barrier(_Fake("hdfs:///ckpt"), "auto") == "reliable"
-    for mode in ("local", "reliable", "persist"):
-        assert _select_barrier(_Fake("x"), mode) == mode
-    with pytest.raises(ValueError, match="unknown barrier"):
-        _select_barrier(_Fake(None), "magic")
-    # and against the real session: the conftest session has a checkpoint
-    # dir by this point in the module (set above), so auto => reliable
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
-    assert _select_barrier(spark, "auto") == "reliable"
+    reliable = plan(curate_training_set(docs, bench, {"en": 1.0}))
+    for p in (local, reliable):
+        assert p.count("regexp_replace") == 0, p[:800]

@@ -15,7 +15,7 @@ import pytest
 
 from filterz_spark.hashing import splitmix64_array
 from filterz_spark.sketches import (
-    BloomSketch, CmsSketch, HllSketch, KllSketch, TDigestSketch,
+    SKETCH_KINDS, BloomSketch, CmsSketch, HllSketch, KllSketch, TDigestSketch,
 )
 
 
@@ -53,48 +53,6 @@ class TestHll:
         s.update(splitmix64_array(3, 10_000))
         t = HllSketch.deserialize(s.serialize(), s.params())
         assert t.estimate() == s.estimate()
-
-    def test_sparse_matches_dense_bit_identical(self):
-        """Sparse and dense states over the same data must give identical
-        estimates at any cardinality (upgrade crossing included)."""
-        for n in (1, 50, 1000, 40_000):
-            h = splitmix64_array(n, n)
-            d = HllSketch.zero(p=14)
-            d.update(h)
-            sp = HllSketch.zero(p=14, sparse=True)
-            sp.update(h)
-            assert sp.estimate() == d.estimate(), n
-            assert sp._to_dense().tobytes() == d.serialize(), n
-
-    def test_sparse_upgrades_past_threshold(self):
-        sp = HllSketch.zero(p=14, sparse=True)
-        sp.update(splitmix64_array(5, 100))
-        assert sp.is_sparse
-        assert sp.mem_usage() < 16_384 // 8  # tiny vs 16 KB dense
-        sp.update(splitmix64_array(6, 50_000))
-        assert not sp.is_sparse  # over 2^14/8 populated registers
-
-    def test_sparse_merge_all_mode_combinations(self):
-        h = splitmix64_array(21, 3000)
-        d = HllSketch.zero(p=12)
-        d.update(h)
-        for amode, bmode in ((True, True), (True, False), (False, True)):
-            a = HllSketch.zero(p=12, sparse=amode)
-            a.update(h[::2])
-            b = HllSketch.zero(p=12, sparse=bmode)
-            b.update(h[1::2])
-            m = a.merge(b)
-            assert m._to_dense().tobytes() == d._to_dense().tobytes(), \
-                (amode, bmode)
-
-    def test_sparse_roundtrip_and_incremental_update(self):
-        sp = HllSketch.zero(p=14, sparse=True)
-        sp.update(splitmix64_array(9, 200))
-        sp.update(splitmix64_array(10, 300))  # sparse-state re-update path
-        t = HllSketch.deserialize(sp.serialize(), sp.params())
-        assert t.is_sparse and t.estimate() == sp.estimate()
-        empty = HllSketch.zero(p=14, sparse=True)
-        assert empty.merge(sp).estimate() == sp.estimate()
 
 
 class TestCms:
@@ -404,3 +362,25 @@ class TestMisraGries:
         t = MisraGriesSketch.deserialize(s.serialize(), s.params())
         assert t.counters == s.counters == {1: 4, 2: 1, 3: 5} and t.n == 10
         assert s.heavy_hitters(4) == {1: 4, 3: 5}
+
+
+# small params so every kind holds a real, non-trivial state
+_SMALL_PARAMS = {"bloom": {"capacity": 1000}, "hll": {"p": 10},
+                 "cms": {"depth": 3, "width": 64}, "theta": {"k": 64},
+                 "mg": {"k": 16}}
+
+
+@pytest.mark.parametrize("kind", sorted(SKETCH_KINDS))
+def test_payload_length_must_match_params(kind):
+    """A payload with trailing or missing bytes is corrupt or mislabelled:
+    deserialize must raise, never decode it into a different state."""
+    cls = SKETCH_KINDS[kind]
+    s = cls.zero(**_SMALL_PARAMS.get(kind, {}))
+    h = splitmix64_array(5, 2000)
+    s.update(np.random.default_rng(5).normal(size=2000)
+             if kind in ("kll", "tdigest") else h)
+    payload, params = s.serialize(), s.params()
+    assert cls.deserialize(payload, params).serialize() == payload
+    for bad in (payload + bytes(8), payload[:-8]):
+        with pytest.raises(ValueError):
+            cls.deserialize(bad, params)

@@ -371,25 +371,6 @@ class TestGroupedSketches:
         for lang, n in exact.items():
             assert abs(ests[lang] - n) / max(n, 1) < 3 * 1.04 / np.sqrt(1 << 12), lang
 
-    def test_sparse_rollup_matches_dense_with_smaller_payloads(self, spark, pages):
-        """Sparse per-group HLL states give the same estimates as dense and
-        ship (much) smaller payloads for small groups — the shuffle-bytes
-        property per-group rollups at corpus scale depend on."""
-        from filterz_spark.sketches import deserialize_sketch
-        from filterz_spark.spark.merge import grouped_estimates, grouped_sketch_states
-        import json as _json
-        dense = grouped_sketch_states(pages, "lang", "url", "hll", {"p": 14})
-        sparse = grouped_sketch_states(pages, "lang", "url", "hll",
-                                       {"p": 14, "sparse": True})
-        assert dict(grouped_estimates(sparse)) == dict(grouped_estimates(dense))
-        srows = {r["g"]: r for r in sparse.collect()}
-        for g, r in srows.items():
-            sk = deserialize_sketch("hll", bytes(r["payload"]),
-                                    _json.loads(r["params"]))
-            n = pages.filter(F.col("lang") == g).select("url").distinct().count()
-            if n <= (1 << 14) >> 4:  # clearly-small group stays sparse
-                assert sk.is_sparse and len(bytes(r["payload"])) < (1 << 14), g
-
     @pytest.mark.parametrize("kind,params", [
         ("hll", {"p": 12}),
         ("cms", {"depth": 4, "width": 2048}),

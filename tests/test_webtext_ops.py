@@ -168,13 +168,16 @@ class TestDuplicateSpans:
 
     def test_plan_shapes_no_python(self, spark):
         """Default (agg) owner: every aggregate is map-side combinable —
-        no window operator anywhere, bounded exchange count. The window
-        opt-in keeps the round-6 two-shuffle shape. Neither runs Python."""
+        no window operator anywhere, and exactly the agg plan's five hash
+        exchanges: (doc_id, fp) once per branch (AQE runs it once and
+        reuses it at runtime), then doc_id, fp and the owner's doc_id.
+        The window opt-in keeps the round-6 two-shuffle shape. Neither
+        runs Python."""
         df = spark.createDataFrame(DOCS, "doc_id long, text string")
         p = duplicate_spans(df)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Window" not in p, p
-        assert p.count("Exchange hashpartitioning") <= 5, p
+        assert p.count("Exchange hashpartitioning") == 5, p
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
         pw = duplicate_spans(df, owner_strategy="window") \
             ._jdf.queryExecution().executedPlan().toString()
