@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..spark.fsio import has_data, overwrite_json_marker, read_json_marker
+from ..spark.fsio import check_marker, stamp_marker
 from ..spark.partitioning import ensure_parallelism
 
 
@@ -159,14 +159,14 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
 # pipeline that joins old signatures written under one family with new
 # ones derived under another silently stops deduplicating — the exact
 # hazard the round-5 default flip (band_md5 -> km_md5) created for any
-# persisted pre-flip store. The marker lives in an underscore-prefixed
-# subdirectory: Spark's parquet reader ignores `_`-prefixed paths (the
-# `_SUCCESS` convention), so `spark.read.parquet(path)` on the store is
-# unaffected, and reading/writing the marker through the Hadoop
-# FileSystem API (spark.fsio) keeps the store portable to any
-# Spark-writable filesystem (HDFS/S3), unlike a driver-local ``open()``
-# sidecar.
+# persisted pre-flip store. The marker follows the pinned-store protocol
+# of ``spark.fsio`` (underscore-prefixed, invisible to
+# ``spark.read.parquet``, portable to any Spark-writable filesystem).
 SIGSTORE_META_DIR = "_filterz_signature_meta"
+_SIG_MISMATCH = ("signatures from different families or shapes never "
+                 "collide, so dedup against the store would silently match "
+                 "nothing or misalign band positions. Re-derive under the "
+                 "store's parameters, or rewrite the store.")
 
 
 def write_signature_store(sig_arr: DataFrame, path: str, *,
@@ -179,48 +179,18 @@ def write_signature_store(sig_arr: DataFrame, path: str, *,
     signature shape must match — appending 16-hash signatures to an
     8-hash store corrupts every downstream band position); any other
     mode (over)writes marker and data together. Appending to a
-    pre-existing UNMARKED store raises: its family is unknown (written
-    before this helper, or by foreign code) — stamp it explicitly with
-    ``stamp_signature_store`` after verifying what produced it.
+    pre-existing UNMARKED store raises: its family is unknown — rewrite
+    it through this function.
     """
     spark = sig_arr.sparkSession
+    want = {"hash_family": hash_family, "num_hashes": num_hashes, "k": k}
+    meta = None
     if mode == "append":
-        m = read_json_marker(spark, f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
-        if m is not None:
-            if (m.get("hash_family"), m.get("num_hashes"), m.get("k")) != \
-                    (hash_family, num_hashes, k):
-                raise RuntimeError(
-                    f"signature store at {path} was written with "
-                    f"hash_family={m.get('hash_family')!r}, num_hashes="
-                    f"{m.get('num_hashes')}, k={m.get('k')} but this append "
-                    f"is ({hash_family!r}, {num_hashes}, {k}): mixed "
-                    "families/shapes never collide with each other, so "
-                    "the store would silently stop deduplicating. Pin "
-                    "the store's parameters, or write a fresh store.")
-        elif has_data(spark, path):
-            raise RuntimeError(
-                f"signature store at {path} has data but no "
-                f"{SIGSTORE_META_DIR} marker: its hash family is "
-                "unknown (pre-marker store or foreign directory). "
-                "Verify what produced it and stamp it with "
-                "stamp_signature_store, or point at a fresh path.")
+        meta = check_marker(spark, path, SIGSTORE_META_DIR, "signature store",
+                            want, required=False, why=_SIG_MISMATCH)
     sig_arr.write.mode(mode).parquet(path)
-    stamp_signature_store(spark, path, hash_family=hash_family,
-                          num_hashes=num_hashes, k=k)
-
-
-def stamp_signature_store(spark, path: str, *, hash_family: str,
-                          num_hashes: int, k: int) -> None:
-    """(Re)write the family marker of a signature store — for adopting a
-    store written before markers existed, AFTER verifying its lineage."""
-    # driver-side Hadoop FS write (see spark.fsio): the 1-row Spark job
-    # this replaces cost ~4.5 s per stamp
-    import json as _json
-
-    meta_path = f"{path.rstrip('/')}/{SIGSTORE_META_DIR}"
-    overwrite_json_marker(spark, meta_path, _json.dumps({
-        "hash_family": hash_family, "num_hashes": num_hashes, "k": k,
-        "version": 1}))
+    if meta is None:
+        stamp_marker(spark, path, SIGSTORE_META_DIR, {**want, "version": 1})
 
 
 def read_signature_store(spark, path: str, *, hash_family: str,
@@ -230,30 +200,9 @@ def read_signature_store(spark, path: str, *, hash_family: str,
     what the caller is about to join it with. A store without a marker is
     refused loudly (unknown family — never guess), same contract as the
     sketch store's marker."""
-    m = read_json_marker(spark, f"{path.rstrip('/')}/{SIGSTORE_META_DIR}")
-    if m is None:
-        raise RuntimeError(
-            f"signature store at {path} has no {SIGSTORE_META_DIR} marker: "
-            "its hash family is unknown, and joining signatures across "
-            "families silently disables dedup (their values never "
-            "collide). If the store's lineage is known, stamp it with "
-            "stamp_signature_store first.")
-    if m.get("hash_family") != hash_family:
-        raise RuntimeError(
-            f"signature store at {path} was written with hash_family="
-            f"{m.get('hash_family')!r} but the caller expects "
-            f"{hash_family!r}: signatures from different families never "
-            "collide, so the join would match nothing. Pin hash_family="
-            f"{m.get('hash_family')!r} (and re-derive new signatures under "
-            "it), or rebuild the store.")
-    for name, want, got in (("num_hashes", num_hashes, m.get("num_hashes")),
-                            ("k", k, m.get("k"))):
-        if want is not None and want != got:
-            raise RuntimeError(
-                f"signature store at {path} was written with {name}={got} "
-                f"but the caller expects {name}={want}: band positions "
-                "would misalign. Re-derive with the store's parameters "
-                "or rebuild the store.")
+    check_marker(spark, path, SIGSTORE_META_DIR, "signature store",
+                 {"hash_family": hash_family, "num_hashes": num_hashes,
+                  "k": k}, required=True, why=_SIG_MISMATCH)
     return spark.read.parquet(path)
 
 

@@ -7,15 +7,18 @@ the reference's BenchStats, src/bench.zig:186-193); this module adds the
 lineage envelope (input fingerprint, kind/params, partition count, epoch) and
 the resume protocol:
 
-1. A build writes its index partitioned as parquet under ``dir/state`` plus
-   a ``dir/_lineage.json`` manifest.
+1. A build writes its index as parquet under ``dir/state``, partitioned by
+   ``partition_id``, plus a lineage marker in ``dir/_filterz_checkpoint_meta``
+   (the pinned-store protocol of ``spark.fsio``: any path Spark can write,
+   a mismatched or unmarked checkpoint is refused).
 2. Resume re-derives the same deterministic partitioning (repartition by key
    hash is deterministic for fixed P), reads completed partition_ids from the
-   checkpoint, and rebuilds ONLY the missing ones (skip set pushed into the
+   lineage, and rebuilds ONLY the missing ones (skip set pushed into the
    mapInArrow closure — completed partitions are scanned but not rebuilt,
    construction being the dominant cost).
-3. The final index = union of checkpointed + newly built rows; a rerun after
-   full completion is a no-op scan of the manifest.
+3. The state write overwrites exactly the partitions it rebuilt, so a
+   replay after a lost lineage update replaces rows instead of appending
+   copies; a rerun after full completion is a no-op read of the lineage.
 
 Parquet stands in for Iceberg here (sandbox has no catalog); the layout maps
 1:1 onto an Iceberg table partitioned by partition_id with snapshot lineage.
@@ -23,31 +26,26 @@ Parquet stands in for Iceberg here (sandbox has no catalog); the layout maps
 
 from __future__ import annotations
 
-import json
-import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .build import INDEX_SCHEMA, build_filter_index
+from .build import INDEX_FIELDS, INDEX_SCHEMA, build_filter_index
+from .fsio import (check_marker, has_data, overwrite_partitions,
+                   read_json_marker, stamp_marker)
 
-_LINEAGE_FILE = "_lineage.json"
-_STATE_DIR = "state"
-
-
-def _lineage_path(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir, _LINEAGE_FILE)
+CHECKPOINT_META_DIR = "_filterz_checkpoint_meta"
 
 
 def _state_path(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir, _STATE_DIR)
+    return f"{checkpoint_dir.rstrip('/')}/state"
 
 
-def read_lineage(checkpoint_dir: str) -> dict | None:
-    p = _lineage_path(checkpoint_dir)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+def read_lineage(spark: SparkSession, checkpoint_dir: str) -> dict | None:
+    """The checkpoint's lineage (params, completed_partitions, epoch,
+    snapshots), or ``None`` before its first build."""
+    return read_json_marker(
+        spark, f"{checkpoint_dir.rstrip('/')}/{CHECKPOINT_META_DIR}")
 
 
 def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
@@ -57,94 +55,76 @@ def checkpointed_build(spark: SparkSession, df: DataFrame, key_col: str,
                        fail_after: int | None = None) -> DataFrame:
     """Build (or resume) a filter index with checkpointing.
 
-    ``fail_after``: test hook — build at most this many NEW partitions this
-    invocation (simulates a mid-build crash; a subsequent call resumes).
+    ``fail_after``: test hook — build only the first N missing partitions
+    this invocation (simulates a mid-build crash; a subsequent call
+    resumes). Partition-atomic: every shard of a built partition persists.
     """
     params = params or {}
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    lineage = read_lineage(checkpoint_dir)
     expected = {
         "kind": kind,
         "params": {k: str(v) for k, v in params.items()},
         "key_col": key_col,
         "num_partitions": num_partitions,
     }
-    if lineage is not None:
-        if {k: lineage[k] for k in expected} != expected:
-            raise ValueError(
-                f"checkpoint at {checkpoint_dir} was built with different "
-                f"parameters: {lineage} vs {expected}"
-            )
-        done = frozenset(lineage["completed_partitions"])
-        lineage.setdefault("snapshots", [])
-    else:
+    lineage = check_marker(
+        spark, checkpoint_dir, CHECKPOINT_META_DIR, "checkpoint", expected,
+        required=False,
+        why="resuming would mix filters built under other parameters.")
+    if lineage is None:
+        # pin the parameters before the first state write: a crash between
+        # that write and the lineage update then resumes instead of leaving
+        # unmarked (refused) state behind
         lineage = {**expected, "epoch": 0, "completed_partitions": [],
                    "snapshots": []}
-        done = frozenset()
+        stamp_marker(spark, checkpoint_dir, CHECKPOINT_META_DIR, lineage)
+    done = set(lineage["completed_partitions"])
+    # partitions that come out empty after the shuffle are complete too —
+    # without recording them, reruns would re-execute the build forever
+    # (epoch inflation, never a no-op)
+    new_pids = [p for p in range(num_partitions) if p not in done]
+    if fail_after is not None:
+        new_pids = new_pids[:fail_after]
 
-    if len(done) < num_partitions:
-        import time as _time
-        t0 = _time.monotonic()
-        skip = done
+    if new_pids:
+        t0 = time.monotonic()
         new_index = build_filter_index(
-            df, key_col, kind, params, num_partitions, skip_pids=skip
-        )
-        if fail_after is not None:
-            # simulate crash: persist only the first N new PARTITIONS —
-            # partition-atomic, never splitting a partition's shard rows
-            # (a half-persisted re-split partition would resume as "done"
-            # with a missing shard = false negatives on probe)
-            rows = new_index.collect()
-            by_pid: dict[int, list] = {}
-            for r in rows:
-                by_pid.setdefault(r["partition_id"], []).append(r)
-            kept_pids = sorted(by_pid)[:fail_after]
-            kept = [r for pid in kept_pids for r in
-                    sorted(by_pid[pid], key=lambda r: r["shard"])]
-            new_index = spark.createDataFrame(kept, schema=INDEX_SCHEMA) if kept \
-                else spark.createDataFrame([], schema=INDEX_SCHEMA)
-            completed_now = set(kept_pids)
-        else:
-            # the full job ran every non-skipped partition to completion:
-            # partitions that produced zero rows (empty after the shuffle)
-            # are complete too — without recording them, reruns would
-            # re-execute the build forever (epoch inflation, never a no-op)
-            completed_now = set(range(num_partitions))
-        new_index.write.mode("append").parquet(_state_path(checkpoint_dir))
+            df, key_col, kind, params, num_partitions,
+            skip_pids=frozenset(range(num_partitions)) - set(new_pids))
+        overwrite_partitions(new_index, _state_path(checkpoint_dir),
+                             "partition_id")
         # build wall stops HERE: the snapshot-stats read below is metrics
         # overhead, not build cost, and must not inflate wall_s
-        build_wall = round(_time.monotonic() - t0, 3)
-        lineage["completed_partitions"] = sorted(set(done) | completed_now)
+        build_wall = round(time.monotonic() - t0, 3)
+        lineage["completed_partitions"] = sorted(done | set(new_pids))
         lineage["epoch"] += 1
         # Iceberg-style snapshot record: what this epoch added and its build
         # metrics, aggregated from the (tiny — one row per partition shard)
         # state table it just wrote, NOT from re-running the build plan
-        from pyspark.sql import functions as F
-        new_pids = sorted(set(completed_now) - set(done))
-        stats = (spark.read.parquet(_state_path(checkpoint_dir))
+        stats = (_read_state(spark, checkpoint_dir)
                  .filter(F.col("partition_id").isin(new_pids))
-                 .dropDuplicates(["partition_id", "shard"])
                  .agg(F.count("*").alias("shards"),
                       F.coalesce(F.sum("num_keys"), F.lit(0)).alias("keys"),
                       F.coalesce(F.sum("build_ns"), F.lit(0)).alias("build_ns"),
                       F.coalesce(F.sum("mem_usage"), F.lit(0)).alias("mem"))
-                 .collect()[0]) if new_pids else None
+                 .collect()[0])
         lineage["snapshots"].append({
             "epoch": lineage["epoch"],
             "new_partitions": new_pids,
-            "shards": int(stats["shards"]) if stats else 0,
-            "keys": int(stats["keys"]) if stats else 0,
-            "build_ns": int(stats["build_ns"]) if stats else 0,
-            "mem_usage": int(stats["mem"]) if stats else 0,
+            "shards": int(stats["shards"]),
+            "keys": int(stats["keys"]),
+            "build_ns": int(stats["build_ns"]),
+            "mem_usage": int(stats["mem"]),
             "wall_s": build_wall,
         })
-        with open(_lineage_path(checkpoint_dir), "w") as f:
-            json.dump(lineage, f)
+        stamp_marker(spark, checkpoint_dir, CHECKPOINT_META_DIR, lineage)
 
+    return _read_state(spark, checkpoint_dir)
+
+
+def _read_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The persisted index rows in build.py's column order; empty when no
+    partition produced a row."""
     state = _state_path(checkpoint_dir)
-    if not os.path.exists(state):  # every partition was empty: empty index
+    if not has_data(spark, state):
         return spark.createDataFrame([], schema=INDEX_SCHEMA)
-    full = spark.read.parquet(state)
-    # keep one row per partition shard (re-runs may append duplicates;
-    # builds are deterministic so any copy is byte-identical — take the first)
-    return full.dropDuplicates(["partition_id", "shard"])
+    return spark.read.schema(INDEX_SCHEMA).parquet(state).select(*INDEX_FIELDS)

@@ -1,14 +1,21 @@
-"""Driver-side small-file IO through the JVM Hadoop FileSystem API.
+"""The pinned-store protocol: marker check, marker stamp, partition overwrite.
 
-Store markers (sketch/signature family pins) are ONE KB-sized JSON row.
-Writing or reading them as a Spark job (``createDataFrame(...).coalesce(1)
-.write.json`` / ``spark.read.json``) costs a full job submission — measured
-4.5 s per marker write on the round-6 sketch-store bench, dominating a
-fresh store's first epoch write. The Hadoop FileSystem API reaches the same
-storage Spark writes to (local, HDFS, S3A — whatever the session's Hadoop
-conf resolves for the path) and costs no job. ``read_json_marker`` reads
-both layouts: the plain ``marker.json`` written here and the part file
-(plus ``_SUCCESS`` and ``.crc`` side files) of round-6 stores.
+Every persisted state (sketch store, signature store, build checkpoint)
+pins the parameters its data was written with in a marker: one JSON
+object in ``<store>/<meta_dir>/marker.json``. The directory is
+underscore-prefixed, so Spark's readers skip it (the ``_SUCCESS``
+convention). A writer calls ``check_marker`` before it writes, then
+writes its data and ``stamp_marker``. The partitioned stores (sketch
+epochs, checkpoint state) write with ``overwrite_partitions``, so a
+re-run replaces the partitions it rewrites instead of appending copies.
+
+Markers go through the JVM Hadoop FileSystem API: it reaches the same
+storage Spark writes to (local, HDFS, S3A, ``file://`` URIs — whatever the
+session's Hadoop conf resolves for the path) and costs no job. A 1-row
+Spark job per marker measured 4.5 s per write on the round-6 sketch-store
+bench. ``read_json_marker`` reads both layouts: the plain ``marker.json``
+written here and the part file (plus ``_SUCCESS`` and ``.crc`` side files)
+of round-6 stores.
 
 Driver-side by design: markers are metadata, not data — nothing here is
 ever on a per-row path.
@@ -17,6 +24,8 @@ ever on a per-row path.
 from __future__ import annotations
 
 import json
+
+from pyspark.sql import DataFrame
 
 
 def _fs_path(spark, path: str) -> tuple:
@@ -34,6 +43,10 @@ def _listed(spark, dir_path: str) -> tuple:
         return fs, []
     return fs, [st for st in fs.listStatus(jpath)
                 if not st.getPath().getName().startswith(("_", "."))]
+
+
+def _meta_path(path: str, meta_dir: str) -> str:
+    return f"{path.rstrip('/')}/{meta_dir}"
 
 
 def read_json_marker(spark, dir_path: str) -> dict | None:
@@ -62,19 +75,51 @@ def has_data(spark, dir_path: str) -> bool:
     return bool(_listed(spark, dir_path)[1])
 
 
-def overwrite_json_marker(spark, dir_path: str, payload: str,
-                          filename: str = "marker.json") -> None:
-    """(Re)create ``dir_path`` holding a single ``filename`` with
-    ``payload`` (one JSON object per line, the json-lines layout Spark's
-    reader expects). Replaces the directory atomically enough for a
-    metadata marker: delete + mkdirs + create-overwrite."""
-    fs, jpath = _fs_path(spark, dir_path)
+def check_marker(spark, path: str, meta_dir: str, label: str, want: dict, *,
+                 required: bool, why: str) -> dict | None:
+    """Hold the store at ``path`` to the parameters in ``want``.
+
+    Returns the stored marker, or ``None`` for a fresh store. Raises
+    ``RuntimeError`` when a stored field disagrees with a non-``None``
+    field of ``want`` (``why`` says what a mix would break), and when the
+    marker is missing but ``required`` or the directory already holds
+    data: unmarked data has unknown parameters and is never adopted.
+    """
+    meta = read_json_marker(spark, _meta_path(path, meta_dir))
+    if meta is None:
+        if required or has_data(spark, path):
+            raise RuntimeError(
+                f"{label} at {path} has no {meta_dir} marker: the "
+                "parameters of its data are unknown, so it cannot be "
+                "checked. Rewrite the store to a fresh path.")
+        return None
+    want = {k: v for k, v in want.items() if v is not None}
+    got = {k: meta.get(k) for k in want}
+    if got != want:
+        raise RuntimeError(
+            f"{label} at {path} was written with different parameters "
+            f"{got} but the caller expects {want}: {why}")
+    return meta
+
+
+def stamp_marker(spark, path: str, meta_dir: str, fields: dict) -> None:
+    """(Re)write the store's marker as ``fields``, one JSON line, in a
+    freshly recreated ``meta_dir`` (delete + mkdirs + create-overwrite)."""
+    meta = _meta_path(path, meta_dir)
+    fs, jpath = _fs_path(spark, meta)
     fs.delete(jpath, True)
     fs.mkdirs(jpath)
     out = fs.create(
-        spark._jvm.org.apache.hadoop.fs.Path(
-            f"{dir_path.rstrip('/')}/{filename}"), True)
+        spark._jvm.org.apache.hadoop.fs.Path(f"{meta}/marker.json"), True)
     try:
-        out.write(bytearray(payload.encode("utf-8")))
+        out.write(bytearray(json.dumps(fields).encode("utf-8")))
     finally:
         out.close()
+
+
+def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
+    """Write ``df`` as parquet partitioned by ``by``, replacing only the
+    partitions ``df`` holds (dynamic partition overwrite, set on this
+    write alone): a re-run replaces its partitions and keeps the rest."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(by).parquet(path))

@@ -21,8 +21,7 @@ pay the 200us read" (README.md:47). Two probe strategies, by index size:
 
 Scale posture: at the reference's 50-section scale the broadcast path is
 exactly the Parquet row-group bloom pattern. The aggregate FPR across S
-partition filters grows ~ S * p for the OR-probe (SURVEY.md §7.3) —
-``expected_fpr`` surfaces it so callers size fp_bits for their S; the
+partition filters grows ~ S * p for the OR-probe (SURVEY.md §7.3); the
 cogrouped probe checks ONE partition per key, so its FPR stays the
 per-filter p at any S.
 """
@@ -221,8 +220,3 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
         .applyInPandas(fn, schema_str)
     )
 
-
-def expected_fpr(index_rows: list[dict], per_filter_fpr: float) -> float:
-    """Aggregate false-positive rate over S partition filters ~ 1-(1-p)^S."""
-    s = len(index_rows)
-    return 1.0 - (1.0 - per_filter_fpr) ** s

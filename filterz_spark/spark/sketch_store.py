@@ -6,8 +6,9 @@ states, and every later question ("distinct users over the last 90
 days?") is answered by merging the stored states for the epoch range —
 never by rescanning 100 TB. This is the persisted-rollup discipline of
 Druid/Pinot-style sketch tiers, built here on the same mergeable-sketch
-monoids as ``spark.merge`` (SURVEY.md §2.6) and the same family-pinning
-contract as the batch signature store (``ops/dedup.py``): a store whose
+monoids as ``spark.merge`` (SURVEY.md §2.6) and the pinned-store
+protocol of ``spark/fsio.py`` (shared with the signature store and the
+build checkpoint): a store whose
 marker disagrees with the caller refuses loudly instead of silently
 merging incompatible states.
 
@@ -32,7 +33,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch
-from .fsio import has_data, overwrite_json_marker, read_json_marker
+from .fsio import check_marker, overwrite_partitions, stamp_marker
 from .merge import (STATE_SCHEMA, _fan_in, _merge_by, _partial_fn,
                     _project_values, tree_merge)
 from .partitioning import plan_partitions
@@ -47,8 +48,11 @@ def _params_key(params: dict) -> str:
     return json.dumps(params or {}, sort_keys=True)
 
 
-def _meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{SKETCHSTORE_META_DIR}"
+# what a store written under other parameters would break
+_MISMATCH = ("states with different parameters do not merge (register "
+             "widths / hash planes misalign), so the store would be "
+             "corrupted. Write to a fresh path or match the store's "
+             "parameters.")
 
 
 def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
@@ -75,24 +79,10 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     projected, value_kind = _project_values(df, col, kind, value_kind)
     spark = df.sparkSession
 
-    meta = read_json_marker(spark, _meta_path(path))
-    if meta is not None:
-        got = (meta.get("kind"), meta.get("params"), meta.get("value_kind"))
-        want = (kind, _params_key(params), value_kind)
-        if got != want:
-            raise RuntimeError(
-                f"sketch store at {path} was written with (kind, params, "
-                f"value_kind)={got} but this epoch write is {want}: states "
-                "with different parameters do not merge (register widths / "
-                "hash planes misalign), so the store would be corrupted. "
-                "Write to a fresh path or match the store's parameters.")
-    elif has_data(spark, path):
-        # refuse to adopt foreign data silently, same as the signature store
-        raise RuntimeError(
-            f"sketch store at {path} has data but no "
-            f"{SKETCHSTORE_META_DIR} marker: its sketch parameters are "
-            "unknown (foreign directory or pre-marker store). Point at "
-            "a fresh path.")
+    want = {"kind": kind, "params": _params_key(params),
+            "value_kind": value_kind}
+    meta = check_marker(spark, path, SKETCHSTORE_META_DIR, "sketch store",
+                        want, required=False, why=_MISMATCH)
 
     states = projected.mapInArrow(_partial_fn(kind, params, value_kind),
                                   STATE_SCHEMA)
@@ -106,17 +96,10 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
         final = states
     else:
         final = _merge_by(_fan_in(states, n), F.lit(0))
-    out = final.withColumn("epoch", F.lit(str(epoch)))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("epoch").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(final.withColumn("epoch", F.lit(str(epoch))), path,
+                         "epoch")
     if meta is None:
-        overwrite_json_marker(spark, _meta_path(path), json.dumps({
-            "kind": kind, "params": _params_key(params),
-            "value_kind": value_kind, "version": 1}))
+        stamp_marker(spark, path, SKETCHSTORE_META_DIR, {**want, "version": 1})
 
 
 def read_sketch_store(spark: SparkSession, path: str, *,
@@ -128,22 +111,10 @@ def read_sketch_store(spark: SparkSession, path: str, *,
     column is the partition column, so ``.where(epoch between ...)`` is
     partition-pruned at the file listing.
     """
-    meta = read_json_marker(spark, _meta_path(path))
-    if meta is None:
-        raise RuntimeError(
-            f"sketch store at {path} has no {SKETCHSTORE_META_DIR} marker: "
-            "its sketch parameters are unknown, and merging states with "
-            "mismatched parameters corrupts estimates. Rebuild the store "
-            "through write_sketch_epoch.")
-    if kind is not None and meta.get("kind") != kind:
-        raise RuntimeError(
-            f"sketch store at {path} holds {meta.get('kind')!r} states but the "
-            f"caller expects {kind!r}.")
-    if params is not None and meta.get("params") != _params_key(params):
-        raise RuntimeError(
-            f"sketch store at {path} was written with params="
-            f"{meta.get('params')} but the caller expects {_params_key(params)}: "
-            "states with different parameters do not merge.")
+    check_marker(spark, path, SKETCHSTORE_META_DIR, "sketch store",
+                 {"kind": kind,
+                  "params": None if params is None else _params_key(params)},
+                 required=True, why=_MISMATCH)
     return spark.read.parquet(path)
 
 

@@ -194,7 +194,6 @@ class TestSignatureStore:
     def test_append_validates_and_unmarked_refused(self, spark, docs,
                                                    tmp_path):
         from filterz_spark.ops.dedup import (read_signature_store,
-                                             stamp_signature_store,
                                              write_signature_store)
         p = str(tmp_path / "store")
         sigs = self._sigs(spark, docs)
@@ -213,7 +212,7 @@ class TestSignatureStore:
                     self._sigs(spark, docs, kw["hash_family"],
                                kw["num_hashes"]), p, mode="append", **kw)
         # a pre-marker store (plain parquet, no marker): read and append
-        # are both refused until the caller stamps the verified family
+        # are both refused
         legacy = str(tmp_path / "legacy")
         sigs.write.parquet(legacy)
         with pytest.raises(RuntimeError, match="no _filterz"):
@@ -221,10 +220,6 @@ class TestSignatureStore:
         with pytest.raises(RuntimeError, match="no _filterz"):
             write_signature_store(sigs, legacy, hash_family="km_md5",
                                   num_hashes=8, k=2, mode="append")
-        stamp_signature_store(spark, legacy, hash_family="km_md5",
-                              num_hashes=8, k=2)
-        assert read_signature_store(spark, legacy, hash_family="km_md5") \
-            .count() == sigs.count()
 
     def test_round6_part_file_marker_accepted(self, spark, docs, tmp_path):
         """Round-6 signature stores wrote their marker with a Spark job

@@ -12,6 +12,7 @@
 - salted two-phase aggregation equals plain groupBy.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -21,7 +22,7 @@ from pyspark.sql import functions as F
 
 from filterz_spark.sources.pages import extract_text, synth_pages
 from filterz_spark.spark.build import build_filter_index
-from filterz_spark.spark.checkpoint import checkpointed_build
+from filterz_spark.spark.checkpoint import checkpointed_build, read_lineage
 from filterz_spark.spark.merge import partial_states, sketch_column, tree_merge
 from filterz_spark.spark.probe import collect_index, probe_membership
 from filterz_spark.spark.skew import two_phase_count
@@ -242,22 +243,28 @@ class TestSketchAggregation:
 
 
 class TestCheckpointResume:
-    def test_resume_equivalence(self, spark, pages):
+    @pytest.mark.parametrize("scheme", ["path", "uri"])
+    def test_resume_equivalence(self, spark, pages, scheme):
+        """Resume equals an uninterrupted build, for a plain path and for
+        a ``file://`` URI of the same directory (the state and lineage go
+        through the Hadoop FileSystem, never the driver's cwd)."""
         base = tempfile.mkdtemp(prefix="fz_ckpt_")
+        root = base if scheme == "path" else f"file://{base}"
+        cwd_before = set(os.listdir("."))
         try:
             # uninterrupted build
             full = checkpointed_build(
-                spark, pages, "url", f"{base}/full", "xorf",
+                spark, pages, "url", f"{root}/full", "xorf",
                 {"arity": 3, "fp_bits": 16}, num_partitions=8,
             ).orderBy("partition_id").collect()
             # crash after 3 partitions, then resume
             partial = checkpointed_build(
-                spark, pages, "url", f"{base}/resumed", "xorf",
+                spark, pages, "url", f"{root}/resumed", "xorf",
                 {"arity": 3, "fp_bits": 16}, num_partitions=8, fail_after=3,
             )
             assert partial.count() == 3
             resumed = checkpointed_build(
-                spark, pages, "url", f"{base}/resumed", "xorf",
+                spark, pages, "url", f"{root}/resumed", "xorf",
                 {"arity": 3, "fp_bits": 16}, num_partitions=8,
             ).orderBy("partition_id").collect()
             assert len(resumed) == len(full) == 8
@@ -265,13 +272,42 @@ class TestCheckpointResume:
                 assert a["partition_id"] == b["partition_id"]
                 assert bytes(a["payload"]) == bytes(b["payload"]), \
                     "resumed partition state differs from uninterrupted build"
+            assert not [n for n in set(os.listdir(".")) - cwd_before
+                        if n.startswith("file:")], \
+                "checkpoint wrote a stray file: entry into the cwd"
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
+    def test_crash_replay_overwrites_state(self, spark, pages):
+        """A lost lineage update after the state commit (crash between
+        the two) replays the build: the replay replaces the rebuilt
+        partitions on disk instead of appending a second copy."""
+        from filterz_spark.spark.checkpoint import CHECKPOINT_META_DIR
+        from filterz_spark.spark.fsio import stamp_marker
+        base = tempfile.mkdtemp(prefix="fz_ckpt_")
+        try:
+            kw = dict(kind="xorf", params={"arity": 3, "fp_bits": 16},
+                      num_partitions=8)
+            checkpointed_build(spark, pages, "url", base, fail_after=3, **kw)
+            before = read_lineage(spark, base)
+            first = {(r["partition_id"], r["shard"]): bytes(r["payload"])
+                     for r in checkpointed_build(spark, pages, "url", base,
+                                                 **kw).collect()}
+            assert len(first) >= 8
+            stamp_marker(spark, base, CHECKPOINT_META_DIR, before)
+            checkpointed_build(spark, pages, "url", base, **kw)
+            on_disk = spark.read.parquet(f"{base}/state").collect()
+            keys = [(r["partition_id"], r["shard"]) for r in on_disk]
+            assert len(keys) == len(set(keys)), \
+                "replay appended duplicate (partition_id, shard) rows"
+            assert {(r["partition_id"], r["shard"]): bytes(r["payload"])
+                    for r in on_disk} == first
         finally:
             shutil.rmtree(base, ignore_errors=True)
 
     def test_snapshot_history(self, spark, pages):
         """Lineage carries one snapshot per epoch with build metrics; a
         completed checkpoint re-run is a no-op (no new snapshot)."""
-        import json as _json
         base = tempfile.mkdtemp(prefix="fz_ckpt_")
         try:
             kw = dict(kind="xorf", params={"arity": 3, "fp_bits": 16},
@@ -279,8 +315,7 @@ class TestCheckpointResume:
             checkpointed_build(spark, pages, "url", base, fail_after=3, **kw)
             checkpointed_build(spark, pages, "url", base, **kw)
             checkpointed_build(spark, pages, "url", base, **kw)  # no-op
-            with open(f"{base}/_lineage.json") as f:
-                lineage = _json.load(f)
+            lineage = read_lineage(spark, base)
             snaps = lineage["snapshots"]
             assert [s["epoch"] for s in snaps] == [1, 2]
             assert len(snaps[0]["new_partitions"]) == 3
@@ -298,7 +333,7 @@ class TestCheckpointResume:
         try:
             checkpointed_build(spark, pages, "url", base, "xorf",
                                {"arity": 3, "fp_bits": 16}, num_partitions=4)
-            with pytest.raises(ValueError, match="different parameters"):
+            with pytest.raises(RuntimeError, match="different parameters"):
                 checkpointed_build(spark, pages, "url", base, "xorf",
                                    {"arity": 4, "fp_bits": 16}, num_partitions=4)
         finally:
@@ -404,7 +439,6 @@ class TestCheckpointAtomicity:
         """A partition whose construction re-splits into shards must persist
         all-or-nothing under a simulated crash (a half-persisted partition
         would resume as done with a missing shard = probe false negatives)."""
-        import json as _json
         # tiny fp space + enough keys per partition to force re-splits is
         # hard to trigger deterministically; instead verify the invariant on
         # the persisted state: every persisted partition has a contiguous
@@ -431,8 +465,7 @@ class TestCheckpointAtomicity:
                 assert shards == shards_full[pid], \
                     "crash persisted a partial shard set for a partition"
             # lineage only marks the persisted partitions complete
-            with open(f"{base}/crash/_lineage.json") as f:
-                lin = _json.load(f)
+            lin = read_lineage(spark, f"{base}/crash")
             assert sorted(lin["completed_partitions"]) == sorted(by_pid)
         finally:
             shutil.rmtree(base, ignore_errors=True)
@@ -440,19 +473,16 @@ class TestCheckpointAtomicity:
     def test_rerun_after_completion_is_noop_even_with_empty_partitions(self, spark):
         """Empty partitions must be recorded complete: a finished checkpoint
         re-run must not inflate the epoch (re-executing the build forever)."""
-        import json as _json
         base = tempfile.mkdtemp(prefix="fz_noop_")
         try:
             # 3 distinct keys across 16 partitions -> most partitions empty
             keys = spark.range(3).selectExpr("concat('k', id) AS url")
             checkpointed_build(spark, keys, "url", base, "sbbf",
                                {"bits_per_key": 16}, num_partitions=16)
-            with open(f"{base}/_lineage.json") as f:
-                epoch1 = _json.load(f)["epoch"]
+            epoch1 = read_lineage(spark, base)["epoch"]
             out = checkpointed_build(spark, keys, "url", base, "sbbf",
                                      {"bits_per_key": 16}, num_partitions=16)
-            with open(f"{base}/_lineage.json") as f:
-                epoch2 = _json.load(f)["epoch"]
+            epoch2 = read_lineage(spark, base)["epoch"]
             assert epoch1 == epoch2 == 1, "rerun was not a no-op"
             assert out.count() >= 1
         finally:

@@ -54,7 +54,7 @@ def main() -> int:
         "probe_exact_present": exact,
         "hll_distinct_partkeys": round(hll.estimate()),
         "tdigest_p99_price": round(td.quantile(0.99), 2),
-        "lineage_epoch": read_lineage(args.checkpoint)["epoch"],
+        "lineage_epoch": read_lineage(spark, args.checkpoint)["epoch"],
     }
     print("PIPELINE_RESULT " + json.dumps(result))
     spark.stop()
