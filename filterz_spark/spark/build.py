@@ -1,19 +1,21 @@
 """Partition filter builds — the Spark form of the reference's section model.
 
 The reference cuts a 50M-key stream into ~1M-key sections and builds one
-filter per section (src/bench.zig:33-50, :240-249). Here a "section" is a
-DataFrame partition: keys are hashed JVM-side with the built-in ``xxhash64``
+filter per section (src/bench.zig:33-50, :240-249). Here a "section" is one
+of the P hash buckets of a shuffle partitioning: keys are hashed JVM-side with the built-in ``xxhash64``
 (zero per-row Python), shuffled once by hash so duplicates co-locate, and
-each partition builds its filter inside one ``mapInArrow`` pass — sort+dedup
-via ``np.unique`` (the reference's hash_section, src/bench.zig:258-280),
-then the C construction kernel (``filterz_spark.native``). The result is a small "filter index" DataFrame (one
-row per partition: payload + params + lineage + metrics mirroring BenchStats,
-src/bench.zig:186-193) that can be checkpointed and broadcast for probes.
+one task per core builds its sections inside one ``mapInArrow`` pass — per
+section, sort+dedup via ``np.unique`` (the reference's hash_section,
+src/bench.zig:258-280), then the C construction kernel
+(``filterz_spark.native``). The result is a small "filter index" DataFrame
+(one row per section: payload + params + lineage + metrics mirroring
+BenchStats, src/bench.zig:186-193) that can be checkpointed and broadcast
+for probes.
 
 Scale posture: the single shuffle is by the key hash itself, so skew in raw
-keys (hot urls/langs) is irrelevant — xxhash64 output is uniform. Partition
+keys (hot urls/langs) is irrelevant — xxhash64 output is uniform. Section
 count P sizes each build at num_keys/P; construction cost and failure
-probability are per-partition, and a failed partition retries locally without
+probability are per-section, and a failed section retries locally without
 touching the others (attempts recorded in lineage).
 """
 
@@ -24,8 +26,7 @@ import time
 from typing import Iterator
 
 import pyarrow as pa
-from pyspark import TaskContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..filters import FILTER_KINDS
 
@@ -75,62 +76,83 @@ def _construct_errors() -> tuple:
     return (xorf.ConstructError, ribbon.ConstructError, MemoryError)
 
 
-def _build_partition_fn(kind: str, params: dict, skip_pids: frozenset | None = None):
-    """mapInArrow closure: accumulate the partition's hashes, dedup, build."""
+def section_id(h: str, num_sections: int) -> Column:
+    """The section of hash column ``h``: ``pmod(murmur3(h), P)``, the
+    placement of ``repartition(P, h)``. The build labels its rows with it
+    and the cogrouped probe routes with it, so the two agree by construction.
+    """
+    return F.pmod(F.hash(h), F.lit(num_sections)).cast("int")
+
+
+def _build_sections_fn(kind: str, params: dict):
+    """mapInArrow closure: group the task's hashes by section id, then
+    dedup and build one filter per section."""
+    # resolved driver-side: the closure ships kinds registered only here
+    filter_cls = FILTER_KINDS[kind]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np  # executor-side
 
-        pid = TaskContext.get().partitionId()
-        if skip_pids and pid in skip_pids:
-            return  # before consuming: a skipped partition's batches are
-            # never pulled through Arrow or materialized
-        chunks = []
+        hs, sids = [], []
         for batch in batches:
-            chunks.append(batch.column(0).to_numpy(zero_copy_only=False))
-        if not chunks:
+            hs.append(batch.column(0).to_numpy(zero_copy_only=False))
+            sids.append(batch.column(1).to_numpy(zero_copy_only=False))
+        if not hs:
             return
-        # int64 -> uint64 reinterpret, then sort+dedup (ref src/bench.zig:258-280)
-        hashes = np.unique(np.concatenate(chunks).astype(np.int64).view(np.uint64))
-        # Las-Vegas construction can fail after its seed budget; re-split the
-        # partition's keys in halves and build shard filters (probe semantics
-        # are OR-over-filters, so shards compose transparently)
-        pending = [(hashes, 0)]
-        shards = []
-        attempts = 0
-        while pending:
-            h, depth = pending.pop()
-            attempts += 1
-            t0 = time.monotonic_ns()
-            try:
-                filt = FILTER_KINDS[kind].build(h, **params)
-            except _construct_errors() as exc:  # noqa: F841
-                # ONLY Las-Vegas seed exhaustion triggers a re-split —
-                # a bad param / type error is not size-dependent and would
-                # otherwise burn 2^depth redundant rebuild attempts before
-                # surfacing from a leaf
-                if depth >= MAX_SPLIT_DEPTH:
-                    raise
-                mid = h.size // 2
-                pending.append((h[:mid], depth + 1))
-                pending.append((h[mid:], depth + 1))
-                continue
-            shards.append((filt, int(h.size), time.monotonic_ns() - t0))
-        for shard_id, (filt, nk, build_ns) in enumerate(shards):
-            yield pa.RecordBatch.from_pydict({
-                "partition_id": [pid],
-                "shard": [shard_id],
-                "kind": [kind],
-                "params": [json.dumps(filt.params())],
-                "num_keys": [nk],
-                "payload": [filt.serialize()],
-                "build_ns": [build_ns],
-                "mem_usage": [filt.mem_usage()],
-                "ideal_mem_usage": [filt.ideal_mem_usage()],
-                "attempts": [attempts],
-            }, schema=_ARROW_INDEX_SCHEMA)
+        # int64 -> uint64 reinterpret; one argsort groups the sections
+        sid = np.concatenate(sids)
+        order = np.argsort(sid)
+        sid = sid[order]
+        h_all = np.concatenate(hs).astype(np.int64).view(np.uint64)[order]
+        bounds = np.flatnonzero(np.diff(sid)) + 1
+        for lo, hi in zip(np.r_[0, bounds], np.r_[bounds, sid.size]):
+            yield from _build_section(filter_cls, kind, params, int(sid[lo]),
+                                      np.unique(h_all[lo:hi]))
 
     return fn
+
+
+def _build_section(filter_cls, kind: str, params: dict, pid: int,
+                   hashes) -> Iterator[pa.RecordBatch]:
+    """Build one section's sorted, deduplicated hashes (ref
+    src/bench.zig:258-280) into its index rows."""
+    # Las-Vegas construction can fail after its seed budget; re-split the
+    # section's keys in halves and build shard filters (probe semantics
+    # are OR-over-filters, so shards compose transparently)
+    pending = [(hashes, 0)]
+    shards = []
+    attempts = 0
+    while pending:
+        h, depth = pending.pop()
+        attempts += 1
+        t0 = time.monotonic_ns()
+        try:
+            filt = filter_cls.build(h, **params)
+        except _construct_errors() as exc:  # noqa: F841
+            # ONLY Las-Vegas seed exhaustion triggers a re-split —
+            # a bad param / type error is not size-dependent and would
+            # otherwise burn 2^depth redundant rebuild attempts before
+            # surfacing from a leaf
+            if depth >= MAX_SPLIT_DEPTH:
+                raise
+            mid = h.size // 2
+            pending.append((h[:mid], depth + 1))
+            pending.append((h[mid:], depth + 1))
+            continue
+        shards.append((filt, int(h.size), time.monotonic_ns() - t0))
+    for shard_id, (filt, nk, build_ns) in enumerate(shards):
+        yield pa.RecordBatch.from_pydict({
+            "partition_id": [pid],
+            "shard": [shard_id],
+            "kind": [kind],
+            "params": [json.dumps(filt.params())],
+            "num_keys": [nk],
+            "payload": [filt.serialize()],
+            "build_ns": [build_ns],
+            "mem_usage": [filt.mem_usage()],
+            "ideal_mem_usage": [filt.ideal_mem_usage()],
+            "attempts": [attempts],
+        }, schema=_ARROW_INDEX_SCHEMA)
 
 
 def build_filter_index(df: DataFrame, key_col: str, kind: str = "xorf",
@@ -138,25 +160,42 @@ def build_filter_index(df: DataFrame, key_col: str, kind: str = "xorf",
                        num_partitions: int | None = None,
                        skip_pids: frozenset | None = None,
                        pre_partitioned: bool = False) -> DataFrame:
-    """Hash keys, co-locate duplicates, build one filter per partition.
+    """Hash keys, co-locate duplicates, build one filter per section.
 
     ``repartition(P, h)`` is the single shuffle: duplicates of a key land in
-    the same partition, so per-partition ``np.unique`` yields globally
+    the same section, so per-section ``np.unique`` yields globally
     deduplicated keys (xor/ribbon construction precondition) without a
-    separate ``distinct()`` shuffle.
+    separate ``distinct()`` shuffle. P is ``num_partitions``, or
+    ``spark.sql.shuffle.partitions`` when it is None; section ``s`` holds
+    the keys whose ``section_id`` is ``s``, so the section count is fixed
+    before the run and the cogrouped probe can route to it.
+
+    After the exchange the P sections are coalesced into
+    ``min(P, defaultParallelism)`` Python tasks, one per core, each
+    building every section it holds.
+
+    ``skip_pids``: sections not to build (resume); they are filtered out
+    JVM-side before the exchange, so they never reach the shuffle or Python.
 
     ``pre_partitioned=True``: the caller already hash-partitioned (and
     typically cached) the key column — skip the shuffle entirely and build
-    over the existing partitions. Used when several filter kinds are built
-    over the same key set (one shuffle amortized over N builds).
+    one section per existing input partition (``partition_id`` = input
+    partition id). Used when several filter kinds are built over the same
+    key set (one shuffle amortized over N builds).
     """
     params = params or {}
+    spark = df.sparkSession
     if pre_partitioned:
-        hashed = df.select(F.col(key_col).alias("h"))
+        hashed = df.select(F.col(key_col).alias("h"),
+                           F.spark_partition_id().alias("sid"))
+        sid = F.col("sid")
     else:
+        p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         hashed = hashed_keys(df, key_col)
-        if num_partitions:
-            hashed = hashed.repartition(num_partitions, "h")
-        else:
-            hashed = hashed.repartition("h")
-    return hashed.mapInArrow(_build_partition_fn(kind, params, skip_pids), INDEX_SCHEMA)
+        sid = section_id("h", p)
+    if skip_pids:
+        hashed = hashed.filter(~sid.isin(sorted(skip_pids)))
+    if not pre_partitioned:
+        hashed = hashed.repartition(p, "h").select("h", sid.alias("sid"))
+    return (hashed.coalesce(spark.sparkContext.defaultParallelism)
+            .mapInArrow(_build_sections_fn(kind, params), INDEX_SCHEMA))

@@ -13,9 +13,9 @@ the resume protocol:
    a mismatched or unmarked checkpoint is refused).
 2. Resume re-derives the same deterministic partitioning (repartition by key
    hash is deterministic for fixed P), reads completed partition_ids from the
-   lineage, and rebuilds ONLY the missing ones (skip set pushed into the
-   mapInArrow closure — completed partitions are scanned but not rebuilt,
-   construction being the dominant cost).
+   lineage, and rebuilds ONLY the missing ones (the skip set is filtered
+   out JVM-side before the exchange — completed partitions are scanned but
+   never shuffled or rebuilt).
 3. The state write overwrites exactly the partitions it rebuilt, so a
    replay after a lost lineage update replaces rows instead of appending
    copies; a rerun after full completion is a no-op read of the lineage.

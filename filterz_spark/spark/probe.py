@@ -9,15 +9,17 @@ pay the 200us read" (README.md:47). Two probe strategies, by index size:
    executor, NOT a copy inside every pickled task closure — and each Arrow
    batch of the probe side is checked against every filter vectorized (the
    OR-over-partitions semantics of the section model). Map-only: the probe
-   side never shuffles.
+   side never shuffles; it is coalesced to at most ``defaultParallelism``
+   partitions, so one Python task per core probes and the output has at
+   most that many partitions.
 2. ``probe_membership_cogrouped``: for indexes too large to collect on the
    driver at all (10^5+ partitions x ~500KB payloads), the index STAYS a
-   DataFrame. Each probe key is routed to the partition that built its
-   filter (the build's own hash-placement function, reproduced JVM-side),
-   and a cogrouped applyInPandas checks each key against only that
-   partition's shard filters. Costs one shuffle of the probe side; payload
-   bytes move executor<->executor only (never through the driver), each
-   exactly once.
+   DataFrame. Each probe key is routed to the section that built its
+   filter (``build.section_id``, the expression the build labels its
+   sections with), and a cogrouped applyInPandas checks each key against
+   only that section's shard filters. Costs one shuffle of the probe side;
+   payload bytes move executor<->executor only (never through the driver),
+   each exactly once.
 
 Scale posture: at the reference's 50-section scale the broadcast path is
 exactly the Parquet row-group bloom pattern. The aggregate FPR across S
@@ -36,6 +38,7 @@ from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
 
 from ..filters import deserialize_filter
+from .build import section_id
 
 
 def collect_index(index_df: DataFrame) -> list[dict]:
@@ -103,9 +106,15 @@ def probe_membership(probe_df: DataFrame, key_col: str,
     payloads travel to each executor once, not inside every task closure.
     The broadcast must outlive the returned lazy DataFrame, so it lives
     until the session ends.
+
+    The probe side is coalesced to at most ``defaultParallelism``
+    partitions (one Python task per core, each deserializing the index
+    once), so the output has at most that many partitions.
     """
-    bc = probe_df.sparkSession.sparkContext.broadcast(index_rows)
-    with_hash = probe_df.withColumn("__h", F.xxhash64(key_col))
+    sc = probe_df.sparkSession.sparkContext
+    bc = sc.broadcast(index_rows)
+    with_hash = (probe_df.coalesce(sc.defaultParallelism)
+                 .withColumn("__h", F.xxhash64(key_col)))
     cols = with_hash.columns
     schema_str = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in with_hash.schema.fields]
@@ -117,46 +126,6 @@ def probe_membership(probe_df: DataFrame, key_col: str,
     return out.drop("__h")
 
 
-# sessions (by applicationId) whose repartition placement has been verified
-# against the pmod(murmur3, P) reproduction below, per partition count
-_ROUTING_VERIFIED: set = set()
-
-
-def _assert_hash_routing(spark, num_partitions: int) -> None:
-    """Fail-fast guard for the cogrouped probe's routing contract.
-
-    The probe reproduces ``repartition(P, col)``'s placement JVM-side as
-    ``pmod(F.hash(col), P)`` — an undocumented Spark internal
-    (HashPartitioning = murmur3 seed 42). If a future Spark changes it,
-    probes would route to the WRONG partition's filter and silently return
-    false negatives instead of erroring. This routes a spread of sentinel
-    hashes through a tiny real repartition and compares actual partition
-    ids against the reproduction — once per session per partition count
-    (~one 8-row job), raising loudly on any mismatch. The equivalence is
-    also pinned per Spark version in tests/test_spark_layer.py.
-    """
-    token = (spark.sparkContext.applicationId, int(num_partitions))
-    if token in _ROUTING_VERIFIED:
-        return
-    sentinels = [-(1 << 63), -1, 0, 1, 42, (1 << 63) - 1,
-                 123456789123456789, -987654321987654321]
-    placed = (spark.createDataFrame([(v,) for v in sentinels], "__h long")
-              .repartition(num_partitions, "__h")
-              .select("__h", F.spark_partition_id().alias("actual"),
-                      F.pmod(F.hash("__h"), F.lit(num_partitions))
-                      .cast("int").alias("expected"))
-              .collect())
-    bad = [(r["__h"], r["actual"], r["expected"])
-           for r in placed if r["actual"] != r["expected"]]
-    if bad:
-        raise AssertionError(
-            "repartition(P, col) no longer places rows at pmod(murmur3(col), "
-            f"P) on this Spark version (mismatches: {bad}); "
-            "probe_membership_cogrouped's routing would return false "
-            "negatives — its placement reproduction must be updated")
-    _ROUTING_VERIFIED.add(token)
-
-
 def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
                                index_df: DataFrame, num_partitions: int,
                                hit_col: str = "maybe_present") -> DataFrame:
@@ -165,28 +134,20 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
     partitions).
 
     Requires an index built by ``build_filter_index(..., num_partitions)``
-    over the same hash layout: the build shuffles keys with
-    ``repartition(P, h)``, whose placement function is
-    ``pmod(murmur3(h), P)`` — reproduced here JVM-side (``F.hash`` IS that
-    murmur3, seed 42) to route every probe key to the one partition whose
-    filter could contain it. A cogrouped applyInPandas then checks each
-    key group against that partition's shard filters only.
+    with the same P: the build labels each key's filter with
+    ``build.section_id(h, P)``, and the same expression routes every probe
+    key here to the one section whose filter could contain it. A cogrouped
+    applyInPandas then checks each key group against that section's shard
+    filters only.
 
     Semantics per key: zero false negatives (the key's hash was inserted in
-    exactly this partition's filter); false positives at the SINGLE-filter
+    exactly this section's filter); false positives at the SINGLE-filter
     bound (the OR-probe's ~S*p aggregate FPR does not apply). Cost: one
     shuffle of the probe side + one tiny shuffle of the index; payloads
     never touch the driver.
-
-    NOTE: the first call per (session, num_partitions) runs an EAGER 8-row
-    Spark job (the fail-fast routing-contract guard below) even though the
-    returned plan is lazy — plan construction therefore needs a live
-    cluster, unlike the purely-lazy broadcast strategy.
     """
-    _assert_hash_routing(probe_df.sparkSession, num_partitions)
     with_hash = probe_df.withColumn("__h", F.xxhash64(key_col))
-    targeted = with_hash.withColumn(
-        "__pid", F.pmod(F.hash("__h"), F.lit(num_partitions)).cast("int"))
+    targeted = with_hash.withColumn("__pid", section_id("__h", num_partitions))
     idx = index_df.select("partition_id", "kind", "params", "payload")
     out_fields = [f for f in with_hash.schema.fields if f.name != "__h"]
     schema_str = ", ".join(

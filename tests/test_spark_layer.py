@@ -140,6 +140,95 @@ class TestFilterIndex:
         assert present <= b
 
 
+def _last_stage_tasks(spark, group, action):
+    """Run ``action`` under job group ``group``; the task count of the last
+    stage of its last job (the stage that runs the Python UDF)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    job = max(tracker.getJobIdsForGroup(group))
+    return tracker.getStageInfo(max(tracker.getJobInfo(job).stageIds)).numTasks
+
+
+class TestSections:
+    """Which keys each index row holds, independent of which task built it."""
+
+    XORF = {"arity": 3, "fp_bits": 16}
+
+    @pytest.fixture(scope="class")
+    def keys(self, spark):
+        # duplicates within and across input partitions
+        df = spark.range(0, 24_000, 1, 5).selectExpr("id % 9001 AS k").cache()
+        df.count()
+        yield df
+        df.unpersist()
+
+    @pytest.mark.parametrize("parts", [3, 7, 16, 40])
+    def test_sections_match_driver_build(self, spark, keys, parts):
+        """Row ``partition_id = s`` is the filter over exactly the distinct
+        hashes with ``pmod(hash(h), P) == s``, one row per section."""
+        from filterz_spark.filters import FILTER_KINDS
+        tbl = keys.select(F.xxhash64("k").alias("h")).select(
+            "h", F.pmod(F.hash("h"), F.lit(parts)).alias("s")).toArrow()
+        h = tbl.column("h").to_numpy().view(np.uint64)
+        s = tbl.column("s").to_numpy()
+        rows = build_filter_index(keys, "k", "xorf", self.XORF, parts).collect()
+        pids = [r["partition_id"] for r in rows]
+        assert len(pids) == len(set(pids)) == parts
+        assert sum(r["num_keys"] for r in rows) == np.unique(h).size == 9001
+        for r in rows:
+            want = FILTER_KINDS["xorf"].build(
+                np.unique(h[s == r["partition_id"]]), **self.XORF)
+            assert bytes(r["payload"]) == want.serialize(), r["partition_id"]
+
+    def test_pre_partitioned_builds_one_section_per_input_partition(self, spark):
+        keys = (spark.range(0, 16_000, 1, 8)
+                .select(F.xxhash64(F.floor(F.col("id") / 2)).alias("k")).cache())
+        try:
+            want = {r["p"]: r["n"] for r in keys.groupBy(
+                F.spark_partition_id().alias("p")).agg(
+                F.countDistinct("k").alias("n")).collect()}
+            rows = build_filter_index(keys, "k", "xorf", self.XORF,
+                                      pre_partitioned=True).collect()
+            assert sorted(r["partition_id"] for r in rows) == list(range(8))
+            assert {r["partition_id"]: r["num_keys"] for r in rows} == want
+        finally:
+            keys.unpersist()
+
+    def test_default_section_count_is_shuffle_partitions(self, spark, keys):
+        """``num_partitions=None`` builds the ``spark.sql.shuffle.partitions``
+        hash sections, so the cogrouped probe can route to its index."""
+        from filterz_spark.spark.probe import probe_membership_cogrouped
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+        def rows(df):
+            return sorted((r["partition_id"], r["shard"], bytes(r["payload"]))
+                          for r in df.collect())
+
+        default = build_filter_index(keys, "k", "xorf", self.XORF)
+        assert rows(default) == rows(
+            build_filter_index(keys, "k", "xorf", self.XORF, parts))
+        probed = probe_membership_cogrouped(keys, "k", default, parts)
+        assert probed.filter("NOT maybe_present").count() == 0
+
+    def test_one_python_task_per_core(self, spark, keys):
+        """The build runs min(P, cores) Python tasks, the probe at most
+        cores, however many sections or probe partitions there are."""
+        cores = spark.sparkContext.defaultParallelism
+        for parts in (3, 2 * cores + 3):
+            idx_df = build_filter_index(keys, "k", "xorf", self.XORF, parts)
+            assert _last_stage_tasks(spark, f"sections_build_{parts}",
+                                     idx_df.collect) == min(parts, cores)
+        probes = spark.range(0, 6000, 1, 3 * cores).selectExpr("id AS k")
+        probed = probe_membership(probes, "k", collect_index(idx_df))
+        assert _last_stage_tasks(spark, "sections_probe",
+                                 probed.collect) <= cores
+
+
 class TestExtraction:
     def test_text_extraction_invariant(self, spark, pages):
         ext = extract_text(pages)
