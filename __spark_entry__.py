@@ -579,20 +579,17 @@ def _q_lsh_candidate_pairs(spark, sf_dir):
 def _q_ngram_jaccard(spark, sf_dir):
     """Signature table computed ONCE (array form, materialized) and shared
     by the LSH candidate stage — the corpus-scale shape: signatures are
-    persisted storage, candidates and verification both read them. The
-    signature-level pre-filter is ACTIVE and ENGAGING here (round 6):
-    threshold 0.3 with margin 0.05 puts the cut at 0.25, i.e. candidates
-    colliding on only 1 of 8 bands (estimate 0.125 < 0.25 — 45% of all
-    candidates at sf0.01) are dropped BEFORE the exact shingle-set join.
-    The oracle stays the PLAIN ground truth (exact jaccard >= 0.3 over all
-    candidates, no prefilter), so a green row proves the margin dropped
-    zero qualifying pairs — the safety property, driver-gated every round
-    on the prefiltered plan."""
+    persisted storage, candidates and verification both read them. Every
+    LSH candidate is verified by the exact shingle-set jaccard, with no
+    signature-level pre-filter: a candidate matching on 1 of 8 bands
+    estimates 0.125 yet can reach 0.3 exactly, and a 0.05 margin (cut
+    0.25) dropped such pairs at sf0.001 and sf0.1. ``prefilter_margin``
+    stays an opt-in of ``ngram_jaccard_pairs``. The oracle is the same
+    plain ground truth, exact jaccard >= 0.3 over all candidates."""
     from filterz_spark.ops.dedup import minhash_signature_arrays, ngram_jaccard_pairs
     docs = _t(spark, sf_dir, "documents")
     sig = minhash_signature_arrays(docs, num_hashes=8, k=2).localCheckpoint(eager=True)
-    return ngram_jaccard_pairs(docs, k=2, min_jaccard=0.3, signatures=sig,
-                               prefilter_margin=0.05)
+    return ngram_jaccard_pairs(docs, k=2, min_jaccard=0.3, signatures=sig)
 
 
 def _q_cosine_topk(spark, sf_dir):
@@ -658,11 +655,10 @@ def _q_train_split(spark, sf_dir):
 
 def _q_dedup_clusters(spark, sf_dir):
     """Full near-dup pipeline shape (round 6): signatures -> LSH candidates
-    -> PREFILTERED exact-jaccard verify (margin 0.05 at threshold 0.3 —
-    the cut drops 1-of-8-band candidates before the shingle-set join) ->
-    connected components over VERIFIED pairs only. The oracle clusters on
-    plain exact jaccard >= 0.3 (no prefilter), so green proves the
-    prefiltered verify stage kept every qualifying edge."""
+    -> exact-jaccard verify of every candidate (no signature pre-filter,
+    as in ``ngram_jaccard``) -> connected components over VERIFIED pairs
+    only. The oracle clusters on the same plain exact jaccard >= 0.3
+    edges."""
     from filterz_spark.ops.dedup import (lsh_candidate_pairs,
                                          minhash_signature_arrays,
                                          ngram_jaccard_pairs)
@@ -671,8 +667,7 @@ def _q_dedup_clusters(spark, sf_dir):
     sig = minhash_signature_arrays(docs, num_hashes=8, k=2).localCheckpoint(eager=True)
     cand = lsh_candidate_pairs(docs, num_hashes=8, k=2, signatures=sig)
     pairs = ngram_jaccard_pairs(docs, k=2, min_jaccard=0.3, signatures=sig,
-                                candidates=cand, prefilter_margin=0.05) \
-        .select("doc_a", "doc_b")
+                                candidates=cand).select("doc_a", "doc_b")
     return dedup_components(pairs, docs.select("doc_id"), max_iters=30)
 
 
@@ -1366,9 +1361,8 @@ def oracle_sql() -> dict[str, str]:
             "  / len(list_distinct(list_concat(sa.sh, sb.sh))), 4) AS jaccard "
             "FROM cand JOIN sets sa ON cand.doc_a = sa.doc_id "
             "JOIN sets sb ON cand.doc_b = sb.doc_id "
-            # plain ground truth at 0.3 — NO prefilter mirrored: the Spark
-            # side runs prefilter_margin=0.05 (cut 0.25, drops 1-band
-            # candidates), so matching proves the margin lost nothing
+            # plain ground truth at 0.3 over every LSH candidate, as the
+            # Spark side verifies
             "WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) "
             "  / len(list_distinct(list_concat(sa.sh, sb.sh))), 4) >= 0.3"
         ),
@@ -1684,9 +1678,8 @@ def oracle_sql() -> dict[str, str]:
         # component and the closure takes >90min (the SPARK side finishes in
         # seconds; structure cross-checked there with a union-find instead)
         "dedup_clusters": (
-            # clusters over PLAIN exact-jaccard(>=0.3) verified edges — the
-            # Spark side verifies with prefilter_margin=0.05, so matching
-            # proves the prefilter kept every qualifying edge
+            # clusters over PLAIN exact-jaccard(>=0.3) verified edges of
+            # every LSH candidate, as the Spark side verifies
             f"WITH RECURSIVE sig AS ({minhash_km_sql}), "
             "cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM sig a "
             "  JOIN sig b ON a.band = b.band AND a.minhash = b.minhash "

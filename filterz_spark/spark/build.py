@@ -158,8 +158,7 @@ def _build_section(filter_cls, kind: str, params: dict, pid: int,
 def build_filter_index(df: DataFrame, key_col: str, kind: str = "xorf",
                        params: dict | None = None,
                        num_partitions: int | None = None,
-                       skip_pids: frozenset | None = None,
-                       pre_partitioned: bool = False) -> DataFrame:
+                       skip_pids: frozenset | None = None) -> DataFrame:
     """Hash keys, co-locate duplicates, build one filter per section.
 
     ``repartition(P, h)`` is the single shuffle: duplicates of a key land in
@@ -176,26 +175,14 @@ def build_filter_index(df: DataFrame, key_col: str, kind: str = "xorf",
 
     ``skip_pids``: sections not to build (resume); they are filtered out
     JVM-side before the exchange, so they never reach the shuffle or Python.
-
-    ``pre_partitioned=True``: the caller already hash-partitioned (and
-    typically cached) the key column — skip the shuffle entirely and build
-    one section per existing input partition (``partition_id`` = input
-    partition id). Used when several filter kinds are built over the same
-    key set (one shuffle amortized over N builds).
     """
     params = params or {}
     spark = df.sparkSession
-    if pre_partitioned:
-        hashed = df.select(F.col(key_col).alias("h"),
-                           F.spark_partition_id().alias("sid"))
-        sid = F.col("sid")
-    else:
-        p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        hashed = hashed_keys(df, key_col)
-        sid = section_id("h", p)
+    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    hashed = hashed_keys(df, key_col)
     if skip_pids:
-        hashed = hashed.filter(~sid.isin(sorted(skip_pids)))
-    if not pre_partitioned:
-        hashed = hashed.repartition(p, "h").select("h", sid.alias("sid"))
-    return (hashed.coalesce(spark.sparkContext.defaultParallelism)
+        hashed = hashed.filter(~section_id("h", p).isin(sorted(skip_pids)))
+    return (hashed.repartition(p, "h")
+            .select("h", section_id("h", p).alias("sid"))
+            .coalesce(spark.sparkContext.defaultParallelism)
             .mapInArrow(_build_sections_fn(kind, params), INDEX_SCHEMA))

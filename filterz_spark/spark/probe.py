@@ -2,16 +2,20 @@
 
 The reference probes every section's filter for every query key and counts
 hits (src/bench.zig:228-233): a hit means "this section may contain the key,
-pay the 200us read" (README.md:47). Two probe strategies, by index size:
+pay the 200us read" (README.md:47). Every probe hashes its key JVM-side
+with ``xxhash64`` (the build's hash, ``build.hashed_keys``) and answers with
+one executor-side check, ``_or_check``: True where ANY of the given filters
+may contain the hash. Two transports feed that check, by index size:
 
 1. ``probe_membership`` (default): the index is collected once and shipped
    as a Spark BROADCAST VARIABLE — one torrent-distributed copy per
-   executor, NOT a copy inside every pickled task closure — and each Arrow
-   batch of the probe side is checked against every filter vectorized (the
-   OR-over-partitions semantics of the section model). Map-only: the probe
-   side never shuffles; it is coalesced to at most ``defaultParallelism``
-   partitions, so one Python task per core probes and the output has at
-   most that many partitions.
+   executor, NOT a copy inside every pickled task closure. A scalar
+   iterator Arrow UDF over the key hash deserializes it once per task and
+   checks each batch against every filter (the OR-over-sections semantics
+   of the section model); only the hash column crosses into Python.
+   Map-only: the probe side never shuffles; it is coalesced to at most
+   ``defaultParallelism`` partitions, so one Python task per core probes
+   and the output has at most that many partitions.
 2. ``probe_membership_cogrouped``: for indexes too large to collect on the
    driver at all (10^5+ partitions x ~500KB payloads), the index STAYS a
    DataFrame. Each probe key is routed to the section that built its
@@ -20,6 +24,9 @@ pay the 200us read" (README.md:47). Two probe strategies, by index size:
    only that section's shard filters. Costs one shuffle of the probe side;
    payload bytes move executor<->executor only (never through the driver),
    each exactly once.
+
+Both append one boolean column, ``maybe_present``, to the probe side's
+columns.
 
 Scale posture: at the reference's 50-section scale the broadcast path is
 exactly the Parquet row-group bloom pattern. The aggregate FPR across S
@@ -33,12 +40,15 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
-from pyspark import Broadcast
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..filters import deserialize_filter
 from .build import section_id
+
+HIT_COL = "maybe_present"
 
 
 def collect_index(index_df: DataFrame) -> list[dict]:
@@ -67,36 +77,24 @@ def collect_index(index_df: DataFrame) -> list[dict]:
     ]
 
 
-def _probe_fn(index: Broadcast, hash_col_idx: int, out_cols: list[str]):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        filters = [
-            deserialize_filter(r["kind"], r["payload"], r["params"])
-            for r in index.value
-        ]
-        for batch in batches:
-            h = batch.column(hash_col_idx).to_numpy(zero_copy_only=False)
-            h = h.astype(np.int64).view(np.uint64)
-            hit = np.zeros(len(h), dtype=bool)
-            for filt in filters:  # OR over partition filters (ref bench.zig:228-233)
-                miss = ~hit
-                if not miss.any():
-                    break
-                hit[miss] |= filt.check(h[miss])
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            arrays.append(pa.array(hit))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[*batch.schema.names, out_cols[-1]]
-            )
-
-    return fn
+def _or_check(filters: list, h) -> np.ndarray:
+    """True where ANY filter may contain the ``xxhash64`` key hash ``h``
+    (int64, reinterpreted as the u64 the build inserted): the OR over
+    section filters of ref src/bench.zig:228-233."""
+    h = np.asarray(h, dtype=np.int64).view(np.uint64)
+    hit = np.zeros(len(h), dtype=bool)
+    for filt in filters:
+        miss = ~hit
+        if not miss.any():
+            break
+        hit[miss] |= filt.check(h[miss])
+    return hit
 
 
 def probe_membership(probe_df: DataFrame, key_col: str,
-                     index_rows: list[dict],
-                     hit_col: str = "maybe_present") -> DataFrame:
-    """Append a boolean column: True iff ANY partition filter may contain the key.
+                     index_rows: list[dict]) -> DataFrame:
+    """Append ``maybe_present``: True iff ANY partition filter may contain
+    the key.
 
     Zero false negatives (an inserted key always probes true in its
     partition's filter); false positives at the per-filter bound times the
@@ -113,22 +111,23 @@ def probe_membership(probe_df: DataFrame, key_col: str,
     """
     sc = probe_df.sparkSession.sparkContext
     bc = sc.broadcast(index_rows)
-    with_hash = (probe_df.coalesce(sc.defaultParallelism)
-                 .withColumn("__h", F.xxhash64(key_col)))
-    cols = with_hash.columns
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in with_hash.schema.fields]
-        + [f"{hit_col} boolean"]
-    )
-    out = with_hash.mapInArrow(
-        _probe_fn(bc, cols.index("__h"), [hit_col]), schema_str
-    )
-    return out.drop("__h")
+
+    def check(hashes: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        filters = [deserialize_filter(r["kind"], r["payload"], r["params"])
+                   for r in bc.value]
+        for h in hashes:
+            yield pa.array(_or_check(filters, h))
+
+    # nondeterministic: Catalyst would otherwise copy the UDF into a
+    # filter on the hit column pushed below the coalesce, and run it twice
+    udf = F.arrow_udf(check, "boolean").asNondeterministic()
+    return (probe_df.coalesce(sc.defaultParallelism)
+            .withColumn(HIT_COL, udf(F.xxhash64(key_col))))
 
 
 def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
-                               index_df: DataFrame, num_partitions: int,
-                               hit_col: str = "maybe_present") -> DataFrame:
+                               index_df: DataFrame,
+                               num_partitions: int) -> DataFrame:
     """Membership probe with the index kept DISTRIBUTED — for filter indexes
     too large to collect or broadcast (driver-memory ceiling at 10^5+
     partitions).
@@ -146,38 +145,25 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
     shuffle of the probe side + one tiny shuffle of the index; payloads
     never touch the driver.
     """
-    with_hash = probe_df.withColumn("__h", F.xxhash64(key_col))
-    targeted = with_hash.withColumn("__pid", section_id("__h", num_partitions))
+    out_names = probe_df.columns
+    schema = StructType([*probe_df.schema.fields,
+                         StructField(HIT_COL, BooleanType())])
+    targeted = (probe_df.withColumn("__h", F.xxhash64(key_col))
+                .withColumn("__pid", section_id("__h", num_partitions)))
     idx = index_df.select("partition_id", "kind", "params", "payload")
-    out_fields = [f for f in with_hash.schema.fields if f.name != "__h"]
-    schema_str = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields]
-        + [f"{hit_col} boolean"]
-    )
-    out_names = [f.name for f in out_fields]
 
     def fn(_key, probes_pdf, index_pdf):
-        import numpy as np
-
         filters = [
             deserialize_filter(k, bytes(p), json.loads(pr))
             for k, pr, p in zip(index_pdf["kind"], index_pdf["params"],
                                 index_pdf["payload"])
         ]
-        h = probes_pdf["__h"].to_numpy().astype(np.int64).view(np.uint64)
-        hit = np.zeros(len(h), dtype=bool)
-        for filt in filters:  # OR over this partition's SHARD filters only
-            miss = ~hit
-            if not miss.any():
-                break
-            hit[miss] |= filt.check(h[miss])
         out = probes_pdf[out_names].copy()
-        out[hit_col] = hit
+        out[HIT_COL] = _or_check(filters, probes_pdf["__h"])
         return out
 
     return (
         targeted.groupBy("__pid")
         .cogroup(idx.groupBy("partition_id"))
-        .applyInPandas(fn, schema_str)
+        .applyInPandas(fn, schema)
     )
-

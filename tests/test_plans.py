@@ -59,6 +59,11 @@ def test_probe_is_map_only(spark, li):
     probed = probe_membership(li.select("l_orderkey"), "l_orderkey", idx)
     p = plan(probed, "simple")
     assert "Exchange" not in p, f"probe should not shuffle:\n{p}"
+    # a filter on the hit column must stay above the one Python evaluation:
+    # pushed below the coalesce it would copy the UDF and run it twice
+    p = plan(probed.filter("maybe_present"), "simple")
+    assert p.count("ArrowEvalPython") == 1 and "MapInArrow" not in p \
+        and "Exchange" not in p, f"probe must evaluate its UDF once:\n{p}"
 
 
 def test_sketch_partials_are_shuffle_free(spark, li):

@@ -139,6 +139,33 @@ class TestFilterIndex:
         present = set(r["url"] for r in pages.select("url").limit(3000).collect())
         assert present <= b
 
+    def test_probe_output_schema_is_input_plus_hit_column(self, spark, pages):
+        """Both probes pass every probe column through unchanged (names with
+        spaces and nested types included) and append only
+        ``maybe_present boolean``."""
+        from pyspark.sql.types import BooleanType, StructField, StructType
+        from filterz_spark.spark.probe import probe_membership_cogrouped
+        parts = 4
+        idx_df = build_filter_index(pages, "url", "xorf",
+                                    {"arity": 3, "fp_bits": 16}, parts)
+        probes = pages.limit(500).selectExpr(
+            "url AS `page url`", "array(length(url), 7) AS lens",
+            "named_struct('u', url, 'n', length(url)) AS meta",
+            "CAST(length(url) / 3 AS DECIMAL(12, 4)) AS score").cache()
+        try:
+            want = StructType([*probes.schema.fields,
+                               StructField("maybe_present", BooleanType())])
+            rows_in = sorted(tuple(r) for r in probes.collect())
+            for probed in (
+                    probe_membership(probes, "page url", collect_index(idx_df)),
+                    probe_membership_cogrouped(probes, "page url", idx_df, parts)):
+                assert probed.schema == want
+                rows = probed.collect()
+                assert all(r["maybe_present"] for r in rows)  # zero FN
+                assert sorted(tuple(r)[:-1] for r in rows) == rows_in
+        finally:
+            probes.unpersist()
+
 
 def _last_stage_tasks(spark, group, action):
     """Run ``action`` under job group ``group``; the task count of the last
@@ -184,20 +211,6 @@ class TestSections:
             want = FILTER_KINDS["xorf"].build(
                 np.unique(h[s == r["partition_id"]]), **self.XORF)
             assert bytes(r["payload"]) == want.serialize(), r["partition_id"]
-
-    def test_pre_partitioned_builds_one_section_per_input_partition(self, spark):
-        keys = (spark.range(0, 16_000, 1, 8)
-                .select(F.xxhash64(F.floor(F.col("id") / 2)).alias("k")).cache())
-        try:
-            want = {r["p"]: r["n"] for r in keys.groupBy(
-                F.spark_partition_id().alias("p")).agg(
-                F.countDistinct("k").alias("n")).collect()}
-            rows = build_filter_index(keys, "k", "xorf", self.XORF,
-                                      pre_partitioned=True).collect()
-            assert sorted(r["partition_id"] for r in rows) == list(range(8))
-            assert {r["partition_id"]: r["num_keys"] for r in rows} == want
-        finally:
-            keys.unpersist()
 
     def test_default_section_count_is_shuffle_partitions(self, spark, keys):
         """``num_partitions=None`` builds the ``spark.sql.shuffle.partitions``

@@ -23,10 +23,11 @@ run REPS times and the best wall is reported alongside all raw samples and
 the stable kernel sums. Never run anything else concurrently.
 
 Workload: 20M deterministic synthetic keys (reference benchmark scale is
-21.1M, src/bench.zig), 32 fixed partitions, hashed+shuffled+cached once;
-the timed quantity is per-partition filter construction + index collect
-(the dominant cluster cost). Determinism: sha256 over sorted per-partition
-payloads must match across core counts.
+21.1M, src/bench.zig), 32 fixed sections, keys generated and cached once;
+the timed quantity is the whole filter build — its one exchange by key
+hash, per-section construction — plus index collect (the dominant cluster
+cost). Determinism: sha256 over sorted per-section payloads must match
+across core counts.
 
 Writes BENCH/BASELINE.md and prints a JSON summary.
 """
@@ -71,11 +72,10 @@ parts = int(sys.argv[3])
 reps = int(sys.argv[4])
 spark = get_session(cores=cores, shuffle_partitions=parts,
                     **{"spark.ui.showConsoleProgress": "false"})
-# deterministic synthetic keys; hash+shuffle ONCE and cache - the measured
-# quantity is construction scaling, not the one-time shuffle
+# deterministic synthetic keys, generated and cached ONCE; each timed
+# build runs its own exchange into `parts` sections, then constructs
 keys = (spark.range(0, num_keys, numPartitions=parts)
-        .select(F.xxhash64("id").alias("k"))
-        .repartition(parts, "k").cache())
+        .select(F.xxhash64("id").alias("k")).cache())
 keys.count()
 out = {"cores": cores, "num_keys": num_keys, "builds": {}}
 # warm workers with ONE pass of every measured config: the first measured
@@ -86,7 +86,7 @@ for _wk, _wp in [("sbbf", {"bits_per_key": 24}),
                  ("xorf", {"arity": 4, "fp_bits": 16}),
                  ("ribbon", {"coeff_bits": 64, "result_bits": 16}),
                  ("ribbon", {"coeff_bits": 128, "result_bits": 16})]:
-    collect_index(build_filter_index(keys, "k", _wk, _wp, pre_partitioned=True))
+    collect_index(build_filter_index(keys, "k", _wk, _wp, num_partitions=parts))
 for label, kind, params in [
     ("sbbf24", "sbbf", {"bits_per_key": 24}),
     ("xorf3_16", "xorf", {"arity": 3, "fp_bits": 16}),
@@ -99,7 +99,7 @@ for label, kind, params in [
     for _ in range(reps):
         t0 = time.monotonic()
         idx = collect_index(build_filter_index(keys, "k", kind, params,
-                                               pre_partitioned=True))
+                                               num_partitions=parts))
         dt = time.monotonic() - t0
         samples.append(round(dt, 3))
         if best is None or dt < best[0]:
@@ -126,8 +126,7 @@ keys.unpersist()
 scale_keys = int(sys.argv[5])
 scale_parts = int(sys.argv[6])
 big = (spark.range(0, scale_keys, numPartitions=scale_parts)
-       .select(F.xxhash64("id").alias("k"))
-       .repartition(scale_parts, "k").cache())
+       .select(F.xxhash64("id").alias("k")).cache())
 big.count()
 out["scale"] = {"num_keys": scale_keys, "parts": scale_parts, "builds": {}}
 for label, kind, params in [
@@ -139,7 +138,8 @@ for label, kind, params in [
     kernels = []
     for _ in range(reps):
         t0 = time.monotonic()
-        row = (build_filter_index(big, "k", kind, params, pre_partitioned=True)
+        row = (build_filter_index(big, "k", kind, params,
+                                  num_partitions=scale_parts)
                .groupBy().agg(F.sum("num_keys").alias("nk"),
                               F.sum("build_ns").alias("bns")).collect()[0])
         dt = time.monotonic() - t0
@@ -333,10 +333,11 @@ def main():
         "# BENCH/BASELINE — scaling evidence (local[8] vs local[32]) + reference walls",
         "",
         f"Workload: {NUM_KEYS:,} deterministic synthetic keys (reference "
-        f"benchmark scale is 21.1M, src/bench.zig), {PARTS} fixed partitions, "
-        "one filter per partition (the reference's section model); keys "
-        "hashed+shuffled+cached once, so the timed quantity is per-partition "
-        "CONSTRUCTION plus index collect. Two parallelism levels in separate "
+        f"benchmark scale is 21.1M, src/bench.zig), {PARTS} fixed sections, "
+        "one filter per section (the reference's section model); keys "
+        "generated and cached once, so the timed quantity is the build's one "
+        "exchange plus per-section CONSTRUCTION plus index collect. Two "
+        "parallelism levels in separate "
         "processes — the sandbox stand-in for N vs 4N executors per driver "
         "instruction. This virtualized host shows bimodal wall noise (same "
         f"job swings ~10x while in-task kernel time stays flat) whose stall "
