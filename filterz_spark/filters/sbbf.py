@@ -131,12 +131,3 @@ class SbbfFilter:
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "SbbfFilter":
         return cls(deserialize(payload), int(params["bits_per_key"]), int(params["num_keys"]))
-
-    def merge_with(self, other: "SbbfFilter") -> "SbbfFilter":
-        if self.bits_per_key != other.bits_per_key:
-            raise ValueError("sbbf merge: bits_per_key mismatch")
-        return SbbfFilter(
-            merge(self.blocks, other.blocks),
-            self.bits_per_key,
-            self.num_keys + other.num_keys,
-        )

@@ -1,7 +1,7 @@
 """Multimodal column plumbing — opaque binary payloads with typed metadata.
 
 Images/audio/video are carried as ``binary`` columns next to a metadata
-struct; decode / feature-extract / resize / frame-sample run as Arrow-batched
+struct; decode / feature-extract / resize run as Arrow-batched
 UDFs over ``mapInPandas``/``mapInArrow``. The actual codecs (PIL/ffmpeg) are
 NOT in this container, so the codec boundary is an INJECTED CALLABLE, not a
 boolean gate: every decode-shaped operator takes ``decoder=`` — a
@@ -239,12 +239,3 @@ def resize_image(media: DataFrame, out_h: int = 8, out_w: int = 8,
         _resize_fn(out_h, out_w, decoder), "media_id long, pixels array<float>"
     )
 
-
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for video payloads: one row per sampled frame
-    timestamp (plumbing real; frame decode stubbed like decode_image)."""
-    n_frames = F.greatest((F.col("duration_ms") / every_ms).cast("int"), F.lit(1))
-    return media.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-    ).select("media_id", "frame_idx", (F.col("frame_idx") * every_ms).alias("ts_ms"))

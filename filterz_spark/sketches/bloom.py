@@ -41,10 +41,8 @@ class BloomSketch(MergeableSketch):
 
     def merge(self, other: "BloomSketch") -> "BloomSketch":
         self.check_compatible(other)
-        if self.blocks.shape != other.blocks.shape:
-            raise ValueError("bloom merge: geometry mismatch (capacity/bpk must match)")
         return BloomSketch(
-            np.bitwise_or(self.blocks, other.blocks),
+            sbbf.merge(self.blocks, other.blocks),
             self.capacity, self.bits_per_key,
             self.num_inserted + other.num_inserted,
         )

@@ -1,1 +1,1 @@
-"""Input sources: deterministic synthetic pages table + packed key reader."""
+"""Input sources: the deterministic synthetic pages table."""

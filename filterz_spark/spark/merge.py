@@ -1,18 +1,24 @@
 """Distributed mergeable-sketch aggregation.
 
-Pipeline (SURVEY.md §2.6): per-partition partial states via one
-``mapInArrow`` pass over the scan (NO shuffle — partials build where the
-data lives, the map-side-combine of a hash aggregate), then a fan-in tree of
-``applyInPandas`` merge rounds over the tiny state rows, then a final driver
-merge of the <= ``FANIN`` survivors. This is the applyInPandas form of
+Pipeline (SURVEY.md §2.6): per-(group, partition) partial states via one
+``mapInArrow`` pass over the scan (``_partials_fn``; NO shuffle — partials
+build where the data lives, the map-side-combine of a hash aggregate), then
+``applyInPandas`` merge rounds over the tiny state rows (``_merge_group``),
+then a driver fold of the <= ``FANIN`` survivors (``_fold``). Column
+sketches run fan-in rounds of ``FANIN`` states — the applyInPandas form of
 ``treeAggregate``: at 10^6 partitions and 16KB HLL states, round one moves
 16GB across the cluster in 32-row groups, round two 500MB, etc. — never
-through the driver until the last handful. The persisted store
-(``spark.sketch_store``) reduces each epoch with the same rounds.
+through the driver until the last handful. Grouped rollups run one round
+keyed by group. The persisted store (``spark.sketch_store``) writes the
+state ``sketch_column`` returns and folds stored epochs with ``_fold``.
 
-Bloom/HLL/CMS states are bit-identical under any tree shape (monoid with
-idempotent/commutative merge); t-digest/KLL are deterministic for the fixed
-tree shape this module produces, and hold their rank bounds under any shape.
+Every fold runs in partition order: each state row carries the
+``partition_id`` of the input partition (or the fan-in range) it covers,
+and ``_merge_group`` sorts by it before merging. Bloom/HLL/CMS states are
+bit-identical under any tree shape (monoid with idempotent/commutative
+merge); t-digest/KLL merges depend on order, so sorting makes their states
+deterministic too — the same under a retried task or a different shuffle
+arrival order — and they hold their rank bounds under any shape.
 """
 
 from __future__ import annotations
@@ -31,6 +37,10 @@ from .partitioning import plan_partitions
 STATE_SCHEMA = "partition_id long, kind string, params string, payload binary"
 # states merged per executor task in each fan-in round
 FANIN = 32
+_PARTIALS_ARROW = pa.schema([
+    ("g", pa.string()), ("partition_id", pa.int64()), ("kind", pa.string()),
+    ("params", pa.string()), ("payload", pa.binary()),
+])
 
 
 def _project_values(df: DataFrame, col: str, kind: str,
@@ -67,8 +77,9 @@ def _decode(arrow_col, value_kind: str):
     return vs.astype(np.int64).view(np.uint64)
 
 
-def _fold(kind: str, payloads, params) -> MergeableSketch:
-    """Deserialize states in order and merge them left to right."""
+def _fold(kind: str, payloads, params) -> MergeableSketch | None:
+    """Deserialize states in order and merge them left to right; ``None``
+    when there are none."""
     acc = None
     for p, prm in zip(payloads, params):
         s = deserialize_sketch(kind, bytes(p), json.loads(prm))
@@ -77,7 +88,9 @@ def _fold(kind: str, payloads, params) -> MergeableSketch:
 
 
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas body: one group's states -> one state row keyed ``g``."""
+    """applyInPandas body: one group's states, folded in partition_id
+    order -> one state row keyed ``g``."""
+    pdf = pdf.sort_values("partition_id", kind="stable")
     kind = pdf["kind"].iloc[0]
     acc = _fold(kind, pdf["payload"], pdf["params"])
     return pd.DataFrame({
@@ -91,7 +104,8 @@ def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
 def _merge_by(states: DataFrame, key: Column) -> DataFrame:
     """One executor round: merge the states sharing ``key`` into one row
     each, whose partition_id is the key."""
-    return (states.select(key.alias("g"), "kind", "params", "payload")
+    return (states.select(key.alias("g"), "partition_id", "kind", "params",
+                          "payload")
             .groupBy("g")
             .applyInPandas(_merge_group,
                            "g long, kind string, params string, payload binary")
@@ -112,91 +126,21 @@ def _fan_in(states: DataFrame, n: int) -> DataFrame:
     return states
 
 
-def _partial_fn(kind: str, params: dict, value_kind: str):
-    """mapInArrow closure: one serialized sketch state per partition."""
+def _partials_fn(kind: str, params: dict, value_kind: str):
+    """mapInArrow closure over (g, v) batches: one serialized state per
+    (group, partition), as (g, partition_id, kind, params, payload) rows.
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sketch = SKETCH_KINDS[kind].zero(**params)
-        saw = False
-        for batch in batches:
-            sketch.update(_decode(batch.column(0), value_kind))
-            saw = True
-        if not saw:
-            return
-        pid = TaskContext.get().partitionId()
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": [pid],
-            "kind": [kind],
-            "params": [json.dumps(sketch.params())],
-            "payload": [sketch.serialize()],
-        })
-
-    return fn
-
-
-def partial_states(df: DataFrame, col: str, kind: str, params: dict | None = None,
-                   value_kind: str | None = None) -> DataFrame:
-    """Per-partition sketch states (see ``_project_values`` for value_kind)."""
-    projected, value_kind = _project_values(df, col, kind, value_kind)
-    return projected.mapInArrow(_partial_fn(kind, params or {}, value_kind),
-                                STATE_SCHEMA)
-
-
-def tree_merge(states: DataFrame,
-               num_states_hint: int | None = None) -> MergeableSketch:
-    """Fan-in tree of applyInPandas merge rounds, then a driver-side finish.
-
-    Each round groups ``FANIN`` states by partition_id range and merges them
-    in one executor task. The round count is derived from the PARTITION COUNT
-    of the input (one state row per partition) — a metadata lookup, not a
-    job — so the whole merge is a single pass with no count()/recompute.
-    """
-    n = num_states_hint if num_states_hint is not None \
-        else plan_partitions(states)
-    # collect unordered and sort driver-side: an ``orderBy`` here plans a
-    # range exchange whose boundary-sampling pass EXECUTES the whole
-    # partials pipeline a second time (measured 2.3x wall on the sketch
-    # legs); the surviving rows are <= FANIN KB-sized states, so the
-    # driver sort is free and the merge order is identical
-    rows = sorted(_fan_in(states, n).collect(),
-                  key=lambda r: r["partition_id"])
-    if not rows:
-        raise ValueError("no sketch states to merge (empty input)")
-    return _fold(rows[0]["kind"], [r["payload"] for r in rows],
-                 [r["params"] for r in rows])
-
-
-def sketch_column(df: DataFrame, col: str, kind: str, params: dict | None = None,
-                  value_kind: str | None = None) -> MergeableSketch:
-    """End-to-end: partials -> tree merge -> final sketch object."""
-    return tree_merge(partial_states(df, col, kind, params, value_kind))
-
-
-def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
-                          kind: str, params: dict | None = None,
-                          value_kind: str | None = None) -> DataFrame:
-    """Per-GROUP sketch states — the rollup primitive (one HLL/CMS/t-digest
-    per lang/host/day instead of one global sketch).
-
-    Two-phase: per-(partition, group) partials inside one mapInArrow pass
-    (map-side combine — the hot group's rows never concentrate), then one
-    shuffle of tiny states grouped by key and an applyInPandas merge. Output:
-    (group, kind, params, payload) — feed rows to ``deserialize_sketch`` or
-    ``grouped_estimates``.
+    Per-row work is ALL vectorized: dictionary-encode the group column
+    (Arrow C++), argsort the int32 codes (numpy), cut group runs from the
+    code diffs. Python touches one object per DISTINCT group per batch —
+    not per row — so a 100-TB rollup's hot partial pass stays numpy-speed
+    regardless of group cardinality skew. Nulls form their own group (SQL
+    GROUP BY semantics) via a -1 code; an ungrouped column sketch is the
+    one null group, whose stable sort keeps each batch's row order.
     """
     import numpy as np
 
-    params = params or {}
-    projected, value_kind = _project_values(
-        df, value_col, kind, value_kind, F.col(group_col).alias("g"))
-
-    def partial_fn(batches):
-        # Per-row work is ALL vectorized: dictionary-encode the group column
-        # (Arrow C++), argsort the int32 codes (numpy), cut group runs from
-        # the code diffs. Python touches one object per DISTINCT group per
-        # batch — not per row — so a 100-TB rollup's hot partial pass stays
-        # numpy-speed regardless of group cardinality skew. Nulls form their
-        # own group (SQL GROUP BY semantics) via a -1 code.
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sketches: dict = {}
         for batch in batches:
             n = batch.num_rows
@@ -221,22 +165,84 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
                     sk = SKETCH_KINDS[kind].zero(**params)
                     sketches[g] = sk
                 sk.update(svs[s:e])
-        state_schema = pa.schema([
-            ("g", pa.string()), ("kind", pa.string()),
-            ("params", pa.string()), ("payload", pa.binary()),
-        ])
+        pid = TaskContext.get().partitionId()
         for g, sk in sketches.items():
             yield pa.RecordBatch.from_pydict({
-                "g": [g], "kind": [kind],
+                "g": [g], "partition_id": [pid], "kind": [kind],
                 "params": [json.dumps(sk.params())],
                 "payload": [sk.serialize()],
-            }, schema=state_schema)
+            }, schema=_PARTIALS_ARROW)
 
-    partials = projected.mapInArrow(
-        partial_fn, "g string, kind string, params string, payload binary")
+    return fn
 
-    return partials.groupBy("g").applyInPandas(
-        _merge_group, "g string, kind string, params string, payload binary")
+
+def _partials(df: DataFrame, group: Column, col: str, kind: str,
+              params: dict | None, value_kind: str | None) -> DataFrame:
+    """(g, partition_id, kind, params, payload): one state per (group,
+    partition) of ``df``, built map-side."""
+    projected, value_kind = _project_values(df, col, kind, value_kind,
+                                            group.alias("g"))
+    return projected.mapInArrow(_partials_fn(kind, params or {}, value_kind),
+                                "g string, " + STATE_SCHEMA)
+
+
+def partial_states(df: DataFrame, col: str, kind: str, params: dict | None = None,
+                   value_kind: str | None = None) -> DataFrame:
+    """Per-partition sketch states (see ``_project_values`` for value_kind)."""
+    return _partials(df, F.lit(None).cast("string"), col, kind, params,
+                     value_kind).drop("g")
+
+
+def tree_merge(states: DataFrame) -> MergeableSketch | None:
+    """Fan-in tree of applyInPandas merge rounds, then a driver-side finish;
+    ``None`` when ``states`` holds no rows (an empty input).
+
+    Each round groups ``FANIN`` states by partition_id range and merges them
+    in one executor task. The round count is derived from the PARTITION COUNT
+    of the input (one state row per partition) — a metadata lookup, not a
+    job — so the whole merge is a single pass with no count()/recompute.
+    """
+    # collect unordered and sort driver-side: an ``orderBy`` here plans a
+    # range exchange whose boundary-sampling pass EXECUTES the whole
+    # partials pipeline a second time (measured 2.3x wall on the sketch
+    # legs); the surviving rows are <= FANIN KB-sized states, so the
+    # driver sort is free and the merge order is identical
+    rows = sorted(_fan_in(states, plan_partitions(states)).collect(),
+                  key=lambda r: r["partition_id"])
+    if not rows:
+        return None
+    return _fold(rows[0]["kind"], [r["payload"] for r in rows],
+                 [r["params"] for r in rows])
+
+
+def sketch_column(df: DataFrame, col: str, kind: str, params: dict | None = None,
+                  value_kind: str | None = None) -> MergeableSketch:
+    """End-to-end: partials -> tree merge -> final sketch object. A frame
+    with no rows gives the kind's zero state (the monoid identity)."""
+    merged = tree_merge(partial_states(df, col, kind, params, value_kind))
+    if merged is None:
+        return SKETCH_KINDS[kind].zero(**(params or {}))
+    return merged
+
+
+def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
+                          kind: str, params: dict | None = None,
+                          value_kind: str | None = None) -> DataFrame:
+    """Per-GROUP sketch states — the rollup primitive (one HLL/CMS/t-digest
+    per lang/host/day instead of one global sketch).
+
+    Two-phase: per-(partition, group) partials inside one mapInArrow pass
+    (map-side combine — the hot group's rows never concentrate), then one
+    shuffle of tiny states grouped by key and an applyInPandas merge in
+    partition order. Output: (group, kind, params, payload) — feed rows to
+    ``deserialize_sketch`` or ``grouped_estimates``.
+    """
+    return (_partials(df, F.col(group_col), value_col, kind, params,
+                      value_kind)
+            .groupBy("g")
+            .applyInPandas(_merge_group,
+                           "g string, kind string, params string, "
+                           "payload binary"))
 
 
 def grouped_estimates(states_df: DataFrame) -> list[tuple]:

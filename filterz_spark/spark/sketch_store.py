@@ -18,29 +18,27 @@ read_file -> build -> check loop); this module extends the same
 build-once / probe-many shape to the mergeable-sketch tier the north
 rule adds.
 
-Scale shape per epoch write: one map-side pass builds per-partition
-partials where the data lives (no shuffle of raw rows), then the
-``spark.merge`` fan-in rounds and one final round reduce them to a single
-KB-sized row ENTIRELY on executors — the store write never routes payloads
-through the driver. Merging a range reads only the requested epoch
-partitions (partition-pruned scan over KB files) and tree-merges them.
+Scale shape per epoch write: ``sketch_column`` reduces the epoch's rows
+(one map-side pass builds per-partition partials where the data lives, no
+shuffle of raw rows; the ``spark.merge`` fan-in rounds; the same driver
+fold), and the KB-sized result is written as one row from a one-row local
+table. Merging a range reads only the requested epoch partitions
+(partition-pruned scan over KB files) in one job and folds them on the
+driver in (epoch, partition_id) order, like every other fold of the tier.
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketches import SKETCH_KINDS, MergeableSketch
 from .fsio import check_marker, overwrite_partitions, stamp_marker
-from .merge import (STATE_SCHEMA, _fan_in, _merge_by, _partial_fn,
-                    _project_values, tree_merge)
-from .partitioning import plan_partitions
+from .merge import STATE_SCHEMA, _fold, _project_values, sketch_column
 
 SKETCHSTORE_META_DIR = "_filterz_sketch_meta"
-# store rows add the epoch partition column to the merge-state schema
-STORE_SCHEMA = STATE_SCHEMA + ", epoch string"
 
 
 def _params_key(params: dict) -> str:
@@ -68,15 +66,19 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     Because the write replaces the partition, a re-run never
     double-counts, for counting sketches (CMS) as much as for HLL.
 
-    The reduction is fully distributed: per-partition partials
-    (``partial_states``: one mapInArrow pass, no shuffle of raw rows),
-    then the ``spark.merge`` fan-in rounds and a final round down to one
-    row. No state passes through the driver.
+    An epoch whose rows are all gone stores the kind's zero state (the
+    monoid identity), so the re-run still replaces the old state.
+
+    The reduction is ``sketch_column``'s: per-partition partials (one
+    mapInArrow pass, no shuffle of raw rows), the ``spark.merge`` fan-in
+    rounds and the driver fold. The one KB-sized state is then written
+    from a one-row local table (one task, no empty write tasks).
     """
     if kind not in SKETCH_KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}: {sorted(SKETCH_KINDS)}")
     params = params or {}
-    projected, value_kind = _project_values(df, col, kind, value_kind)
+    # resolve value_kind for the marker; a bad one raises before any job
+    _, value_kind = _project_values(df, col, kind, value_kind)
     spark = df.sparkSession
 
     want = {"kind": kind, "params": _params_key(params),
@@ -84,20 +86,15 @@ def write_sketch_epoch(df: DataFrame, col: str, path: str, epoch: str, *,
     meta = check_marker(spark, path, SKETCHSTORE_META_DIR, "sketch store",
                         want, required=False, why=_MISMATCH)
 
-    states = projected.mapInArrow(_partial_fn(kind, params, value_kind),
-                                  STATE_SCHEMA)
-    # round count is derived from the df partition count (metadata, no job)
-    n = plan_partitions(states)
-    if n <= 1:
-        # a single partial with partition_id 0: the final round would
-        # shuffle it into its own 1-row group just to re-serialize it.
-        # Skipping it saves a shuffle + Python stage PER EPOCH (the epoch
-        # write loop's floor at small scale)
-        final = states
-    else:
-        final = _merge_by(_fan_in(states, n), F.lit(0))
-    overwrite_partitions(final.withColumn("epoch", F.lit(str(epoch))), path,
-                         "epoch")
+    state = sketch_column(df, col, kind, params, value_kind)
+    row = pa.table({
+        "partition_id": pa.array([0], pa.int64()),
+        "kind": [kind],
+        "params": [json.dumps(state.params())],
+        "payload": pa.array([state.serialize()], pa.binary()),
+        "epoch": [str(epoch)],
+    })
+    overwrite_partitions(spark.createDataFrame(row), path, "epoch")
     if meta is None:
         stamp_marker(spark, path, SKETCHSTORE_META_DIR, {**want, "version": 1})
 
@@ -115,7 +112,7 @@ def read_sketch_store(spark: SparkSession, path: str, *,
                  {"kind": kind,
                   "params": None if params is None else _params_key(params)},
                  required=True, why=_MISMATCH)
-    return spark.read.parquet(path)
+    return spark.read.schema(STATE_SCHEMA).parquet(path)
 
 
 def merge_sketch_range(spark: SparkSession, path: str, *,
@@ -126,13 +123,11 @@ def merge_sketch_range(spark: SparkSession, path: str, *,
 
     The scan touches ONLY the requested epoch partitions (Hive-style
     partition pruning on the `epoch` directory column — gated by
-    tests/test_plans.py). The states are re-keyed to contiguous
-    partition_ids (a single tiny shuffle over KB rows) and handed to
-    ``tree_merge``; with one state per epoch, a 90-day range is 90
-    KB-sized rows — the merge is driver-trivial by construction,
+    tests/test_plans.py) and runs as one job; with one state per epoch, a
+    90-day range is 90 KB-sized rows, collected and folded on the driver
+    in (epoch, partition_id) order — driver-trivial by construction,
     which is the entire point of the store.
     """
-    from pyspark.sql import Window
     states = read_sketch_store(spark, path)
     if epochs is not None:
         states = states.where(F.col("epoch").isin([str(e) for e in epochs]))
@@ -140,15 +135,11 @@ def merge_sketch_range(spark: SparkSession, path: str, *,
         states = states.where(F.col("epoch") >= str(epoch_min))
     if epoch_max is not None:
         states = states.where(F.col("epoch") <= str(epoch_max))
-    # contiguous ids so tree_merge's fan-in grouping reduces every round
-    # (every epoch's row has partition_id 0)
-    w = Window.orderBy("epoch", "partition_id")
-    rekeyed = (states.withColumn("partition_id",
-                                 F.row_number().over(w) - F.lit(1))
-               .select("partition_id", "kind", "params", "payload"))
-    n_rows = rekeyed.count()  # KB-sized frame; also the empty-range guard
-    if n_rows == 0:
+    rows = sorted(states.collect(),
+                  key=lambda r: (r["epoch"], r["partition_id"]))
+    if not rows:
         raise ValueError(
             f"sketch store at {path} has no states in the requested epoch "
             "range")
-    return tree_merge(rekeyed, num_states_hint=n_rows)
+    return _fold(rows[0]["kind"], [r["payload"] for r in rows],
+                 [r["params"] for r in rows])

@@ -445,14 +445,6 @@ class TestMultimodal:
         with pytest.raises(ValueError, match="must divide"):
             resize_image(attach_media(docs.limit(1)), out_h=5)
 
-    def test_frame_sample_plan(self, spark, docs):
-        from filterz_spark.ops.multimodal import attach_media, frame_sample
-        media = attach_media(docs.limit(10)).withColumn(
-            "duration_ms", F.lit(3500))
-        frames = frame_sample(media, every_ms=1000)
-        assert frames.count() == 30  # 3 frames per media
-        assert frames.filter("ts_ms > duration_ms").count() == 0 or True
-
 
 class TestRepetitionAndDecontamination:
     def test_repetition_extremes(self, spark):

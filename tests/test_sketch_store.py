@@ -5,12 +5,14 @@
   extended across the persistence boundary);
 - a sub-range merge equals sketching only that range's rows;
 - quantile kinds (t-digest) hold their rank bounds through the store;
-- per-epoch re-writes are idempotent (dynamic partition overwrite);
+- per-epoch re-writes are idempotent (dynamic partition overwrite), and
+  a re-run over an epoch whose rows are gone stores the zero state;
 - the marker refuses mismatched params / kinds / unmarked directories,
   and markers in the round-6 part-file layout still read;
 - 100-partition epoch writes (one executor fan-in round) store the same
   states as 4-partition ones;
-- the range scan is partition-pruned on the epoch directory column.
+- the range scan is partition-pruned on the epoch directory column, and a
+  range merge runs one Spark job.
 """
 
 import json
@@ -96,6 +98,23 @@ class TestBitIdentity:
         assert rows == len(EPOCHS)  # one state per epoch, no duplicates
 
 
+    def test_empty_rerun_replaces_epoch_with_zero_state(self, spark, pages,
+                                                        store):
+        """Re-running an epoch whose rows are all gone must replace its
+        state with the identity, not leave the old state in place."""
+        for e in EPOCHS[:2]:
+            write_sketch_epoch(pages.where(F.col("epoch") == e), "url",
+                               store, e, kind="hll", params={"p": 12})
+        write_sketch_epoch(pages.where(F.lit(False)), "url", store,
+                           EPOCHS[1], kind="hll", params={"p": 12})
+        assert read_sketch_store(spark, store).count() == 2
+        merged = merge_sketch_range(spark, store)
+        only = merge_sketch_range(spark, store, epochs=[EPOCHS[0]])
+        assert merged.serialize() == only.serialize()
+        assert merge_sketch_range(spark, store,
+                                  epochs=[EPOCHS[1]]).estimate() == 0
+
+
 class TestFanInRound:
     @pytest.mark.parametrize("kind,params", [
         ("hll", {"p": 12}),
@@ -105,9 +124,8 @@ class TestFanInRound:
                                                        tmp_path, kind,
                                                        params):
         """100 input partitions put one executor fan-in round (32 states
-        per group) and the final single-state round into each epoch
-        write; the merged range must equal a 4-partition build byte for
-        byte."""
+        per group) into each epoch write; the merged range must equal a
+        4-partition build byte for byte."""
         merged = {}
         for n in (100, 4):
             p = str(tmp_path / f"store_{n}")
@@ -210,3 +228,14 @@ class TestPlan:
         # listing), not as a post-scan Filter over all partitions
         pf = plan.split("PartitionFilters:", 1)[1].split("]", 1)[0]
         assert EPOCHS[0] in pf or "epoch" in pf, pf
+
+    def test_range_merge_is_one_job(self, spark, pages, store):
+        _write_all(pages, store, "hll", {"p": 12})
+        sc = spark.sparkContext
+        group = "sketch_store_range_merge"
+        sc.setJobGroup(group, group)
+        try:
+            merge_sketch_range(spark, store, epoch_min=EPOCHS[1])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -384,3 +384,35 @@ def test_payload_length_must_match_params(kind):
     for bad in (payload + bytes(8), payload[:-8]):
         with pytest.raises(ValueError):
             cls.deserialize(bad, params)
+
+
+@pytest.mark.parametrize("kind,params", [("tdigest", {"delta": 50}),
+                                         ("kll", {"k": 32})])
+def test_merge_group_folds_in_partition_order(kind, params):
+    """t-digest/KLL merges depend on order, so an executor merge round
+    must fold a group's states in partition_id order, whatever order the
+    shuffle delivers them in (a retried task must give the same state)."""
+    import json
+
+    import pandas as pd
+
+    from filterz_spark.spark.merge import _fold, _merge_group
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for pid in range(5):
+        s = SKETCH_KINDS[kind].zero(**params)
+        s.update(rng.lognormal(pid, 1.0 + pid, size=3000))
+        rows.append({"g": 7, "partition_id": pid, "kind": kind,
+                     "params": json.dumps(s.params()),
+                     "payload": s.serialize()})
+    ordered = pd.DataFrame(rows)
+    backward = ordered.iloc[::-1].reset_index(drop=True)
+    # the fold itself is order-dependent for these states ...
+    assert _fold(kind, backward["payload"], backward["params"]).serialize() \
+        != _fold(kind, ordered["payload"], ordered["params"]).serialize()
+    # ... and the merge round removes the arrival order
+    a = _merge_group(ordered)
+    b = _merge_group(backward)
+    assert a["payload"].iloc[0] == b["payload"].iloc[0]
+    assert a["g"].iloc[0] == b["g"].iloc[0] == 7

@@ -591,45 +591,6 @@ class TestCheckpointAtomicity:
             shutil.rmtree(base, ignore_errors=True)
 
 
-class TestPackedSource:
-    def test_packed_roundtrip_and_distributed_read(self, spark, pages):
-        """The reference's fixed-width packed key file reads back
-        distributed with every key intact (ref src/bench.zig:16,26-31)."""
-        import tempfile
-        from filterz_spark.sources.packed import (read_packed_keys,
-                                                  write_packed_keys)
-        with tempfile.TemporaryDirectory(prefix="fz_packed_") as d:
-            path = f"{d}/keys.bin"
-            urls = pages.select("url").limit(500)
-            n = write_packed_keys(urls, "url", path, record_len=20)
-            back = read_packed_keys(spark, path, record_len=20)
-            assert back.rdd.getNumPartitions() >= 1
-            got = sorted(bytes(r["key"]) for r in back.collect())
-            want = sorted(str(r["url"]).encode()[:20].ljust(20, b"\x00")
-                          for r in urls.collect())
-            assert len(got) == n and got == want
-            # a mis-sized record width fails loudly, never silently shears
-            import pytest as _pytest
-            with _pytest.raises(Exception, match="multiple of"):
-                read_packed_keys(spark, path, record_len=13).collect()
-
-    def test_packed_feeds_filter_build(self, spark, pages):
-        """Packed keys drive the normal hash->build->probe spine."""
-        import tempfile
-        from filterz_spark.sources.packed import (read_packed_keys,
-                                                  write_packed_keys)
-        from filterz_spark.spark.build import build_filter_index
-        from filterz_spark.spark.probe import collect_index, probe_membership
-        with tempfile.TemporaryDirectory(prefix="fz_packed_") as d:
-            path = f"{d}/keys.bin"
-            write_packed_keys(pages.select("url").limit(300), "url", path)
-            keys = read_packed_keys(spark, path)
-            idx = collect_index(build_filter_index(
-                keys, "key", "xorf", {"arity": 3, "fp_bits": 16}, 4))
-            hits = probe_membership(keys, "key", idx)
-            assert hits.filter("maybe_present").count() == 300  # zero FN
-
-
 class TestTreeMergePartitionCount:
     def test_public_fallback_when_private_path_breaks(self, spark, pages):
         """tree_merge's partition count reads a PRIVATE Spark API
