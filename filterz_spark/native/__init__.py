@@ -12,6 +12,11 @@ carrying the compiler's stderr. The numpy reference implementations live in
 the test suite (``tests/filter_oracle.py``), which checks the kernels
 against them byte for byte.
 
+``km_md5_minhash`` is the one non-filter kernel: the default MinHash
+signature pass of ``ops.dedup`` (word k-gram shingling, md5 and the
+per-band min, one call per Arrow batch of texts). ``tests/test_native.py``
+checks it against ``hashlib`` and against the JVM expression it replaced.
+
 Deploy note: tools/package_zip.py ships ``kernels.c`` inside the --py-files
 zip; ``pkgutil.get_data`` reads it through zipimport, so each executor node
 compiles once into its local temp dir on first use.
@@ -31,6 +36,7 @@ from numpy.ctypeslib import ndpointer
 
 _u64p = ndpointer(dtype=np.uint64, flags="C_CONTIGUOUS")
 _u8p = ndpointer(dtype=np.uint8, flags="C_CONTIGUOUS")
+_i64p = ndpointer(dtype=np.int64, flags="C_CONTIGUOUS")
 
 _lib = None  # the loaded CDLL, or the NativeLoadError of the failed load
 
@@ -91,6 +97,9 @@ def _bind(so_path: str):
         ctypes.c_int32, ctypes.c_int32, _u64p, ctypes.c_int64, _u8p,
     ]
     lib.ribbon_contains.restype = None
+    lib.km_md5_minhash.argtypes = [_u8p, _i64p, ctypes.c_int64, ctypes.c_int32,
+                                   ctypes.c_int32, _i64p]
+    lib.km_md5_minhash.restype = ctypes.c_int32
     return lib
 
 
@@ -233,3 +242,22 @@ def ribbon_attempt(hashes: np.ndarray, seed: int, size: int, coeff_bits: int,
     if status == -1:
         raise MemoryError("ribbon_attempt: allocation failed")
     return status == 0
+
+
+def km_md5_minhash(data: np.ndarray, offsets: np.ndarray, k: int,
+                   num_hashes: int) -> np.ndarray:
+    """km_md5 MinHash of each text in an Arrow-layout string buffer: doc
+    ``i`` is the UTF-8 bytes ``data[offsets[i]:offsets[i + 1]]``. Returns
+    an int64 ``(n_docs, num_hashes)`` array; row ``i`` holds, per band b,
+    the minimum of ``h1 + b*h2`` over the doc's word k-gram shingles
+    (the contract of ``ops.dedup.minhash_signature_arrays``)."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    lib = _load()
+    d = np.ascontiguousarray(data, dtype=np.uint8)
+    o = np.ascontiguousarray(offsets, dtype=np.int64)
+    n = max(o.size - 1, 0)
+    out = np.empty((n, num_hashes), dtype=np.int64)
+    if lib.km_md5_minhash(d, o, n, k, num_hashes, out) != 0:
+        raise MemoryError("km_md5_minhash: allocation failed")
+    return out

@@ -1,4 +1,4 @@
-/* Native build kernels for filterz_spark.
+/* Native kernels for filterz_spark.
  *
  * Compiled on first use by filterz_spark/native/__init__.py with the
  * system C compiler (gcc -O3 -shared, or $CC) and loaded via ctypes. These
@@ -7,8 +7,11 @@
  * algorithms are inherently sequential per key (xor peel, ribbon banded
  * elimination) or scatter-bound (sbbf insert) and numpy vectorization
  * cannot reach the reference's per-core rates; the probes run here too.
- * tests/filter_oracle.py holds a numpy/Python reference for every kernel,
- * and the tests check the outputs byte for byte.
+ * tests/filter_oracle.py holds a numpy/Python reference for every filter
+ * kernel, and the tests check the outputs byte for byte. The last kernel,
+ * km_md5_minhash, is the MinHash signature pass of ops/dedup.py; its
+ * references are hashlib and the JVM md5/conv expression
+ * (tests/test_native.py).
  *
  * Semantics notes (reference = steelcake/filterz, Zig):
  *  - sbbf_insert mirrors src/sbbf.zig:64-80 exactly.
@@ -531,4 +534,123 @@ int32_t ribbon_attempt(const uint64_t *hashes, int64_t n, uint64_t seed,
 done:
     free(start); free(ks); free(off);
     return status;
+}
+
+/* ---------------- km_md5 MinHash signatures ---------------- */
+
+/* MD5 (RFC 1321). Only the signature kernel below uses it: each word
+ * k-gram is hashed in place, as the byte range it spans in the text. */
+static const uint32_t MD5_K[64] = {
+    0xd76aa478, 0xe8c7b756, 0x242070db, 0xc1bdceee, 0xf57c0faf, 0x4787c62a,
+    0xa8304613, 0xfd469501, 0x698098d8, 0x8b44f7af, 0xffff5bb1, 0x895cd7be,
+    0x6b901122, 0xfd987193, 0xa679438e, 0x49b40821, 0xf61e2562, 0xc040b340,
+    0x265e5a51, 0xe9b6c7aa, 0xd62f105d, 0x02441453, 0xd8a1e681, 0xe7d3fbc8,
+    0x21e1cde6, 0xc33707d6, 0xf4d50d87, 0x455a14ed, 0xa9e3e905, 0xfcefa3f8,
+    0x676f02d9, 0x8d2a4c8a, 0xfffa3942, 0x8771f681, 0x6d9d6122, 0xfde5380c,
+    0xa4beea44, 0x4bdecfa9, 0xf6bb4b60, 0xbebfbc70, 0x289b7ec6, 0xeaa127fa,
+    0xd4ef3085, 0x04881d05, 0xd9d4d039, 0xe6db99e5, 0x1fa27cf8, 0xc4ac5665,
+    0xf4292244, 0x432aff97, 0xab9423a7, 0xfc93a039, 0x655b59c3, 0x8f0ccc92,
+    0xffeff47d, 0x85845dd1, 0x6fa87e4f, 0xfe2ce6e0, 0xa3014314, 0x4e0811a1,
+    0xf7537e82, 0xbd3af235, 0x2ad7d2bb, 0xeb86d391,
+};
+static const int MD5_S[16] = {7, 12, 17, 22, 5, 9, 14, 20,
+                              4, 11, 16, 23, 6, 10, 15, 21};
+
+static inline uint32_t rotl32(uint32_t x, int s) {
+    return (x << s) | (x >> (32 - s));
+}
+
+static void md5_block(uint32_t st[4], const uint8_t *p) {
+    uint32_t m[16];
+    for (int i = 0; i < 16; i++)
+        m[i] = (uint32_t)p[4 * i] | (uint32_t)p[4 * i + 1] << 8 |
+               (uint32_t)p[4 * i + 2] << 16 | (uint32_t)p[4 * i + 3] << 24;
+    uint32_t a = st[0], b = st[1], c = st[2], d = st[3], f, t;
+#define MD5_STEP(i, F, g)                                              \
+    f = (F) + a + MD5_K[i] + m[g];                                     \
+    t = d; d = c; c = b; b += rotl32(f, MD5_S[((i) >> 4) * 4 + ((i) & 3)]); \
+    a = t;
+#pragma GCC unroll 16
+    for (int i = 0; i < 16; i++) { MD5_STEP(i, (b & c) | (~b & d), i) }
+#pragma GCC unroll 16
+    for (int i = 16; i < 32; i++) { MD5_STEP(i, (d & b) | (~d & c), (5 * i + 1) & 15) }
+#pragma GCC unroll 16
+    for (int i = 32; i < 48; i++) { MD5_STEP(i, b ^ c ^ d, (3 * i + 5) & 15) }
+#pragma GCC unroll 16
+    for (int i = 48; i < 64; i++) { MD5_STEP(i, c ^ (b | ~d), (7 * i) & 15) }
+#undef MD5_STEP
+    st[0] += a; st[1] += b; st[2] += c; st[3] += d;
+}
+
+static void md5(const uint8_t *p, int64_t n, uint8_t out[16]) {
+    uint32_t st[4] = {0x67452301, 0xefcdab89, 0x98badcfe, 0x10325476};
+    int64_t full = n & ~(int64_t)63;
+    for (int64_t i = 0; i < full; i += 64) md5_block(st, p + i);
+    /* the 0-63 tail bytes, the 0x80 pad byte and the 64-bit bit length
+     * fit one block when the tail is under 56 bytes, else two */
+    uint8_t tail[128];
+    int64_t r = n - full, tl = r < 56 ? 64 : 128;
+    memcpy(tail, p + full, (size_t)r);
+    tail[r] = 0x80;
+    memset(tail + r + 1, 0, (size_t)(tl - r - 9));
+    uint64_t bits = (uint64_t)n << 3;
+    for (int i = 0; i < 8; i++) tail[tl - 8 + i] = (uint8_t)(bits >> (8 * i));
+    md5_block(st, tail);
+    if (tl == 128) md5_block(st, tail + 64);
+    for (int i = 0; i < 16; i++) out[i] = (uint8_t)(st[i >> 2] >> (8 * (i & 3)));
+}
+
+/* Fold one shingle into the doc's band minima: h1 = md5 bytes 0-6 and
+ * h2 = bytes 7-13, big-endian (the first and second 14 hex digits of the
+ * md5 string); band b keeps min(h1 + b*h2), < 2^60 for b <= 15. */
+static inline void km_fold(const uint8_t *p, int64_t n, int32_t num_hashes,
+                           int64_t *mins) {
+    uint8_t dg[16];
+    md5(p, n, dg);
+    int64_t h1 = 0, h2 = 0;
+    for (int i = 0; i < 7; i++) {
+        h1 = (h1 << 8) | dg[i];
+        h2 = (h2 << 8) | dg[7 + i];
+    }
+    for (int32_t b = 0; b < num_hashes; b++) {
+        int64_t v = h1 + (int64_t)b * h2;
+        if (v < mins[b]) mins[b] = v;
+    }
+}
+
+/* km_md5 MinHash of each text in an Arrow string buffer (doc i is
+ * data[offsets[i] .. offsets[i+1])): out[i*num_hashes + b] = band b's
+ * minimum over the doc's word k-grams. Words are split on the byte ' '
+ * (empty words kept, as split(text, ' ') does), so a k-gram is the
+ * contiguous byte range from the start of its first word to the end of
+ * its last; a ring of the last k word starts finds it with no copy and no
+ * length cap. A doc of fewer than k words is one shingle, the whole text.
+ * k >= 1. Returns 0, or -1 when the ring cannot be allocated. */
+int32_t km_md5_minhash(const uint8_t *data, const int64_t *offsets,
+                       int64_t n_docs, int32_t k, int32_t num_hashes,
+                       int64_t *out) {
+    int64_t *ring = (int64_t *)malloc((size_t)k * sizeof(int64_t));
+    if (!ring) return -1;
+    for (int64_t d = 0; d < n_docs; d++) {
+        const uint8_t *s = data + offsets[d];
+        int64_t len = offsets[d + 1] - offsets[d];
+        int64_t *mins = out + d * num_hashes;
+        for (int32_t b = 0; b < num_hashes; b++) mins[b] = INT64_MAX;
+        /* words seen so far, and the ring slot of word (words - k), which
+         * is also where the next word's start goes */
+        int64_t words = 1;
+        int32_t slot = 1 % k;
+        ring[0] = 0;
+        for (int64_t p = 0; p < len; p++) {
+            if (s[p] != ' ') continue;
+            if (words >= k) km_fold(s + ring[slot], p - ring[slot], num_hashes, mins);
+            ring[slot] = p + 1;
+            words++;
+            if (++slot == k) slot = 0;
+        }
+        int64_t first = words >= k ? ring[slot] : 0;
+        km_fold(s + first, len - first, num_hashes, mins);
+    }
+    free(ring);
+    return 0;
 }

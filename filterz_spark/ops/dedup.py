@@ -2,21 +2,32 @@
 
 Exact dedup (hash-groupBy), MinHash+LSH (shingle -> minhash -> band ->
 bucket groupBy), n-gram Jaccard verification, SimHash, and embedding-cosine
-near-dup. ALL of them — simhash included — are expressed with JVM built-ins
-(md5 as the shared word hash makes every value oracle-checkable in DuckDB,
-which has the same md5); nothing here runs per-row Python.
+near-dup. All of them but one stage are JVM built-ins (md5 as the shared
+word hash makes every value oracle-checkable in DuckDB, which has the same
+md5). The one stage is the default (``km_md5``) MinHash signature pass: a
+``mapInArrow`` that hands each batch of texts to one C kernel
+(``native.km_md5_minhash``), which shingles and md5s each doc in place
+with the same bits as the JVM ``md5``/``conv`` expression it replaced.
+Nothing here runs per-row Python.
 
 Scale posture: every operator is a groupBy/join on a derived key — shingle
 explosion is the only fan-out (x ~n_tokens per doc) and is immediately
-re-aggregated map-side; LSH bucketing replaces the O(n^2) all-pairs
-comparison with a groupBy on (band, minhash) that Spark shuffles by
-bucket; Jaccard runs only on LSH candidates.
+re-aggregated map-side (the km_md5 signature pass has no fan-out at
+all); LSH bucketing replaces the O(n^2) all-pairs comparison with a
+groupBy on (band, minhash) that Spark shuffles by bucket; Jaccard runs
+only on LSH candidates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Iterator
 
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .. import native
 from ..spark.fsio import check_marker, stamp_marker
 from ..spark.partitioning import ensure_parallelism
 
@@ -39,17 +50,20 @@ def shingle_array(k: int = 2, text_col: str = "text"):
     """Column expression: the word k-gram shingle ARRAY of a text column —
     the zero-shuffle building block behind ``shingles``.
 
-    Built as ``arrays_zip`` of k shifted slices of the word array with one
-    ``concat_ws`` per element: a per-SHINGLE slice()+array_join() costs
-    ~3.5x more inside Catalyst's higher-order functions (measured). Docs
-    shorter than k words yield one whole-doc shingle (arrays_zip pads with
-    nulls, which concat_ws skips) — same contract as the DuckDB oracle.
+    One ``regexp_extract_all`` pass: the pattern matches zero-width at
+    every word start (the text start or just after a ``' '``) and captures
+    the next k words, separators included, in a lookahead — exactly the
+    ``concat_ws(' ', ...)`` of k consecutive ``split(text, ' ')`` words,
+    empty words of runs of spaces included. A start with fewer than k
+    words left matches nothing. Docs shorter than k words yield one
+    whole-doc shingle (``size(split) < k``) — same contract as the DuckDB
+    oracle; a NULL text yields NULL (no shingles).
     """
-    ws = F.split(F.col(text_col), " ")
-    n_shingles = F.greatest(F.size(ws) - F.lit(k - 1), F.lit(1))
-    shifted = [F.slice(ws, j + 1, n_shingles) for j in range(k)]
-    return F.transform(F.arrays_zip(*shifted),
-                       lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]))
+    text = F.col(text_col)
+    pattern = f"(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{k - 1}}}))"
+    return F.when(text.isNotNull() & (F.size(F.split(text, " ")) < k),
+                  F.array(text)).otherwise(
+        F.regexp_extract_all(text, F.lit(pattern), F.lit(1)))
 
 
 def shingles(docs: DataFrame, k: int = 2, text_col: str = "text") -> DataFrame:
@@ -57,11 +71,12 @@ def shingles(docs: DataFrame, k: int = 2, text_col: str = "text") -> DataFrame:
     ``shingle_array`` for the construction).
 
     The input is routed through ``ensure_parallelism`` first: the shingle
-    expansion plus the md5 work every consumer fuses on top of it is the
-    cost center of the signature pass, and Spark fuses it into the SCAN
-    stage — a small or single-row-group input would otherwise run it on
-    1-2 tasks (measured 3-5x on the round-6 bench legs at local[32]). At
-    corpus scale the helper is a no-op (scan partitions >= cores)."""
+    expansion plus the hashing its consumers fuse on top of it (band_md5
+    and km_xxh signatures, n-gram Jaccard sets) is their cost center, and
+    Spark fuses it into the SCAN stage — a small or single-row-group input
+    would otherwise run it on 1-2 tasks (measured 3-5x on the round-6 bench
+    legs at local[32]). At corpus scale the helper is a no-op (scan
+    partitions >= cores)."""
     base = ensure_parallelism(docs.select("doc_id", text_col))
     return base.select("doc_id",
                        F.explode(shingle_array(k, text_col)).alias("shingle"))
@@ -75,15 +90,22 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
     Hash families (both bit-identical in DuckDB, so fully oracle-checkable):
 
     - ``km_md5`` (DEFAULT since round 5): Kirsch-Mitzenmacher double
-      hashing — ONE md5 per shingle split into two 56-bit halves (h1, h2);
-      band b's hash is ``h1 + b*h2`` (numeric min, stringified). The
-      10M-doc pipeline rehearsal (BENCH/PIPELINE.md) measured the
-      signature pass as the single most expensive curation stage with
-      band_md5's 8 md5s per shingle — km_md5 cuts the md5 count 8x with
-      the standard KM guarantee (Kirsch & Mitzenmacher 2006: two-hash
-      derived families preserve Bloom/MinHash-style error behavior).
+      hashing — ONE md5 per shingle split into two 56-bit halves (h1, h2:
+      hex digits 1-14 and 15-28, i.e. ``conv(substring(md5, 1, 14), 16,
+      10)`` and ``conv(substring(md5, 15, 14), 16, 10)``); band b's hash
+      is ``h1 + b*h2`` (numeric min, stringified). The 10M-doc pipeline
+      rehearsal (BENCH/PIPELINE.md) measured the signature pass as the
+      single most expensive curation stage with band_md5's 8 md5s per
+      shingle — km_md5 cuts the md5 count 8x with the standard KM
+      guarantee (Kirsch & Mitzenmacher 2006: two-hash derived families
+      preserve Bloom/MinHash-style error behavior). The pass runs in C,
+      one call per Arrow batch of (doc_id, text) (``_km_sig_longs``): the
+      kernel walks each text's word k-grams as byte ranges and folds the
+      band minima, so no shingle row, md5 hex string or ``conv`` round
+      trip exists; the values are the JVM expression's, bit for bit
+      (tests/test_native.py keeps that expression as the oracle).
       56-bit halves keep ``h1 + b*h2`` < 2^61 for num_hashes <= 15 — no
-      int64 overflow under ANSI mode (enforced).
+      int64 overflow (enforced).
     - ``band_md5`` (the round-1..4 default): md5 of 'band:shingle' —
       ``num_hashes`` independent md5 evaluations per shingle; minhash =
       lexicographic min of fixed-width hex = numeric min of the underlying
@@ -109,47 +131,90 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
     explicitly to reproduce round-1..4 signatures.
 
     This is the storage/compute form: all ``num_hashes`` band hashes are
-    computed as columns of the SAME shingle row and reduced in one
-    groupBy(doc_id) with per-band min aggregates — no band-replication of
-    the shingle rows (the former crossJoin form shuffled num_hashes x
-    n_shingles rows through a (doc_id, band) aggregate; this shuffles only
-    map-side-combined partials, one row per doc per map partition). At
-    corpus scale this table is what you persist; downstream consumers
-    explode it on demand.
+    computed as columns of the SAME row (one per shingle, or one per doc
+    under km_md5) and reduced in one groupBy(doc_id) with per-band min
+    aggregates — no band-replication of the shingle rows (the former
+    crossJoin form shuffled num_hashes x n_shingles rows through a
+    (doc_id, band) aggregate; this shuffles only map-side-combined
+    partials, one row per doc per map partition). At corpus scale this
+    table is what you persist; downstream consumers explode it on demand.
     """
-    sh = shingles(docs, k=k)
-    if hash_family in ("km_md5", "km_xxh"):
-        if num_hashes > 15:
-            raise ValueError(f"{hash_family} supports num_hashes <= 15 "
-                             "(56-bit halves keep h1 + b*h2 overflow-free)")
-        if hash_family == "km_md5":
-            hs = (sh.select("doc_id", F.md5("shingle").alias("mh"))
-                  .select("doc_id",
-                          F.conv(F.substring("mh", 1, 14), 16, 10)
-                          .cast("long").alias("h1"),
-                          F.conv(F.substring("mh", 15, 14), 16, 10)
-                          .cast("long").alias("h2")))
-        else:
-            # two independent 56-bit hashes straight from the JVM xxhash64
-            # kernel (salted second draw) — no hex-string round trip
-            mask = F.lit((1 << 56) - 1)
-            hs = sh.select(
-                "doc_id",
-                F.xxhash64("shingle").bitwiseAND(mask).alias("h1"),
-                F.xxhash64("shingle", F.lit(1)).bitwiseAND(mask).alias("h2"))
-        mins = [F.min(F.col("h1") + F.lit(b) * F.col("h2")).alias(f"m{b}")
-                for b in range(num_hashes)]
-        agg = hs.groupBy("doc_id").agg(*mins)
-        return agg.select(
-            "doc_id", F.array(*[F.col(f"m{b}").cast("string")
-                                for b in range(num_hashes)]).alias("sig"))
+    if hash_family in _KM_FAMILIES:
+        return _km_sig_longs(docs, num_hashes, k, hash_family).select(
+            "doc_id", F.col("sig").cast("array<string>").alias("sig"))
     if hash_family != "band_md5":
         raise ValueError(f"unknown hash_family {hash_family!r}")
     mins = [
         F.min(F.md5(F.concat_ws(":", F.lit(b), F.col("shingle")))).alias(f"m{b}")
         for b in range(num_hashes)
     ]
-    agg = sh.groupBy("doc_id").agg(*mins)
+    agg = shingles(docs, k=k).groupBy("doc_id").agg(*mins)
+    return agg.select(
+        "doc_id", F.array(*[f"m{b}" for b in range(num_hashes)]).alias("sig"))
+
+
+_KM_FAMILIES = ("km_md5", "km_xxh")
+
+
+def _km_md5_fn(k: int, num_hashes: int):
+    """mapInArrow closure over (doc_id, text) batches: one row per non-NULL
+    text, (doc_id, m0..m{num_hashes-1}), from one native kernel call per
+    batch over the text column's Arrow buffers (no copy of the text)."""
+    names = ["doc_id"] + [f"m{b}" for b in range(num_hashes)]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            text = batch.column(1)
+            if text.null_count:  # explode(NULL) emitted no shingle either
+                batch = batch.filter(text.is_valid())
+                text = batch.column(1)
+            if batch.num_rows == 0:
+                continue
+            _, offsets, data = text.buffers()
+            wide = pa.types.is_large_string(text.type)  # useLargeVarTypes
+            offs = np.frombuffer(offsets, np.int64 if wide else np.int32)
+            mins = native.km_md5_minhash(
+                np.frombuffer(data, np.uint8),
+                offs[text.offset:text.offset + len(text) + 1], k, num_hashes)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0)] + [pa.array(mins[:, b])
+                                     for b in range(num_hashes)],
+                names=names)
+
+    return fn
+
+
+def _km_sig_longs(docs: DataFrame, num_hashes: int, k: int,
+                  hash_family: str) -> DataFrame:
+    """(doc_id, sig array<bigint>): the KM families' band minima, the one
+    source of their signatures (``minhash_signature_arrays`` stringifies
+    them; ``lsh_candidate_pairs`` buckets on them as they are).
+
+    ``km_md5`` hashes each doc's shingles in one native pass
+    (``native.km_md5_minhash``, a ``mapInArrow`` over (doc_id, text)) and
+    emits one row per doc; ``km_xxh`` explodes shingles into JVM
+    ``xxhash64`` columns. Either way ONE groupBy(doc_id) takes the per-band
+    min, so a repeated doc_id still gets one signature over all its rows.
+    """
+    if num_hashes > 15:
+        raise ValueError(f"{hash_family} supports num_hashes <= 15 "
+                         "(56-bit halves keep h1 + b*h2 overflow-free)")
+    if hash_family == "km_md5":
+        base = ensure_parallelism(docs.select("doc_id", "text"))
+        schema = StructType([base.schema["doc_id"]] + [
+            StructField(f"m{b}", LongType()) for b in range(num_hashes)])
+        hs = base.mapInArrow(_km_md5_fn(k, num_hashes), schema)
+    else:
+        # two independent 56-bit hashes straight from the JVM xxhash64
+        # kernel (salted second draw) — no hex-string round trip
+        mask = F.lit((1 << 56) - 1)
+        h1 = F.xxhash64("shingle").bitwiseAND(mask)
+        h2 = F.xxhash64("shingle", F.lit(1)).bitwiseAND(mask)
+        hs = shingles(docs, k=k).select(
+            "doc_id", *[(h1 + F.lit(b) * h2).alias(f"m{b}")
+                        for b in range(num_hashes)])
+    agg = hs.groupBy("doc_id").agg(*[F.min(f"m{b}").alias(f"m{b}")
+                                     for b in range(num_hashes)])
     return agg.select(
         "doc_id", F.array(*[f"m{b}" for b in range(num_hashes)]).alias("sig"))
 
@@ -310,6 +375,10 @@ def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, k: int = 2,
     linear). None disables the cap. A hot bucket still lands on one
     reducer as a whole member array; the cap is what bounds it.
     """
+    if signatures is None and hash_family in _KM_FAMILIES:
+        # bucket on the bigint band minima: their decimal strings are
+        # injective, so the buckets are those of the string form
+        signatures = _km_sig_longs(docs, num_hashes, k, hash_family)
     sig = minhash_signatures(docs, num_hashes, k, signatures=signatures,
                              hash_family=hash_family)
     buckets = (sig.groupBy("band", "minhash")
@@ -341,13 +410,18 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 2, min_jaccard: float = 0.0,
     already done by an upstream LSH stage instead of recomputing it.
 
     ``prefilter_margin`` (opt-in): signature-level pre-filter BEFORE the
-    exact shingle-set join. The LSH stage's ``n_bands`` column is the
-    number of matching MinHash positions, so ``n_bands / num_hashes`` is
-    the unbiased MinHash Jaccard estimate — a FREE per-pair filter (no
-    extra join, no extra hash) that drops candidates whose estimate sits
-    below ``min_jaccard - prefilter_margin``. The 10M rehearsal produced
-    757M LSH candidates; exactly verifying all of them is the next wall
-    at corpus scale, and most collide on 1 band out of many. The margin
+    exact shingle-set join. The LSH stage's ``n_bands`` column counts the
+    matching MinHash positions whose bucket is within
+    ``lsh_candidate_pairs``' ``max_bucket_size`` (default 10,000): a
+    shared minhash in an over-cap bucket adds nothing, so ``n_bands`` is
+    the number of matching positions only while no matching bucket
+    exceeds the cap, and undercounts it otherwise. In that regime
+    ``n_bands / num_hashes`` is the unbiased MinHash Jaccard estimate — a
+    FREE per-pair filter (no extra join, no extra hash) that drops
+    candidates whose estimate sits below ``min_jaccard - prefilter_margin``.
+    The 10M rehearsal produced 757M LSH candidates; exactly verifying all
+    of them is the next wall at corpus scale, and most collide on 1 band
+    out of many. The margin
     bounds the estimator's noise: with H INDEPENDENT band hashes
     (``band_md5``) the estimate of a true-J pair is Binomial(H, J)/H, so
     P(drop a pair with J >= min_jaccard) <= exp(-2*H*margin^2)

@@ -4,7 +4,8 @@ Tuned for the execution model the engine targets (SURVEY.md §4): AQE on for
 runtime re-planning + skew-join splitting + small-partition coalescing
 (size-aware coalescing per the north rule), Arrow enabled for every
 pandas/Arrow UDF boundary, and ``max(cores, 32)`` shuffle partitions
-(``cores`` defaults to ``SPARK_GRAFT_CPUS``, else 32); every setting stays
+(``cores`` defaults to ``SPARK_GRAFT_CPUS``, else 32), and no Python
+call-site capture for DataFrame error messages; every setting stays
 overridable through ``extra_conf``.
 
 Python workers run under `filterz_spark.spark.pydaemon` instead of
@@ -68,6 +69,11 @@ def get_session(cores: int | None = None, app_name: str = "filterz-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
+        # PySpark 4 captures the Python call site of every DataFrame and
+        # Column call for error messages, at several extra py4j round trips
+        # per call; without it errors lack the file:line fragment. Set it
+        # to "true" through extra_conf to debug a plan.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # cluster-mode twin of the os.environ pinning above
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS",
                 os.environ["OPENBLAS_NUM_THREADS"])

@@ -10,10 +10,14 @@ contract here is exact equality:
   unique, so the chosen seed and the solution equal the oracle's;
 - xorf: the oracle transcribes the kernel's sequential stack peel, so the
   chosen seed and the fingerprint bytes equal the oracle's;
-- every probe answers exactly as the oracle probe does.
+- every probe answers exactly as the oracle probe does;
+- the km_md5 MinHash kernel equals a ``hashlib`` reference and, through
+  Spark, the JVM ``md5``/``conv`` expression it replaced.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pytest
@@ -206,3 +210,83 @@ def test_mulhi64_exact():
         hi = oracle.mulhi64(a, b)
         for x, h in zip(a[:50], hi[:50]):
             assert (int(x) * b) >> 64 == int(h)
+
+
+def _km_md5_ref(text: str, k: int, num_hashes: int) -> list[int]:
+    """Per-band min of h1 + b*h2 over the word k-grams of ``text``, with
+    h1/h2 the first/second 14 hex digits of each shingle's md5."""
+    words = text.split(" ")
+    grams = [" ".join(words[i:i + k])
+             for i in range(max(len(words) - k + 1, 1))]
+    mins = [None] * num_hashes
+    for g in grams:
+        hx = hashlib.md5(g.encode()).hexdigest()
+        h1, h2 = int(hx[:14], 16), int(hx[14:28], 16)
+        mins = [h1 + b * h2 if m is None else min(m, h1 + b * h2)
+                for b, m in enumerate(mins)]
+    return mins
+
+
+def _km_md5_kernel(texts: list[str], k: int, num_hashes: int) -> np.ndarray:
+    raw = [t.encode() for t in texts]
+    data = np.frombuffer(b"".join(raw), dtype=np.uint8)
+    offsets = np.r_[0, np.cumsum([len(r) for r in raw])].astype(np.int64)
+    return native.km_md5_minhash(data, offsets, k, num_hashes)
+
+
+class TestKmMd5Minhash:
+    @pytest.mark.parametrize("length", [0, 55, 56, 63, 64, 65, 119, 120,
+                                        128, 10_240])
+    def test_md5_padding_edges(self, length):
+        """One shingle per doc (k above the word count), so each row is one
+        md5 over ``length`` bytes: 55/56 and 119/120 straddle the one- vs
+        two-block padding, 64 and 128 end on a block boundary."""
+        texts = ["y" * length, ("a b " * length)[:length]]
+        got = _km_md5_kernel(texts, 10_000, 15)
+        assert [r.tolist() for r in got] == [_km_md5_ref(t, 10_000, 15)
+                                             for t in texts]
+
+    @pytest.mark.parametrize("k", [1, 2, 3, 4, 5])
+    def test_word_kgrams(self, k):
+        texts = [" ".join(f"w{i}" for i in range(n)) for n in range(1, 6)]
+        texts += ["", " ", "a  b", " lead", "trail ", "tab\tnl\n x",
+                  "h\u00e9llo \u6f22\u5b57 \U0001f600 end"]
+        got = _km_md5_kernel(texts, k, 8)
+        assert [r.tolist() for r in got] == [_km_md5_ref(t, k, 8) for t in texts]
+
+    def test_k_below_one_refused(self):
+        with pytest.raises(ValueError, match="k must be"):
+            _km_md5_kernel(["a b"], 0, 8)
+
+    def test_spark_signatures_match_jvm_expression(self, spark):
+        """Through ``minhash_signature_arrays``, the kernel's signatures
+        equal the JVM expression it replaced: md5 per exploded shingle, its
+        hex digits 1-14 and 15-28 through ``conv`` to longs, and a per-band
+        min in one groupBy(doc_id). A repeated doc_id gets one signature
+        over all its rows; a NULL text gets none."""
+        from pyspark.sql import functions as F
+
+        from filterz_spark.ops.dedup import minhash_signature_arrays, shingles
+        texts = [None, "", " ", "  ", " lead", "trail ", "dbl  space",
+                 "tab\tand\nnewline x", 'quote " and \\ back',
+                 "h\u00e9llo w\u00f6rld \u6f22\u5b57 \U0001f600 ok",
+                 "one", "a b c d e f g", "x " * 40, "z" * 130 + " tail"]
+        rows = [(i, t) for i, t in enumerate(texts)]
+        rows += [(5, "a repeated doc id"), (5, "its second row")]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        for k in (1, 2, 3):
+            hs = (shingles(docs, k).select("doc_id", F.md5("shingle").alias("mh"))
+                  .select("doc_id",
+                          F.conv(F.substring("mh", 1, 14), 16, 10)
+                          .cast("long").alias("h1"),
+                          F.conv(F.substring("mh", 15, 14), 16, 10)
+                          .cast("long").alias("h2")))
+            jvm = hs.groupBy("doc_id").agg(*[
+                F.min(F.col("h1") + F.lit(b) * F.col("h2")).cast("string")
+                .alias(f"m{b}") for b in range(8)]).select(
+                "doc_id", F.array(*[f"m{b}" for b in range(8)]).alias("sig"))
+            want = {r.doc_id: r.sig for r in jvm.collect()}
+            got = {r.doc_id: r.sig
+                   for r in minhash_signature_arrays(docs, 8, k).collect()}
+            assert got == want
+            assert 0 not in got and len(got) == len(texts) - 1

@@ -83,11 +83,12 @@ def test_text_ops_stay_in_codegen(spark):
 
 
 def test_dedup_against_store_plan_is_jvm_only(spark):
-    """Round-6 gate: the incremental store dedup is md5 + explode + two
-    hash joins, all JVM — no Python stage, and no exchange of anything
-    wider than the (band, minhash) bucket key plus doc_id (doc TEXT must
-    never shuffle; only the final anti-join moves full rows, hashed on
-    doc_id alone)."""
+    """Round-6 gate: the incremental store dedup is the batch's signature
+    pass (one native km_md5 ``MapInArrow`` per document batch, the plan's
+    only Arrow stage) + explode + two hash joins in the JVM — no per-row or
+    Arrow-batched Python UDF, and no exchange of anything wider than the
+    (band, minhash) bucket key plus doc_id (doc TEXT must never shuffle;
+    only the final anti-join moves full rows, hashed on doc_id alone)."""
     from filterz_spark.ops.dedup import (dedup_against_store,
                                          minhash_signature_arrays)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -134,13 +135,16 @@ def test_minhash_signature_single_doc_aggregate(spark):
     num_hashes x n_shingles rows), and exactly one HASH exchange. A
     round-robin exchange from the scan-parallelism guard
     (spark.partitioning.ensure_parallelism — fires only on inputs too
-    small/coarse to feed the cluster) is allowed; it carries pre-explode
-    doc rows, not shingle fan-out."""
+    small/coarse to feed the cluster) is allowed; it carries doc rows.
+    km_md5 (the default) shingles and hashes each doc inside ONE native
+    ``MapInArrow`` pass, so no shingle row exists in the plan: no
+    ``Generate``."""
     from filterz_spark.ops.dedup import minhash_signature_arrays
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     p = plan(minhash_signature_arrays(docs, 8, 2), "simple")
     assert p.count("Exchange hashpartitioning") == 1, p
     assert p.count("Exchange") <= 2, p
+    assert p.count("MapInArrow") == 1 and "Generate" not in p, p
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p, p
 
 

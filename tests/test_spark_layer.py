@@ -611,3 +611,41 @@ class TestTreeMergePartitionCount:
         want = tree_merge(states).estimate()
         got = tree_merge(BrokenPrivateApi(states)).estimate()
         assert got == want
+
+
+class TestSessionDefaults:
+    """get_session's conf, read off a recording builder (no JVM)."""
+
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def master(self, _):
+            return self
+
+        appName = master
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    def _conf(self, monkeypatch, **extra_conf):
+        from types import SimpleNamespace
+
+        from filterz_spark.spark import session
+        monkeypatch.setattr(session, "SparkSession",
+                            SimpleNamespace(builder=self.Recorder()))
+        return session.get_session(cores=2, **extra_conf)
+
+    def test_origin_capture_off_by_default(self, monkeypatch, spark):
+        key = "spark.python.sql.dataFrameDebugging.enabled"
+        assert self._conf(monkeypatch)[key] == "false"
+        assert spark.conf.get(key) == "false"
+
+    def test_extra_conf_turns_origin_capture_back_on(self, monkeypatch):
+        conf = self._conf(monkeypatch, **{
+            "spark.python.sql.dataFrameDebugging.enabled": "true"})
+        assert conf["spark.python.sql.dataFrameDebugging.enabled"] == "true"
