@@ -1014,7 +1014,7 @@ def _q_media_features(spark, sf_dir):
     payload), and the payload byte length visible to both engines."""
     from filterz_spark.ops.multimodal import attach_media, decode_image_features
     media = attach_media(_t(spark, sf_dir, "documents"))
-    feats = decode_image_features(media, fake=True)
+    feats = decode_image_features(media)
     return (feats.join(media.select("media_id", F.length("payload").cast("long")
                                     .alias("n_payload_bytes")),
                        "media_id")

@@ -37,8 +37,8 @@ import math
 
 import numpy as np
 
-from .. import native
-from ..hashing import SplitMix64
+from .. import codec, native
+from ..hashing import splitmix64_array
 
 MIN_MULTIPLIER = 103  # ref src/ribbon.zig:52
 MAX_MULTIPLIER = 140  # ref src/ribbon.zig:53
@@ -106,12 +106,12 @@ def construct(hashes: np.ndarray, coeff_bits: int, result_bits: int):
     _check_params(coeff_bits, result_bits)
     harr = np.asarray(hashes, dtype=np.uint64)
     n = int(harr.size)
-    rng = SplitMix64(INITIAL_SEED)
-    for multiplier in range(_start_multiplier(coeff_bits, n), MAX_MULTIPLIER + 1):
+    multipliers = range(_start_multiplier(coeff_bits, n), MAX_MULTIPLIER + 1)
+    seeds = splitmix64_array(INITIAL_SEED, len(multipliers) * NUM_TRIES)
+    for multiplier, tries in zip(multipliers, seeds.reshape(-1, NUM_TRIES)):
         size = calculate_size(coeff_bits, n, multiplier)
         sol = np.empty(size, dtype=np.uint64)
-        for _try in range(NUM_TRIES):
-            seed = rng.next()
+        for seed in map(int, tries):
             if native.ribbon_attempt(harr, seed, size, coeff_bits,
                                      result_bits, sol):
                 return seed, sol.astype(_storage_dtype(result_bits))
@@ -173,12 +173,12 @@ class RibbonFilter:
         }
 
     def serialize(self) -> bytes:
-        return self.solution.astype(self.solution.dtype.newbyteorder("<")).tobytes()
+        return codec.encode(self.solution)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "RibbonFilter":
         result_bits = int(params["result_bits"])
-        dtype = np.dtype(_storage_dtype(result_bits)).newbyteorder("<")
-        sol = np.frombuffer(payload, dtype=dtype).astype(_storage_dtype(result_bits), copy=False)
+        sol = codec.decode(cls.kind, payload, _storage_dtype(result_bits),
+                           int(params["size"]))
         return cls(sol, int(params["seed"]), int(params["coeff_bits"]),
                    result_bits, int(params["num_keys"]))

@@ -11,7 +11,8 @@ follows the Apache Parquet BloomFilter spec):
   (ref src/sbbf.zig:72-80) — 8 bits per key, one cache line per probe;
 - sizing: ``roundup(ceil(bits_per_key * n / 8), 64)`` bytes, zero-initialized
   (ref src/sbbf.zig:94-107);
-- serialized bytes are little-endian u64 lanes (ref src/sbbf.zig:9-26).
+- serialized bytes are little-endian u64 lanes (ref src/sbbf.zig:9-26),
+  written and length-checked by ``filterz_spark.codec``.
 
 Insert and probe take whole uint64 hash arrays per call, never per-row
 Python; the per-key loop runs in ``native/kernels.c``.
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .. import native
+from .. import codec, native
 
 BLOCK_SIZE = 64  # bytes per block (ref src/sbbf.zig:7)
 LANES = 8
@@ -39,9 +40,14 @@ def num_bytes(num_keys: int, bits_per_key: int) -> int:
     return (raw + BLOCK_SIZE - 1) // BLOCK_SIZE * BLOCK_SIZE
 
 
+def block_shape(num_keys: int, bits_per_key: int) -> tuple[int, int]:
+    """(num_blocks, 8): the block array's shape for the given capacity."""
+    return num_bytes(num_keys, bits_per_key) // BLOCK_SIZE, LANES
+
+
 def empty_blocks(num_keys: int, bits_per_key: int) -> np.ndarray:
     """Zeroed (num_blocks, 8) uint64 block array for the given capacity."""
-    return np.zeros((num_bytes(num_keys, bits_per_key) // BLOCK_SIZE, LANES), dtype=np.uint64)
+    return np.zeros(block_shape(num_keys, bits_per_key), dtype=np.uint64)
 
 
 def insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
@@ -83,16 +89,6 @@ def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.bitwise_or(a, b)
 
 
-def serialize(blocks: np.ndarray) -> bytes:
-    """Little-endian u64 lane bytes (ref src/sbbf.zig:9-26 normalizes to LE)."""
-    return blocks.astype("<u8", copy=False).tobytes()
-
-
-def deserialize(payload: bytes) -> np.ndarray:
-    arr = np.frombuffer(payload, dtype="<u8").astype(np.uint64, copy=False)
-    return arr.reshape(-1, LANES)
-
-
 class SbbfFilter:
     """Build-once SBBF over a deduplicated u64 hash array.
 
@@ -126,8 +122,11 @@ class SbbfFilter:
         return {"bits_per_key": str(self.bits_per_key), "num_keys": str(self.num_keys)}
 
     def serialize(self) -> bytes:
-        return serialize(self.blocks)
+        return codec.encode(self.blocks)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "SbbfFilter":
-        return cls(deserialize(payload), int(params["bits_per_key"]), int(params["num_keys"]))
+        bits_per_key, num_keys = int(params["bits_per_key"]), int(params["num_keys"])
+        blocks = codec.decode(cls.kind, payload, np.uint64,
+                              block_shape(num_keys, bits_per_key))
+        return cls(blocks, bits_per_key, num_keys)

@@ -52,8 +52,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .. import native
-from ..hashing import SplitMix64
+from .. import codec, native
+from ..hashing import splitmix64_array
 
 SEED_SEQUENCE_INIT = 0x726B2B9D438B9D4D  # ref src/xorf.zig:134
 MAX_ATTEMPTS = 100  # ref src/xorf.zig:137-139
@@ -154,12 +154,11 @@ def construct(hashes: np.ndarray, arity: int, fp_bits: int):
     n = int(hashes.size)
     header = calculate_header(arity, n)
     hashes = hashes.astype(np.uint64, copy=False)
-    rng = SplitMix64(SEED_SEQUENCE_INIT)
     # empty, not zeros: the kernel memsets fp_out itself before the (only)
     # assignment pass that runs on a full peel
     fp64 = np.empty(header.array_length, dtype=np.uint64)
-    for _ in range(MAX_ATTEMPTS):
-        header.seed = rng.next()
+    for seed in splitmix64_array(SEED_SEQUENCE_INIT, MAX_ATTEMPTS):
+        header.seed = int(seed)
         peeled = native.xorf_attempt(
             hashes, header.seed, arity, header.segment_length,
             header.segment_count_length, header.array_length, fp_bits, fp64)
@@ -240,7 +239,7 @@ class XorFilter:
         }
 
     def serialize(self) -> bytes:
-        return self.fingerprints.astype(self.fingerprints.dtype.newbyteorder("<")).tobytes()
+        return codec.encode(self.fingerprints)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "XorFilter":
@@ -257,6 +256,6 @@ class XorFilter:
             segment_count_length=seg_count * seg_len,
             array_length=int(params["array_length"]),
         )
-        dtype = np.dtype(_storage_dtype(fp_bits)).newbyteorder("<")
-        fps = np.frombuffer(payload, dtype=dtype).astype(_storage_dtype(fp_bits), copy=False)
+        fps = codec.decode(cls.kind, payload, _storage_dtype(fp_bits),
+                           header.array_length)
         return cls(header, fps, arity, fp_bits, int(params["num_keys"]))

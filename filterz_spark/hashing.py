@@ -25,9 +25,6 @@ from __future__ import annotations
 
 import numpy as np
 
-U64 = np.uint64
-_MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
-
 # SplitMix64 constants (public domain, Vigna 2015; same as Zig std.Random.SplitMix64)
 _SM_GAMMA = np.uint64(0x9E3779B97F4A7C15)
 _SM_MUL1 = np.uint64(0xBF58476D1CE4E5B9)
@@ -39,38 +36,28 @@ _M2_M = np.uint64(0xC6A4A7935BD1E995)
 _M2_LEN_MUL = np.uint64((8 * 0xC6A4A7935BD1E995) & 0xFFFFFFFFFFFFFFFF)
 
 
-class SplitMix64:
-    """Bit-exact SplitMix64 stream (matches Zig std.Random.SplitMix64).
-
-    Used for the deterministic construction-seed sequences:
-    xor filter seeds start from 0x726b2b9d438b9d4d (ref src/xorf.zig:134),
-    ribbon seeds start from 12 (ref src/ribbon.zig:208).
-    """
-
-    __slots__ = ("state",)
-
-    def __init__(self, seed: int) -> None:
-        self.state = seed & 0xFFFFFFFFFFFFFFFF
-
-    def next(self) -> int:
-        self.state = (self.state + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-        z = self.state
-        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-        return (z ^ (z >> 31)) & 0xFFFFFFFFFFFFFFFF
+def splitmix64(x: np.ndarray) -> np.ndarray:
+    """The SplitMix64 finalizer of ``x + gamma`` (the generator's output
+    from state ``x``), over any integer scalar or array read as u64.
+    The package's one copy of the finalizer."""
+    with np.errstate(over="ignore"):  # u64 wraparound is the algorithm
+        z = np.asarray(x).astype(np.uint64, copy=False) + _SM_GAMMA
+        z = (z ^ (z >> np.uint64(30))) * _SM_MUL1
+        z = (z ^ (z >> np.uint64(27))) * _SM_MUL2
+        return z ^ (z >> np.uint64(31))
 
 
 def splitmix64_array(seed: int, n: int) -> np.ndarray:
-    """First ``n`` outputs of SplitMix64(seed) as a uint64 array (vectorized).
+    """First ``n`` outputs of SplitMix64(seed) as a uint64 array.
 
-    SplitMix64's state advances by a constant gamma, so the whole stream is
-    a pure function of ``seed + i*gamma`` — computable in one numpy pass.
+    Bit-exact to Zig ``std.Random.SplitMix64``. Its state advances by a
+    constant gamma, so output ``i`` is ``splitmix64(seed + i*gamma)``:
+    the construction-seed sequences draw from it, xor filter seeds from
+    0x726b2b9d438b9d4d (ref src/xorf.zig:134), ribbon seeds from 12
+    (ref src/ribbon.zig:208).
     """
-    i = np.arange(1, n + 1, dtype=np.uint64)
-    z = np.uint64(seed) + i * _SM_GAMMA
-    z = (z ^ (z >> np.uint64(30))) * _SM_MUL1
-    z = (z ^ (z >> np.uint64(27))) * _SM_MUL2
-    return z ^ (z >> np.uint64(31))
+    return splitmix64(np.uint64(seed & 0xFFFFFFFFFFFFFFFF)
+                      + np.arange(n, dtype=np.uint64) * _SM_GAMMA)
 
 
 def murmur64_mix(hashes: np.ndarray, seed: int) -> np.ndarray:

@@ -22,6 +22,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from ..hashing import splitmix64
+
 
 def _dot_expr(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -75,10 +77,7 @@ def _hyperplanes(num_planes: int, dim: int) -> np.ndarray:
     """Deterministic +-1 hyperplanes from the SplitMix64 finalizer."""
     idx = (np.arange(num_planes, dtype=np.uint64)[:, None] * np.uint64(1_000_003)
            + np.arange(dim, dtype=np.uint64)[None, :])
-    z = idx + np.uint64(0x9E3779B97F4A7C15)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    z = z ^ (z >> np.uint64(31))
+    z = splitmix64(idx)
     return np.where((z & np.uint64(1)).astype(bool), 1.0, -1.0)
 
 

@@ -8,7 +8,8 @@ north-rule extensions (HLL, count-min, t-digest, KLL, Bloom) are all
     update(batch)    — absorb a vectorized batch (numpy array, never per-row)
     merge(other)     — associative + commutative combine
     estimate(...)    — sketch-specific query
-    serialize()/deserialize() — stable little-endian byte payload
+    serialize()/deserialize() — stable little-endian byte payload,
+                                length-checked by ``filterz_spark.codec``
 
 which is exactly the contract Spark's ``treeAggregate`` / two-level
 ``applyInPandas`` aggregation needs: partials build independently per
@@ -54,15 +55,6 @@ class MergeableSketch(ABC):
     @abstractmethod
     def params(self) -> dict:
         """String->string parameter map (stored next to the payload)."""
-
-    @classmethod
-    def check_size(cls, payload: bytes, size: int) -> None:
-        """Refuse a payload whose length is not the ``size`` bytes its
-        header or params describe: trailing or missing bytes mean a
-        corrupt or mislabelled state, which must never decode silently."""
-        if len(payload) != size:
-            raise ValueError(f"{cls.kind} payload is {len(payload)} bytes; "
-                             f"its header/params describe {size}")
 
     def check_compatible(self, other: "MergeableSketch") -> None:
         if self.kind != other.kind:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .. import codec
 from ..filters import sbbf
 from .base import MergeableSketch
 
@@ -65,15 +66,11 @@ class BloomSketch(MergeableSketch):
         }
 
     def serialize(self) -> bytes:
-        return sbbf.serialize(self.blocks)
+        return codec.encode(self.blocks)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "BloomSketch":
-        cls.check_size(payload, sbbf.num_bytes(int(params["capacity"]),
-                                               int(params["bits_per_key"])))
-        return cls(
-            sbbf.deserialize(payload).copy(),
-            int(params["capacity"]),
-            int(params["bits_per_key"]),
-            int(params.get("num_inserted", 0)),
-        )
+        capacity, bits_per_key = int(params["capacity"]), int(params["bits_per_key"])
+        blocks = codec.decode(cls.kind, payload, np.uint64,
+                              sbbf.block_shape(capacity, bits_per_key))
+        return cls(blocks, capacity, bits_per_key, int(params.get("num_inserted", 0)))

@@ -16,6 +16,7 @@ import math
 
 import numpy as np
 
+from .. import codec
 from ..hashing import murmur64_mix, reduce32, splitmix64_array
 from .base import MergeableSketch
 
@@ -95,11 +96,10 @@ class CmsSketch(MergeableSketch):
         return {"depth": str(self.depth), "width": str(self.width), "total": str(self.total)}
 
     def serialize(self) -> bytes:
-        return self.table.astype("<i8", copy=False).tobytes()
+        return codec.encode(self.table)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "CmsSketch":
         d, w = int(params["depth"]), int(params["width"])
-        cls.check_size(payload, 8 * d * w)
-        table = np.frombuffer(payload, dtype="<i8").astype(np.int64, copy=False).reshape(d, w)
-        return cls(table.copy(), int(params.get("total", 0)))
+        return cls(codec.decode(cls.kind, payload, np.int64, (d, w)),
+                   int(params.get("total", 0)))

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .. import codec
 from .base import MergeableSketch
 
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
@@ -85,10 +86,9 @@ class HllSketch(MergeableSketch):
         return {"p": str(self.p)}
 
     def serialize(self) -> bytes:
-        return self.registers.tobytes()
+        return codec.encode(self.registers)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "HllSketch":
         p = int(params["p"])
-        cls.check_size(payload, 1 << p)
-        return cls(np.frombuffer(payload, dtype=np.uint8).copy(), p)
+        return cls(codec.decode(cls.kind, payload, np.uint8, 1 << p), p)

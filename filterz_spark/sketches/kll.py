@@ -19,7 +19,8 @@ import struct
 
 import numpy as np
 
-from ..hashing import SplitMix64
+from .. import codec
+from ..hashing import splitmix64
 from .base import MergeableSketch
 
 _COIN_SEED = 0x5EEDC0FFEE  # fixed; coins drawn per-compaction deterministically
@@ -46,7 +47,7 @@ class KllSketch(MergeableSketch):
 
     def _compact_level(self, level: int) -> None:
         items = np.sort(self.levels[level], kind="stable")
-        coin = SplitMix64(_COIN_SEED + self.compactions).next() & 1
+        coin = int(splitmix64(_COIN_SEED + self.compactions)) & 1
         self.compactions += 1
         kept = items[coin::2]
         self.levels[level] = np.empty(0)
@@ -137,16 +138,16 @@ class KllSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "KllSketch":
-        cls.check_size(payload[:24], 24)
+        codec.check_size(cls.kind, payload[:24], 24)
         n, compactions, nlev = struct.unpack_from("<qqq", payload, 0)
         off = 24
         levels = []
         for _ in range(nlev):
-            cls.check_size(payload[off:off + 8], 8)
+            codec.check_size(cls.kind, payload[off:off + 8], 8)
             (sz,) = struct.unpack_from("<q", payload, off)
             off += 8
-            cls.check_size(payload[off:off + 8 * sz], 8 * sz)
+            codec.check_size(cls.kind, payload[off:off + 8 * sz], 8 * sz)
             levels.append(np.frombuffer(payload, dtype="<f8", count=sz, offset=off).astype(np.float64))
             off += 8 * sz
-        cls.check_size(payload, off)
+        codec.check_size(cls.kind, payload, off)
         return cls(levels, int(params["k"]), n, compactions)

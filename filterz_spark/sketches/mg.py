@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .. import codec
 from .base import MergeableSketch
 
 
@@ -124,9 +125,9 @@ class MisraGriesSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "MisraGriesSketch":
-        cls.check_size(payload[:16], 16)
+        codec.check_size(cls.kind, payload[:16], 16)
         n, size = (int(v) for v in np.frombuffer(payload[:16], dtype=np.int64))
-        cls.check_size(payload, 16 + 16 * size)
+        codec.check_size(cls.kind, payload, 16 + 16 * size)
         keys = np.frombuffer(payload[16:16 + 8 * size], dtype=np.int64)
         vals = np.frombuffer(payload[16 + 8 * size:], dtype=np.int64)
         return cls(dict(zip(keys.tolist(), vals.tolist())), int(params["k"]), n)

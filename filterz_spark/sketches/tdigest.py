@@ -20,6 +20,7 @@ import struct
 
 import numpy as np
 
+from .. import codec
 from .base import MergeableSketch
 
 
@@ -143,10 +144,10 @@ class TDigestSketch(MergeableSketch):
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "TDigestSketch":
-        cls.check_size(payload[:24], 24)
+        codec.check_size(cls.kind, payload[:24], 24)
         n, vmin, vmax = struct.unpack_from("<qdd", payload, 0)
         off = 24
-        cls.check_size(payload, off + 16 * n)
+        codec.check_size(cls.kind, payload, off + 16 * n)
         means = np.frombuffer(payload, dtype="<f8", count=n, offset=off).astype(np.float64)
         weights = np.frombuffer(payload, dtype="<f8", count=n, offset=off + 8 * n).astype(np.float64)
         return cls(means, weights, int(params["delta"]), vmin, vmax)

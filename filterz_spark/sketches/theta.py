@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .. import codec
 from .base import MergeableSketch
 
 _FULL = float(2**64)
@@ -123,10 +124,9 @@ class ThetaSketch(MergeableSketch):
                 "n": str(self.retained.size)}
 
     def serialize(self) -> bytes:
-        return self.retained.astype("<u8", copy=False).tobytes()
+        return codec.encode(self.retained)
 
     @classmethod
     def deserialize(cls, payload: bytes, params: dict) -> "ThetaSketch":
-        cls.check_size(payload, 8 * int(params["n"]))
-        retained = np.frombuffer(payload, dtype="<u8").astype(np.uint64, copy=False)
+        retained = codec.decode(cls.kind, payload, np.uint64, int(params["n"]))
         return cls(int(params["k"]), int(params["theta"]), retained)

@@ -21,6 +21,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from ..hashing import splitmix64
+
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 _LANGS = ["en", "zh", "es", "de", "fr", "pt", "ru", "ja", "ar", "hi", "ko", "it", "nl"]
@@ -28,14 +30,6 @@ _LANG_CUM = np.cumsum([0.60, 0.15, 0.08, 0.05, 0.04] + [0.01] * 8)
 _NUM_HOSTS = 1000
 _VOCAB_SIZE = 5000
 _EPOCH_US = 1_767_225_600_000_000  # 2026-01-01T00:00:00Z in microseconds
-
-
-def _mix(x: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer — deterministic per-row randomness."""
-    z = x.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
 
 
 def _zipf_cdf(n: int, a: float) -> np.ndarray:
@@ -79,22 +73,22 @@ def generate_batch(row_ids: np.ndarray, vocab: str = "uniform5k") -> dict:
     structure resembles a real web corpus; token strings are ``z<rank>``
     so the two vocabularies never collide with each other."""
     rid = row_ids.astype(np.uint64)
-    host_idx = np.searchsorted(_HOST_CDF, _u01(_mix(rid)))
-    lang_idx = np.searchsorted(_LANG_CUM, _u01(_mix(rid ^ np.uint64(0xA5A5))))
+    host_idx = np.searchsorted(_HOST_CDF, _u01(splitmix64(rid)))
+    lang_idx = np.searchsorted(_LANG_CUM, _u01(splitmix64(rid ^ np.uint64(0xA5A5))))
     lang_idx = np.minimum(lang_idx, len(_LANGS) - 1)
-    n_tokens = 20 + (_mix(rid ^ np.uint64(0x7777)) % np.uint64(181)).astype(np.int64)
+    n_tokens = 20 + (splitmix64(rid ^ np.uint64(0x7777)) % np.uint64(181)).astype(np.int64)
 
     max_t = int(n_tokens.max()) if len(n_tokens) else 0
     tok_seed = rid[:, None] * np.uint64(1_000_003) + np.arange(max_t, dtype=np.uint64)[None, :]
     texts = []
     if vocab == "zipf":
-        ranks = np.searchsorted(_zipf_vocab(), _u01(_mix(tok_seed)))
+        ranks = np.searchsorted(_zipf_vocab(), _u01(splitmix64(tok_seed)))
         # ranks are ints; render the token strings row-wise without
         # materializing a 250k-entry string vocab array per worker
         for i in range(len(rid)):
             texts.append(" ".join(f"z{t}" for t in ranks[i, : n_tokens[i]]))
     elif vocab == "uniform5k":
-        tok_idx = (_mix(tok_seed) % np.uint64(_VOCAB_SIZE)).astype(np.int64)
+        tok_idx = (splitmix64(tok_seed) % np.uint64(_VOCAB_SIZE)).astype(np.int64)
         toks = _VOCAB[tok_idx]
         for i in range(len(rid)):
             texts.append(" ".join(toks[i, : n_tokens[i]]))

@@ -35,13 +35,10 @@ def plan_partitions(df: DataFrame) -> int:
 
     Reads the JVM-side planned RDD: unlike ``.rdd`` this never builds the
     python-serialized RDD wrapper (it only plans, which the next job would
-    do anyway). Private API, so it falls back to the public ``.rdd``
-    wrapper on Spark versions without it.
+    do anyway). ``_jdf`` is private API; Spark 4.1.2 (classic, not
+    Connect) is the supported platform, and any error it raises surfaces.
     """
-    try:
-        return df._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:
-        return df.rdd.getNumPartitions()
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 
 from filterz_spark.filters import ribbon, xorf
-from filterz_spark.hashing import SplitMix64, murmur64_mix
+from filterz_spark.hashing import murmur64_mix, splitmix64_array
 
 _M64 = (1 << 64) - 1
 
@@ -173,9 +173,8 @@ def xorf_construct(hashes: np.ndarray, arity: int, fp_bits: int):
     """(header, fingerprints) over the library's seed sequence."""
     hashes = hashes.astype(np.uint64, copy=False)
     header = xorf.calculate_header(arity, int(hashes.size))
-    rng = SplitMix64(xorf.SEED_SEQUENCE_INIT)
-    for _ in range(xorf.MAX_ATTEMPTS):
-        header.seed = rng.next()
+    for seed in splitmix64_array(xorf.SEED_SEQUENCE_INIT, xorf.MAX_ATTEMPTS):
+        header.seed = int(seed)
         fps = xorf_attempt(hashes, header.seed, arity, header, fp_bits)
         if fps is not None:
             return header, fps.astype(xorf._storage_dtype(fp_bits))
@@ -324,12 +323,14 @@ def ribbon_construct(hashes: np.ndarray, coeff_bits: int, result_bits: int):
     """(seed, solution) over the library's (multiplier, seed) sweep."""
     harr = np.asarray(hashes, dtype=np.uint64)
     n = int(harr.size)
-    rng = SplitMix64(ribbon.INITIAL_SEED)
-    for multiplier in range(ribbon._start_multiplier(coeff_bits, n),
-                            ribbon.MAX_MULTIPLIER + 1):
+    multipliers = range(ribbon._start_multiplier(coeff_bits, n),
+                        ribbon.MAX_MULTIPLIER + 1)
+    seeds = iter(splitmix64_array(ribbon.INITIAL_SEED,
+                                  len(multipliers) * ribbon.NUM_TRIES))
+    for multiplier in multipliers:
         size = ribbon.calculate_size(coeff_bits, n, multiplier)
         for _ in range(ribbon.NUM_TRIES):
-            seed = rng.next()
+            seed = int(next(seeds))
             sol = ribbon_attempt(harr, seed, size, coeff_bits, result_bits)
             if sol is not None:
                 return seed, sol.astype(ribbon._storage_dtype(result_bits))

@@ -120,3 +120,28 @@ def test_resize_preserves_byte_sum_for_arbitrary_payloads(payloads):
     for i, px in enumerate(out.column(1).to_pylist()):
         assert len(px) == 64
         assert sum(px) * 4 == sum(payloads[i][:256])
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(payloads=st.lists(st.one_of(st.none(), st.binary(max_size=600)),
+                         min_size=1, max_size=20))
+def test_feature_decoder_matches_per_row_reference(payloads):
+    """The batch fake feature codec equals its per-row definition: zero-pad
+    the payload to little-endian u64 blocks, splitmix64 each block,
+    histogram the hashes into the feature buckets and divide by the block
+    count (a NULL or empty payload gives zeros)."""
+    import pyarrow as pa
+    from filterz_spark.hashing import splitmix64
+    from filterz_spark.ops.multimodal import IMAGE_FEATURE_DIM, fake_feature_decoder
+
+    got = fake_feature_decoder(pa.array(payloads, pa.binary()))
+    assert got.shape == (len(payloads), IMAGE_FEATURE_DIM)
+    for row, p in zip(got, payloads):
+        p = p or b""
+        blocks = np.frombuffer(p + bytes(-len(p) % 8), dtype="<u8")
+        want = np.zeros(IMAGE_FEATURE_DIM)
+        for z in splitmix64(blocks):
+            want[int(z) % IMAGE_FEATURE_DIM] += 1
+        np.testing.assert_array_equal(
+            row, (want / max(blocks.size, 1)).astype(np.float32))

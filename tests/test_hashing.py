@@ -10,7 +10,7 @@ for vectorized/scalar agreement and algebraic properties.
 import numpy as np
 
 from filterz_spark.hashing import (
-    SplitMix64, murmur64_mix, reduce32, splitmix64_array,
+    murmur64_mix, reduce32, splitmix64, splitmix64_array,
 )
 
 # first outputs of SplitMix64(seed=0), Vigna reference implementation
@@ -20,15 +20,24 @@ SPLITMIX64_SEED0 = [
 
 
 def test_splitmix64_published_vectors():
-    sm = SplitMix64(0)
-    assert [sm.next() for _ in range(3)] == SPLITMIX64_SEED0
+    assert [int(x) for x in splitmix64_array(0, 3)] == SPLITMIX64_SEED0
 
 
 def test_splitmix64_scalar_vector_agree():
-    for seed in (0, 12, 0x726B2B9D438B9D4D):
-        sm = SplitMix64(seed)
-        scalars = [sm.next() for _ in range(100)]
-        assert scalars == [int(x) for x in splitmix64_array(seed, 100)]
+    """The vectorized stream equals a scalar transliteration of Vigna's
+    ``next()`` (state += gamma, then the finalizer), and the finalizer
+    gives the same word for a scalar and an array argument."""
+    mask = (1 << 64) - 1
+    for seed in (0, 12, 0x726B2B9D438B9D4D, mask):
+        state, scalars = seed, []
+        for _ in range(100):
+            state = (state + 0x9E3779B97F4A7C15) & mask
+            z = ((state ^ (state >> 30)) * 0xBF58476D1CE4E5B9) & mask
+            z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+            scalars.append(z ^ (z >> 31))
+        stream = splitmix64_array(seed, 100)
+        assert scalars == [int(x) for x in stream]
+        assert int(splitmix64(seed)) == scalars[0] == int(stream[0])
 
 
 def test_murmur64_mix_properties():

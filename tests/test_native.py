@@ -189,16 +189,19 @@ def test_broken_compiler_fails_loudly(monkeypatch, tmp_path):
 
 def test_native_sbbf_insert_rejects_read_only_blocks():
     """ndpointer does not check WRITEABLE: without the guard, inserting
-    into a deserialized (bytes-backed, read-only) filter would silently
-    corrupt the immutable payload every other holder shares."""
+    into a bytes-backed (read-only) block array would silently corrupt
+    the immutable payload every other holder shares. Deserialize decodes
+    into a writable copy, so inserting there leaves the payload as is."""
     f = SbbfFilter.build(splitmix64_array(1, 2000), bits_per_key=16)
     payload = f.serialize()
-    g = SbbfFilter.deserialize(payload, f.params())
     snapshot = bytes(payload)
+    view = np.frombuffer(payload, dtype=np.uint64).reshape(-1, sbbf.LANES)
     with pytest.raises(ValueError, match="read-only"):
-        native.sbbf_insert(g.blocks, splitmix64_array(2, 10))
+        native.sbbf_insert(view, splitmix64_array(2, 10))
     with pytest.raises(ValueError, match="read-only"):
-        native.sbbf_insert_check(g.blocks, splitmix64_array(2, 10))
+        native.sbbf_insert_check(view, splitmix64_array(2, 10))
+    g = SbbfFilter.deserialize(payload, f.params())
+    native.sbbf_insert(g.blocks, splitmix64_array(2, 10))
     assert bytes(payload) == snapshot
 
 

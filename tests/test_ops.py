@@ -384,12 +384,6 @@ class TestMultimodal:
         assert f1 == f2
         assert all(len(v) == 16 for v in f1.values())
 
-    def test_real_decode_stub_raises(self, spark, docs):
-        from filterz_spark.ops.multimodal import attach_media, decode_image_features
-        media = attach_media(docs.limit(2))
-        with pytest.raises(Exception, match="NotImplementedError|real image decode"):
-            decode_image_features(media, fake=False).collect()
-
     def test_custom_decoder_injection(self, spark, docs):
         """The codec boundary is the decoder= callable: a user-supplied
         batch decoder replaces the fake codec without touching the
@@ -434,11 +428,33 @@ class TestMultimodal:
             assert len(px[mid]) == 64
             assert sum(px[mid]) * 4 == sum(p[:256])
 
-    def test_resize_real_stub_raises(self, spark, docs):
-        from filterz_spark.ops.multimodal import attach_media, resize_image
-        media = attach_media(docs.limit(2))
-        with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-            resize_image(media, fake=False).collect()
+    def test_null_payload_decodes_like_empty(self, spark):
+        """A NULL payload decodes and resizes exactly like an empty one,
+        also when the NULL slot's offsets span bytes of the values buffer
+        (Arrow leaves a NULL slot's contents undefined)."""
+        import numpy as np
+        import pyarrow as pa
+        from filterz_spark.ops.multimodal import (
+            decode_image_features, fake_feature_decoder, fake_grid_decoder,
+            resize_image)
+        media = spark.createDataFrame(
+            [(1, None), (2, b""), (3, b"some payload bytes"), (4, None)],
+            "media_id long, payload binary")
+        feats = {r["media_id"]: r["features"]
+                 for r in decode_image_features(media).collect()}
+        px = {r["media_id"]: r["pixels"] for r in resize_image(media).collect()}
+        for out in (feats, px):
+            assert out[1] == out[2] == out[4] == [0.0] * len(out[2])
+            assert any(out[3])
+        # NULL slot 1 spans "xyz" in the values buffer
+        arr = pa.Array.from_buffers(
+            pa.binary(), 3,
+            [pa.py_buffer(np.packbits([1, 0, 1], bitorder="little").tobytes()),
+             pa.py_buffer(np.array([0, 2, 5, 5], np.int32).tobytes()),
+             pa.py_buffer(b"abxyz")], null_count=1)
+        empty = pa.array([b"ab", b"", b""], pa.binary())
+        for decode in (fake_feature_decoder, fake_grid_decoder):
+            np.testing.assert_array_equal(decode(arr), decode(empty))
 
     def test_resize_rejects_non_divisor_dims(self, spark, docs):
         from filterz_spark.ops.multimodal import attach_media, resize_image

@@ -13,6 +13,7 @@ import random
 import numpy as np
 import pytest
 
+from filterz_spark.filters import FILTER_KINDS
 from filterz_spark.hashing import splitmix64_array
 from filterz_spark.sketches import (
     SKETCH_KINDS, BloomSketch, CmsSketch, HllSketch, KllSketch, TDigestSketch,
@@ -370,20 +371,27 @@ _SMALL_PARAMS = {"bloom": {"capacity": 1000}, "hll": {"p": 10},
                  "mg": {"k": 16}}
 
 
-@pytest.mark.parametrize("kind", sorted(SKETCH_KINDS))
+@pytest.mark.parametrize("kind", sorted({**SKETCH_KINDS, **FILTER_KINDS}))
 def test_payload_length_must_match_params(kind):
     """A payload with trailing or missing bytes is corrupt or mislabelled:
-    deserialize must raise, never decode it into a different state."""
-    cls = SKETCH_KINDS[kind]
-    s = cls.zero(**_SMALL_PARAMS.get(kind, {}))
+    deserialize must raise, never decode it into a different state or
+    hand a short array to a filter probe. Deltas of one u64 word and of
+    one 64-byte SBBF block, for every filter and sketch kind."""
     h = splitmix64_array(5, 2000)
-    s.update(np.random.default_rng(5).normal(size=2000)
-             if kind in ("kll", "tdigest") else h)
+    if kind in FILTER_KINDS:
+        cls = FILTER_KINDS[kind]
+        s = cls.build(np.unique(h))
+    else:
+        cls = SKETCH_KINDS[kind]
+        s = cls.zero(**_SMALL_PARAMS.get(kind, {}))
+        s.update(np.random.default_rng(5).normal(size=2000)
+                 if kind in ("kll", "tdigest") else h)
     payload, params = s.serialize(), s.params()
     assert cls.deserialize(payload, params).serialize() == payload
-    for bad in (payload + bytes(8), payload[:-8]):
-        with pytest.raises(ValueError):
-            cls.deserialize(bad, params)
+    for delta in (8, 64):
+        for bad in (payload + bytes(delta), payload[:-delta]):
+            with pytest.raises(ValueError, match=f"{kind} payload is"):
+                cls.deserialize(bad, params)
 
 
 @pytest.mark.parametrize("kind,params", [("tdigest", {"delta": 50}),

@@ -31,7 +31,7 @@ import pytest
 
 from filter_oracle import make_subhashes
 from filterz_spark.filters.xorf import calculate_header
-from filterz_spark.hashing import SplitMix64, murmur64_mix, splitmix64_array
+from filterz_spark.hashing import murmur64_mix, splitmix64_array
 
 SEED_SEQUENCE_INIT = 0x726B2B9D438B9D4D  # ref src/xorf.zig:134
 NUM_SEEDS = 20
@@ -88,10 +88,8 @@ def _fully_peels(sub: np.ndarray, alen: int, n: int) -> bool:
 def _peel_successes(n: int, scheme: str) -> int:
     header = calculate_header(3, n)
     hashes = np.unique(splitmix64_array(7, n))[:n]
-    rng = SplitMix64(SEED_SEQUENCE_INIT)
     ok = 0
-    for _ in range(NUM_SEEDS):
-        seed = rng.next()
+    for seed in splitmix64_array(SEED_SEQUENCE_INIT, NUM_SEEDS):
         h = murmur64_mix(hashes, seed)
         if scheme == "reference":
             sub = _ref_rotation_subhashes(3, header, h)

@@ -2,12 +2,17 @@
 against its oracle_sql() twin in DuckDB at a given sf_dir and compare
 row-count, schema (sorted column names), and order-insensitive values.
 
+Each ``ok`` line carries the sha256 of the query's normalized Spark
+output before its first colon, so two runs (say, before and after a
+change) compare with ``diff <(cut -d: -f1 a.txt) <(cut -d: -f1 b.txt)``:
+no output means byte-identical results.
+
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import os
 import sys
 import time
@@ -15,6 +20,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+
+
+def digest(df) -> str:
+    """sha256 of a normalized frame's CSV rendering."""
+    return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()
 
 
 def normalize(df):
@@ -36,24 +46,6 @@ def normalize(df):
             df[c] = df[c].astype(str)
     df = df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return round(v, 9)
-    try:
-        import numpy as np
-        if isinstance(v, (np.integer,)):
-            return int(v)
-        if isinstance(v, (np.floating,)):
-            return round(float(v), 9)
-        if isinstance(v, np.bool_):
-            return bool(v)
-    except ImportError:
-        pass
-    return v
 
 
 def main():
@@ -85,7 +77,8 @@ def main():
             continue
         dt = time.time() - t0
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows, {dt:.1f}s)")
+            print(f"ok   {name} sha256={digest(normalize(sdf))}: "
+                  f"rows-only ({len(sdf)} rows, {dt:.1f}s)")
             if len(sdf) == 0:
                 print(f"     WARNING: zero rows")
             continue
@@ -117,7 +110,8 @@ def main():
             for c in sdf.columns if str(sdf[c].dtype) != str(odf[c].dtype)
         ]
         note = f" DTYPE? {dt_mismatch}" if dt_mismatch else ""
-        print(f"ok   {name}: {len(sdf)} rows match ({dt:.1f}s){note}")
+        print(f"ok   {name} sha256={digest(a)}: {len(sdf)} rows match "
+              f"({dt:.1f}s){note}")
 
     print("\n" + ("ALL OK" if not failed else f"FAILED: {failed}"))
     spark.stop()
