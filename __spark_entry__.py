@@ -133,7 +133,7 @@ def _q_membership_partkey_sbbf(spark, sf_dir):
 def _q_membership_orderkey_cogrouped(spark, sf_dir):
     """DISTRIBUTED probe path (spark/probe.py strategy 3): the filter index
     stays a DataFrame, each probe key is routed JVM-side to the partition
-    that built its filter, and a cogrouped applyInPandas checks only that
+    that built its filter, and a cogrouped applyInArrow checks only that
     partition's shards. fp32 + single-filter FPR + deterministic seeds =>
     result equals the semi-join (present keys) exactly."""
     from filterz_spark.spark.build import build_filter_index

@@ -21,7 +21,7 @@ SBBF is the one natively MERGEABLE filter here: insert is an idempotent,
 commutative bitwise OR into a fixed-size array (ref src/sbbf.zig:39-43), so
 two filters built with the same geometry merge by ``a | b``. That makes it
 usable both as a partition-local skip index and as a global mergeable
-aggregate (treeAggregate / two-level applyInPandas).
+aggregate (treeAggregate / two-level grouped applyInArrow).
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ north-rule extensions (HLL, count-min, t-digest, KLL, Bloom) are all
                                 length-checked by ``filterz_spark.codec``
 
 which is exactly the contract Spark's ``treeAggregate`` / two-level
-``applyInPandas`` aggregation needs: partials build independently per
+grouped ``applyInArrow`` aggregation (``spark.merge``) needs: partials build independently per
 partition, merge in any order/tree shape, and (for Bloom/HLL/CMS) produce
 BIT-IDENTICAL state regardless of aggregation order — the property the
 merge-associativity tests gate on. t-digest/KLL are deterministic for a fixed

@@ -3,14 +3,15 @@
 Pipeline (SURVEY.md §2.6): per-(group, partition) partial states via one
 ``mapInArrow`` pass over the scan (``_partials_fn``; NO shuffle — partials
 build where the data lives, the map-side-combine of a hash aggregate), then
-``applyInPandas`` merge rounds over the tiny state rows (``_merge_group``),
-then a driver fold of the <= ``FANIN`` survivors (``_fold``). Column
-sketches run fan-in rounds of ``FANIN`` states — the applyInPandas form of
-``treeAggregate``: at 10^6 partitions and 16KB HLL states, round one moves
-16GB across the cluster in 32-row groups, round two 500MB, etc. — never
-through the driver until the last handful. Grouped rollups run one round
-keyed by group. The persisted store (``spark.sketch_store``) writes the
-state ``sketch_column`` returns and folds stored epochs with ``_fold``.
+grouped ``applyInArrow`` merge rounds over the tiny state rows
+(``_merge_by``/``_merge_group``), then a driver fold of the <= ``FANIN``
+survivors (``_fold``). Column sketches run fan-in rounds of ``FANIN`` states
+— the grouped-Arrow form of ``treeAggregate``: at 10^6 partitions and 16KB
+HLL states, round one moves 16GB across the cluster in 32-row groups, round
+two 500MB, etc. — never through the driver until the last handful. Grouped
+rollups run one round keyed by group. The persisted store
+(``spark.sketch_store``) writes the state ``sketch_column`` returns and
+folds stored epochs with ``_fold``.
 
 Every fold runs in partition order: each state row carries the
 ``partition_id`` of the input partition (or the fan-in range) it covers,
@@ -26,8 +27,8 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -87,29 +88,29 @@ def _fold(kind: str, payloads, params) -> MergeableSketch | None:
     return acc
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas body: one group's states, folded in partition_id
-    order -> one state row keyed ``g``."""
-    pdf = pdf.sort_values("partition_id", kind="stable")
-    kind = pdf["kind"].iloc[0]
-    acc = _fold(kind, pdf["payload"], pdf["params"])
-    return pd.DataFrame({
-        "g": [pdf["g"].iloc[0]],
-        "kind": [kind],
-        "params": [json.dumps(acc.params())],
-        "payload": [acc.serialize()],
+def _merge_group(states: pa.Table) -> pa.Table:
+    """applyInArrow body: one group's states, folded in partition_id
+    order -> one state row keyed ``g`` (a NULL group and the key's type
+    pass through in the one-row slice)."""
+    states = states.take(pc.sort_indices(states, [("partition_id", "ascending")]))
+    acc = _fold(states["kind"][0].as_py(), states["payload"].to_pylist(),
+                states["params"].to_pylist())
+    return pa.table({
+        "g": states["g"].slice(0, 1),
+        "kind": states["kind"].slice(0, 1),
+        "params": pa.array([json.dumps(acc.params())], states["params"].type),
+        "payload": pa.array([acc.serialize()], states["payload"].type),
     })
 
 
-def _merge_by(states: DataFrame, key: Column) -> DataFrame:
-    """One executor round: merge the states sharing ``key`` into one row
-    each, whose partition_id is the key."""
+def _merge_by(states: DataFrame, key: Column, key_type: str) -> DataFrame:
+    """One executor round: merge the states sharing ``key`` (of SQL type
+    ``key_type``) into one (g, kind, params, payload) row each."""
     return (states.select(key.alias("g"), "partition_id", "kind", "params",
                           "payload")
             .groupBy("g")
-            .applyInPandas(_merge_group,
-                           "g long, kind string, params string, payload binary")
-            .withColumnRenamed("g", "partition_id"))
+            .applyInArrow(_merge_group, f"g {key_type}, kind string, "
+                          "params string, payload binary"))
 
 
 def _fan_in(states: DataFrame, n: int) -> DataFrame:
@@ -121,7 +122,8 @@ def _fan_in(states: DataFrame, n: int) -> DataFrame:
     the surviving rows keep the order of the partitions they cover.
     """
     while n > FANIN:
-        states = _merge_by(states, F.floor(F.col("partition_id") / FANIN))
+        states = _merge_by(states, F.floor(F.col("partition_id") / FANIN),
+                           "long").withColumnRenamed("g", "partition_id")
         n = (n + FANIN - 1) // FANIN
     return states
 
@@ -194,7 +196,7 @@ def partial_states(df: DataFrame, col: str, kind: str, params: dict | None = Non
 
 
 def tree_merge(states: DataFrame) -> MergeableSketch | None:
-    """Fan-in tree of applyInPandas merge rounds, then a driver-side finish;
+    """Fan-in tree of applyInArrow merge rounds, then a driver-side finish;
     ``None`` when ``states`` holds no rows (an empty input).
 
     Each round groups ``FANIN`` states by partition_id range and merges them
@@ -233,16 +235,13 @@ def grouped_sketch_states(df: DataFrame, group_col: str, value_col: str,
 
     Two-phase: per-(partition, group) partials inside one mapInArrow pass
     (map-side combine — the hot group's rows never concentrate), then one
-    shuffle of tiny states grouped by key and an applyInPandas merge in
-    partition order. Output: (group, kind, params, payload) — feed rows to
-    ``deserialize_sketch`` or ``grouped_estimates``.
+    shuffle of tiny states grouped by key and the fan-in's applyInArrow
+    merge round (``_merge_by``) in partition order. Output: (group, kind,
+    params, payload) — feed rows to ``deserialize_sketch`` or
+    ``grouped_estimates``.
     """
-    return (_partials(df, F.col(group_col), value_col, kind, params,
-                      value_kind)
-            .groupBy("g")
-            .applyInPandas(_merge_group,
-                           "g string, kind string, params string, "
-                           "payload binary"))
+    return _merge_by(_partials(df, F.col(group_col), value_col, kind, params,
+                               value_kind), F.col("g"), "string")
 
 
 def grouped_estimates(states_df: DataFrame) -> list[tuple]:

@@ -9,7 +9,9 @@ may contain the hash. Two transports feed that check, by index size:
 
 1. ``probe_membership`` (default): the index is collected once and shipped
    as a Spark BROADCAST VARIABLE — one torrent-distributed copy per
-   executor, NOT a copy inside every pickled task closure. A scalar
+   executor, NOT a copy inside every pickled task closure, and one
+   broadcast per ``collect_index`` result however often it is probed
+   (``FilterIndex.release`` frees it). A scalar
    iterator Arrow UDF over the key hash deserializes it once per task and
    checks each batch against every filter (the OR-over-sections semantics
    of the section model); only the hash column crosses into Python.
@@ -20,7 +22,7 @@ may contain the hash. Two transports feed that check, by index size:
    driver at all (10^5+ partitions x ~500KB payloads), the index STAYS a
    DataFrame. Each probe key is routed to the section that built its
    filter (``build.section_id``, the expression the build labels its
-   sections with), and a cogrouped applyInPandas checks each key against
+   sections with), and a cogrouped applyInArrow checks each key against
    only that section's shard filters. Costs one shuffle of the probe side;
    payload bytes move executor<->executor only (never through the driver),
    each exactly once.
@@ -43,6 +45,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..filters import deserialize_filter
@@ -51,7 +54,36 @@ from .build import section_id
 HIT_COL = "maybe_present"
 
 
-def collect_index(index_df: DataFrame) -> list[dict]:
+class FilterIndex(list):
+    """``collect_index``'s result: the index rows as plain dicts, plus the
+    one broadcast that ships them to the executors, made by the first
+    probe and reused by every later one until ``release``.
+
+    Pickles as the plain list of dicts (the broadcast stays behind).
+    """
+
+    _bc = None
+
+    def __reduce__(self):
+        return list, (list(self),)
+
+    def broadcast(self, sc):
+        """The broadcast of these rows on ``sc``, made on first use (and
+        again after ``release`` or on a new SparkContext)."""
+        if self._bc is None or self._bc._sc is not sc:
+            self._bc = sc.broadcast(list(self))
+        return self._bc
+
+    def release(self) -> None:
+        """Destroy the broadcast (executor copies and the driver's file).
+        Frames probed before this call can no longer run; a later probe
+        broadcasts the rows again."""
+        if self._bc is not None:
+            self._bc.destroy()
+            self._bc = None
+
+
+def collect_index(index_df: DataFrame) -> FilterIndex:
     """Materialize the filter index to plain dicts (payload bytes + params).
 
     Uses the Arrow collect path — payload columns are tens of MB at bench
@@ -62,7 +94,7 @@ def collect_index(index_df: DataFrame) -> list[dict]:
     cols = {name: tbl.column(name).to_pylist() for name in (
         "partition_id", "kind", "params", "payload", "num_keys",
         "build_ns", "mem_usage", "ideal_mem_usage")}
-    return [
+    return FilterIndex(
         {
             "partition_id": cols["partition_id"][i],
             "kind": cols["kind"][i],
@@ -74,7 +106,7 @@ def collect_index(index_df: DataFrame) -> list[dict]:
             "ideal_mem_usage": cols["ideal_mem_usage"][i],
         }
         for i in range(tbl.num_rows)
-    ]
+    )
 
 
 def _or_check(filters: list, h) -> np.ndarray:
@@ -102,15 +134,17 @@ def probe_membership(probe_df: DataFrame, key_col: str,
 
     ``index_rows`` (from ``collect_index``) is broadcast internally — the
     payloads travel to each executor once, not inside every task closure.
-    The broadcast must outlive the returned lazy DataFrame, so it lives
-    until the session ends.
+    A ``FilterIndex`` keeps that broadcast for every later probe until its
+    ``release``; a hand-built list of dicts is broadcast anew on each call.
 
     The probe side is coalesced to at most ``defaultParallelism``
     partitions (one Python task per core, each deserializing the index
     once), so the output has at most that many partitions.
     """
     sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(index_rows)
+    if not isinstance(index_rows, FilterIndex):
+        index_rows = FilterIndex(index_rows)
+    bc = index_rows.broadcast(sc)
 
     def check(hashes: Iterator[pa.Array]) -> Iterator[pa.Array]:
         filters = [deserialize_filter(r["kind"], r["payload"], r["params"])
@@ -136,8 +170,8 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
     with the same P: the build labels each key's filter with
     ``build.section_id(h, P)``, and the same expression routes every probe
     key here to the one section whose filter could contain it. A cogrouped
-    applyInPandas then checks each key group against that section's shard
-    filters only.
+    applyInArrow then checks each key group against that section's shard
+    filters only; the probe columns stay Arrow columns throughout.
 
     Semantics per key: zero false negatives (the key's hash was inserted in
     exactly this section's filter); false positives at the SINGLE-filter
@@ -148,22 +182,21 @@ def probe_membership_cogrouped(probe_df: DataFrame, key_col: str,
     out_names = probe_df.columns
     schema = StructType([*probe_df.schema.fields,
                          StructField(HIT_COL, BooleanType())])
+    # the Arrow types Spark checks results against (timestamps tagged UTC)
+    arrow_schema = to_arrow_schema(schema)
     targeted = (probe_df.withColumn("__h", F.xxhash64(key_col))
                 .withColumn("__pid", section_id("__h", num_partitions)))
     idx = index_df.select("partition_id", "kind", "params", "payload")
 
-    def fn(_key, probes_pdf, index_pdf):
-        filters = [
-            deserialize_filter(k, bytes(p), json.loads(pr))
-            for k, pr, p in zip(index_pdf["kind"], index_pdf["params"],
-                                index_pdf["payload"])
-        ]
-        out = probes_pdf[out_names].copy()
-        out[HIT_COL] = _or_check(filters, probes_pdf["__h"])
-        return out
+    def fn(probes: pa.Table, index: pa.Table) -> pa.Table:
+        rows = zip(*(index[c].to_pylist() for c in ("kind", "payload", "params")))
+        filters = [deserialize_filter(k, p, json.loads(pr)) for k, p, pr in rows]
+        hit = _or_check(filters, probes["__h"].to_numpy())
+        return (probes.select(out_names).append_column(HIT_COL, pa.array(hit))
+                .cast(arrow_schema))
 
     return (
         targeted.groupBy("__pid")
         .cogroup(idx.groupBy("partition_id"))
-        .applyInPandas(fn, schema)
+        .applyInArrow(fn, schema)
     )

@@ -2,8 +2,9 @@
 
 Tuned for the execution model the engine targets (SURVEY.md §4): AQE on for
 runtime re-planning + skew-join splitting + small-partition coalescing
-(size-aware coalescing per the north rule), Arrow enabled for every
-pandas/Arrow UDF boundary, and ``max(cores, 32)`` shuffle partitions
+(size-aware coalescing per the north rule), Arrow enabled for
+``toPandas``/``createDataFrame(pandas)`` (Arrow UDFs and ``*InArrow``
+stages use Arrow regardless), and ``max(cores, 32)`` shuffle partitions
 (``cores`` defaults to ``SPARK_GRAFT_CPUS``, else 32), and no Python
 call-site capture for DataFrame error messages; every setting stays
 overridable through ``extra_conf``.
@@ -55,7 +56,9 @@ def get_session(cores: int | None = None, app_name: str = "filterz-spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow batches feed the vectorized UDF kernels; bigger batches =
+        # toPandas/createDataFrame(pandas) go through Arrow (tests and
+        # tools/check_oracles.py collect that way); the batch size below is
+        # what every Arrow UDF and *InArrow stage sees: bigger batches =
         # fewer Python crossings (SIMD lanes -> batch parallelism, SURVEY §4)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")

@@ -24,6 +24,20 @@ def plan(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
+# Every batch physical node that runs Python (Spark 4.1 ``*Exec`` names
+# less the suffix): per-row and Arrow UDFs, aggregate/window UDFs, map
+# stages and (co)grouped map stages in both the pandas and Arrow forms.
+PYTHON_EXECS = ("BatchEvalPython", "ArrowEvalPython", "ArrowAggregatePython",
+                "ArrowWindowPython", "MapInPandas", "MapInArrow",
+                "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+                "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow")
+
+
+def python_stages(p: str) -> list[str]:
+    """The Python exec nodes named in the plan text ``p``."""
+    return [n for n in PYTHON_EXECS if n in p]
+
+
 @pytest.fixture(scope="module")
 def li(spark):
     return spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -111,8 +125,7 @@ def test_simhash_and_rolling_have_no_python_stage(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for df in (simhash(docs), rolling_fingerprints(docs)):
         p = plan(df)
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p \
-            and "MapInArrow" not in p and "FlatMapGroupsInPandas" not in p, p
+        assert not python_stages(p), p
 
 
 def test_lsh_candidate_pairs_single_signature_pass(spark):
@@ -167,8 +180,22 @@ def test_new_pipeline_ops_have_no_python_stage(spark):
     ]
     for df in frames:
         p = plan(df)
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p \
-            and "MapInArrow" not in p and "FlatMapGroupsInPandas" not in p, p
+        assert not python_stages(p), p
+
+
+def test_grouped_python_stages_are_arrow(spark, li):
+    """The sketch-merge round and the cogrouped probe cross into Python as
+    Arrow tables; the gate helper above names both grouped Arrow nodes."""
+    from filterz_spark.spark.build import build_filter_index
+    from filterz_spark.spark.merge import grouped_sketch_states
+    from filterz_spark.spark.probe import probe_membership_cogrouped
+    grouped = grouped_sketch_states(li, "l_returnflag", "l_orderkey", "hll",
+                                    {"p": 10})
+    assert python_stages(plan(grouped)) == ["MapInArrow", "FlatMapGroupsInArrow"]
+    idx = build_filter_index(li, "l_orderkey", "sbbf", {"bits_per_key": 16}, 4)
+    probed = probe_membership_cogrouped(li.select("l_orderkey"), "l_orderkey",
+                                        idx, 4)
+    assert python_stages(plan(probed)) == ["MapInArrow", "FlatMapCoGroupsInArrow"]
 
 
 def test_decontaminate_benchmark_is_broadcast(spark):

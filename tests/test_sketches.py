@@ -402,7 +402,7 @@ def test_merge_group_folds_in_partition_order(kind, params):
     shuffle delivers them in (a retried task must give the same state)."""
     import json
 
-    import pandas as pd
+    import pyarrow as pa
 
     from filterz_spark.spark.merge import _fold, _merge_group
 
@@ -414,13 +414,18 @@ def test_merge_group_folds_in_partition_order(kind, params):
         rows.append({"g": 7, "partition_id": pid, "kind": kind,
                      "params": json.dumps(s.params()),
                      "payload": s.serialize()})
-    ordered = pd.DataFrame(rows)
-    backward = ordered.iloc[::-1].reset_index(drop=True)
+    ordered = pa.Table.from_pylist(rows)
+    backward = ordered.take(list(range(4, -1, -1)))
+
+    def fold(t):
+        return _fold(kind, t["payload"].to_pylist(), t["params"].to_pylist())
+
     # the fold itself is order-dependent for these states ...
-    assert _fold(kind, backward["payload"], backward["params"]).serialize() \
-        != _fold(kind, ordered["payload"], ordered["params"]).serialize()
+    assert fold(backward).serialize() != fold(ordered).serialize()
     # ... and the merge round removes the arrival order
     a = _merge_group(ordered)
     b = _merge_group(backward)
-    assert a["payload"].iloc[0] == b["payload"].iloc[0]
-    assert a["g"].iloc[0] == b["g"].iloc[0] == 7
+    assert a.num_rows == b.num_rows == 1
+    assert a["payload"][0].as_py() == b["payload"][0].as_py() \
+        == fold(ordered).serialize()
+    assert a["g"][0].as_py() == b["g"][0].as_py() == 7

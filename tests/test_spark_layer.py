@@ -151,20 +151,87 @@ class TestFilterIndex:
         probes = pages.limit(500).selectExpr(
             "url AS `page url`", "array(length(url), 7) AS lens",
             "named_struct('u', url, 'n', length(url)) AS meta",
-            "CAST(length(url) / 3 AS DECIMAL(12, 4)) AS score").cache()
+            "CAST(length(url) / 3 AS DECIMAL(12, 4)) AS score",
+            "timestamp_seconds(1700000000 + length(url)) AS ts",
+            "map(url, length(url)) AS m").cache()
         try:
             want = StructType([*probes.schema.fields,
                                StructField("maybe_present", BooleanType())])
-            rows_in = sorted(tuple(r) for r in probes.collect())
+            rows_in = sorted((tuple(r) for r in probes.collect()), key=repr)
             for probed in (
                     probe_membership(probes, "page url", collect_index(idx_df)),
                     probe_membership_cogrouped(probes, "page url", idx_df, parts)):
                 assert probed.schema == want
                 rows = probed.collect()
                 assert all(r["maybe_present"] for r in rows)  # zero FN
-                assert sorted(tuple(r)[:-1] for r in rows) == rows_in
+                assert sorted((tuple(r)[:-1] for r in rows), key=repr) == rows_in
         finally:
             probes.unpersist()
+
+    def test_cogrouped_probe_empty_and_one_section(self, spark, pages):
+        """An empty probe frame gives no rows and the full schema. Keys that
+        all route to one section leave every other section's index group
+        without probes; those groups must return empty, correctly typed
+        results, and the probed section keeps zero FN and its single-filter
+        FPR."""
+        from filterz_spark.spark.build import section_id
+        from filterz_spark.spark.probe import probe_membership_cogrouped
+        parts = 8
+        idx_df = build_filter_index(pages, "url", "xorf",
+                                    {"arity": 3, "fp_bits": 16}, parts)
+        urls = pages.select("url")
+        empty = probe_membership_cogrouped(urls.filter("url = ''"), "url",
+                                           idx_df, parts)
+        assert empty.columns == ["url", "maybe_present"]
+        assert empty.collect() == []
+        mixed = urls.unionAll(urls.selectExpr("concat(url, '#a') AS url"))
+        one = mixed.filter(section_id(F.xxhash64("url"), parts) == 5)
+        probed = probe_membership_cogrouped(one, "url", idx_df, parts)
+        got = {r["url"]: r["maybe_present"] for r in probed.collect()}
+        assert len(got) == one.count() > 0
+        present = {u for u in got if not u.endswith("#a")}
+        assert present and all(got[u] for u in present)
+        fp = sum(got[u] for u in got if u.endswith("#a"))
+        bound = 2.0 ** -16 * (len(got) - len(present))
+        assert fp <= bound + 4 * np.sqrt(bound) + 4
+
+    def test_one_broadcast_per_collected_index(self, spark, pages, monkeypatch):
+        """N probes of one ``collect_index`` result create one broadcast;
+        ``release`` destroys it and the next probe broadcasts again. A
+        hand-built list of dicts still probes, and the index pickles as
+        that plain list."""
+        import pickle
+        sc = spark.sparkContext
+        made = []
+        real = sc.broadcast
+
+        def counting(value):
+            made.append(real(value))
+            return made[-1]
+
+        monkeypatch.setattr(sc, "broadcast", counting)
+        idx = collect_index(build_filter_index(
+            pages, "url", "sbbf", {"bits_per_key": 16}, 4))
+        urls = pages.select("url").limit(2000)
+
+        def misses(index):
+            return probe_membership(urls, "url", index) \
+                .filter("NOT maybe_present").count()
+
+        try:
+            for _ in range(3):
+                assert misses(idx) == 0
+            assert len(made) == 1
+            idx.release()
+            assert not os.path.exists(made[0]._path)
+            assert misses(idx) == 0
+            assert len(made) == 2
+            plain = pickle.loads(pickle.dumps(idx))
+            assert type(plain) is list and plain == list(idx)
+            assert misses(plain) == 0
+            assert len(made) == 3
+        finally:
+            idx.release()
 
 
 def _last_stage_tasks(spark, group, action):
@@ -332,6 +399,33 @@ class TestSketchAggregation:
         for lang, cnt in truth.items():
             est = int(s.query(np.array([hashes[lang]], dtype=np.int64).view(np.uint64))[0])
             assert cnt <= est <= cnt + s.error_bound(), lang
+
+    @pytest.mark.parametrize("kind,params", [("kll", {"k": 64}),
+                                             ("tdigest", {"delta": 50})])
+    def test_fan_in_round_folds_in_partition_order(self, spark, kind, params):
+        """100 partitions run one executor merge round of 32-state groups.
+        For these order-dependent kinds the state must equal the driver
+        emulation: fold each 32-state chunk in partition order, then fold
+        the chunk states in order."""
+        import json
+        from filterz_spark.spark.merge import _fold
+        df = spark.range(0, 40_000, 1, 100).select(
+            F.exp((F.col("id") % 997) / 100 + F.spark_partition_id() / 10)
+            .alias("v"))
+        got = sketch_column(df, "v", kind, params).serialize()
+        rows = sorted(partial_states(df, "v", kind, params).collect(),
+                      key=lambda r: r["partition_id"])
+        assert [r["partition_id"] for r in rows] == list(range(100))
+        chunks = [_fold(kind, [r["payload"] for r in rows[i:i + 32]],
+                        [r["params"] for r in rows[i:i + 32]])
+                  for i in range(0, 100, 32)]
+        want = _fold(kind, [c.serialize() for c in chunks],
+                     [json.dumps(c.params()) for c in chunks]).serialize()
+        assert got == want
+        # the tree shape matters for these kinds, so the check has teeth
+        flat = _fold(kind, [r["payload"] for r in rows],
+                     [r["params"] for r in rows]).serialize()
+        assert flat != want
 
     def test_quantile_sketches(self, spark, pages):
         ntok = pages.select(F.size(F.split("text", " ")).cast("double").alias("v"))
@@ -526,6 +620,23 @@ class TestGroupedSketches:
             pages, "lang", "url", kind, params,
             value_kind="hash").collect()}
         assert got == want
+
+    @pytest.mark.parametrize("kind,params", [("hll", {"p": 10}),
+                                             ("kll", {"k": 64})])
+    def test_null_group_is_a_group(self, spark, kind, params):
+        """Rows whose group is NULL form one group (SQL GROUP BY), and every
+        group's state, the NULL one included, equals ``sketch_column`` over
+        that group's rows."""
+        from filterz_spark.spark.merge import grouped_sketch_states
+        df = spark.range(0, 20_000, 1, 6).selectExpr(
+            "CASE WHEN id % 7 = 0 THEN NULL ELSE concat('g', id % 3) END AS g",
+            "CAST((id * 7919) % 10007 AS double) AS v")
+        got = {r["g"]: bytes(r["payload"]) for r in grouped_sketch_states(
+            df, "g", "v", kind, params).collect()}
+        assert set(got) == {None, "g0", "g1", "g2"}
+        for g, payload in got.items():
+            rows = df.filter(F.col("g").isNull() if g is None else F.col("g") == g)
+            assert payload == sketch_column(rows, "v", kind, params).serialize(), g
 
     def test_states_partition_independent(self, spark, pages):
         from filterz_spark.spark.merge import grouped_sketch_states
