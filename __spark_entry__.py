@@ -474,8 +474,9 @@ def _q_duplicate_spans(spark, sf_dir):
     """Exact substring-dedup stats (round 6, ops/dedup.duplicate_spans —
     the Lee et al. arXiv:2107.06499 signal): every 8-token span is owned
     by the first doc containing it; later occurrences are duplicated
-    spans. Map-only span fan-out hashed to 8-byte keys before the ONE
-    analytic-window shuffle (min-owner per span), then a groupBy doc_id.
+    spans. One map-only span fan-out hashed to 8-byte keys, then
+    map-side-combined aggregates (per-(doc, span) count, min-owner per
+    span, owned count per doc) left-joined to the per-doc span totals.
     The oracle recomputes the same ownership rule in DuckDB."""
     from filterz_spark.ops.dedup import duplicate_spans
     return duplicate_spans(_t(spark, sf_dir, "documents"), window=8) \

@@ -59,18 +59,6 @@ def insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
     native.sbbf_insert(blocks, hashes)
 
 
-def insert_check(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Insert a batch and report, per key, whether it was maybe-present at
-    its turn (ref ``block_insert_check``/``filter_insert_check``,
-    src/sbbf.zig:45-52, :68-70 — sequential semantics, so a duplicate later
-    in the batch reports present)."""
-    if hashes.size == 0:
-        return np.zeros(0, dtype=bool)
-    if blocks.shape[0] == 0:
-        raise ValueError("sbbf insert_check: the filter has no blocks")
-    return native.sbbf_insert_check(blocks, hashes)
-
-
 def contains(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     """Batch probe: bool array, True where all 8 lane bits are set
     (ref src/sbbf.zig:32-37, :60-62)."""

@@ -73,9 +73,6 @@ def _bind(so_path: str):
     lib.sbbf_contains.argtypes = [_u64p, ctypes.c_int64, _u64p,
                                   ctypes.c_int64, _u8p]
     lib.sbbf_contains.restype = None
-    lib.sbbf_insert_check.argtypes = [_u64p, ctypes.c_int64, _u64p,
-                                      ctypes.c_int64, _u8p]
-    lib.sbbf_insert_check.restype = None
     lib.xorf_attempt.argtypes = [
         _u64p, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int32,
         ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, ctypes.c_int32,
@@ -163,19 +160,6 @@ def sbbf_insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
     lib.sbbf_insert(b, blocks.shape[0], h, h.size)
     if b is not blocks:
         blocks[...] = b
-
-
-def sbbf_insert_check(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Sequential insert-and-report-presence (ref sbbf.zig:45-52)."""
-    _writable(blocks)
-    lib = _load()
-    b = np.ascontiguousarray(blocks, dtype=np.uint64)
-    h = np.ascontiguousarray(hashes, dtype=np.uint64)
-    out = np.empty(h.size, dtype=np.uint8)
-    lib.sbbf_insert_check(b, blocks.shape[0], h, h.size, out)
-    if b is not blocks:
-        blocks[...] = b
-    return out.view(bool)
 
 
 def sbbf_contains(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:

@@ -86,27 +86,6 @@ void sbbf_insert(uint64_t *blocks, int64_t num_blocks,
     }
 }
 
-/* Sequential insert-and-check (ref src/sbbf.zig:45-52, filter_insert_check
- * :68-70): out[i] = 1 iff key i's bits were ALL already set at its turn —
- * i.e. maybe-present given everything inserted before it, duplicates
- * within the batch included. */
-void sbbf_insert_check(uint64_t *blocks, int64_t num_blocks,
-                       const uint64_t *hashes, int64_t n, uint8_t *out) {
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = hashes[i];
-        uint64_t block = ((h & 0xffffffffULL) * (uint64_t)num_blocks) >> 32;
-        uint64_t *b = blocks + block * 8;
-        int present = 1;
-        for (int j = 0; j < 8; j++) {
-            uint64_t x = (h * SBBF_SALT[j]) >> 27;
-            uint64_t m = 1ULL << (x & 63);
-            present &= (b[j] & m) != 0;
-            b[j] |= m;
-        }
-        out[i] = (uint8_t)present;
-    }
-}
-
 /* Probe: out[i] = 1 iff all 8 lane bits set (ref src/sbbf.zig:32-37). */
 void sbbf_contains(const uint64_t *blocks, int64_t num_blocks,
                    const uint64_t *hashes, int64_t n, uint8_t *out) {

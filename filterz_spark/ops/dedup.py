@@ -72,7 +72,7 @@ def shingles(docs: DataFrame, k: int = 2, text_col: str = "text") -> DataFrame:
 
     The input is routed through ``ensure_parallelism`` first: the shingle
     expansion plus the hashing its consumers fuse on top of it (band_md5
-    and km_xxh signatures, n-gram Jaccard sets) is their cost center, and
+    signatures, n-gram Jaccard sets) is their cost center, and
     Spark fuses it into the SCAN stage — a small or single-row-group input
     would otherwise run it on 1-2 tasks (measured 3-5x on the round-6 bench
     legs at local[32]). At corpus scale the helper is a no-op (scan
@@ -112,18 +112,10 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
       128-bit value. Kept for fully-independent band hashes and for
       signature stores written by earlier rounds (the two families'
       signatures are NOT comparable — never mix them in one store).
-    - ``km_xxh``: same KM construction over JVM ``xxhash64(shingle, salt)``
-      instead of md5 — no hex-string materialization, ~4x less hash
-      compute on the DRAM-bound signature pass. NOT DuckDB-reproducible
-      (DuckDB has no xxhash64), so it carries no value oracle; set
-      semantics (identical dedup decisions) are gated in tests/test_ops.py
-      against the md5 families. Because xxhash is ALU-cheap, this family
-      is PURE memory traffic: it wins only while bandwidth per core is
-      ample (round-6 controlled probe, BENCH/PIPELINE.md: 1.7x faster
-      than km_md5 at 8 cores on one box, SLOWER at 32 where it saturates
-      the single memory controller and scales 1.16x vs km_md5's 2.99x).
-      On a multi-node cluster each executor brings its own controllers,
-      restoring the advantage.
+
+    Any other ``hash_family`` raises ``ValueError``. That includes the
+    retired KM family over JVM ``xxhash64``: its win was measured against
+    the JVM km_md5 expression, and the C km_md5 pass is ~3x faster.
 
     CHANGED in round 5: the default flipped from ``band_md5`` to
     ``km_md5`` — the builder's own rehearsal identified the 8-md5/shingle
@@ -139,8 +131,8 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
     partials, one row per doc per map partition). At corpus scale this
     table is what you persist; downstream consumers explode it on demand.
     """
-    if hash_family in _KM_FAMILIES:
-        return _km_sig_longs(docs, num_hashes, k, hash_family).select(
+    if hash_family == "km_md5":
+        return _km_sig_longs(docs, num_hashes, k).select(
             "doc_id", F.col("sig").cast("array<string>").alias("sig"))
     if hash_family != "band_md5":
         raise ValueError(f"unknown hash_family {hash_family!r}")
@@ -151,9 +143,6 @@ def minhash_signature_arrays(docs: DataFrame, num_hashes: int = 8,
     agg = shingles(docs, k=k).groupBy("doc_id").agg(*mins)
     return agg.select(
         "doc_id", F.array(*[f"m{b}" for b in range(num_hashes)]).alias("sig"))
-
-
-_KM_FAMILIES = ("km_md5", "km_xxh")
 
 
 def _km_md5_fn(k: int, num_hashes: int):
@@ -184,35 +173,23 @@ def _km_md5_fn(k: int, num_hashes: int):
     return fn
 
 
-def _km_sig_longs(docs: DataFrame, num_hashes: int, k: int,
-                  hash_family: str) -> DataFrame:
-    """(doc_id, sig array<bigint>): the KM families' band minima, the one
-    source of their signatures (``minhash_signature_arrays`` stringifies
-    them; ``lsh_candidate_pairs`` buckets on them as they are).
+def _km_sig_longs(docs: DataFrame, num_hashes: int, k: int) -> DataFrame:
+    """(doc_id, sig array<bigint>): the km_md5 band minima, the one source
+    of its signatures (``minhash_signature_arrays`` stringifies them;
+    ``lsh_candidate_pairs`` buckets on them as they are).
 
-    ``km_md5`` hashes each doc's shingles in one native pass
-    (``native.km_md5_minhash``, a ``mapInArrow`` over (doc_id, text)) and
-    emits one row per doc; ``km_xxh`` explodes shingles into JVM
-    ``xxhash64`` columns. Either way ONE groupBy(doc_id) takes the per-band
+    Each doc's shingles are hashed in one native pass
+    (``native.km_md5_minhash``, a ``mapInArrow`` over (doc_id, text)) that
+    emits one row per doc; ONE groupBy(doc_id) then takes the per-band
     min, so a repeated doc_id still gets one signature over all its rows.
     """
     if num_hashes > 15:
-        raise ValueError(f"{hash_family} supports num_hashes <= 15 "
+        raise ValueError("km_md5 supports num_hashes <= 15 "
                          "(56-bit halves keep h1 + b*h2 overflow-free)")
-    if hash_family == "km_md5":
-        base = ensure_parallelism(docs.select("doc_id", "text"))
-        schema = StructType([base.schema["doc_id"]] + [
-            StructField(f"m{b}", LongType()) for b in range(num_hashes)])
-        hs = base.mapInArrow(_km_md5_fn(k, num_hashes), schema)
-    else:
-        # two independent 56-bit hashes straight from the JVM xxhash64
-        # kernel (salted second draw) — no hex-string round trip
-        mask = F.lit((1 << 56) - 1)
-        h1 = F.xxhash64("shingle").bitwiseAND(mask)
-        h2 = F.xxhash64("shingle", F.lit(1)).bitwiseAND(mask)
-        hs = shingles(docs, k=k).select(
-            "doc_id", *[(h1 + F.lit(b) * h2).alias(f"m{b}")
-                        for b in range(num_hashes)])
+    base = ensure_parallelism(docs.select("doc_id", "text"))
+    schema = StructType([base.schema["doc_id"]] + [
+        StructField(f"m{b}", LongType()) for b in range(num_hashes)])
+    hs = base.mapInArrow(_km_md5_fn(k, num_hashes), schema)
     agg = hs.groupBy("doc_id").agg(*[F.min(f"m{b}").alias(f"m{b}")
                                      for b in range(num_hashes)])
     return agg.select(
@@ -375,10 +352,10 @@ def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, k: int = 2,
     linear). None disables the cap. A hot bucket still lands on one
     reducer as a whole member array; the cap is what bounds it.
     """
-    if signatures is None and hash_family in _KM_FAMILIES:
+    if signatures is None and hash_family == "km_md5":
         # bucket on the bigint band minima: their decimal strings are
         # injective, so the buckets are those of the string form
-        signatures = _km_sig_longs(docs, num_hashes, k, hash_family)
+        signatures = _km_sig_longs(docs, num_hashes, k)
     sig = minhash_signatures(docs, num_hashes, k, signatures=signatures,
                              hash_family=hash_family)
     buckets = (sig.groupBy("band", "minhash")
@@ -627,8 +604,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
 
 def duplicate_spans(docs: DataFrame, window: int = 16,
                     id_col: str = "doc_id", text_col: str = "text",
-                    span_key: str = "md5",
-                    owner_strategy: str = "agg") -> DataFrame:
+                    span_key: str = "md5") -> DataFrame:
     """Exact substring-dedup statistics, the Lee et al. 2021
     ("Deduplicating Training Data Makes Language Models Better",
     arXiv:2107.06499) signal at document granularity: every
@@ -639,7 +615,9 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     to drop heavily-duplicated docs, or feed the flagged docs to a
     span-removal rewrite. Docs shorter than ``window`` tokens form ONE
     span over all their tokens; a doc's own repeats of a span it owns
-    are NOT counted as duplicates (ownership is per-document).
+    are NOT counted as duplicates (ownership is per-document). A NULL
+    text is one NULL span, and all NULL texts share that key: every
+    NULL-text doc after the first reports one duplicated span.
 
     ``span_key="md5"`` (default) keys spans by the first 15 md5 hex
     chars (60 bits) — DuckDB-portable, oracle-checkable;
@@ -649,77 +627,49 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
 
     Scale shape: the span fan-out (~n_tokens rows/doc) is MAP-ONLY and
     hashes each span string to an 8-byte key before anything moves —
-    the exchange carries (doc_id, fp) pairs only, never span text.
+    the exchange carries (doc_id, fp) pairs only, never span text. The
+    corpus is exploded ONCE, into one chain of map-side-combined
+    aggregates:
 
-    ``owner_strategy`` picks how the corpus-wide min owner per span key
-    is computed; both produce identical rows:
+    - ``groupBy(doc_id, fp).count`` collapses a doc's own repeats;
+    - ``groupBy(fp).min(struct(doc_id, count))`` picks each span's
+      owner; its partials collapse a viral span (one 16-gram in 10^10
+      rows at corpus scale) to ONE candidate row per map task;
+    - ``groupBy(owner).sum(count)`` gives each doc's owned instances.
 
-    - ``"agg"`` (default, round 7): fully COMBINER-FRIENDLY — spans
-      first collapse to (doc_id, fp, count) in one map-side-combined
-      groupBy; the owner then comes from ``min(struct(doc_id, count))``
-      per fp, whose partial aggregation collapses a viral span (one
-      16-gram in 10^10 rows at corpus scale) to ONE candidate row per
-      map task, and the per-doc answer is
-      ``n_dup = n_spans - owned_instances`` — an equi-join of two
-      doc-keyed count tables, never a per-instance join back. No stage
-      anywhere receives all copies of a hot key on one task. The static
-      plan has five hash exchanges: both aggregation branches start
-      from the same (doc_id, fp) exchange, and AQE runs it once and
-      reuses it at runtime (ReusedExchange appears only in the final
-      adaptive plan, not in ``explain()`` before execution).
-    - ``"window"``: the round-6 single-shuffle analytic window
-      (min over ``Window.partitionBy(fp)``). One shuffle fewer for
-      skew-free corpora, but a window partition cannot be pre-aggregated
-      or split (AQE skew handling covers joins, NOT WindowExec), so
-      every copy of a hot span lands on one reducer — opt-in only where
-      the span-frequency distribution is known benign.
-
-    No all-pairs stage exists at any scale under either strategy.
+    ``n_spans`` is map-side arithmetic on the text (the explode's own
+    length), summed per doc on the doc_id shuffle the join needs anyway,
+    so ``n_dup = n_spans - owned`` is a left join of a doc table to that
+    chain — never a per-instance join back. No stage receives all
+    copies of a hot key on one task, which is why the owner is an
+    aggregate and not an analytic window (a window partition can
+    neither be pre-aggregated nor split). No all-pairs stage exists at
+    any scale.
     """
-    from pyspark.sql import Window
-
     if span_key not in ("md5", "xxhash64"):
         raise ValueError(f"unknown span_key {span_key!r}")
-    if owner_strategy not in ("agg", "window"):
-        raise ValueError(f"unknown owner_strategy {owner_strategy!r}")
     toks = F.split(F.col(text_col), " ")
     n_spans = F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1))
     spans = F.transform(
         F.sequence(F.lit(1), n_spans),
         lambda i: F.array_join(F.slice(toks, i, window), " "))
-    span_col = F.explode(spans).alias("span")
     fp = (F.xxhash64("span") if span_key == "xxhash64"
           else F.conv(F.substring(F.md5("span"), 1, 15), 16, 10)
           .cast("long"))
-    per_span = (ensure_parallelism(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
-        .select("doc_id", span_col)
-        .select("doc_id", fp.alias("fp")))
-    if owner_strategy == "window":
-        owner = F.min("doc_id").over(Window.partitionBy("fp"))
-        flagged = per_span.select(
-            "doc_id", (F.col("doc_id") > owner).cast("long").alias("is_dup"))
-        return (flagged.groupBy("doc_id")
-                .agg(F.count("*").cast("long").alias("n_spans"),
-                     F.sum("is_dup").alias("n_dup_spans"))
-                .select("doc_id", "n_spans", "n_dup_spans",
-                        (F.col("n_dup_spans") / F.col("n_spans"))
-                        .alias("dup_frac")))
-    # combiner-friendly owner selection: an instance is non-dup iff its
-    # doc IS the span's min owner, so
-    #   n_dup(doc) = n_spans(doc) - sum of counts over spans doc owns.
-    # (doc_id, fp) collapses within-doc repeats map-side; min(struct)
-    # partials collapse the hot fp to one row per task; both branches
-    # reuse the same map-side exchange.
-    per_span_c = (per_span.groupBy("doc_id", "fp")
-                  .agg(F.count("*").alias("__c")))
-    totals = per_span_c.groupBy("doc_id").agg(
-        F.sum("__c").cast("long").alias("n_spans"))
-    owned = (per_span_c.groupBy("fp")
+    base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    # an instance is non-dup iff its doc IS the span's min owner, so
+    #   n_dup(doc) = n_spans(doc) - sum of counts over spans doc owns
+    owned = (ensure_parallelism(base)
+             .select("doc_id", F.explode(spans).alias("span"))
+             .groupBy("doc_id", fp.alias("fp"))
+             .agg(F.count("*").alias("__c"))
+             .groupBy("fp")
              .agg(F.min(F.struct("doc_id", "__c")).alias("__w"))
              .groupBy(F.col("__w.doc_id").alias("doc_id"))
              .agg(F.sum("__w.__c").alias("__own")))
-    return (totals.join(owned, "doc_id", "left")
+    return (base.groupBy("doc_id")
+            .agg(F.sum(n_spans).cast("long").alias("n_spans"))
+            .join(owned, "doc_id", "left")
             .select("doc_id", "n_spans",
                     (F.col("n_spans") - F.coalesce("__own", F.lit(0)))
                     .cast("long").alias("n_dup_spans"))

@@ -372,6 +372,17 @@ def remove_boilerplate(docs: DataFrame, group_col: str = "source",
                            join_on_hash) \
         .select(F.col(group_col).alias("grp"), F.col("line").alias("k"))
     kept = lines.join(bp, ["grp", "k"], "left_anti")
+    return _rebuild_lines(docs, kept, line_sep, group_col)
+
+
+def _rebuild_lines(docs: DataFrame, kept: DataFrame, line_sep: str,
+                   *cols: str) -> DataFrame:
+    """(doc_id, *cols, clean_text, n_lines_kept, n_lines_removed): each
+    doc's ``kept`` (doc_id, pos, line) rows joined back in line order by
+    one doc_id shuffle, left-joined to per-doc totals. The totals are
+    map-only arithmetic on the original text (a NULL text has 0 lines),
+    not another explode+shuffle of the corpus for a number split()
+    already knows. A doc with no kept line gets an empty clean_text."""
     rebuilt = (kept.groupBy("doc_id")
                .agg(F.array_join(
                         F.transform(
@@ -380,13 +391,12 @@ def remove_boilerplate(docs: DataFrame, group_col: str = "source",
                             lambda s: s["line"]),
                         line_sep).alias("clean_text"),
                     F.count("*").alias("n_lines_kept")))
-    # per-doc totals are map-only arithmetic on the original text — no
-    # third explode+shuffle of the corpus for a number split() already knows
-    return (docs.select("doc_id", group_col,
-                        F.size(F.split(F.col("text"), line_sep))
-                        .alias("n_lines"))
+    text = F.col("text")
+    n_lines = F.when(text.isNull(), F.lit(0)) \
+        .otherwise(F.size(F.split(text, line_sep)))
+    return (docs.select("doc_id", *cols, n_lines.alias("n_lines"))
             .join(rebuilt, "doc_id", "left")
-            .select("doc_id", group_col,
+            .select("doc_id", *cols,
                     F.coalesce("clean_text", F.lit("")).alias("clean_text"),
                     F.coalesce("n_lines_kept", F.lit(0)).cast("long")
                     .alias("n_lines_kept"),
@@ -396,8 +406,7 @@ def remove_boilerplate(docs: DataFrame, group_col: str = "source",
 
 def dedup_lines(docs: DataFrame, line_sep: str = "\n",
                 scope_col: str | None = None,
-                join_on_hash: bool = False,
-                owner_strategy: str = "agg") -> DataFrame:
+                join_on_hash: bool = False) -> DataFrame:
     """Corpus-wide first-occurrence line dedup (the RefinedWeb /
     MassiveText line-dedup pass — a different rule from
     ``remove_boilerplate``: that one drops lines FREQUENT within a group,
@@ -416,29 +425,22 @@ def dedup_lines(docs: DataFrame, line_sep: str = "\n",
     a 64-bit collision could wrongly drop a distinct line, so the
     default stays exact.
 
-    ``owner_strategy`` picks how the first-occurrence winner per line key
-    is found; both produce identical rows:
-
-    - ``"agg"`` (default, round 7): ONE map-side-combined aggregation —
-      ``min(struct(doc_id, pos, line))`` per line key. The min partials
-      collapse a viral line ("Home", cookie banners — at 100 TB easily
-      10^10 copies of one key) to ONE candidate row per map task, so the
-      reduce side of the hot key receives at most task-count rows. Same
-      shuffle count as the window form, strictly bounded per-task input.
-    - ``"window"``: the round-6 ``row_number`` over the line-key window.
-      A window partition cannot be pre-aggregated or split (AQE skew
-      handling covers joins, NOT WindowExec), so every copy of a hot
-      line lands on one reducer — opt-in only for corpora with a known
-      benign line-frequency distribution.
+    The winner per line key is ONE map-side-combined aggregation,
+    ``min(struct(doc_id, pos, line))``: (doc_id, pos) is unique per line
+    instance, so the struct min IS the first occurrence. The min partials
+    collapse a viral line ("Home", cookie banners — at 100 TB easily
+    10^10 copies of one key) to ONE candidate row per map task, so the
+    reduce side of the hot key receives at most task-count rows. An
+    analytic window (``row_number`` over the line key) would need no
+    more shuffles, but its partition can neither be pre-aggregated nor
+    split, so every copy of a hot line would land on one reducer.
 
     Scale shape: posexplode (map-only) -> ONE shuffle keyed by the line
-    (winner selection, per ``owner_strategy``) -> one doc_id shuffle
-    rebuilding the text via array_sort(collect_list(struct(pos, line)))
-    -> per-doc totals computed map-only from split() (doc-count rows,
-    not line-count). Pure JVM end to end; the hashed mode narrows the
-    shuffle key to 8 bytes."""
-    if owner_strategy not in ("agg", "window"):
-        raise ValueError(f"unknown owner_strategy {owner_strategy!r}")
+    (winner selection) -> one doc_id shuffle rebuilding the text via
+    array_sort(collect_list(struct(pos, line))) -> per-doc totals
+    computed map-only from split() (doc-count rows, not line-count).
+    Pure JVM end to end; the hashed mode narrows the shuffle key to 8
+    bytes."""
     lines = ensure_parallelism(docs.select(
         "doc_id", *([scope_col] if scope_col else []), "text")).select(
         "doc_id",
@@ -446,40 +448,13 @@ def dedup_lines(docs: DataFrame, line_sep: str = "\n",
         F.posexplode(F.split(F.col("text"), line_sep)).alias("pos", "line"))
     key = F.xxhash64("line") if join_on_hash else F.col("line")
     part = (["__scope", "__k"] if scope_col else ["__k"])
-    if owner_strategy == "agg":
-        # first occurrence = min(struct(doc_id, pos[, line])): (doc_id,
-        # pos) is unique per line instance, so the struct min IS the
-        # row_number()=1 row — and min partials combine map-side
-        kept = (lines.withColumn("__k", key)
-                .groupBy(*part)
-                .agg(F.min(F.struct("doc_id", "pos", "line")).alias("__w"))
-                .select(F.col("__w.doc_id").alias("doc_id"),
-                        F.col("__w.pos").alias("pos"),
-                        F.col("__w.line").alias("line")))
-    else:
-        w = Window.partitionBy(*part).orderBy(F.col("doc_id").asc(),
-                                              F.col("pos").asc())
-        kept = (lines.withColumn("__k", key)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1))
-    rebuilt = (kept.groupBy("doc_id")
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]),
-                        line_sep).alias("clean_text"),
-                    F.count("*").alias("n_lines_kept")))
-    return (docs.select("doc_id",
-                        F.size(F.split(F.col("text"), line_sep))
-                        .alias("n_lines"))
-            .join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    F.coalesce("n_lines_kept", F.lit(0)).cast("long")
-                    .alias("n_lines_kept"),
-                    (F.col("n_lines") - F.coalesce("n_lines_kept", F.lit(0)))
-                    .cast("long").alias("n_lines_removed")))
+    kept = (lines.withColumn("__k", key)
+            .groupBy(*part)
+            .agg(F.min(F.struct("doc_id", "pos", "line")).alias("__w"))
+            .select(F.col("__w.doc_id").alias("doc_id"),
+                    F.col("__w.pos").alias("pos"),
+                    F.col("__w.line").alias("line")))
+    return _rebuild_lines(docs, kept, line_sep)
 
 
 def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20,

@@ -74,17 +74,6 @@ def sbbf_insert(blocks: np.ndarray, hashes: np.ndarray) -> None:
                      _masks(hashes))
 
 
-def sbbf_insert_check(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Sequential insert-and-report-presence (ref src/sbbf.zig:45-52)."""
-    idx = _block_indices(blocks.shape[0], hashes)
-    masks = _masks(hashes)
-    out = np.empty(hashes.size, dtype=bool)
-    for i in range(hashes.size):
-        out[i] = bool(((blocks[idx[i]] & masks[i]) == masks[i]).all())
-        blocks[idx[i]] |= masks[i]
-    return out
-
-
 def sbbf_contains(blocks: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     m = _masks(hashes)
     return ((blocks[_block_indices(blocks.shape[0], hashes)] & m) == m).all(axis=1)

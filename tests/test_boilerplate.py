@@ -4,6 +4,7 @@
   stripped per group, bodies kept in ORIGINAL order, all-template docs
   come back empty (not dropped), singleton groups untouched;
 - hash-keyed variant (join_on_hash) is row-identical to the exact path;
+- a NULL text counts 0 lines (kept and removed), never NULL;
 - plan gate: pure JVM (no Python stage), group sizes broadcast.
 """
 
@@ -65,6 +66,16 @@ class TestRule:
         hashed = remove_boilerplate(docs, min_docs=2,
                                     join_on_hash=True).sort("doc_id").collect()
         assert exact == hashed
+
+    def test_null_text_counts_zero_lines(self, spark):
+        df = spark.createDataFrame(
+            [(1, "A", "HEAD\nx"), (2, "A", "HEAD\ny"), (3, "A", None)],
+            "doc_id long, source string, text string")
+        got = {r["doc_id"]: r for r in
+               remove_boilerplate(df, min_docs=2, doc_frac=0.5).collect()}
+        assert got[3]["clean_text"] == ""
+        assert (got[3]["n_lines_kept"], got[3]["n_lines_removed"]) == (0, 0)
+        assert (got[1]["clean_text"], got[1]["n_lines_removed"]) == ("x", 1)
 
 
 class TestPlan:

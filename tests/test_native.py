@@ -4,8 +4,8 @@ The library's only filter backend is ``filterz_spark/native/kernels.c``;
 ``tests/filter_oracle.py`` reimplements each kernel in numpy/Python. Every
 contract here is exact equality:
 
-- sbbf: insert is an order-insensitive OR, so the blocks and the
-  ``insert_check`` answers equal the oracle's;
+- sbbf: insert is an order-insensitive OR, so the blocks equal the
+  oracle's;
 - ribbon: a consistent system's solution with every free slot zero is
   unique, so the chosen seed and the solution equal the oracle's;
 - xorf: the oracle transcribes the kernel's sequential stack peel, so the
@@ -123,35 +123,6 @@ class TestXorfBackends:
                 assert xorf.contains(hdr, fp, 3, 16, h).all()
 
 
-class TestSbbfInsertCheck:
-    """block_insert_check parity (ref src/sbbf.zig:45-52): sequential
-    insert-and-report-presence, duplicates report present."""
-
-    def test_semantics_and_backend_equivalence(self):
-        h = _keys(5_000)
-        batch = np.concatenate([h, h[:100]])  # trailing duplicates
-        b_c = sbbf.empty_blocks(h.size, 16)
-        got_c = sbbf.insert_check(b_c, batch)
-        b_ref = sbbf.empty_blocks(h.size, 16)
-        got_ref = oracle.sbbf_insert_check(b_ref, batch)
-        assert np.array_equal(b_c, b_ref)
-        assert np.array_equal(got_c, got_ref)
-        # every trailing duplicate reports present; filter state equals
-        # a plain insert of the same batch
-        assert got_c[-100:].all()
-        b_plain = sbbf.empty_blocks(h.size, 16)
-        sbbf.insert(b_plain, batch)
-        assert np.array_equal(b_c, b_plain)
-        # fresh-key presence reports are rare (FPR-level) on first insert
-        assert got_c[:100].sum() <= 5
-
-    def test_zero_block_filter_refused(self):
-        """A capacity-0 filter has no block to route keys to; the kernel
-        would write past the array."""
-        with pytest.raises(ValueError, match="no blocks"):
-            sbbf.insert_check(sbbf.empty_blocks(0, 16), _keys(10))
-
-
 @pytest.mark.parametrize("build", [
     lambda h: RibbonFilter.build(h, coeff_bits=16, result_bits=8),
     lambda h: RibbonFilter.build(h, coeff_bits=256, result_bits=8),
@@ -198,8 +169,6 @@ def test_native_sbbf_insert_rejects_read_only_blocks():
     view = np.frombuffer(payload, dtype=np.uint64).reshape(-1, sbbf.LANES)
     with pytest.raises(ValueError, match="read-only"):
         native.sbbf_insert(view, splitmix64_array(2, 10))
-    with pytest.raises(ValueError, match="read-only"):
-        native.sbbf_insert_check(view, splitmix64_array(2, 10))
     g = SbbfFilter.deserialize(payload, f.params())
     native.sbbf_insert(g.blocks, splitmix64_array(2, 10))
     assert bytes(payload) == snapshot

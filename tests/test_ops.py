@@ -58,8 +58,11 @@ class TestDedup:
         assert all(len(set(r["sig"])) > 1 for r in sigs)
         with pytest.raises(ValueError, match="num_hashes <= 15"):
             minhash_signature_arrays(docs, num_hashes=16, hash_family="km_md5")
-        with pytest.raises(ValueError, match="unknown hash_family"):
-            minhash_signature_arrays(docs, hash_family="nope")
+        for fam in ("nope", "km_xxh"):  # km_xxh: the retired JVM family
+            with pytest.raises(ValueError, match="unknown hash_family"):
+                minhash_signature_arrays(docs, hash_family=fam)
+            with pytest.raises(ValueError, match="unknown hash_family"):
+                lsh_candidate_pairs(docs, hash_family=fam)
 
     def test_default_family_is_km(self, spark, docs):
         """Round-5 default flip: the no-arg signature table must equal the
@@ -75,12 +78,11 @@ class TestDedup:
                 minhash_signature_arrays(d, hash_family="band_md5").collect()}
         assert default == km and default != band
 
-    def test_km_xxh_family_matches_md5_decisions(self, spark, docs):
-        """The engine-hash family (km_xxh, no DuckDB twin) must make the
-        SAME dedup decisions as the oracle-mode md5 families on seeded
-        near-dup data: docs perturbed in one trailing word (J ~ 0.96)
-        verify to the identical final pair set at min_jaccard=0.9 under
-        all three families, and exact clones collide on every band."""
+    def test_km_md5_family_matches_band_decisions(self, spark, docs):
+        """The two hash families must make the SAME dedup decisions on
+        seeded near-dup data: docs perturbed in one trailing word
+        (J ~ 0.96) verify to the identical final pair set at
+        min_jaccard=0.9 under both, and that set holds every clone pair."""
         from filterz_spark.ops.dedup import (lsh_candidate_pairs,
                                              ngram_jaccard_pairs)
         base = docs.limit(30)
@@ -88,7 +90,7 @@ class TestDedup:
                    .withColumn("text", F.concat("text", F.lit(" zzqq")))
         corpus = base.unionByName(near)
         finals = {}
-        for fam in ("band_md5", "km_md5", "km_xxh"):
+        for fam in ("band_md5", "km_md5"):
             pairs = ngram_jaccard_pairs(
                 corpus, k=2, min_jaccard=0.9, num_hashes=8,
                 candidates=lsh_candidate_pairs(corpus, 8, 2, hash_family=fam))
@@ -96,7 +98,7 @@ class TestDedup:
         expected = {(r["doc_id"], r["doc_id"] + 1_000_000)
                     for r in base.select("doc_id").collect()}
         assert finals["band_md5"] >= expected
-        assert finals["band_md5"] == finals["km_md5"] == finals["km_xxh"]
+        assert finals["band_md5"] == finals["km_md5"]
 
     def test_jaccard_prefilter_identity_and_reduction(self, spark, docs):
         """Signature-level pre-filter: identical final pairs at the

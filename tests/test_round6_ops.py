@@ -3,7 +3,8 @@
 - dedup_lines: corpus-wide first-occurrence line dedup (RefinedWeb pass)
   — first copy survives (cross-doc AND within-doc), original order kept,
   fully-deduped docs come back empty, scope_col restricts the rule,
-  hashed keys are row-identical, plan stays JVM-only;
+  every mode equals a python first-occurrence reference, a NULL text
+  counts 0 lines, plan stays JVM-only with no window;
 - top_ngrams: deterministic top-k with count-desc/shingle-asc tiebreak,
   short-doc whole-text shingle contract;
 - token_budget_sample: prefix semantics, budget monotonicity (the
@@ -29,6 +30,23 @@ LINE_DOCS = [
     (3, "B", "dup line\nunique one"),
     (4, "B", "unique three\ndup line"),
 ]
+
+
+def _ref_dedup_lines(docs, scoped=False):
+    """Independent first-occurrence reference: dict doc_id ->
+    (clean_text, n_lines_kept, n_lines_removed); with ``scoped`` a line
+    is first per source instead of corpus-wide."""
+    seen, out = set(), {}
+    for did, src, text in sorted(docs):
+        lines = [] if text is None else text.split("\n")
+        kept = []
+        for line in lines:
+            key = (src, line) if scoped else line
+            if key not in seen:
+                seen.add(key)
+                kept.append(line)
+        out[did] = ("\n".join(kept), len(kept), len(lines) - len(kept))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -74,24 +92,30 @@ class TestDedupLines:
             .executedPlan().toString()
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
-    def test_owner_strategies_identical(self, spark, line_docs):
-        """Round-7 combiner-friendly winner (min(struct), map-side
-        combinable — the default) must produce exactly the round-6
-        row_number-window rows, in every mode combination."""
-        for kw in ({}, {"join_on_hash": True}, {"scope_col": "source"}):
-            a = sorted(map(tuple, dedup_lines(line_docs, **kw).collect()))
-            b = sorted(map(tuple, dedup_lines(
-                line_docs, owner_strategy="window", **kw).collect()))
-            assert a == b, kw
+    def test_matches_reference(self, spark, line_docs):
+        """Plain, hashed and source-scoped modes all equal the python
+        first-occurrence reference."""
+        for kw, scoped in (({}, False), ({"join_on_hash": True}, False),
+                           ({"scope_col": "source"}, True)):
+            got = {r["doc_id"]: (r["clean_text"], r["n_lines_kept"],
+                                 r["n_lines_removed"])
+                   for r in dedup_lines(line_docs, **kw).collect()}
+            assert got == _ref_dedup_lines(LINE_DOCS, scoped), kw
+
+    def test_null_text_counts_zero_lines(self, spark):
+        df = spark.createDataFrame(
+            [(1, "A", "x\ny"), (2, "A", None)],
+            "doc_id long, source string, text string")
+        got = {r["doc_id"]: r for r in dedup_lines(df).collect()}
+        assert got[2]["clean_text"] == ""
+        assert (got[2]["n_lines_kept"], got[2]["n_lines_removed"]) == (0, 0)
+        assert got[1]["n_lines_kept"] == 2
 
     def test_agg_owner_has_no_window_operator(self, spark, line_docs):
-        p = dedup_lines(line_docs)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "Window" not in p, p
-
-    def test_bad_owner_strategy_raises(self, spark, line_docs):
-        with pytest.raises(ValueError, match="owner_strategy"):
-            dedup_lines(line_docs, owner_strategy="sort")
+        for kw in ({}, {"join_on_hash": True}, {"scope_col": "source"}):
+            p = dedup_lines(line_docs, **kw)._jdf.queryExecution() \
+                .executedPlan().toString()
+            assert "Window" not in p, p
 
 
 class TestTopNgrams:

@@ -7,8 +7,8 @@
   two engines), map-only plan;
 - ops/dedup.duplicate_spans — Lee-et-al substring-dedup stats vs an
   independent python reference (ownership = corpus-min doc), short-doc
-  single span, self-owned repeats not counted, md5/xxhash64 key parity,
-  exactly the two declared shuffles;
+  single span, self-owned repeats not counted, NULL texts sharing one
+  NULL span, md5/xxhash64 key parity, one corpus explode and no window;
 - ops/web.url_blocklist_filter — host and registered-domain match modes,
   path keyword rule, broadcast (never shuffled) anti-join plan.
 """
@@ -97,12 +97,16 @@ class TestHtmlToText:
 
 
 def _ref_duplicate_spans(docs, w):
-    """Independent reference: dict doc_id -> (n_spans, n_dup_spans)."""
+    """Independent reference: dict doc_id -> (n_spans, n_dup_spans). A
+    NULL text is one NULL span, shared by every NULL text."""
     owner, spans_by_doc = {}, {}
     for did, text in sorted(docs):
-        toks = text.split(" ")
-        n = max(len(toks) - w + 1, 1)
-        sp = [" ".join(toks[i:i + w]) for i in range(n)]
+        if text is None:
+            sp = [None]
+        else:
+            toks = text.split(" ")
+            n = max(len(toks) - w + 1, 1)
+            sp = [" ".join(toks[i:i + w]) for i in range(n)]
         spans_by_doc[did] = sp
         for s in sp:
             owner.setdefault(s, did)
@@ -118,11 +122,14 @@ DOCS = [
     (5, "m n"),                      # shorter than the window: ONE span
     (6, "m n"),                      # duplicate short doc
     (7, "p q p q p q p q"),          # self-owned repeats: NOT duplicates
+    (8, None),                       # NULL text: one NULL span
+    (9, ""),                         # empty text: one empty span
+    (10, None),                      # later NULL text: its span is a dup
 ]
 
 
 class TestDuplicateSpans:
-    @pytest.mark.parametrize("w", [3, 4])
+    @pytest.mark.parametrize("w", [3, 4, 8])
     def test_matches_reference(self, spark, w):
         df = spark.createDataFrame(DOCS, "doc_id long, text string")
         got = {r["doc_id"]: (r["n_spans"], r["n_dup_spans"])
@@ -139,6 +146,9 @@ class TestDuplicateSpans:
         assert got[6]["n_dup_spans"] == 1         # dup short doc
         assert got[7]["n_dup_spans"] == 0         # self-owned repeats
         assert got[2]["n_dup_spans"] == 1         # the "a b c d" window
+        assert (got[8]["n_spans"], got[8]["n_dup_spans"]) == (1, 0)
+        assert (got[9]["n_spans"], got[9]["n_dup_spans"]) == (1, 0)
+        assert (got[10]["n_spans"], got[10]["n_dup_spans"]) == (1, 1)
 
     def test_xxhash64_key_parity(self, spark):
         df = spark.createDataFrame(DOCS, "doc_id long, text string")
@@ -152,38 +162,25 @@ class TestDuplicateSpans:
         with pytest.raises(ValueError, match="span_key"):
             duplicate_spans(df, span_key="sha1")
 
-    def test_owner_strategies_identical(self, spark):
-        """The round-7 combiner-friendly owner selection (default) must
-        produce exactly the round-6 window rows."""
-        df = spark.createDataFrame(DOCS, "doc_id long, text string")
-        a = sorted(map(tuple, duplicate_spans(df, window=3).collect()))
-        b = sorted(map(tuple, duplicate_spans(
-            df, window=3, owner_strategy="window").collect()))
-        assert a == b
-
-    def test_bad_owner_strategy_raises(self, spark):
-        df = spark.createDataFrame(DOCS, "doc_id long, text string")
-        with pytest.raises(ValueError, match="owner_strategy"):
-            duplicate_spans(df, owner_strategy="sort")
-
     def test_plan_shapes_no_python(self, spark):
-        """Default (agg) owner: every aggregate is map-side combinable —
-        no window operator anywhere, and exactly the agg plan's five hash
-        exchanges: (doc_id, fp) once per branch (AQE runs it once and
-        reuses it at runtime), then doc_id, fp and the owner's doc_id.
-        The window opt-in keeps the round-6 two-shuffle shape. Neither
-        runs Python."""
+        """The corpus is exploded ONCE (one Generate, before and after
+        adaptive execution) and every owner step is a map-side-combinable
+        aggregate: no window operator, and four hash exchanges — (doc_id,
+        fp), fp, the owner's doc_id, and the doc_id side of the join to
+        the map-side span totals. No Python runs."""
         df = spark.createDataFrame(DOCS, "doc_id long, text string")
-        p = duplicate_spans(df)._jdf.queryExecution() \
-            .executedPlan().toString()
+        out = duplicate_spans(df)
+        p = out._jdf.queryExecution().executedPlan().toString()
+        assert p.count("Generate ") == 1, p
         assert "Window" not in p, p
-        assert p.count("Exchange hashpartitioning") == 5, p
+        assert p.count("Exchange hashpartitioning") == 4, p
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-        pw = duplicate_spans(df, owner_strategy="window") \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert pw.count("Exchange hashpartitioning") == 2, pw
-        assert "BatchEvalPython" not in pw and "ArrowEvalPython" not in pw
-
+        out.collect()
+        final = out._jdf.queryExecution().executedPlan().toString() \
+            .split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, final
+        assert final.count("Generate ") == 1, final
+        assert "Window" not in final, final
 
 URLS = [
     (1, "http://www.bad.example.com/a"),

@@ -151,9 +151,6 @@ def run(n_docs: int, cores: int, vocab: str = "uniform5k",
     measure("minhash_signatures_band", lambda: noop(
         minhash_signature_arrays(docs, num_hashes=8, k=shingle_k,
                                  hash_family="band_md5")))
-    measure("minhash_signatures_xxh", lambda: noop(
-        minhash_signature_arrays(docs, num_hashes=8, k=shingle_k,
-                                 hash_family="km_xxh")))
     measure("lsh_candidate_pairs", lambda: (
         lsh_candidate_pairs(docs, num_hashes=8, k=shingle_k).count()))
 
