@@ -648,7 +648,9 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     """
     if span_key not in ("md5", "xxhash64"):
         raise ValueError(f"unknown span_key {span_key!r}")
-    toks = F.split(F.col(text_col), " ")
+    # the text is split ONCE, into a column the span lambda reads: a split
+    # inside the lambda would run once per span (O(tokens^2) per doc)
+    toks = F.col("__t")
     n_spans = F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1))
     spans = F.transform(
         F.sequence(F.lit(1), n_spans),
@@ -656,7 +658,8 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     fp = (F.xxhash64("span") if span_key == "xxhash64"
           else F.conv(F.substring(F.md5("span"), 1, 15), 16, 10)
           .cast("long"))
-    base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    base = docs.select(F.col(id_col).alias("doc_id"),
+                       F.split(F.col(text_col), " ").alias("__t"))
     # an instance is non-dup iff its doc IS the span's min owner, so
     #   n_dup(doc) = n_spans(doc) - sum of counts over spans doc owns
     owned = (ensure_parallelism(base)

@@ -5,9 +5,10 @@ runtime re-planning + skew-join splitting + small-partition coalescing
 (size-aware coalescing per the north rule), Arrow enabled for
 ``toPandas``/``createDataFrame(pandas)`` (Arrow UDFs and ``*InArrow``
 stages use Arrow regardless), and ``max(cores, 32)`` shuffle partitions
-(``cores`` defaults to ``SPARK_GRAFT_CPUS``, else 32), and no Python
-call-site capture for DataFrame error messages; every setting stays
-overridable through ``extra_conf``.
+(``cores`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process may
+run on), driver memory from ``SPARK_DRIVER_MEM``, else half of physical
+RAM, and no Python call-site capture for DataFrame error messages; every
+setting stays overridable through ``extra_conf``.
 
 Python workers run under `filterz_spark.spark.pydaemon` instead of
 `pyspark.daemon` (``spark.python.daemon.module``). On CPython < 3.13 each
@@ -29,8 +30,13 @@ from pyspark.sql import SparkSession
 
 def get_session(cores: int | None = None, app_name: str = "filterz-spark",
                 shuffle_partitions: int | None = None, **extra_conf) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                        len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
+    # default driver heap: half of physical RAM, in whole MB; a heap sized
+    # past the host lets concurrent drivers outgrow it
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM", f"{ram // 2 >> 20}m")
     # One BLAS thread per python worker: Spark already runs `cores`
     # concurrent tasks, so a multi-threaded numpy matmul inside an Arrow
     # UDF oversubscribes cores^2 threads and collapses into kernel-side
@@ -69,7 +75,7 @@ def get_session(cores: int | None = None, app_name: str = "filterz-spark",
         # with these two settings)
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "262144")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         # PySpark 4 captures the Python call site of every DataFrame and

@@ -45,21 +45,10 @@ def absent_hashes(smoke_hashes):
 
 @pytest.fixture(scope="session")
 def spark():
-    """local[32] session shared across Spark tests (SURVEY.md §7)."""
+    """One session shared across Spark tests (SURVEY.md §7), with
+    get_session's host defaults (``SPARK_GRAFT_CPUS`` cores if set)."""
     from filterz_spark.spark.session import get_session
 
-    s = get_session(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    s = get_session()
     yield s
 
-
-@pytest.fixture
-def no_checkpoint_dir(spark):
-    """Run one test with the session's checkpoint dir unset, restoring it
-    afterwards: SparkContext has no public unset, and curate_training_set
-    picks its barrier from whether the dir is set."""
-    sc = spark.sparkContext._jsc.sc()
-    saved = sc.getCheckpointDir()
-    set_dir = getattr(sc, "checkpointDir_$eq")
-    set_dir(spark._jvm.scala.Option.apply(None))
-    yield
-    set_dir(saved)

@@ -619,12 +619,31 @@ class TestCurationPipeline:
         with pytest.raises(ValueError, match="at least one stratum"):
             curate_training_set(docs, docs.limit(1), {})
 
-    def test_barrier_modes_identical(self, spark, docs, tmp_path,
-                                     no_checkpoint_dir):
-        """Both barrier mechanisms — executor-local checkpoint without a
-        session checkpoint dir, reliable checkpoint with one — yield the
-        same curated rows: the durability choice is operational, never
-        semantic."""
+    def test_first_doc_per_content(self, spark):
+        """Exact dedup keeps each normalized content's min doc_id: a
+        case/punctuation copy collapses onto the lower id, a doc_id
+        repeated with the same content comes out once (doc_id is the row
+        key), and a NULL text never survives."""
+        from filterz_spark.ops.pipeline import curate_training_set
+        fox = "The quick brown fox jumps over the lazy dog"
+        greek = "Alpha beta gamma delta epsilon zeta eta"
+        docs = spark.createDataFrame(
+            [(7, fox, "en"),
+             (2, "the QUICK, brown fox -- jumps over the lazy dog!", "en"),
+             (3, None, "en"),
+             (4, greek, "en"), (4, greek, "en"),
+             (5, "lorem ipsum dolor sit amet consectetur adipiscing", "de")],
+            "doc_id long, text string, lang string")
+        bench = spark.createDataFrame(
+            [(100, "an unrelated benchmark passage", "en")],
+            "doc_id long, text string, lang string")
+        got = sorted(tuple(r) for r in curate_training_set(
+            docs, bench, {"en": 1.0, "de": 1.0}).collect())
+        assert got == [(2, "en", 9), (4, "en", 7), (5, "de", 7)]
+
+    def test_checkpoint_dir_changes_nothing(self, spark, docs, tmp_path):
+        """A session checkpoint dir neither changes the curated rows nor
+        gets written to: the plan has no checkpoint."""
         from filterz_spark.ops.pipeline import curate_training_set
         bench = docs.filter("doc_id % 50 = 0")
 
@@ -634,11 +653,16 @@ class TestCurationPipeline:
 
         base = rows()
         assert base
+        # SparkContext has no public unset: restore through the JVM setter
+        sc = spark.sparkContext._jsc.sc()
+        saved = sc.getCheckpointDir()
         ckpt = tmp_path / "ckpt"
-        spark.sparkContext.setCheckpointDir(str(ckpt))
-        assert rows() == base
-        # the session's checkpoint dir selected the reliable barrier
-        assert any(f.is_file() for f in ckpt.rglob("*"))
+        try:
+            spark.sparkContext.setCheckpointDir(str(ckpt))
+            assert rows() == base
+        finally:
+            getattr(sc, "checkpointDir_$eq")(saved)
+        assert not any(f.is_file() for f in ckpt.rglob("*"))
 
 
 class TestSamplingAndNormalization:

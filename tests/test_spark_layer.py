@@ -732,10 +732,12 @@ class TestSessionDefaults:
         def __init__(self):
             self.conf = {}
 
-        def master(self, _):
+        def master(self, value):
+            self.conf["master"] = value
             return self
 
-        appName = master
+        def appName(self, _):
+            return self
 
         def config(self, key, value):
             self.conf[key] = value
@@ -744,13 +746,29 @@ class TestSessionDefaults:
         def getOrCreate(self):
             return self.conf
 
-    def _conf(self, monkeypatch, **extra_conf):
+    def _conf(self, monkeypatch, cores=2, **extra_conf):
         from types import SimpleNamespace
 
         from filterz_spark.spark import session
         monkeypatch.setattr(session, "SparkSession",
                             SimpleNamespace(builder=self.Recorder()))
-        return session.get_session(cores=2, **extra_conf)
+        return session.get_session(cores=cores, **extra_conf)
+
+    def test_defaults_fit_the_host(self, monkeypatch):
+        """Unset, the driver heap is at most physical RAM (half of it) and
+        the cores are the CPUs this process may run on; both env vars
+        still override."""
+        monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        conf = self._conf(monkeypatch, cores=None)
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        mem = conf["spark.driver.memory"]
+        assert mem.endswith("m") and 0 < int(mem[:-1]) << 20 <= ram, mem
+        assert conf["master"] == f"local[{len(os.sched_getaffinity(0))}]"
+        monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        conf = self._conf(monkeypatch, cores=None)
+        assert (conf["spark.driver.memory"], conf["master"]) == ("3g", "local[3]")
 
     def test_origin_capture_off_by_default(self, monkeypatch, spark):
         key = "spark.python.sql.dataFrameDebugging.enabled"
