@@ -24,9 +24,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from filterz_spark.ops import dedup as _dedup
-from filterz_spark.ops import text as _text
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -201,6 +198,31 @@ def _q_bpe_token_counts(spark, sf_dir):
 def _q_rolling_fingerprints(spark, sf_dir):
     from filterz_spark.ops.text import rolling_fingerprints
     return rolling_fingerprints(_t(spark, sf_dir, "documents"))
+
+
+def _rolling_fingerprints_sql(table: str) -> str:
+    """DuckDB twin of ``rolling_fingerprints`` at its default window (same
+    values, same windows): posexplode, ``lead()`` windows, and one
+    whole-text window for docs shorter than the window."""
+    from filterz_spark.ops.text import ROLLING_BASE as b, ROLLING_WINDOW as window
+    full = " + ".join(
+        f"lead(wh, {j}) OVER w * {b ** (window - 1 - j)}" for j in range(window))
+    short_pow = "CASE n - 1 - pos " + " ".join(
+        f"WHEN {e} THEN {b ** e}" for e in range(window - 1)) + " END"
+    return (
+        f"WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w, "
+        f"generate_subscripts(string_split(text, ' '), 1) - 1 AS pos FROM {table}), "
+        f"hashed AS (SELECT doc_id, pos, CAST(concat('0x', substring(md5(w), 1, 7)) "
+        f"AS BIGINT) AS wh, count(*) OVER (PARTITION BY doc_id) AS n FROM words), "
+        f"fps AS (SELECT doc_id, CAST(CASE WHEN n >= {window} THEN "
+        f"(CASE WHEN pos <= n - {window} THEN {full} END) "
+        f"WHEN pos = 0 THEN sum(wh * ({short_pow})) OVER "
+        f"(PARTITION BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND "
+        f"UNBOUNDED FOLLOWING) END AS BIGINT) AS fp FROM hashed WINDOW w AS "
+        f"(PARTITION BY doc_id ORDER BY pos)) "
+        f"SELECT doc_id, count(*) AS n_windows, min(fp) AS rolling_min, "
+        f"max(fp) AS rolling_max FROM fps WHERE fp IS NOT NULL GROUP BY doc_id"
+    )
 
 
 def _q_doc_fingerprints(spark, sf_dir):
@@ -804,6 +826,24 @@ def _q_theta_user_overlap(spark, sf_dir):
 def _q_simhash(spark, sf_dir):
     from filterz_spark.ops.dedup import simhash
     return simhash(_t(spark, sf_dir, "documents"))
+
+
+def _simhash_sql(table: str) -> str:
+    """The DuckDB twin of ``simhash`` — bit-for-bit identical values."""
+    from filterz_spark.ops.dedup import SIMHASH_BITS
+    sums = ", ".join(f"sum((wh >> {j}) & 1) AS s{j}" for j in range(SIMHASH_BITS))
+    bits = " + ".join(
+        f"(CASE WHEN s{j} * 2 > n THEN {1 << j} ELSE 0 END)"
+        for j in range(SIMHASH_BITS)
+    )
+    return (
+        f"WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
+        f"FROM {table}), "
+        f"hashed AS (SELECT doc_id, CAST(concat('0x', substring(md5(w), 1, 15)) "
+        f"AS BIGINT) AS wh FROM words), "
+        f"agg AS (SELECT doc_id, count(*) AS n, {sums} FROM hashed GROUP BY doc_id) "
+        f"SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM agg"
+    )
 
 
 def _q_simhash_near_pairs(spark, sf_dir):
@@ -1742,11 +1782,11 @@ def oracle_sql() -> dict[str, str]:
         ),
         # full-value oracles: simhash and rolling fingerprints are md5-based
         # JVM computations with bit-identical DuckDB twins
-        "simhash_docs": _dedup.simhash_sql("documents"),
+        "simhash_docs": _simhash_sql("documents"),
         # pigeonhole blocks (4 x 15 bits of the 60-bit simhash), bucket
         # self-join, exact hamming filter — the same plan shape as Spark's
         "simhash_near_pairs": (
-            f"WITH sim AS ({_dedup.simhash_sql('documents')}), "
+            f"WITH sim AS ({_simhash_sql('documents')}), "
             "blocks AS (SELECT doc_id, simhash, q, "
             "(simhash >> (15 * q)) & 32767 AS bucket "
             "FROM sim, (SELECT CAST(i AS INT) AS q FROM range(0, 4) t(i)) b), "
@@ -1757,7 +1797,7 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_a, doc_b, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming "
             "FROM cand WHERE bit_count(xor(ha, hb)) <= 3"
         ),
-        "rolling_fingerprints": _text.rolling_fingerprints_sql("documents"),
+        "rolling_fingerprints": _rolling_fingerprints_sql("documents"),
         # recall-1 regimes: every bucket/list probed -> must equal exact SQL
         "ann_lsh_topk": (
             "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "

@@ -189,7 +189,10 @@ def run_bench(sf_dir: str, cores: int, parts: int | None = None,
     from filterz_spark.ops.dedup import simhash
     from filterz_spark.ops.text import rolling_fingerprints
     timed("simhash_docs", lambda: simhash(docs).count())
-    timed("rolling_fps", lambda: rolling_fingerprints(docs).count())
+    # a noop-sink write, not count(): the fingerprints are one projection
+    # per row, which Catalyst prunes away under a count
+    timed("rolling_fps", lambda: rolling_fingerprints(docs).write
+          .format("noop").mode("overwrite").save())
     from filterz_spark.ops.dedup import ngram_decontaminate
     timed("decontaminate", lambda: ngram_decontaminate(
         docs.filter("doc_id % 50 != 0"), docs.filter("doc_id % 50 = 0"),

@@ -10,12 +10,14 @@ md5). The one stage is the default (``km_md5``) MinHash signature pass: a
 with the same bits as the JVM ``md5``/``conv`` expression it replaced.
 Nothing here runs per-row Python.
 
-Scale posture: every operator is a groupBy/join on a derived key — shingle
-explosion is the only fan-out (x ~n_tokens per doc) and is immediately
-re-aggregated map-side (the km_md5 signature pass has no fan-out at
-all); LSH bucketing replaces the O(n^2) all-pairs comparison with a
-groupBy on (band, minhash) that Spark shuffles by bucket; Jaccard runs
-only on LSH candidates.
+Scale posture: every operator is a groupBy/join on a derived key. The
+fan-outs (x ~n_tokens per doc: band_md5 shingles, decontamination's
+shingles, simhash's words, duplicate_spans' spans) are re-aggregated
+map-side; the km_md5 signature pass and the Jaccard shingle sets (one
+``array_distinct(shingle_array(k))`` per row) have no fan-out at all.
+LSH bucketing replaces the O(n^2) all-pairs comparison with a groupBy
+on (band, minhash) that Spark shuffles by bucket; Jaccard runs only on
+LSH candidates.
 """
 
 from __future__ import annotations
@@ -72,7 +74,8 @@ def shingles(docs: DataFrame, k: int = 2, text_col: str = "text") -> DataFrame:
 
     The input is routed through ``ensure_parallelism`` first: the shingle
     expansion plus the hashing its consumers fuse on top of it (band_md5
-    signatures, n-gram Jaccard sets) is their cost center, and
+    signatures, the benchmark side of ``ngram_decontaminate``) is their
+    cost center, and
     Spark fuses it into the SCAN stage — a small or single-row-group input
     would otherwise run it on 1-2 tasks (measured 3-5x on the round-6 bench
     legs at local[32]). At corpus scale the helper is a no-op (scan
@@ -429,10 +432,12 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 2, min_jaccard: float = 0.0,
         candidates = candidates.filter(
             F.col("n_bands") / F.lit(float(num_hashes)) >= cut)
     cand = candidates.select("doc_a", "doc_b")
-    sets = (
-        shingles(docs, k=k).groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh"))
-    )
+    # each doc's set is a per-row expression (no explode, no shuffle of
+    # shingle strings); doc_id is the row key, so a repeated doc_id pairs
+    # each of its rows rather than the union of their texts
+    sets = (ensure_parallelism(docs.select("doc_id", "text"))
+            .filter(F.col("text").isNotNull())
+            .select("doc_id", F.array_distinct(shingle_array(k)).alias("sh")))
     j = (
         cand.join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sa"), "doc_a")
         .join(sets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sb"), "doc_b")
@@ -516,6 +521,9 @@ def simhash(docs: DataFrame) -> DataFrame:
     is #words-with-bit-set*2 > #words; all-occurrence voting (a repeated
     word votes once per occurrence, standard SimHash). Whole pipeline is
     explode + groupBy with 60 conditional sums — JVM codegen, no Python.
+    It keeps the explode: a row form (a per-word 60-counter ``aggregate``)
+    gave the same rows in 62 s against this plan's 0.7-0.9 s (sf0.1
+    documents, local[4] on a 4-core host, noop sink).
     """
     words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     wh = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
@@ -530,23 +538,6 @@ def simhash(docs: DataFrame) -> DataFrame:
         bit = F.when(F.col(f"s{j}") * 2 > F.col("n"), F.lit(1 << j)).otherwise(F.lit(0))
         sim = bit if sim is None else sim + bit
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
-
-
-def simhash_sql(table: str = "documents") -> str:
-    """The DuckDB twin of ``simhash`` — bit-for-bit identical values."""
-    sums = ", ".join(f"sum((wh >> {j}) & 1) AS s{j}" for j in range(SIMHASH_BITS))
-    bits = " + ".join(
-        f"(CASE WHEN s{j} * 2 > n THEN {1 << j} ELSE 0 END)"
-        for j in range(SIMHASH_BITS)
-    )
-    return (
-        f"WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
-        f"FROM {table}), "
-        f"hashed AS (SELECT doc_id, CAST(concat('0x', substring(md5(w), 1, 15)) "
-        f"AS BIGINT) AS wh FROM words), "
-        f"agg AS (SELECT doc_id, count(*) AS n, {sums} FROM hashed GROUP BY doc_id) "
-        f"SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM agg"
-    )
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
@@ -603,8 +594,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
 
 
 def duplicate_spans(docs: DataFrame, window: int = 16,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    span_key: str = "md5") -> DataFrame:
+                    id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact substring-dedup statistics, the Lee et al. 2021
     ("Deduplicating Training Data Makes Language Models Better",
     arXiv:2107.06499) signal at document granularity: every
@@ -619,11 +609,8 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     text is one NULL span, and all NULL texts share that key: every
     NULL-text doc after the first reports one duplicated span.
 
-    ``span_key="md5"`` (default) keys spans by the first 15 md5 hex
-    chars (60 bits) — DuckDB-portable, oracle-checkable;
-    ``"xxhash64"`` is the engine-hash opt-in (full 64 bits, ~2x less
-    hashing CPU, no SQL twin) — same trade documented on
-    ``minhash_signature_arrays``.
+    Spans are keyed by the first 15 md5 hex chars (60 bits) —
+    DuckDB-portable, oracle-checkable.
 
     Scale shape: the span fan-out (~n_tokens rows/doc) is MAP-ONLY and
     hashes each span string to an 8-byte key before anything moves —
@@ -646,8 +633,6 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     neither be pre-aggregated nor split). No all-pairs stage exists at
     any scale.
     """
-    if span_key not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown span_key {span_key!r}")
     # the text is split ONCE, into a column the span lambda reads: a split
     # inside the lambda would run once per span (O(tokens^2) per doc)
     toks = F.col("__t")
@@ -655,9 +640,7 @@ def duplicate_spans(docs: DataFrame, window: int = 16,
     spans = F.transform(
         F.sequence(F.lit(1), n_spans),
         lambda i: F.array_join(F.slice(toks, i, window), " "))
-    fp = (F.xxhash64("span") if span_key == "xxhash64"
-          else F.conv(F.substring(F.md5("span"), 1, 15), 16, 10)
-          .cast("long"))
+    fp = F.conv(F.substring(F.md5("span"), 1, 15), 16, 10).cast("long")
     base = docs.select(F.col(id_col).alias("doc_id"),
                        F.split(F.col(text_col), " ").alias("__t"))
     # an instance is non-dup iff its doc IS the span's min owner, so

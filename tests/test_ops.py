@@ -135,6 +135,25 @@ class TestDedup:
                                 candidates=cand.select("doc_a", "doc_b"),
                                 prefilter_margin=0.1)
 
+    def test_jaccard_edge_texts(self, spark):
+        """Each doc's set is its own row's distinct shingles: a NULL text
+        pairs with nothing, an empty text and a doc shorter than k are one
+        whole-text shingle, and a repeated doc_id pairs each of its rows
+        (no union of their texts)."""
+        from filterz_spark.ops.dedup import ngram_jaccard_pairs
+        docs = spark.createDataFrame(
+            [(1, "a b c"), (2, None), (3, ""), (4, ""), (5, "a"),
+             (6, "a"), (7, "a b c d"), (7, "x y")],
+            "doc_id long, text string")
+        cand = spark.createDataFrame(
+            [(1, 2), (3, 4), (1, 3), (5, 6), (1, 5), (1, 7)],
+            "doc_a long, doc_b long")
+        got = sorted(tuple(r) for r in ngram_jaccard_pairs(
+            docs, k=2, candidates=cand).collect())
+        # 1 vs 7: {a b, b c} against {a b, b c, c d} and against {x y}
+        assert got == [(1, 3, 0.0), (1, 5, 0.0), (1, 7, 0.0),
+                       (1, 7, 0.6667), (3, 4, 1.0), (5, 6, 1.0)]
+
     def test_jaccard_identical_is_one(self, spark, docs):
         from filterz_spark.ops.dedup import ngram_jaccard_pairs
         clone = docs.limit(3).withColumn("doc_id", F.col("doc_id") + 1_000_000)
@@ -474,6 +493,31 @@ class TestRepetitionAndDecontamination:
         assert r[1]["distinct_ratio"] == 0.25 and r[1]["top_word_frac"] == 1.0 \
             and r[1]["top_bigram_frac"] == 1.0
         assert r[2]["distinct_ratio"] == 1.0 and r[2]["top_word_frac"] == 0.25
+
+    def test_repetition_matches_python_reference(self, spark):
+        """Word and bigram statistics vs a python reference: tied top
+        words and bigrams, empty words from runs of spaces, short and
+        empty texts; a NULL text yields no row and a repeated doc_id one
+        row per input row."""
+        from collections import Counter
+        from filterz_spark.ops.text import repetition_scores
+        rows = [(1, "a b a b c"), (2, "x  y   x"), (3, "one"), (4, ""),
+                (5, None), (6, "b a b a"), (6, "q q q r")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = sorted(tuple(r) for r in repetition_scores(df).collect())
+
+        def ref(doc_id, text):
+            words = text.split(" ")
+            bigrams = ([" ".join(words[i:i + 2])
+                        for i in range(len(words) - 1)]
+                       if len(words) >= 2 else [text])
+            n = len(words)
+            return (doc_id, n, round(len(set(words)) / n, 4),
+                    round(max(Counter(words).values()) / n, 4),
+                    round(max(Counter(bigrams).values()) / len(bigrams), 4))
+
+        assert got == sorted(ref(d, t) for d, t in rows if t is not None)
+        assert [g[0] for g in got].count(6) == 2
 
     def test_decontaminate_bounds(self, spark):
         from filterz_spark.ops.dedup import ngram_decontaminate
@@ -971,15 +1015,20 @@ class TestScaleHardening:
         assert ok.filter(F.col("cluster_id") != 0).count() == 0
 
     def test_rolling_fingerprints_window_semantics(self, spark):
-        """Order sensitivity + exact window values vs a python reference."""
+        """Order sensitivity + exact window values vs a python reference,
+        edge texts included; a NULL text yields no row and a repeated
+        doc_id one row per input row."""
         import hashlib
         from filterz_spark.ops.text import (
             ROLLING_BASE, ROLLING_WINDOW, rolling_fingerprints)
         rows = [(1, "a b c d e f g h i j"), (2, "j i h g f e d c b a"),
-                (3, "a b c"), (4, "a b c d e f g h i j")]
+                (3, "a b c"), (4, "a b c d e f g h i j"), (5, None),
+                (6, ""), (7, "word"), (8, "a  b   c"),
+                (9, "a b c d e f g h"), (9, "x y z")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {r["doc_id"]: (r["n_windows"], r["rolling_min"], r["rolling_max"])
-               for r in rolling_fingerprints(df).collect()}
+        got = sorted((r["doc_id"], r["n_windows"], r["rolling_min"],
+                      r["rolling_max"])
+                     for r in rolling_fingerprints(df).collect())
 
         def wh(w):
             return int(hashlib.md5(w.encode()).hexdigest()[:7], 16)
@@ -993,11 +1042,14 @@ class TestScaleHardening:
                         for j in range(ROLLING_WINDOW))
                     for i in range(len(hs) - ROLLING_WINDOW + 1)]
 
-        for doc_id, text in rows:
-            exp = fps(text)
-            assert got[doc_id] == (len(exp), min(exp), max(exp))
-        assert got[1] != got[2]      # order-sensitive
-        assert got[1] == got[4]      # content-deterministic
+        exp = sorted((d, len(f), min(f), max(f))
+                     for d, f in ((d, fps(t)) for d, t in rows if t is not None))
+        assert got == exp
+        by_id = {g[0]: g[1:] for g in got}
+        assert by_id[1] != by_id[2]      # order-sensitive
+        assert by_id[1] == by_id[4]      # content-deterministic
+        assert by_id[6][0] == by_id[7][0] == 1 and by_id[8][0] == 1
+        assert [g[0] for g in got].count(9) == 2
 
     def test_dedup_components_large_pair_count_no_lineage_blowup(self, spark):
         """VERDICT #8: 10x the sf0.01 candidate-pair count through the

@@ -118,14 +118,33 @@ def test_dedup_against_store_plan_is_jvm_only(spark):
 
 def test_simhash_and_rolling_have_no_python_stage(spark):
     """Round-2 gate (VERDICT #3): the simhash and rolling-fingerprint
-    kernels are pure JVM (md5 + conditional aggregation / window exec) —
-    no per-row or Arrow-batched Python anywhere in their plans."""
+    kernels are pure JVM (md5 + conditional aggregation / row
+    projection) — no per-row or Arrow-batched Python anywhere in their
+    plans."""
     from filterz_spark.ops.dedup import simhash
     from filterz_spark.ops.text import rolling_fingerprints
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for df in (simhash(docs), rolling_fingerprints(docs)):
         p = plan(df)
         assert not python_stages(p), p
+
+
+def test_text_statistics_are_row_projections(spark):
+    """rolling_fingerprints and repetition_scores are one projection per
+    input row: no window, explode or aggregate in their plans. With the
+    candidates given, ngram_jaccard_pairs builds each shingle set in its
+    row too: no explode and no collect_set aggregate."""
+    from filterz_spark.ops.dedup import ngram_jaccard_pairs
+    from filterz_spark.ops.text import repetition_scores, rolling_fingerprints
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for df in (rolling_fingerprints(docs), repetition_scores(docs)):
+        p = plan(df)
+        for node in ("Window", "Generate", "HashAggregate",
+                     "ObjectHashAggregate"):
+            assert node not in p, (node, p)
+    cand = spark.createDataFrame([(0, 1), (2, 3)], "doc_a long, doc_b long")
+    p = plan(ngram_jaccard_pairs(docs, k=2, candidates=cand))
+    assert "Generate" not in p and "ObjectHashAggregate" not in p, p
 
 
 def test_lsh_candidate_pairs_single_signature_pass(spark):

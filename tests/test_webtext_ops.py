@@ -8,7 +8,7 @@
 - ops/dedup.duplicate_spans — Lee-et-al substring-dedup stats vs an
   independent python reference (ownership = corpus-min doc), short-doc
   single span, self-owned repeats not counted, NULL texts sharing one
-  NULL span, md5/xxhash64 key parity, one corpus explode and no window;
+  NULL span, one corpus explode and no window;
 - ops/web.url_blocklist_filter — host and registered-domain match modes,
   path keyword rule, broadcast (never shuffled) anti-join plan.
 """
@@ -149,18 +149,6 @@ class TestDuplicateSpans:
         assert (got[8]["n_spans"], got[8]["n_dup_spans"]) == (1, 0)
         assert (got[9]["n_spans"], got[9]["n_dup_spans"]) == (1, 0)
         assert (got[10]["n_spans"], got[10]["n_dup_spans"]) == (1, 1)
-
-    def test_xxhash64_key_parity(self, spark):
-        df = spark.createDataFrame(DOCS, "doc_id long, text string")
-        a = sorted(map(tuple, duplicate_spans(df, window=3).collect()))
-        b = sorted(map(tuple, duplicate_spans(
-            df, window=3, span_key="xxhash64").collect()))
-        assert a == b
-
-    def test_bad_key_raises(self, spark):
-        df = spark.createDataFrame(DOCS, "doc_id long, text string")
-        with pytest.raises(ValueError, match="span_key"):
-            duplicate_spans(df, span_key="sha1")
 
     def test_plan_shapes_no_python(self, spark):
         """The corpus is exploded ONCE (one Generate, before and after
